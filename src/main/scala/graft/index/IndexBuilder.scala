@@ -325,14 +325,19 @@ object IndexBuilder {
     * (df desc, term asc) in UTF-8 BINARY order — the exact unique total
     * order GlobalRank produces (Spark UTF8String collation == DuckDB binary
     * == code-point order; Java compareTo would diverge on supplementary-
-    * plane terms) — and assign dense termIds from `base`. */
+    * plane terms) — and assign dense termIds from `base`. Fails loudly
+    * when the ids would run past the Int termId space instead of wrapping
+    * into negative (or colliding) termIds. */
   private[index] def rankFreshOnDriver(
-      entries: Array[(String, Long, Long)], base: Long): Array[TermEntry] =
+      entries: Array[(String, Long, Long)], base: Long): Array[TermEntry] = {
+    require(base + entries.length <= Int.MaxValue.toLong + 1,
+      s"termId overflow: ${entries.length} fresh terms from base $base exceed Int.MaxValue")
     entries.sortWith { case ((ta, dfa, _), (tb, dfb, _)) =>
       if (dfa != dfb) dfa > dfb else Overlap.utf8Compare(ta, tb) < 0
     }.zipWithIndex.map { case ((t, df, cf), i) =>
       TermEntry((base + i).toInt, t, df, cf)
     }
+  }
 
   /** The clustered dictionary write shared by every verb that commits a
     * dictionary version: deterministic contiguous termId groups (known

@@ -120,30 +120,44 @@ object Intersect {
   }
 }
 
-/** Loaded index handle (manifest + lazily-read tables). */
+/** Loaded index handle: a fixed manifest plus its tables, each resolved
+  * (file listing + parquet schema inference, one small Spark job per
+  * table) ONCE per handle, on first use, instead of once per query pass.
+  *
+  * Caching the resolved relations is safe because everything they name is
+  * immutable once a manifest that names it is committed: dictionary and
+  * tombstone directories are versioned (`v%05d`), segments are named by
+  * (lo, hi, v), and every lifecycle verb writes only names no committed
+  * manifest holds yet — build writes nothing once its manifest exists;
+  * append, delete, merge and compaction write dictionary/tombstone
+  * version N+1 and fresh segment names (append and merge start past the
+  * old maxDocId, compaction bumps the segment version to max(v)+1) — and
+  * commit the manifest last. Only [[graft.index.IndexBuilder.vacuum]]
+  * removes named directories, and a handle on a vacuumed snapshot is
+  * unusable with or without the cache. */
 final case class IndexHandle(spark: SparkSession, dir: String, manifest: IndexManifest) {
   import spark.implicits._
-  def dictionary: Dataset[TermEntry] =
+  lazy val dictionary: Dataset[TermEntry] =
     spark.read.parquet(graft.index.IndexBuilder.dictDirFor(dir, manifest.dictVersion))
       .select("termId", "term", "df", "cf").as[TermEntry]
-  def postings: Dataset[PostingBlock] =
+  lazy val postings: Dataset[PostingBlock] =
     graft.index.IndexBuilder.readPostings(spark, dir, manifest).as[PostingBlock]
   /** PHYSICAL docstats — includes tombstoned docs' rows until compaction.
     * Internal machinery only: WAND (which overlays docLen = -1 sentinels)
     * and the validator (whose per-block invariants are physical). */
-  def docstatsRaw: Dataset[DocStat] =
+  lazy val docstatsRaw: Dataset[DocStat] =
     graft.index.IndexBuilder.readDocstats(spark, dir, manifest).as[DocStat]
   /** LIVE docstats — the public accessor: tombstoned docs excluded, so
     * every docstats-derived surface (norms, quantiles, stats queries)
     * reflects the live corpus by construction. No-op when never deleted. */
-  def docstats: Dataset[DocStat] = {
+  lazy val docstats: Dataset[DocStat] = {
     val raw = docstatsRaw
     if (manifest.tombVersion < 0) raw
     else excludeDeleted(raw.toDF(), "docId")
       .select("docId", "url", "docLen").as[DocStat]
   }
   /** Tombstoned docIds (empty dataset when no delete ever ran). */
-  def tombstones: Dataset[Long] =
+  lazy val tombstones: Dataset[Long] =
     if (manifest.tombVersion < 0) spark.emptyDataset[Long]
     else spark.read
       .parquet(graft.index.IndexBuilder.tombDirFor(dir, manifest.tombVersion)).as[Long]
@@ -1297,7 +1311,6 @@ object Wand {
         // nextDown() guards exact-tie boundaries at the threshold
         if (bounds.isEmpty) None else Some(q.queryId -> math.nextDown(bounds.max))
       }.toMap
-    val bTheta = spark.sparkContext.broadcast(thetaSeed)
 
     val bucketRange = m0.bucketRange
     val blocksPerBucket = m0.bucketRange / m0.blockSize
@@ -1401,6 +1414,9 @@ object Wand {
     val doFunc = funcScore.isDefined
     val fsMax = funcScore.map(_._2).getOrElse(1.0)
 
+    // per-pass broadcasts, created after the last early return and
+    // destroyed once reduceFn (which always collects) has returned
+    val bTheta = spark.sparkContext.broadcast(thetaSeed)
     val bQ = spark.sparkContext.broadcast(qSpecs)
     val bAfter = spark.sparkContext.broadcast(pageAfter)
     val bCons = spark.sparkContext.broadcast(resolvedCons)
@@ -1641,6 +1657,7 @@ object Wand {
         }
     }
 
-    reduceFn(candidates)
+    try reduceFn(candidates)
+    finally Seq(bTheta, bQ, bAfter, bCons, bPhraseTids).foreach(_.destroy())
   }
 }

@@ -902,6 +902,50 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  test("Search.run resolves the index tables once per handle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    val marker = "search-spec-listener-marker"
+    // `f`'s result and the stage names of every job submitted while it
+    // runs; a marker job is submitted last and awaited, so the asynchronous
+    // listener bus has delivered every earlier job by the time the names
+    // are read
+    def withStages[T](f: => T): (T, Seq[String]) = {
+      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val sawMarker = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+            sawMarker.countDown()
+          else e.stageInfos.foreach(s => names.add(s.name))
+      }
+      sc.addSparkListener(listener)
+      val out = try {
+        val r = f
+        sc.setJobDescription(marker)
+        try spark.range(1).count() finally sc.setJobDescription(null)
+        assert(sawMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        r
+      } finally sc.removeSparkListener(listener)
+      import scala.jdk.CollectionConverters._
+      (out, names.asScala.toSeq)
+    }
+    // parquet schema inference shows as a job whose stage is "parquet at …"
+    def inference(stages: Seq[String]) = stages.filter(_.startsWith("parquet at"))
+    val fresh = IndexReader.load(spark, dir)
+    val req = Search.SearchRequest("merge join -batch", k = 5,
+      facetKey = Some((col("docId") % 10).cast("string")), facetTopN = 3)
+    val (first, firstStages) = withStages(Search.run(fresh, req, analyzer))
+    assert(inference(firstStages).nonEmpty,
+      s"a fresh handle must resolve its tables: $firstStages")
+    val (second, secondStages) = withStages(Search.run(fresh, req, analyzer))
+    assert(inference(secondStages).isEmpty,
+      s"the second run re-resolved index tables: ${inference(secondStages)}")
+    assert(second.hits.toSeq == first.hits.toSeq && second.total == first.total &&
+      second.facets == first.facets)
+  }
+
   test("explainAll: batched breakdown == per-pair Search.explain rows") {
     // pairs spanning: boosted multi-term, single-term, an OOV-only query
     // (zero rows), and a doc absent from a term's postings
