@@ -1374,20 +1374,6 @@ object IndexBuilder {
 object Lineage {
   private def logPath(indexDir: String) = Paths.get(s"$indexDir/lineage.jsonl")
 
-  /** One-time migration of the pre-r4 per-event parquet lineage dir into
-    * lineage.jsonl (ordered by event timestamp), so an upgraded index keeps
-    * its history. The legacy dir is removed after a successful import. */
-  private def importLegacy(spark: SparkSession, indexDir: String): Unit = {
-    import spark.implicits._
-    val legacy = s"$indexDir/lineage"
-    if (!Files.exists(logPath(indexDir)) && Store.exists(s"$legacy/_SUCCESS")) {
-      spark.read.parquet(legacy).as[LineageRow].collect()
-        .sortBy(_.snapshotId)
-        .foreach(r => appendLine(indexDir, r))
-      Store.delete(legacy)
-    }
-  }
-
   private val appendLock = new Object
 
   private def appendLine(indexDir: String, row: LineageRow): Unit = appendLock.synchronized {
@@ -1415,14 +1401,11 @@ object Lineage {
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
   }
 
-  def append(spark: SparkSession, indexDir: String, row: LineageRow): Unit = {
-    importLegacy(spark, indexDir)
+  def append(spark: SparkSession, indexDir: String, row: LineageRow): Unit =
     appendLine(indexDir, row)
-  }
 
   def load(spark: SparkSession, indexDir: String): Dataset[LineageRow] = {
     import spark.implicits._
-    importLegacy(spark, indexDir)
     val p = logPath(indexDir)
     val lines =
       if (Files.exists(p))

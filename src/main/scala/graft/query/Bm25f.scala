@@ -11,7 +11,7 @@ package graft.query
   *
   *   score(q, d) = Σ_f w_f · Σ_t BM25_f(t, d)
   *
-  * Implementation: [[Wand.runFields]] — plain BM25 and BM25F share ONE
+  * Implementation: [[Wand.search]] — plain BM25 and BM25F share ONE
   * driver and one bucket-cogroup kernel, because BM25 impact is linear in
   * idf: each (field, term) pair is an independent cursor with effective
   * idf = w_f · idf_f, and upper bounds / block-max refinement / threshold
@@ -29,5 +29,5 @@ object Bm25f {
     * docId asc), up to k rows each. */
   def topK(fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec],
       k: Int): Map[Int, Array[(Double, Long)]] =
-    Wand.runFields(fields, queries, k, metrics = None, boundKey = None)
+    Wand.search(fields, queries, Wand.Ranked(k))
 }

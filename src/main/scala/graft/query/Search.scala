@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** The search-box surface: parsed query strings → exact constrained BM25
-  * top-k, compiled onto the ONE ranked WAND driver ([[Wand.runFields]]).
+  * top-k, compiled onto the ONE WAND driver ([[Wand.search]]).
   *
   * Semantics per [[ParsedQuery]]: BM25 over the scoring terms (with
   * `term^w` boosts folded into effective idf), restricted to docs that
@@ -121,8 +121,16 @@ object Search {
       metrics: Option[Wand.WandMetrics] = None,
       collapse: Option[Column] = None,
       synonyms: Option[Synonyms] = None): Map[Int, Array[(Double, Long)]] =
-    pageCompiled(index, compile(index, queries00, synonyms), k, after,
-      metrics, collapse)
+    perSignature(index, ranked(k, after, collapse), compile(index, queries00, synonyms), metrics)
+
+  /** The ranked mode of the DSL surface: a collapsed ranking has no
+    * stable per-doc cursor, so a cursor under collapse is refused. */
+  private def ranked(k: Int, after: Map[Int, (Double, Long)],
+      collapse: Option[Column]): Wand.Ranked = {
+    require(after.isEmpty || collapse.isEmpty,
+      "collapse does not compose with search_after (no stable per-doc cursor)")
+    Wand.Ranked(k, collapse.fold[Wand.Order](Wand.ByScore(after))(Wand.Collapse))
+  }
 
   /** Run one independent WAND pass per element of `groups` CONCURRENTLY
     * (optimization guide §2.6): filter-signature groups are disjoint query
@@ -135,18 +143,13 @@ object Search {
     else graft.index.Overlap.all(gs.map(g => () => run(g))).flatten.toMap
   }
 
-  /** [[page]] over an already-compiled batch — lets [[run]] pay the
-    * wildcard/fuzzy expansion jobs ONCE per request across its two
-    * passes. */
-  private def pageCompiled(index: IndexHandle, queries: Seq[ParsedQuery],
-      k: Int, after: Map[Int, (Double, Long)],
-      metrics: Option[Wand.WandMetrics] = None,
-      collapse: Option[Column] = None): Map[Int, Array[(Double, Long)]] =
+  /** One `mode` pass of an already-compiled batch per filter signature,
+    * the passes run concurrently. */
+  private def perSignature[R](index: IndexHandle, mode: Wand.Mode[R],
+      queries: Seq[ParsedQuery], metrics: Option[Wand.WandMetrics] = None): Map[Int, R] =
     inParallel(grouped(queries)) { case (docFilter, group, cons) =>
-      Wand.runFields(Seq(index -> 1.0), group.map(_.toQuerySpec), k,
-        metrics, boundKey = None, docFilter = docFilter, constraints = cons,
-        pageAfter = after.filter { case (qid, _) => group.exists(_.queryId == qid) },
-        collapse = collapse)
+      Wand.search(Seq(index -> 1.0), group.map(_.toQuerySpec), mode, docFilter, cons,
+        metrics = metrics)
     }
 
   /** Shared batch compile: synonym rewrite first (a pure rewrite — it
@@ -208,16 +211,7 @@ object Search {
 
   def count(index: IndexHandle, queries00: Seq[ParsedQuery],
       synonyms: Option[Synonyms] = None): Map[Int, Long] =
-    countCompiled(index, compile(index, queries00, synonyms))
-
-  private def countCompiled(index: IndexHandle,
-      queries: Seq[ParsedQuery]): Map[Int, Long] =
-    inParallel(grouped(queries)) { case (docFilter, group, cons) =>
-      Wand.runFields(Seq(index -> 1.0), group.map(_.toQuerySpec), k = 1,
-        metrics = None, boundKey = None, docFilter = docFilter,
-        constraints = cons, countOnly = true)
-        .map { case (qid, arr) => qid -> arr.headOption.map(_._2).getOrElse(0L) }
-    }
+    perSignature(index, Wand.Count, compile(index, queries00, synonyms))
 
   /** EXACT FACET COUNTS over each query's match set — the SERP facet
     * panel: per facet value (any Column over the docstats row, like
@@ -234,17 +228,13 @@ object Search {
       facetKey, topN, synonyms)
 
   def facets(index: IndexHandle, queries00: Seq[ParsedQuery], facetKey: Column,
-      topN: Int, synonyms: Option[Synonyms] = None): Map[Int, Seq[(String, Long)]] = {
-    val queries = compile(index, queries00, synonyms)
-    inParallel(grouped(queries)) { case (docFilter, group, cons) =>
-      Wand.facetCounts(index, group.map(_.toQuerySpec), facetKey, topN,
-        docFilter = docFilter, constraints = cons)
-    }
-  }
+      topN: Int, synonyms: Option[Synonyms] = None): Map[Int, Seq[(String, Long)]] =
+    perSignature(index, Wand.Facets(facetKey, topN), compile(index, queries00, synonyms))
+      .map { case (qid, (_, fs)) => qid -> fs }
 
   /** SORT-BY-FIELD over the full DSL surface: each query's match set
     * ordered by a sortable-string-encoded doc-value key instead of
-    * relevance — see [[Wand.topKByKey]] for the encoding contract and the
+    * relevance — see [[Wand.SortBy]] for the encoding contract and the
     * O(buckets × k) cost shape. Compile path is [[count]]'s. */
   def sortByRaw(index: IndexHandle, raw: Seq[(Int, String)],
       analyzer: TokenizerStrategy, sortKey: Column, k: Int,
@@ -254,13 +244,8 @@ object Search {
       sortKey, k, synonyms)
 
   def sortBy(index: IndexHandle, queries00: Seq[ParsedQuery], sortKey: Column,
-      k: Int, synonyms: Option[Synonyms] = None): Map[Int, Seq[(String, Long)]] = {
-    val queries = compile(index, queries00, synonyms)
-    inParallel(grouped(queries)) { case (docFilter, group, cons) =>
-      Wand.topKByKey(index, group.map(_.toQuerySpec), sortKey, k,
-        docFilter = docFilter, constraints = cons)
-    }
-  }
+      k: Int, synonyms: Option[Synonyms] = None): Map[Int, Seq[(String, Long)]] =
+    perSignature(index, Wand.SortBy(sortKey, k), compile(index, queries00, synonyms))
 
   /** One SERP request: the query string plus every knob of the surface. */
   final case class SearchRequest(
@@ -285,37 +270,22 @@ object Search {
   /** THE search endpoint — one request, one response, two passes total:
     * the ranked WAND pass (with constraints/filters/collapse/cursor),
     * plus ONE count-mode pass that yields the exact total AND the facet
-    * panel together when `facetKey` is set ([[Wand.facetCountsWithTotal]]
-    * — the per-value counts partition the match set, so their sum is the
-    * total for free), or just the total otherwise. The two passes share
-    * only the compiled query and run CONCURRENTLY ([[graft.index.Overlap]]:
-    * at most two passes in flight per request, and a failing pass waits
-    * for its sibling before the error propagates) — each pass's jobs are
-    * a few tasks wide, so the pair fills slots one pass alone leaves
-    * idle. */
+    * panel together when `facetKey` is set ([[Wand.Facets]] — the
+    * per-value counts partition the match set, so their sum is the total
+    * for free), or just the total otherwise ([[Wand.Count]]). The two
+    * passes share only the compiled query and run CONCURRENTLY
+    * ([[graft.index.Overlap]]: at most two passes in flight per request,
+    * and a failing pass waits for its sibling before the error
+    * propagates) — each pass's jobs are a few tasks wide, so the pair
+    * fills slots one pass alone leaves idle. */
   def run(index: IndexHandle, req: SearchRequest,
       analyzer: TokenizerStrategy): SearchResponse = {
     // ONE compile per request: wildcard/fuzzy expansion jobs are shared
     // by the ranked pass and the count/facet pass
     val compiled = compile(index,
       Seq(QueryParser.parse(1, req.query, analyzer)), req.synonyms)
-    def ranked = pageCompiled(index, compiled, req.k,
-      after = req.after.map(1 -> _).toMap, collapse = req.collapse)(1)
-    def totalAndFacets = req.facetKey match {
-      case Some(fk) =>
-        grouped(compiled).map { case (docFilter, group, cons) =>
-          Wand.facetCountsWithTotal(index, group.map(_.toQuerySpec), fk,
-            req.facetTopN, docFilter = docFilter, constraints = cons)(1)
-        }.next()
-      case None =>
-        (countCompiled(index, compiled)(1), Seq.empty[(String, Long)])
-    }
-    val ((total, facetsOut), hits) =
-      graft.index.Overlap.overlap(totalAndFacets)(ranked)
-    val cursor =
-      if (req.collapse.isDefined) None
-      else hits.lastOption.filter(_ => hits.length == req.k)
-    SearchResponse(hits, total, facetsOut, cursor)
+    serve(index, compiled, req.k, req.after.map(1 -> _).toMap, req.collapse,
+      req.facetKey.map(_ -> req.facetTopN))(1)
   }
 
   /** THE BATCHED SERP ENDPOINT: N requests sharing one knob set (k,
@@ -324,10 +294,12 @@ object Search {
     * 2 passes PER REQUEST (measured on 4 cores over seven one-per-shape
     * requests with a facet panel: 14 Spark jobs per plain request, 16-17
     * with wildcard/fuzzy expansion; 22-26 while every pass re-resolved
-    * the index tables). The underlying driver
-    * ([[Wand.runFieldsWith]]) batches arbitrarily many queries per pass
-    * and evaluates them independently, so each request's hits, exact
-    * total, facet panel and cursor are IDENTICAL to its solo [[run]]
+    * the index tables). The signatures are served one at a time, each
+    * with its two passes overlapped exactly as in [[run]], so at most two
+    * passes are in flight whatever the number of signatures. The
+    * underlying driver ([[Wand.search]]) batches arbitrarily many queries
+    * per pass and evaluates them independently, so each request's hits,
+    * exact total, facet panel and cursor are IDENTICAL to its solo [[run]]
     * (SearchSpec asserts runAll == N × run). This is the shape a service
     * answering concurrent search requests must take: per-request job
     * dispatch costs O(requests) Spark jobs of pure driver overhead,
@@ -338,23 +310,31 @@ object Search {
       synonyms: Option[Synonyms] = None): Map[Int, SearchResponse] = {
     val compiled = compile(index,
       reqs.map { case (qid, s) => QueryParser.parse(qid, s, analyzer) }, synonyms)
-    val hits = pageCompiled(index, compiled, k, after = Map.empty)
-    val totFacets: Map[Int, (Long, Seq[(String, Long)])] = facetKey match {
-      case Some(fk) =>
-        inParallel(grouped(compiled)) { case (docFilter, group, cons) =>
-          Wand.facetCountsWithTotal(index, group.map(_.toQuerySpec), fk,
-            facetTopN, docFilter = docFilter, constraints = cons)
-        }
-      case None =>
-        countCompiled(index, compiled).map { case (qid, n) =>
-          qid -> (n, Seq.empty[(String, Long)])
-        }
-    }
-    reqs.map { case (qid, _) =>
-      val h = hits.getOrElse(qid, Array.empty[(Double, Long)])
-      val (total, fs) = totFacets.getOrElse(qid, (0L, Seq.empty[(String, Long)]))
-      val cursor = h.lastOption.filter(_ => h.length == k)
-      qid -> SearchResponse(h, total, fs, cursor)
+    serve(index, compiled, k, after = Map.empty, collapse = None,
+      facetKey.map(_ -> facetTopN))
+  }
+
+  /** The SERP core of [[run]] and [[runAll]]: per filter signature, in
+    * turn, the ranked pass and the total/facet pass run together through
+    * [[graft.index.Overlap.overlap]]. `facet` is (key, topN). */
+  private def serve(index: IndexHandle, compiled: Seq[ParsedQuery], k: Int,
+      after: Map[Int, (Double, Long)], collapse: Option[Column],
+      facet: Option[(Column, Int)]): Map[Int, SearchResponse] = {
+    val rankedMode = ranked(k, after, collapse)
+    grouped(compiled).flatMap { case (docFilter, group, cons) =>
+      val qs = group.map(_.toQuerySpec)
+      def pass[R](mode: Wand.Mode[R]): Map[Int, R] =
+        Wand.search(Seq(index -> 1.0), qs, mode, docFilter, cons)
+      val (totals, hits) = graft.index.Overlap.overlap(facet match {
+        case Some((key, topN)) => pass(Wand.Facets(key, topN))
+        case None => pass(Wand.Count).map { case (qid, n) => qid -> (n, Seq.empty[(String, Long)]) }
+      })(pass(rankedMode))
+      group.map { q =>
+        val h = hits(q.queryId)
+        val (total, fs) = totals(q.queryId)
+        val cursor = if (collapse.isDefined) None else h.lastOption.filter(_ => h.length == k)
+        q.queryId -> SearchResponse(h, total, fs, cursor)
+      }
     }.toMap
   }
 

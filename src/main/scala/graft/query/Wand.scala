@@ -2,8 +2,10 @@ package graft.query
 
 import graft.codec.VByte
 import graft.index._
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
 
 /** One retrieval query. `boosts` are optional query-time per-term weights
   * (the `term^2.0` syntax of a search box): BM25 impact is linear in idf, so
@@ -412,7 +414,7 @@ object Wand {
     * stats drift from incremental appends. */
   private[query] final class TermCursor(
       val termId: Int,
-      blocks: Array[DecodedBlock],
+      val blocks: Array[DecodedBlock],
       /** EFFECTIVE idf — BM25 impact is linear in idf, so a fielded cursor
         * folds its field weight in here (w_f · idf_f) and the kernel stays
         * field-agnostic. */
@@ -533,7 +535,6 @@ object Wand {
     }
     /** Ranked best-first (score desc, docId asc), one row per group. */
     def ranked: Array[(Double, Long)] = {
-      import scala.jdk.CollectionConverters._
       best.values.asScala.toArray.sortBy { case (s, d) => (-s, d) }
     }
   }
@@ -824,8 +825,6 @@ object Wand {
       .transform(index.excludeDeleted(_, "doc_id"))
   }
 
-  /** Distributed top-k for a batch of queries. Returns exact (score, docId)
-    * per query, ranked (score desc, docId asc), up to k rows each. */
   /** Optional pruning instrumentation: `candidates` counts every posting
     * a naive DAAT would touch (Σ cursor lengths per query per bucket);
     * `evals` counts docs that actually reached exact evaluation after the
@@ -840,12 +839,251 @@ object Wand {
       spark.sparkContext.longAccumulator("wandCandidatePostings"))
   }
 
+  /** What one pass of the WAND driver ([[search]]) computes per query. Each
+    * mode fixes its result type, its no-hit result, what a bucket ships per
+    * query and how those rows reduce, so a mix without a meaning (a cursor
+    * under collapse, a boost on a count) cannot be written. */
+  sealed trait Mode[R] {
+    /** The docstats expression riding the url slot into the cogroup: a
+      * collapse, facet or sort key, or a boost. */
+    private[query] def slot: Option[Column]
+    /** Whether the mode may run over several fields (BM25F, shards). */
+    private[query] def multiField: Boolean = false
+    private[query] def boundKey: Option[String] = None
+    private[query] def empty: R
+    /** A bucket's rows for one query. Built on the driver from plain values
+      * taken from the mode, so no Column reaches an executor. */
+    private[query] def emitter: BucketQuery => Iterator[ScoredDoc]
+    /** Every bucket's rows reduced per query, in one job. */
+    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, R]
+  }
+
+  /** How a [[Ranked]] pass orders its hits. */
+  sealed trait Order
+
+  /** (score desc, docId asc). `after` holds per-query search_after
+    * cursors ([[topKAfter]]); `boost` is a function score: the boost
+    * Column and the caller-asserted bound on its values ([[topKBoosted]]). */
+  final case class ByScore(after: Map[Int, (Double, Long)] = Map.empty,
+      boost: Option[(Column, Double)] = None) extends Order {
+    boost.foreach { case (_, mb) =>
+      require(mb > 0.0 && !mb.isInfinite, s"maxBoost must be finite positive, got $mb") }
+  }
+
+  /** One hit per group of `key`, the k best groups ranked by their best
+    * docs ([[topKCollapsed]]). */
+  final case class Collapse(key: Column) extends Order
+
+  /** Exact top-k (score, docId) per query, ranked (score desc, docId asc)
+    * or collapsed. `boundKey` names the block metadata entry of a tiered
+    * approximate pass ([[topKApprox]]). */
+  final case class Ranked(k: Int, order: Order = ByScore(),
+      override val boundKey: Option[String] = None) extends Mode[Array[(Double, Long)]] {
+    private[query] def slot: Option[Column] = order match {
+      case ByScore(_, boost) => boost.map(_._1)
+      case Collapse(key)     => Some(key)
+    }
+    // a boost rides the one field's docstats row
+    private[query] override def multiField: Boolean = order match {
+      case ByScore(_, boost) => boost.isEmpty
+      case Collapse(_)       => true
+    }
+    private[query] def empty: Array[(Double, Long)] = Array.empty
+    private[query] def emitter: BucketQuery => Iterator[ScoredDoc] = {
+      val kk = k
+      val grouped = order.isInstanceOf[Collapse]
+      val (after, maxBoost) = order match {
+        case ByScore(a, b) => (a, b.map(_._2))
+        case Collapse(_)   => (Map.empty[Int, (Double, Long)], None)
+      }
+      q => {
+        val (aScore, aDoc) = after.getOrElse(q.queryId, (Double.PositiveInfinity, -1L))
+        val groupOf: Long => String = if (grouped) q.slot.get(_) else null
+        val boostOf: Long => Double =
+          maxBoost.map(mb => (d: Long) => parseBoost(q.slot.get(d), d, mb)).orNull
+        wandBucket(q.cursors, q.docLens, kk, q.metrics, q.theta0, q.admit, aScore, aDoc,
+          groupOf, boostOf, maxBoost.getOrElse(1.0)).iterator
+          .map { case (s, d) => ScoredDoc(q.queryId, d, s, if (grouped) q.slot.get(d) else "") }
+      }
+    }
+    // a bounded heap per query (no full sort); under collapse the same
+    // group-aware collector merges the buckets' group-bests
+    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, Array[(Double, Long)]] = {
+      val kk = k
+      val grouped = order.isInstanceOf[Collapse]
+      perQuery(rows) { it =>
+        if (grouped) {
+          val ck = new CollapseTopK(kk)
+          it.foreach(c => ck.offer(c.score, c.docId, c.group))
+          ck.ranked
+        } else {
+          val heap = new TopKHeap(kk)
+          it.foreach(c => heap.offer(c.score, c.docId))
+          heap.ranked
+        }
+      }
+    }
+  }
+
+  /** EXACT TOTAL HITS per query: the documents holding ≥ 1 scoring term and
+    * passing every constraint and filter. No scoring, no heap; each bucket
+    * ships ONE partial-count row per query (docId slot = count), so the
+    * shuffle is O(candidate buckets), never O(matching docs). */
+  case object Count extends Mode[Long] {
+    private[query] def slot: Option[Column] = None
+    private[query] def empty: Long = 0L
+    private[query] def emitter: BucketQuery => Iterator[ScoredDoc] =
+      q => Iterator.single(ScoredDoc(q.queryId, q.matches.foldLeft(0L)((n, _) => n + 1L), 0.0))
+    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, Long] =
+      perQuery(rows)(_.foldLeft(0L)(_ + _.docId))
+  }
+
+  /** EXACT FACET COUNTS over the match set — the SERP facet panel: for
+    * each query, the per-value count of [[Count]]'s match set under `key`
+    * (any Column over the docstats row: docId, url, docLen), top-N values
+    * by (count desc, value asc), plus the query's exact total from the
+    * SAME pass — the per-value counts partition the match set, so their
+    * pre-cutoff sum IS the total. Each bucket emits one partial row PER
+    * VALUE PRESENT (docId slot = count) — shuffle O(buckets × values
+    * present), never O(matching docs). */
+  final case class Facets(key: Column, topN: Int) extends Mode[(Long, Seq[(String, Long)])] {
+    private[query] def slot: Option[Column] = Some(key)
+    private[query] def empty: (Long, Seq[(String, Long)]) = (0L, Seq.empty)
+    private[query] def emitter: BucketQuery => Iterator[ScoredDoc] = q =>
+      sumByValue(q.matches.map(d => (q.slot.get(d), 1L))).entrySet().iterator().asScala
+        .map(e => ScoredDoc(q.queryId, e.getValue, 0.0, e.getKey))
+    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, (Long, Seq[(String, Long)])] = {
+      val n = topN
+      perQuery(rows) { it =>
+        val m = sumByValue(it.map(c => (c.group, c.docId)))
+        (m.values.asScala.sum, m.asScala.toSeq.sortBy { case (v, c) => (-c, v) }.take(n))
+      }
+    }
+  }
+
+  /** SORT-BY-FIELD retrieval: each query's match set (same admission as
+    * [[Count]] — ≥ 1 scoring term + every constraint and filter) ordered
+    * by a DOC-VALUE key instead of relevance — the `sort: [{date: desc}]`
+    * surface (freshness, doc length, any docstats expression). `key` must
+    * be a STRING-ORDER-SORTABLE encoding (zero-pad numerics —
+    * `lpad(cast(v AS string), w, '0')` — the classic sortable-doc-value
+    * trick; ascending order = complement the encoding). The cost shape is
+    * the facet pass's: each bucket ships its top-k admitted (key, docId)
+    * rows — shuffle O(buckets × k), never O(matching docs) — and the
+    * global reduce cuts the same order. Returns per query the top-k
+    * (key, docId) by (key desc, docId asc).
+    *
+    * NULL keys: the url slot coalesces a null key to "" — the SMALLEST
+    * string — so null-keyed docs sort LAST under a plain desc encoding but
+    * would surface FIRST under a complement-encoded ascending key. Callers
+    * whose key column is nullable should coalesce explicitly to the
+    * sentinel their encoding sorts last. */
+  final case class SortBy(key: Column, k: Int) extends Mode[Seq[(String, Long)]] {
+    require(k > 0, s"SortBy requires k > 0, got $k")
+    private[query] def slot: Option[Column] = Some(key)
+    private[query] def empty: Seq[(String, Long)] = Seq.empty
+    private[query] def emitter: BucketQuery => Iterator[ScoredDoc] = {
+      val kk = k
+      q => topKeys(q.matches.map(d => (q.slot.get(d), d)), kk)
+        .map { case (v, d) => ScoredDoc(q.queryId, d, 0.0, v) }
+    }
+    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, Seq[(String, Long)]] = {
+      val kk = k
+      perQuery(rows)(it => topKeys(it.map(c => (c.group, c.docId)), kk).toSeq)
+    }
+  }
+
+  /** One query's view of one bucket, handed to its mode's emitter: cursors
+    * over its scoring terms' decoded blocks, per-field norms (docLen -1 =
+    * tombstoned or filtered out), the url-slot value per doc (null when the
+    * mode has no slot), the constraint check (null = none) and the seeded
+    * threshold. */
+  private[query] final class BucketQuery(
+      val queryId: Int,
+      val cursors: Array[TermCursor],
+      val docLens: Array[java.util.HashMap[Long, Integer]],
+      val slot: java.util.HashMap[Long, String],
+      val admit: Long => Boolean,
+      val theta0: Double,
+      val metrics: Option[WandMetrics]) {
+    /** The bucket's match set (single field): every doc holding ≥ 1
+      * scoring term — the union of the already-decoded blocks — that is
+      * live (no -1 sentinel) and admitted. */
+    def matches: Iterator[Long] = {
+      val set = new java.util.HashSet[Long]()
+      cursors.foreach(_.blocks.foreach { b =>
+        val ids = b.ids
+        var i = 0
+        while (i < ids.length) { set.add(ids(i)); i += 1 }
+      })
+      set.iterator().asScala.filter { d =>
+        val len = docLens(0).get(d)
+        if (len == null)
+          throw new IllegalStateException(
+            s"no DocStat for docId $d — docstats pruning/build bug")
+        len.intValue() != -1 && (admit == null || admit(d))
+      }
+    }
+  }
+
+  /** Rows grouped by query and folded by `f` on the executors; one job. */
+  private def perQuery[R: TypeTag](rows: Dataset[ScoredDoc])(
+      f: Iterator[ScoredDoc] => R): Map[Int, R] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.groupByKey(_.queryId).mapGroups((qid, it) => (qid, f(it))).collect().toMap
+  }
+
+  private def sumByValue(it: Iterator[(String, Long)]): java.util.HashMap[String, Long] = {
+    val m = new java.util.HashMap[String, Long]()
+    it.foreach { case (v, n) => m.put(v, m.getOrDefault(v, 0L) + n) }
+    m
+  }
+
+  /** (key desc, docId asc) — the sort-by-key order. */
+  private val KeyDocOrdering: java.util.Comparator[(String, Long)] =
+    new java.util.Comparator[(String, Long)] with Serializable {
+      override def compare(a: (String, Long), b: (String, Long)): Int = {
+        val c = b._1.compareTo(a._1)
+        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+      }
+    }
+
+  /** The ONE bounded cut for sort-by-key — shared by the bucket-local
+    * emit and the global reduce so the two cuts are provably identical:
+    * admit, then evict the lowest-priority element when over capacity. */
+  private def topKeys(it: Iterator[(String, Long)], k: Int): Iterator[(String, Long)] = {
+    val ts = new java.util.TreeSet[(String, Long)](KeyDocOrdering)
+    it.foreach { e => ts.add(e); if (ts.size > k) { ts.pollLast(); () } }
+    ts.iterator().asScala
+  }
+
+  /** A scored doc's boost from its raw url-slot string, validated against
+    * the caller-asserted bound (a silent over-bound boost would break
+    * pruning exactness). Parsed per scored doc, so a boost that is garbage
+    * for docs a filter excludes (or tombstones kill) never fails the job. */
+  private def parseBoost(raw: String, d: Long, maxBoost: Double): Double = {
+    if (raw == null)
+      throw new IllegalStateException(
+        s"no funcScore boost for docId $d — docstats pruning/build bug")
+    val v = try java.lang.Double.parseDouble(raw) catch {
+      case _: NumberFormatException =>
+        throw new IllegalStateException(s"non-numeric funcScore boost '$raw' for docId $d")
+    }
+    if (!(v > 0.0) || v > maxBoost)
+      throw new IllegalStateException(
+        s"funcScore boost $v for docId $d outside (0, maxBoost=$maxBoost]")
+    v
+  }
+
+  /** Distributed top-k for a batch of queries. Returns exact (score, docId)
+    * per query, ranked (score desc, docId asc), up to k rows each. */
   def topK(index: IndexHandle, queries: Seq[QuerySpec], k: Int): Map[Int, Array[(Double, Long)]] =
     topK(index, queries, k, None)
 
   def topK(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
       metrics: Option[WandMetrics]): Map[Int, Array[(Double, Long)]] =
-    run(index, queries, k, metrics, boundKey = None)
+    search(Seq(index -> 1.0), queries, Ranked(k), metrics = metrics)
 
   /** FILTERED exact top-k: BM25 over only the documents satisfying a
     * metadata predicate (a Column over the docstats row: docId, url,
@@ -864,8 +1102,7 @@ object Wand {
   def topKFiltered(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
       filter: org.apache.spark.sql.Column,
       metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
-    runFields(Seq(index -> 1.0), queries, k, metrics, boundKey = None,
-      docFilter = Some(filter))
+    search(Seq(index -> 1.0), queries, Ranked(k), docFilter = Some(filter), metrics = metrics)
 
   /** COLLAPSED exact top-k: one result per GROUP — the best-scoring doc
     * of each of the k best groups, where a doc's group is `collapseKey`
@@ -888,8 +1125,7 @@ object Wand {
   def topKCollapsed(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
       collapseKey: org.apache.spark.sql.Column,
       metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
-    runFields(Seq(index -> 1.0), queries, k, metrics, boundKey = None,
-      collapse = Some(collapseKey))
+    search(Seq(index -> 1.0), queries, Ranked(k, Collapse(collapseKey)), metrics = metrics)
 
   /** FUNCTION SCORE (doc-value boost): exact top-k under
     * score' = boost(doc) × BM25(query, doc), where `boost` is any Column
@@ -908,8 +1144,8 @@ object Wand {
       boost: org.apache.spark.sql.Column, maxBoost: Double,
       metrics: Option[WandMetrics] = None,
       docFilter: Option[org.apache.spark.sql.Column] = None): Map[Int, Array[(Double, Long)]] =
-    runFields(Seq(index -> 1.0), queries, k, metrics, boundKey = None,
-      docFilter = docFilter, funcScore = Some((boost, maxBoost)))
+    search(Seq(index -> 1.0), queries, Ranked(k, ByScore(boost = Some((boost, maxBoost)))),
+      docFilter, metrics = metrics)
 
   /** DEEP PAGINATION (search_after): the next k docs STRICTLY after each
     * query's `(score, docId)` cursor in the global (score desc, docId asc)
@@ -929,8 +1165,7 @@ object Wand {
   def topKAfter(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
       after: Map[Int, (Double, Long)],
       metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
-    runFields(Seq(index -> 1.0), queries, k, metrics, boundKey = None,
-      pageAfter = after)
+    search(Seq(index -> 1.0), queries, Ranked(k, ByScore(after)), metrics = metrics)
 
   /** TIERED approximate top-k: identical machinery, but block pruning
     * bounds derive from the named E6 metadata entry (e.g.
@@ -942,11 +1177,7 @@ object Wand {
     * index built without the computer degrades to exact, never to wrong-er. */
   def topKApprox(index: IndexHandle, queries: Seq[QuerySpec], k: Int, boundKey: String,
       metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
-    run(index, queries, k, metrics, boundKey = Some(boundKey))
-
-  private def run(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
-      metrics: Option[WandMetrics], boundKey: Option[String]): Map[Int, Array[(Double, Long)]] =
-    runFields(Seq(index -> 1.0), queries, k, metrics, boundKey)
+    search(Seq(index -> 1.0), queries, Ranked(k, boundKey = Some(boundKey)), metrics = metrics)
 
   /** FEDERATED exact top-k over DISJOINT shard indexes — search without
     * merging, the query-side dual of [[graft.index.IndexBuilder.merge]].
@@ -967,8 +1198,8 @@ object Wand {
   def topKSharded(shards: Seq[IndexHandle], queries: Seq[QuerySpec], k: Int,
       metrics: Option[WandMetrics] = None,
       collapse: Option[org.apache.spark.sql.Column] = None): Map[Int, Array[(Double, Long)]] =
-    runFields(shards.map(_ -> 1.0), queries, k, metrics, boundKey = None,
-      globalStats = Some(shardStats(shards, queries)), collapse = collapse)
+    search(shards.map(_ -> 1.0), queries, Ranked(k, collapse.fold[Order](ByScore())(Collapse)),
+      globalStats = Some(shardStats(shards, queries)), metrics = metrics)
 
   /** Filtered federation: [[topKSharded]] restricted to documents
     * satisfying a metadata predicate over the docstats row — global
@@ -979,9 +1210,8 @@ object Wand {
       filter: org.apache.spark.sql.Column,
       metrics: Option[WandMetrics] = None,
       collapse: Option[org.apache.spark.sql.Column] = None): Map[Int, Array[(Double, Long)]] =
-    runFields(shards.map(_ -> 1.0), queries, k, metrics, boundKey = None,
-      docFilter = Some(filter), globalStats = Some(shardStats(shards, queries)),
-      collapse = collapse)
+    search(shards.map(_ -> 1.0), queries, Ranked(k, collapse.fold[Order](ByScore())(Collapse)),
+      Some(filter), globalStats = Some(shardStats(shards, queries)), metrics = metrics)
 
   /** Corpus-global (nDocs, avgdl, per-term df) summed across the shards'
     * manifests and LIVE dictionaries — identical doubles to the merged
@@ -999,219 +1229,41 @@ object Wand {
     (gN, gAvgdl, gDf)
   }
 
-  /** The ONE ranked-retrieval driver, generalized over weighted FIELDS —
-    * plain BM25 is the single-field instance (weight 1.0), BM25F the
-    * multi-field one ([[Bm25f.topK]] delegates here). Per field: its own
+  /** THE WAND driver: one pass over a batch of queries in one [[Mode]] —
+    * ranked top-k, exact count, facet counts or sort-by-key — generalized
+    * over weighted FIELDS: plain BM25 is the single-field instance (weight
+    * 1.0), BM25F the multi-field one ([[Bm25f.topK]] delegates here),
+    * federated shards another ([[topKSharded]]). Per field: its own
     * dictionary lookup, (nDocs, avgdl), docstats; each (field, term) pair
     * becomes an independent cursor with effective idf = w_f · idf_f (BM25
     * impact is linear in idf), so upper bounds, block-max refinement and
-    * threshold seeding compose per field with no kernel changes.
+    * threshold seeding compose per field with no kernel changes. Every
+    * mode shares term lookup, constraint resolution, bucket pruning and
+    * the cogroup kernel; the mode decides what each bucket emits and how
+    * the rows reduce.
     *
-    * Global threshold seeding (zero-cost, stats-only): every (field, term)
-    * with df_f >= k guarantees df_f docs whose FULL score is at least
-    * w_f · impact_f(tf = 1, maxDocLen_f) — the max of those minima
-    * lower-bounds the true kth-best score, computed from dictionary +
-    * manifest alone (measured: 92% → 1.6% exact-evals at 512-doc buckets,
-    * PruneSpec; exactness oracle-asserted with seeding on). SOUNDNESS:
-    * single-field df is LIVE under deletes (eagerly decremented), but with
-    * multiple fields a doc deleted from another sub-index still counts in
-    * this field's df — so seeding disables on tombstoned multi-field runs.
+    * Global threshold seeding (zero-cost, stats-only, score-ordered
+    * [[Ranked]] only): every (field, term) with df_f >= k guarantees df_f
+    * docs whose FULL score is at least w_f · impact_f(tf = 1,
+    * maxDocLen_f) — the max of those minima lower-bounds the true
+    * kth-best score, computed from dictionary + manifest alone (measured:
+    * 92% → 1.6% exact-evals at 512-doc buckets, PruneSpec; exactness
+    * oracle-asserted with seeding on). SOUNDNESS: single-field df is LIVE
+    * under deletes (eagerly decremented), but with multiple fields a doc
+    * deleted from another sub-index still counts in this field's df — so
+    * seeding disables on tombstoned multi-field runs.
     *
     * Tombstoned docs ride into each bucket's cogroup as docLen = -1
     * sentinels for EVERY field (a doc deleted from any sub-index is dead
     * for the logical document); the kernel skips them before scoring. */
-  private[query] def runFields(fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec],
-      k: Int, metrics: Option[WandMetrics], boundKey: Option[String],
-      docFilter: Option[org.apache.spark.sql.Column] = None,
-      globalStats: Option[(Long, Double, Map[String, Long])] = None,
+  def search[R](fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec], mode: Mode[R],
+      docFilter: Option[Column] = None,
       constraints: Map[Int, Constraints] = Map.empty,
-      pageAfter: Map[Int, (Double, Long)] = Map.empty,
-      collapse: Option[org.apache.spark.sql.Column] = None,
-      countOnly: Boolean = false,
-      funcScore: Option[(org.apache.spark.sql.Column, Double)] = None): Map[Int, Array[(Double, Long)]] = {
-    require(collapse.isEmpty || !countOnly,
-      "countOnly × collapse is facet mode — use facetCounts")
-    val kk = k
-    val doCollapse = collapse.isDefined
-    def onEmpty = queries.map(q => q.queryId -> Array.empty[(Double, Long)]).toMap
-    runFieldsWith(fields, queries, k, metrics, boundKey, docFilter,
-      globalStats, constraints, pageAfter, collapse, countOnly, funcScore)(onEmpty) { candidates =>
-      val spark = fields.head._1.spark
-      import spark.implicits._
-      // reduce: per-query global top-k with a bounded heap (no full sort);
-      // under collapse the same group-aware collector merges the buckets'
-      // group-bests (a group spanning buckets collapses here)
-      val reduced = candidates.groupByKey(_.queryId).mapGroups { (qid, it) =>
-        if (countOnly) {
-          // sum of the buckets' partial counts, one row: (hits, hits)
-          var tot = 0L
-          it.foreach(c => tot += c.docId)
-          (qid, Array((tot.toDouble, tot)))
-        } else if (doCollapse) {
-          val ck = new CollapseTopK(kk)
-          it.foreach(c => ck.offer(c.score, c.docId, c.group))
-          (qid, ck.ranked)
-        } else {
-          val heap = new TopKHeap(kk)
-          it.foreach(c => heap.offer(c.score, c.docId))
-          (qid, heap.ranked.map { case (s, d) => (s, d) })
-        }
-      }.collect().toMap
-      queries.map(q => q.queryId -> reduced.getOrElse(q.queryId, Array.empty[(Double, Long)])).toMap
-    }
-  }
-
-  /** EXACT FACET COUNTS over the match set — the SERP facet panel: for
-    * each query, the per-facet-value count of documents containing ≥ 1
-    * scoring term and passing every constraint/filter, top-N values by
-    * (count desc, value asc). The facet key is any Column over the
-    * docstats row (like collapse), riding the url slot into the bucket
-    * cogroup; the kernel runs in count mode, each bucket emitting one
-    * partial row PER FACET VALUE PRESENT — shuffle is O(buckets × values
-    * present), never O(matching docs). */
-  def facetCounts(index: IndexHandle, queries: Seq[QuerySpec],
-      facetKey: org.apache.spark.sql.Column, topN: Int,
-      metrics: Option[WandMetrics] = None,
-      docFilter: Option[org.apache.spark.sql.Column] = None,
-      constraints: Map[Int, Constraints] = Map.empty): Map[Int, Seq[(String, Long)]] =
-    facetCountsWithTotal(index, queries, facetKey, topN, metrics, docFilter,
-      constraints).map { case (qid, (_, fs)) => qid -> fs }
-
-  /** [[facetCounts]] plus the query's EXACT total hits from the SAME
-    * pass — the per-value counts partition the match set, so their
-    * pre-cutoff sum IS the total; a SERP needs one ranked pass + this. */
-  def facetCountsWithTotal(index: IndexHandle, queries: Seq[QuerySpec],
-      facetKey: org.apache.spark.sql.Column, topN: Int,
-      metrics: Option[WandMetrics] = None,
-      docFilter: Option[org.apache.spark.sql.Column] = None,
-      constraints: Map[Int, Constraints] = Map.empty): Map[Int, (Long, Seq[(String, Long)])] = {
-    def onEmpty =
-      queries.map(q => q.queryId -> (0L, Seq.empty[(String, Long)])).toMap
-    runFieldsWith(Seq(index -> 1.0), queries, k = 1, metrics, boundKey = None,
-      docFilter = docFilter, constraints = constraints,
-      collapse = Some(facetKey), countOnly = true)(onEmpty) { candidates =>
-      val spark = index.spark
-      import spark.implicits._
-      val reduced = candidates.groupByKey(_.queryId).mapGroups { (qid, it) =>
-        val m = new java.util.HashMap[String, Long]()
-        var total = 0L
-        it.foreach { c =>
-          val prev = m.get(c.group)
-          m.put(c.group, (if (prev == null) 0L else prev) + c.docId)
-          total += c.docId
-          ()
-        }
-        import scala.jdk.CollectionConverters._
-        val top = m.asScala.toSeq.sortBy { case (v, n) => (-n, v) }.take(topN)
-        (qid, total, top)
-      }.collect()
-      val byId = reduced.map(r => r._1 -> ((r._2, r._3))).toMap
-      queries.map(q => q.queryId -> byId.getOrElse(q.queryId, (0L, Seq.empty))).toMap
-    }
-  }
-
-  /** (key desc, docId asc) — the sort-by-field candidate order, shared by
-    * the bucket-local and the global top-k cuts. Serializable: it rides
-    * the cogroup closure. */
-  private[query] val KeyDocOrdering: java.util.Comparator[(String, Long)] =
-    new java.util.Comparator[(String, Long)] with Serializable {
-      override def compare(a: (String, Long), b: (String, Long)): Int = {
-        val c = b._1.compareTo(a._1)
-        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-      }
-    }
-
-  /** The ONE bounded-cut idiom for sort-by-key — shared by the
-    * bucket-local kernel and the global reduce so the two cuts are
-    * provably identical: admit, then evict the lowest-priority element
-    * when over capacity. */
-  private[query] def boundedAdd(ts: java.util.TreeSet[(String, Long)],
-      elem: (String, Long), k: Int): Unit = {
-    ts.add(elem)
-    if (ts.size > k) { ts.pollLast(); () }
-  }
-
-  /** SORT-BY-FIELD retrieval: each query's match set (same admission as
-    * [[runFields]] count mode — ≥ 1 scoring term + every constraint and
-    * filter) ordered by a DOC-VALUE key instead of relevance — the
-    * `sort: [{date: desc}]` surface (freshness, doc length, any docstats
-    * expression). `sortKey` must be a STRING-ORDER-SORTABLE encoding
-    * (zero-pad numerics — `lpad(cast(v AS string), w, '0')` — the
-    * classic sortable-doc-value trick; ascending order = complement the
-    * encoding); it rides the collapse slot into the cogroup, so the cost
-    * shape is the facet pass's: each bucket ships its top-k admitted
-    * (key, docId) rows — shuffle O(buckets × k), never O(matching docs)
-    * — and the global reduce cuts the same order. Returns per query the
-    * top-k (key, docId) by (key desc, docId asc).
-    *
-    * NULL keys: the collapse slot coalesces a null key to "" — the
-    * SMALLEST string — so null-keyed docs sort LAST under a plain desc
-    * encoding but would surface FIRST under a complement-encoded
-    * ascending key. Callers whose key column is nullable should coalesce
-    * explicitly to the sentinel their encoding sorts last. */
-  def topKByKey(index: IndexHandle, queries: Seq[QuerySpec],
-      sortKey: org.apache.spark.sql.Column, k: Int,
-      metrics: Option[WandMetrics] = None,
-      docFilter: Option[org.apache.spark.sql.Column] = None,
-      constraints: Map[Int, Constraints] = Map.empty): Map[Int, Seq[(String, Long)]] = {
-    // k <= 0 would zero sortDocs and silently fall into FACET mode
-    // (O(buckets × distinct keys) shuffle) before reducing to nothing
-    require(k > 0, s"topKByKey requires k > 0, got $k")
-    def onEmpty = queries.map(q => q.queryId -> Seq.empty[(String, Long)]).toMap
-    runFieldsWith(Seq(index -> 1.0), queries, k = 1, metrics, boundKey = None,
-      docFilter = docFilter, constraints = constraints,
-      collapse = Some(sortKey), countOnly = true, sortDocs = k)(onEmpty) { candidates =>
-      val spark = index.spark
-      import spark.implicits._
-      val reduced = candidates.groupByKey(_.queryId).mapGroups { (qid, it) =>
-        val ts = new java.util.TreeSet[(String, Long)](KeyDocOrdering)
-        it.foreach(c => boundedAdd(ts, (c.group, c.docId), k))
-        import scala.jdk.CollectionConverters._
-        (qid, ts.iterator().asScala.toSeq)
-      }.collect().toMap
-      queries.map(q => q.queryId -> reduced.getOrElse(q.queryId, Seq.empty)).toMap
-    }
-  }
-
-  /** The shared driver core: everything up to the candidate rows (term
-    * lookup, constraint resolution, threshold seeding, bucket pruning,
-    * the cogroup kernel), generic in the final reduce so ranked / count /
-    * facet surfaces share one implementation. `onEmpty` is the no-hit
-    * result. */
-  private[query] def runFieldsWith[T](fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec],
-      k: Int, metrics: Option[WandMetrics], boundKey: Option[String],
-      docFilter: Option[org.apache.spark.sql.Column] = None,
       globalStats: Option[(Long, Double, Map[String, Long])] = None,
-      constraints: Map[Int, Constraints] = Map.empty,
-      pageAfter: Map[Int, (Double, Long)] = Map.empty,
-      collapse: Option[org.apache.spark.sql.Column] = None,
-      countOnly: Boolean = false,
-      funcScore: Option[(org.apache.spark.sql.Column, Double)] = None,
-      sortDocs: Int = 0)(onEmpty: => T)(
-      reduceFn: Dataset[ScoredDoc] => T): T = {
-    // sortDocs > 0: SORT-BY-KEY mode — count-mode admission, but each
-    // bucket emits its top-`sortDocs` admitted docs by (key desc, docId
-    // asc) instead of counts; requires the key (collapse) column
-    require(sortDocs == 0 || (countOnly && collapse.isDefined),
-      "sortDocs requires countOnly with a sort-key (collapse) column")
+      metrics: Option[WandMetrics] = None): Map[Int, R] = {
     require(fields.nonEmpty, "at least one field")
-    require(constraints.isEmpty || fields.length == 1,
-      "constrained (parsed-query) retrieval is single-field")
-    require(collapse.isEmpty || pageAfter.isEmpty,
-      "collapse does not compose with search_after (no stable per-doc cursor)")
-    // funcScore rides the same url slot as collapse — one at a time; it
-    // multiplies ranked scores, so it has no meaning in count mode
-    require(funcScore.isEmpty ||
-      (collapse.isEmpty && !countOnly && fields.length == 1),
-      "funcScore is single-field and excludes collapse/count modes")
-    funcScore.foreach { case (_, mb) =>
-      require(mb > 0.0 && !mb.isInfinite, s"maxBoost must be finite positive, got $mb") }
-    // countOnly: exact match COUNTS per query — no scoring, no heap; each
-    // bucket emits partial-count rows (docId slot = count): ONE per query
-    // plain, one per facet value present under a collapse key (facet
-    // mode). Single-field, no ranking knobs to compose with.
-    require(!countOnly || (fields.length == 1 && pageAfter.isEmpty),
-      "countOnly is single-field and composes with filters/constraints only")
+    require(fields.length == 1 || (constraints.isEmpty && mode.multiField),
+      "constraints, boosts, counts, facets and sort-by are single-field")
     val spark = fields.head._1.spark
     import spark.implicits._
     val m0 = fields.head._1.manifest
@@ -1219,8 +1271,7 @@ object Wand {
       h.manifest.bucketRange == m0.bucketRange && h.manifest.blockSize == m0.blockSize },
       "fielded sub-indexes must share block geometry (bucketRange, blockSize)")
     val nF = fields.length
-    val kk = k
-    def empty = onEmpty
+    def empty = queries.map(q => q.queryId -> mode.empty).toMap
     // term-pruned lookups of ONLY the batch's query terms (scale-safe: no
     // full-dictionary collect on the query path). Constraint terms ride in
     // the same lookup: excluded terms never score but their postings must
@@ -1289,28 +1340,30 @@ object Wand {
     }.toMap
     if (qSpecs.values.forall(_.isEmpty)) return empty
 
-    val seedSound =
-      docFilter.isEmpty && collapse.isEmpty && funcScore.isEmpty &&
-        (nF == 1 || fields.forall(_._1.manifest.tombVersion < 0))
-    val thetaSeed: Map[Int, Double] =
-      if (!seedSound) Map.empty
-      // seeding is UNSOUND for a constrained query (its df >= k guaranteed
-      // docs may fail the constraints) and for a page cursor (guaranteed
-      // docs may rank BEFORE the cursor) — per-query disable, like docFilter
-      else liveQueries.filterNot(q =>
-        resolvedCons.contains(q.queryId) || pageAfter.contains(q.queryId)).flatMap { q =>
-        val bounds = for {
-          f <- 0 until nF
-          if fields(f)._1.manifest.maxDocLen > 0 // pre-upgrade manifest: no bound
-          t <- q.terms.distinct
-          e <- dicts(f).get(t)
-          if e.df >= kk
-        } yield Bm25.scoreWithIdf(
-          q.boost(t) * fields(f)._2 * idfOf(f, t, e.df),
-          1, fields(f)._1.manifest.maxDocLen, avgdls(f))
-        // nextDown() guards exact-tie boundaries at the threshold
-        if (bounds.isEmpty) None else Some(q.queryId -> math.nextDown(bounds.max))
-      }.toMap
+    // seeding is UNSOUND under a filter, a collapse key or a boost (their
+    // df >= k guaranteed docs may be filtered out, collapse into fewer
+    // groups or score lower), for a constrained query (its guaranteed docs
+    // may fail the constraints) and for a page cursor (guaranteed docs may
+    // rank BEFORE the cursor) — the last two disable per query
+    val thetaSeed: Map[Int, Double] = mode match {
+      case Ranked(k, ByScore(after, None), _) if docFilter.isEmpty &&
+          (nF == 1 || fields.forall(_._1.manifest.tombVersion < 0)) =>
+        liveQueries.filterNot(q =>
+          resolvedCons.contains(q.queryId) || after.contains(q.queryId)).flatMap { q =>
+          val bounds = for {
+            f <- 0 until nF
+            if fields(f)._1.manifest.maxDocLen > 0 // pre-upgrade manifest: no bound
+            t <- q.terms.distinct
+            e <- dicts(f).get(t)
+            if e.df >= k
+          } yield Bm25.scoreWithIdf(
+            q.boost(t) * fields(f)._2 * idfOf(f, t, e.df),
+            1, fields(f)._1.manifest.maxDocLen, avgdls(f))
+          // nextDown() guards exact-tie boundaries at the threshold
+          if (bounds.isEmpty) None else Some(q.queryId -> math.nextDown(bounds.max))
+        }.toMap
+      case _ => Map.empty
+    }
 
     val bucketRange = m0.bucketRange
     val blocksPerBucket = m0.bucketRange / m0.blockSize
@@ -1399,26 +1452,25 @@ object Wand {
         case Some(p) => when(p, col("docLen")).otherwise(lit(-1)).cast("int")
         case None    => col("docLen")
       }
-      // under collapse (or funcScore) the group key / boost value (one
+      // the mode's slot value (collapse/facet/sort key or boost: one
       // codegen'd expression over the docstats row, computed AFTER
       // docFilter reads the raw url) rides the url slot into the cogroup
       // — docstats already ship url there
-      val keyCol = collapse.orElse(funcScore.map(_._1)) match {
+      val keyCol = mode.slot match {
         case Some(c) => coalesce(c.cast("string"), lit("")).as("url")
         case None    => col("url")
       }
       pruned.toDF().select(col("docId"), keyCol, dlCol.as("docLen"))
         .as[DocStat].map(s => (f, s))
     }.reduce(_ union _).union(tombSentinels)
-    val doCollapse = collapse.isDefined
-    val doFunc = funcScore.isDefined
-    val fsMax = funcScore.map(_._2).getOrElse(1.0)
+    val hasSlot = mode.slot.isDefined
+    val boundKey = mode.boundKey
+    val emit = mode.emitter
 
     // per-pass broadcasts, created after the last early return and
-    // destroyed once reduceFn (which always collects) has returned
+    // destroyed once the mode's reduce (which always collects) has returned
     val bTheta = spark.sparkContext.broadcast(thetaSeed)
     val bQ = spark.sparkContext.broadcast(qSpecs)
-    val bAfter = spark.sparkContext.broadcast(pageAfter)
     val bCons = spark.sparkContext.broadcast(resolvedCons)
     val bPhraseTids = spark.sparkContext.broadcast(
       (resolvedCons.values.flatMap(_.phrases.iterator.flatMap(_._1)) ++
@@ -1432,33 +1484,16 @@ object Wand {
         if (blockArr.isEmpty) Iterator.empty
         else {
           val docLens = Array.fill(nF)(new java.util.HashMap[Long, Integer]())
-          // collapse: docId → group key, from the SAME stats rows (the key
-          // rides the url slot). putIfAbsent: a tombstone sentinel's ""
-          // may win the slot, but a sentineled doc is never scored, so its
-          // group is never consulted
-          val docGroup =
-            if (doCollapse) new java.util.HashMap[Long, String]() else null
-          // funcScore: docId → boost, riding the same url slot; sentinel
-          // rows carry "" and are skipped (a sentineled doc is never
-          // scored). Raw strings here — parse + range-validation happen
-          // LAZILY per scored doc (boostOf below), so a boost expression
-          // that is garbage or out-of-bound for docs the filter excludes
-          // (or tombstones kill) can never fail the job; validation stays
-          // loud for every doc that actually scores (a silent over-bound
-          // boost would break pruning exactness). Parsed values memoize
-          // in place.
-          val docBoost =
-            if (doFunc) new java.util.HashMap[Long, AnyRef]() else null
+          // docId → slot value, from the SAME stats rows. putIfAbsent: a
+          // tombstone sentinel's "" may win the slot, but a sentineled doc
+          // is never scored or counted, so its value is never consulted
+          val slot = if (hasSlot) new java.util.HashMap[Long, String]() else null
           // iterator order after the shuffle is arbitrary: a -1 tombstone
           // sentinel must win over the doc's real norm either way round
           stats.foreach { case (f, s) =>
             if (s.docLen == -1) docLens(f).put(s.docId, Integer.valueOf(-1))
             else docLens(f).putIfAbsent(s.docId, Integer.valueOf(s.docLen))
-            if (docGroup != null) { docGroup.putIfAbsent(s.docId, s.url); () }
-            if (docBoost != null && s.url.nonEmpty) {
-              docBoost.putIfAbsent(s.docId, s.url)
-              ()
-            }
+            if (slot != null) { slot.putIfAbsent(s.docId, s.url); () }
             ()
           }
           val byFieldTerm: Map[(Int, Int), Array[DecodedBlock]] =
@@ -1536,7 +1571,6 @@ object Wand {
             else {
               metrics.foreach(m =>
                 m.candidates.add(cursors.iterator.map(_.totalDocs.toLong).sum))
-              val theta0 = bTheta.value.getOrElse(qid, Double.NegativeInfinity)
               val admit: Long => Boolean = rc match {
                 case None => null
                 case Some(c) => (doc: Long) =>
@@ -1558,106 +1592,16 @@ object Wand {
                     c.phrases.forall { case (ph, sl) => phraseAt(ph, sl, doc) } &&
                     !c.excludedPhrases.exists { case (ph, sl) => phraseAt(ph, sl, doc) }
               }
-              if (countOnly) {
-                // exact hit count, bucket-local: the union of the scoring
-                // terms' posting docIds (already-decoded blocks), each
-                // checked live (no -1 sentinel) and admitted. ONE partial
-                // row rides the shuffle per (query, bucket), docId = count.
-                val set = new java.util.HashSet[Long]()
-                specs.foreach { case (f, tid, _) =>
-                  byFieldTerm.get((f, tid)).foreach(_.foreach { b =>
-                    val ids = b.ids
-                    var i = 0
-                    while (i < ids.length) { set.add(ids(i)); i += 1 }
-                  })
-                }
-                if (sortDocs > 0) {
-                  // SORT-BY-KEY mode: the bucket's top-`sortDocs` admitted
-                  // docs by (key desc, docId asc) — the key is the collapse
-                  // Column riding the url slot. Candidates ride the shuffle
-                  // k-per-bucket; docId carries the REAL docId here.
-                  val ts = new java.util.TreeSet[(String, Long)](KeyDocOrdering)
-                  val dit = set.iterator()
-                  while (dit.hasNext) {
-                    val d = dit.next()
-                    val len = docLens(0).get(d)
-                    if (len == null)
-                      throw new IllegalStateException(
-                        s"no DocStat for docId $d — docstats pruning/build bug")
-                    if (len.intValue() != -1 && (admit == null || admit(d)))
-                      boundedAdd(ts, (docGroup.get(d), d), sortDocs)
-                  }
-                  import scala.jdk.CollectionConverters._
-                  ts.iterator().asScala
-                    .map { case (key, d) => ScoredDoc(qid, d, 0.0, key) }
-                } else {
-                // facet mode (collapse key present): per-value partial
-                // counts; plain count mode: one total per bucket
-                val perFacet =
-                  if (docGroup == null) null else new java.util.HashMap[String, Long]()
-                var cnt = 0L
-                val dit = set.iterator()
-                while (dit.hasNext) {
-                  val d = dit.next()
-                  val len = docLens(0).get(d)
-                  if (len == null)
-                    throw new IllegalStateException(
-                      s"no DocStat for docId $d — docstats pruning/build bug")
-                  if (len.intValue() != -1 && (admit == null || admit(d))) {
-                    if (perFacet == null) cnt += 1
-                    else {
-                      val g = docGroup.get(d)
-                      val prev = perFacet.get(g)
-                      perFacet.put(g, (if (prev == null) 0L else prev) + 1L)
-                      ()
-                    }
-                  }
-                }
-                if (perFacet == null) Iterator.single(ScoredDoc(qid, cnt, 0.0))
-                else {
-                  import scala.jdk.CollectionConverters._
-                  perFacet.entrySet().iterator().asScala
-                    .map(e => ScoredDoc(qid, e.getValue, 0.0, e.getKey))
-                }
-                }
-              } else {
-                val (aScore, aDoc) =
-                  bAfter.value.getOrElse(qid, (Double.PositiveInfinity, -1L))
-                val groupOf: Long => String =
-                  if (docGroup == null) null else docGroup.get(_)
-                val boostOf: Long => Double =
-                  if (docBoost == null) null
-                  else (d: Long) => docBoost.get(d) match {
-                    case null =>
-                      throw new IllegalStateException(
-                        s"no funcScore boost for docId $d — docstats pruning/build bug")
-                    case v: java.lang.Double => v.doubleValue()
-                    case raw: String =>
-                      val v = try java.lang.Double.parseDouble(raw) catch {
-                        case _: NumberFormatException =>
-                          throw new IllegalStateException(
-                            s"non-numeric funcScore boost '$raw' for docId $d")
-                      }
-                      if (!(v > 0.0) || v > fsMax)
-                        throw new IllegalStateException(
-                          s"funcScore boost $v for docId $d outside (0, maxBoost=$fsMax]")
-                      docBoost.put(d, java.lang.Double.valueOf(v))
-                      v
-                    case other =>
-                      throw new IllegalStateException(s"unexpected boost slot $other")
-                  }
-                wandBucket(cursors, docLens, kk, metrics, theta0, admit, aScore, aDoc,
-                  groupOf, boostOf, if (doFunc) fsMax else 1.0).iterator
-                  .map { case (s, d) =>
-                    ScoredDoc(qid, d, s, if (docGroup == null) "" else docGroup.get(d))
-                  }
-              }
+              emit(new BucketQuery(qid, cursors, docLens, slot, admit,
+                bTheta.value.getOrElse(qid, Double.NegativeInfinity), metrics))
             }
           }
         }
     }
 
-    try reduceFn(candidates)
-    finally Seq(bTheta, bQ, bAfter, bCons, bPhraseTids).foreach(_.destroy())
+    try {
+      val reduced = mode.reduce(candidates)
+      queries.map(q => q.queryId -> reduced.getOrElse(q.queryId, mode.empty)).toMap
+    } finally Seq(bTheta, bQ, bCons, bPhraseTids).foreach(_.destroy())
   }
 }
