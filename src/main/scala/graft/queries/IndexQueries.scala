@@ -1345,10 +1345,10 @@ object IndexQueries {
       import spark.implicits._
       val h = IndexCache.handle(spark, sfDir)
       def r4(s: Double) = BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      // BATCHED endpoint (Search.runAll): one ranked + one count/facet pass
-      // per distinct filter signature across ALL requests — per-request
+      // BATCHED endpoint (Search.runAll): one ranked-count-facet pass per
+      // distinct filter signature across ALL requests — per-request
       // results identical to Search.run's (SearchSpec asserts it), but the
-      // fixture drops from 2 passes x |requests| to 2 passes x |signatures|.
+      // fixture drops from |requests| passes to |signatures| passes.
       val responses = Search.runAll(h, QuerySet.hits, k = 40,
         facetKey = Some((col("docId") % 10).cast("string")), facetTopN = 5,
         Tokenizers.default)

@@ -267,21 +267,16 @@ object Search {
       facets: Seq[(String, Long)],
       nextCursor: Option[(Double, Long)])
 
-  /** THE search endpoint — one request, one response, two passes total:
-    * the ranked WAND pass (with constraints/filters/collapse/cursor),
-    * plus ONE count-mode pass that yields the exact total AND the facet
-    * panel together when `facetKey` is set ([[Wand.Facets]] — the
-    * per-value counts partition the match set, so their sum is the total
-    * for free), or just the total otherwise ([[Wand.Count]]). The two
-    * passes share only the compiled query and run CONCURRENTLY
-    * ([[graft.index.Overlap]]: at most two passes in flight per request,
-    * and a failing pass waits for its sibling before the error
-    * propagates) — each pass's jobs are a few tasks wide, so the pair
-    * fills slots one pass alone leaves idle. */
+  /** THE search endpoint — one request, one response, ONE WAND pass
+    * ([[Wand.Serp]]): each candidate bucket runs the ranked kernel (with
+    * constraints/filters/collapse/cursor) and the exhaustive match walk
+    * over the same decoded blocks, so one pass yields the hits, the exact
+    * total and, when `facetKey` is set, the facet panel (the per-value
+    * counts partition the match set, so their sum is the total). Measured
+    * on 4 cores over seven one-per-shape requests with a facet panel: 7
+    * Spark jobs per plain request, 9 with a wildcard, 10 with a fuzzy term. */
   def run(index: IndexHandle, req: SearchRequest,
       analyzer: TokenizerStrategy): SearchResponse = {
-    // ONE compile per request: wildcard/fuzzy expansion jobs are shared
-    // by the ranked pass and the count/facet pass
     val compiled = compile(index,
       Seq(QueryParser.parse(1, req.query, analyzer)), req.synonyms)
     serve(index, compiled, req.k, req.after.map(1 -> _).toMap, req.collapse,
@@ -289,21 +284,17 @@ object Search {
   }
 
   /** THE BATCHED SERP ENDPOINT: N requests sharing one knob set (k,
-    * facetKey, facetTopN, synonyms) answered with ONE ranked pass and ONE
-    * count/facet pass per distinct filter signature — instead of [[run]]'s
-    * 2 passes PER REQUEST (measured on 4 cores over seven one-per-shape
-    * requests with a facet panel: 14 Spark jobs per plain request, 16-17
-    * with wildcard/fuzzy expansion; 22-26 while every pass re-resolved
-    * the index tables). The signatures are served one at a time, each
-    * with its two passes overlapped exactly as in [[run]], so at most two
-    * passes are in flight whatever the number of signatures. The
-    * underlying driver ([[Wand.search]]) batches arbitrarily many queries
-    * per pass and evaluates them independently, so each request's hits,
-    * exact total, facet panel and cursor are IDENTICAL to its solo [[run]]
-    * (SearchSpec asserts runAll == N × run). This is the shape a service
-    * answering concurrent search requests must take: per-request job
-    * dispatch costs O(requests) Spark jobs of pure driver overhead,
-    * batched dispatch costs O(distinct filter signatures). */
+    * facetKey, facetTopN, synonyms) answered with ONE [[Wand.Serp]] pass
+    * per distinct filter signature — instead of [[run]]'s one pass PER
+    * REQUEST. The signatures are served one at a time, so one pass is in
+    * flight whatever the number of signatures. The underlying driver
+    * ([[Wand.search]]) batches arbitrarily many queries per pass and
+    * evaluates them independently, so each request's hits, exact total,
+    * facet panel and cursor are IDENTICAL to its solo [[run]] (SearchSpec
+    * asserts runAll == N × run). This is the shape a service answering
+    * concurrent search requests must take: per-request job dispatch costs
+    * O(requests) Spark jobs of pure driver overhead, batched dispatch costs
+    * O(distinct filter signatures). */
   def runAll(index: IndexHandle, reqs: Seq[(Int, String)], k: Int,
       facetKey: Option[Column], facetTopN: Int,
       analyzer: TokenizerStrategy,
@@ -314,27 +305,18 @@ object Search {
       facetKey.map(_ -> facetTopN))
   }
 
-  /** The SERP core of [[run]] and [[runAll]]: per filter signature, in
-    * turn, the ranked pass and the total/facet pass run together through
-    * [[graft.index.Overlap.overlap]]. `facet` is (key, topN). */
+  /** The SERP core of [[run]] and [[runAll]]: one [[Wand.Serp]] pass per
+    * filter signature, in turn. `facet` is (key, topN). */
   private def serve(index: IndexHandle, compiled: Seq[ParsedQuery], k: Int,
       after: Map[Int, (Double, Long)], collapse: Option[Column],
       facet: Option[(Column, Int)]): Map[Int, SearchResponse] = {
-    val rankedMode = ranked(k, after, collapse)
+    val mode = Wand.Serp(ranked(k, after, collapse), facet)
     grouped(compiled).flatMap { case (docFilter, group, cons) =>
-      val qs = group.map(_.toQuerySpec)
-      def pass[R](mode: Wand.Mode[R]): Map[Int, R] =
-        Wand.search(Seq(index -> 1.0), qs, mode, docFilter, cons)
-      val (totals, hits) = graft.index.Overlap.overlap(facet match {
-        case Some((key, topN)) => pass(Wand.Facets(key, topN))
-        case None => pass(Wand.Count).map { case (qid, n) => qid -> (n, Seq.empty[(String, Long)]) }
-      })(pass(rankedMode))
-      group.map { q =>
-        val h = hits(q.queryId)
-        val (total, fs) = totals(q.queryId)
-        val cursor = if (collapse.isDefined) None else h.lastOption.filter(_ => h.length == k)
-        q.queryId -> SearchResponse(h, total, fs, cursor)
-      }
+      Wand.search(Seq(index -> 1.0), group.map(_.toQuerySpec), mode, docFilter, cons)
+        .map { case (qid, (h, total, fs)) =>
+          val cursor = if (collapse.isDefined) None else h.lastOption.filter(_ => h.length == k)
+          qid -> SearchResponse(h, total, fs, cursor)
+        }
     }.toMap
   }
 

@@ -19,8 +19,19 @@ final case class QuerySpec(queryId: Int, terms: Seq[String],
   require(boosts.values.forall(_ > 0.0), s"non-positive boost in $boosts")
   def boost(term: String): Double = boosts.getOrElse(term, 1.0)
 }
+/** A row a WAND bucket ships to the per-query reduce. A hit
+  * (`tally = false`) is one doc: its score and, under collapse or sort-by,
+  * its key in `group`. A tally (`tally = true`) is a bucket's partial
+  * count of the match set: `docId` holds the count and `group` the facet
+  * value counted ("" for a plain total). */
 final case class ScoredDoc(queryId: Int, docId: Long, score: Double,
-    group: String = "")
+    group: String = "", tally: Boolean = false)
+
+/** One docstats row as the WAND cogroup reads it: the field it belongs to,
+  * its norm (-1 = tombstoned or filtered out) and the values of the mode's
+  * slot expressions ([[Wand.Mode]]), in slot order. */
+private[query] final case class SlotStat(field: Int, docId: Long, docLen: Int,
+    slots: Seq[String])
 
 /** k-way sorted-array intersection with galloping (exponential) search:
   * driven by the smallest list, each probe doubles its step then binary
@@ -841,21 +852,28 @@ object Wand {
 
   /** What one pass of the WAND driver ([[search]]) computes per query. Each
     * mode fixes its result type, its no-hit result, what a bucket ships per
-    * query and how those rows reduce, so a mix without a meaning (a cursor
+    * query and how those rows fold, so a mix without a meaning (a cursor
     * under collapse, a boost on a count) cannot be written. */
-  sealed trait Mode[R] {
-    /** The docstats expression riding the url slot into the cogroup: a
-      * collapse, facet or sort key, or a boost. */
-    private[query] def slot: Option[Column]
+  sealed abstract class Mode[R: TypeTag] {
+    /** The docstats expressions riding into the cogroup next to each doc's
+      * norm (collapse, facet or sort keys, or a boost), read per doc
+      * through [[BucketQuery.key]]. */
+    private[query] def slots: Seq[Column]
     /** Whether the mode may run over several fields (BM25F, shards). */
     private[query] def multiField: Boolean = false
     private[query] def boundKey: Option[String] = None
+    /** The ranked part, whose threshold the stats-only seed may raise. */
+    private[query] def rankedPart: Option[Ranked] = None
     private[query] def empty: R
     /** A bucket's rows for one query. Built on the driver from plain values
       * taken from the mode, so no Column reaches an executor. */
     private[query] def emitter: BucketQuery => Iterator[ScoredDoc]
+    /** One query's rows from every bucket folded into its result, on an
+      * executor; built like [[emitter]]. */
+    private[query] def fold: Iterator[ScoredDoc] => R
     /** Every bucket's rows reduced per query, in one job. */
-    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, R]
+    private[query] final def reduce(rows: Dataset[ScoredDoc]): Map[Int, R] =
+      perQuery(rows)(fold)
   }
 
   /** How a [[Ranked]] pass orders its hits. */
@@ -879,15 +897,16 @@ object Wand {
     * approximate pass ([[topKApprox]]). */
   final case class Ranked(k: Int, order: Order = ByScore(),
       override val boundKey: Option[String] = None) extends Mode[Array[(Double, Long)]] {
-    private[query] def slot: Option[Column] = order match {
-      case ByScore(_, boost) => boost.map(_._1)
-      case Collapse(key)     => Some(key)
+    private[query] def slots: Seq[Column] = order match {
+      case ByScore(_, boost) => boost.map(_._1).toSeq
+      case Collapse(key)     => Seq(key)
     }
     // a boost rides the one field's docstats row
     private[query] override def multiField: Boolean = order match {
       case ByScore(_, boost) => boost.isEmpty
       case Collapse(_)       => true
     }
+    private[query] override def rankedPart: Option[Ranked] = Some(this)
     private[query] def empty: Array[(Double, Long)] = Array.empty
     private[query] def emitter: BucketQuery => Iterator[ScoredDoc] = {
       val kk = k
@@ -898,44 +917,41 @@ object Wand {
       }
       q => {
         val (aScore, aDoc) = after.getOrElse(q.queryId, (Double.PositiveInfinity, -1L))
-        val groupOf: Long => String = if (grouped) q.slot.get(_) else null
+        val groupOf: Long => String = if (grouped) q.key(_) else null
         val boostOf: Long => Double =
-          maxBoost.map(mb => (d: Long) => parseBoost(q.slot.get(d), d, mb)).orNull
+          maxBoost.map(mb => (d: Long) => parseBoost(q.key(d), d, mb)).orNull
         wandBucket(q.cursors, q.docLens, kk, q.metrics, q.theta0, q.admit, aScore, aDoc,
           groupOf, boostOf, maxBoost.getOrElse(1.0)).iterator
-          .map { case (s, d) => ScoredDoc(q.queryId, d, s, if (grouped) q.slot.get(d) else "") }
+          .map { case (s, d) => ScoredDoc(q.queryId, d, s, if (grouped) q.key(d) else "") }
       }
     }
     // a bounded heap per query (no full sort); under collapse the same
     // group-aware collector merges the buckets' group-bests
-    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, Array[(Double, Long)]] = {
+    private[query] def fold: Iterator[ScoredDoc] => Array[(Double, Long)] = {
       val kk = k
-      val grouped = order.isInstanceOf[Collapse]
-      perQuery(rows) { it =>
-        if (grouped) {
-          val ck = new CollapseTopK(kk)
-          it.foreach(c => ck.offer(c.score, c.docId, c.group))
-          ck.ranked
-        } else {
-          val heap = new TopKHeap(kk)
-          it.foreach(c => heap.offer(c.score, c.docId))
-          heap.ranked
-        }
+      if (order.isInstanceOf[Collapse]) { it =>
+        val ck = new CollapseTopK(kk)
+        it.foreach(c => ck.offer(c.score, c.docId, c.group))
+        ck.ranked
+      } else { it =>
+        val heap = new TopKHeap(kk)
+        it.foreach(c => heap.offer(c.score, c.docId))
+        heap.ranked
       }
     }
   }
 
   /** EXACT TOTAL HITS per query: the documents holding ≥ 1 scoring term and
     * passing every constraint and filter. No scoring, no heap; each bucket
-    * ships ONE partial-count row per query (docId slot = count), so the
-    * shuffle is O(candidate buckets), never O(matching docs). */
+    * ships ONE partial-count tally per query, so the shuffle is
+    * O(candidate buckets), never O(matching docs). */
   case object Count extends Mode[Long] {
-    private[query] def slot: Option[Column] = None
+    private[query] def slots: Seq[Column] = Seq.empty
     private[query] def empty: Long = 0L
     private[query] def emitter: BucketQuery => Iterator[ScoredDoc] =
-      q => Iterator.single(ScoredDoc(q.queryId, q.matches.foldLeft(0L)((n, _) => n + 1L), 0.0))
-    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, Long] =
-      perQuery(rows)(_.foldLeft(0L)(_ + _.docId))
+      q => Iterator.single(ScoredDoc(q.queryId, q.matches.foldLeft(0L)((n, _) => n + 1L), 0.0,
+        tally = true))
+    private[query] def fold: Iterator[ScoredDoc] => Long = _.foldLeft(0L)(_ + _.docId)
   }
 
   /** EXACT FACET COUNTS over the match set — the SERP facet panel: for
@@ -943,18 +959,18 @@ object Wand {
     * (any Column over the docstats row: docId, url, docLen), top-N values
     * by (count desc, value asc), plus the query's exact total from the
     * SAME pass — the per-value counts partition the match set, so their
-    * pre-cutoff sum IS the total. Each bucket emits one partial row PER
-    * VALUE PRESENT (docId slot = count) — shuffle O(buckets × values
-    * present), never O(matching docs). */
+    * pre-cutoff sum IS the total. Each bucket emits one tally PER VALUE
+    * PRESENT — shuffle O(buckets × values present), never O(matching
+    * docs). */
   final case class Facets(key: Column, topN: Int) extends Mode[(Long, Seq[(String, Long)])] {
-    private[query] def slot: Option[Column] = Some(key)
+    private[query] def slots: Seq[Column] = Seq(key)
     private[query] def empty: (Long, Seq[(String, Long)]) = (0L, Seq.empty)
     private[query] def emitter: BucketQuery => Iterator[ScoredDoc] = q =>
-      sumByValue(q.matches.map(d => (q.slot.get(d), 1L))).entrySet().iterator().asScala
-        .map(e => ScoredDoc(q.queryId, e.getValue, 0.0, e.getKey))
-    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, (Long, Seq[(String, Long)])] = {
+      sumByValue(q.matches.map(d => (q.key(d), 1L))).entrySet().iterator().asScala
+        .map(e => ScoredDoc(q.queryId, e.getValue, 0.0, e.getKey, tally = true))
+    private[query] def fold: Iterator[ScoredDoc] => (Long, Seq[(String, Long)]) = {
       val n = topN
-      perQuery(rows) { it =>
+      it => {
         val m = sumByValue(it.map(c => (c.group, c.docId)))
         (m.values.asScala.sum, m.asScala.toSeq.sortBy { case (v, c) => (-c, v) }.take(n))
       }
@@ -973,39 +989,86 @@ object Wand {
     * global reduce cuts the same order. Returns per query the top-k
     * (key, docId) by (key desc, docId asc).
     *
-    * NULL keys: the url slot coalesces a null key to "" — the SMALLEST
+    * NULL keys: the slot coalesces a null key to "" — the SMALLEST
     * string — so null-keyed docs sort LAST under a plain desc encoding but
     * would surface FIRST under a complement-encoded ascending key. Callers
     * whose key column is nullable should coalesce explicitly to the
     * sentinel their encoding sorts last. */
   final case class SortBy(key: Column, k: Int) extends Mode[Seq[(String, Long)]] {
     require(k > 0, s"SortBy requires k > 0, got $k")
-    private[query] def slot: Option[Column] = Some(key)
+    private[query] def slots: Seq[Column] = Seq(key)
     private[query] def empty: Seq[(String, Long)] = Seq.empty
     private[query] def emitter: BucketQuery => Iterator[ScoredDoc] = {
       val kk = k
-      q => topKeys(q.matches.map(d => (q.slot.get(d), d)), kk)
+      q => topKeys(q.matches.map(d => (q.key(d), d)), kk)
         .map { case (v, d) => ScoredDoc(q.queryId, d, 0.0, v) }
     }
-    private[query] def reduce(rows: Dataset[ScoredDoc]): Map[Int, Seq[(String, Long)]] = {
+    private[query] def fold: Iterator[ScoredDoc] => Seq[(String, Long)] = {
       val kk = k
-      perQuery(rows)(it => topKeys(it.map(c => (c.group, c.docId)), kk).toSeq)
+      it => topKeys(it.map(c => (c.group, c.docId)), kk).toSeq
+    }
+  }
+
+  /** ONE SEARCH RESULT PAGE per query in one pass: `ranked`'s hits, the
+    * exact total and, when `facets` = (key, topN) is set, [[Facets]]' panel
+    * (else an empty one). Each bucket runs the ranked WAND kernel and the
+    * exhaustive match walk over the SAME decoded blocks and norms, so the
+    * term lookup, bucket probe, postings and docstats scans, shuffle and
+    * reduce are paid once, not once per part. The ranked part keeps its
+    * own guarantees — threshold seeding under exactly [[Ranked]]'s
+    * conditions, block-max pruning, [[WandMetrics]] counted once — and the
+    * tallies still count every live, admitted match (seeding and pruning
+    * never touch them). A collapse key and a facet key ride into the
+    * cogroup as two slots of the same docstats row. */
+  final case class Serp(ranked: Ranked, facets: Option[(Column, Int)] = None)
+      extends Mode[(Array[(Double, Long)], Long, Seq[(String, Long)])] {
+    private[query] def slots: Seq[Column] = ranked.slots ++ facets.map(_._1)
+    private[query] override def boundKey: Option[String] = ranked.boundKey
+    private[query] override def rankedPart: Option[Ranked] = Some(ranked)
+    private[query] def empty: (Array[(Double, Long)], Long, Seq[(String, Long)]) =
+      (Array.empty, 0L, Seq.empty)
+    private[query] def emitter: BucketQuery => Iterator[ScoredDoc] = {
+      val hits = ranked.emitter
+      val tallies = facets.fold(Count.emitter) { case (key, n) => Facets(key, n).emitter }
+      val facetSlot = ranked.slots.length
+      q => hits(q) ++ tallies(q.fromSlot(facetSlot))
+    }
+    private[query] def fold: Iterator[ScoredDoc] => (Array[(Double, Long)], Long, Seq[(String, Long)]) = {
+      val hits = ranked.fold
+      val tallies: Iterator[ScoredDoc] => (Long, Seq[(String, Long)]) = facets match {
+        case Some((key, n)) => Facets(key, n).fold
+        case None =>
+          val total = Count.fold
+          it => (total(it), Seq.empty)
+      }
+      it => {
+        val (ts, hs) = it.partition(_.tally)
+        val h = hits(hs)
+        val (total, panel) = tallies(ts)
+        (h, total, panel)
+      }
     }
   }
 
   /** One query's view of one bucket, handed to its mode's emitter: cursors
     * over its scoring terms' decoded blocks, per-field norms (docLen -1 =
-    * tombstoned or filtered out), the url-slot value per doc (null when the
-    * mode has no slot), the constraint check (null = none) and the seeded
+    * tombstoned or filtered out), the slot values per doc (one map per
+    * slot of the mode), the constraint check (null = none) and the seeded
     * threshold. */
   private[query] final class BucketQuery(
       val queryId: Int,
       val cursors: Array[TermCursor],
       val docLens: Array[java.util.HashMap[Long, Integer]],
-      val slot: java.util.HashMap[Long, String],
+      slots: Array[java.util.HashMap[Long, String]],
       val admit: Long => Boolean,
       val theta0: Double,
       val metrics: Option[WandMetrics]) {
+    /** A scored or matched doc's value of the first slot. */
+    def key(d: Long): String = slots(0).get(d)
+    /** This view with its slots starting at `i`: the part of a combined
+      * mode whose slots follow another part's. */
+    def fromSlot(i: Int): BucketQuery =
+      new BucketQuery(queryId, cursors, docLens, slots.drop(i), admit, theta0, metrics)
     /** The bucket's match set (single field): every doc holding ≥ 1
       * scoring term — the union of the already-decoded blocks — that is
       * live (no -1 sentinel) and admitted. */
@@ -1058,7 +1121,7 @@ object Wand {
     ts.iterator().asScala
   }
 
-  /** A scored doc's boost from its raw url-slot string, validated against
+  /** A scored doc's boost from its raw slot string, validated against
     * the caller-asserted bound (a silent over-bound boost would break
     * pruning exactness). Parsed per scored doc, so a boost that is garbage
     * for docs a filter excludes (or tombstones kill) never fails the job. */
@@ -1115,7 +1178,7 @@ object Wand {
     * inside some bucket's local top-k group-bests (k better groups locally
     * would imply k better groups globally). Cost shape over [[topK]]: the
     * collapse key is ONE codegen'd expression on the already bucket-pruned
-    * docstats scan, riding the url slot that already ships to the cogroup
+    * docstats scan, riding a slot of the docstats row into the cogroup
     * — no extra pass, no extra shuffle; candidates carry the group string
     * to the bounded group-aware reduce. The stats-only threshold seed is
     * UNSOUND under collapse (a term's df ≥ k guaranteed docs may collapse
@@ -1135,8 +1198,8 @@ object Wand {
     * (validated per doc, loudly). Pruning stays EXACT: every term upper
     * bound and block max scales by maxBoost, so no boosted doc can hide
     * above a pruned bound — the cost of a wide boost spread is weaker
-    * pruning, never a wrong ranking. The boost value rides the docstats
-    * url slot into the bucket cogroup (one codegen'd expression on the
+    * pruning, never a wrong ranking. The boost value rides a slot of the
+    * docstats row into the bucket cogroup (one codegen'd expression on the
     * bucket-pruned scan — no extra pass or shuffle); the stats-only
     * threshold seed disables (per-doc boosts void the df ≥ k bound).
     * Composes with docFilter; excludes collapse/count modes. */
@@ -1230,7 +1293,8 @@ object Wand {
   }
 
   /** THE WAND driver: one pass over a batch of queries in one [[Mode]] —
-    * ranked top-k, exact count, facet counts or sort-by-key — generalized
+    * ranked top-k, exact count, facet counts, sort-by-key, or a whole
+    * search result page (hits + total + facets, [[Serp]]) — generalized
     * over weighted FIELDS: plain BM25 is the single-field instance (weight
     * 1.0), BM25F the multi-field one ([[Bm25f.topK]] delegates here),
     * federated shards another ([[topKSharded]]). Per field: its own
@@ -1242,9 +1306,9 @@ object Wand {
     * the cogroup kernel; the mode decides what each bucket emits and how
     * the rows reduce.
     *
-    * Global threshold seeding (zero-cost, stats-only, score-ordered
-    * [[Ranked]] only): every (field, term) with df_f >= k guarantees df_f
-    * docs whose FULL score is at least w_f · impact_f(tf = 1,
+    * Global threshold seeding (zero-cost, stats-only, the score-ordered
+    * [[Ranked]] part of a mode only): every (field, term) with df_f >= k
+    * guarantees df_f docs whose FULL score is at least w_f · impact_f(tf = 1,
     * maxDocLen_f) — the max of those minima lower-bounds the true
     * kth-best score, computed from dictionary + manifest alone (measured:
     * 92% → 1.6% exact-evals at 512-doc buckets, PruneSpec; exactness
@@ -1345,8 +1409,8 @@ object Wand {
     // groups or score lower), for a constrained query (its guaranteed docs
     // may fail the constraints) and for a page cursor (guaranteed docs may
     // rank BEFORE the cursor) — the last two disable per query
-    val thetaSeed: Map[Int, Double] = mode match {
-      case Ranked(k, ByScore(after, None), _) if docFilter.isEmpty &&
+    val thetaSeed: Map[Int, Double] = mode.rankedPart match {
+      case Some(Ranked(k, ByScore(after, None), _)) if docFilter.isEmpty &&
           (nF == 1 || fields.forall(_._1.manifest.tombVersion < 0)) =>
         liveQueries.filterNot(q =>
           resolvedCons.contains(q.queryId) || after.contains(q.queryId)).flatMap { q =>
@@ -1420,9 +1484,9 @@ object Wand {
 
     // tombstone union across fields → docLen = -1 sentinels for EVERY
     // field's map (bucket-pruned like the norms)
-    val tombSentinels: Dataset[(Int, DocStat)] = {
+    val tombSentinels: Dataset[SlotStat] = {
       val tombed = fields.map(_._1).filter(_.manifest.tombVersion >= 0)
-      if (tombed.isEmpty) spark.emptyDataset[(Int, DocStat)]
+      if (tombed.isEmpty) spark.emptyDataset[SlotStat]
       else {
         val ids = tombed.map(_.tombstones.toDF("docId")).reduce(_ unionByName _).distinct()
           .withColumn("bucket", (col("docId") / lit(bucketRange)).cast("long"))
@@ -1433,11 +1497,15 @@ object Wand {
             ids.filter(col("bucket").isin(probe.toIndexedSeq.map(Long.box): _*))
           else ids.join(candBuckets, Seq("bucket"), "left_semi")
         pruned.select("docId").as[Long]
-          .flatMap(d => (0 until nF).iterator.map(f => (f, DocStat(d, "", -1))))
+          .flatMap(d => (0 until nF).iterator.map(f => SlotStat(f, d, -1, Seq.empty)))
       }
     }
 
-    val fStats: Dataset[(Int, DocStat)] = (0 until nF).map { f =>
+    // the mode's slot values (collapse/facet/sort keys or a boost: one
+    // codegen'd expression each over the docstats row, computed AFTER
+    // docFilter reads the raw url) ride next to the norms into the cogroup
+    val slotCols = mode.slots.map(c => coalesce(c.cast("string"), lit("")))
+    val fStats: Dataset[SlotStat] = (0 until nF).map { f =>
       val h = fields(f)._1
       val pruned =
         if (probe.length <= MaxPredicateBuckets) docstatsForBuckets(h, probe)
@@ -1452,18 +1520,11 @@ object Wand {
         case Some(p) => when(p, col("docLen")).otherwise(lit(-1)).cast("int")
         case None    => col("docLen")
       }
-      // the mode's slot value (collapse/facet/sort key or boost: one
-      // codegen'd expression over the docstats row, computed AFTER
-      // docFilter reads the raw url) rides the url slot into the cogroup
-      // — docstats already ship url there
-      val keyCol = mode.slot match {
-        case Some(c) => coalesce(c.cast("string"), lit("")).as("url")
-        case None    => col("url")
-      }
-      pruned.toDF().select(col("docId"), keyCol, dlCol.as("docLen"))
-        .as[DocStat].map(s => (f, s))
+      pruned.toDF().select(lit(f).as("field"), col("docId"), dlCol.as("docLen"),
+        array(slotCols: _*).cast("array<string>").as("slots"))
+        .as[SlotStat]
     }.reduce(_ union _).union(tombSentinels)
-    val hasSlot = mode.slot.isDefined
+    val nSlots = slotCols.length
     val boundKey = mode.boundKey
     val emit = mode.emitter
 
@@ -1476,7 +1537,7 @@ object Wand {
       (resolvedCons.values.flatMap(_.phrases.iterator.flatMap(_._1)) ++
         resolvedCons.values.flatMap(_.excludedPhrases.iterator.flatMap(_._1))).toSet)
     val blocksByBucket = fBlocks.groupByKey(_._2.blockId / blocksPerBucket)
-    val statsByBucket = fStats.groupByKey(_._2.docId / bucketRange)
+    val statsByBucket = fStats.groupByKey(_.docId / bucketRange)
 
     val candidates: Dataset[ScoredDoc] = blocksByBucket.cogroup(statsByBucket) {
       (bucket, blocks, stats) =>
@@ -1484,17 +1545,19 @@ object Wand {
         if (blockArr.isEmpty) Iterator.empty
         else {
           val docLens = Array.fill(nF)(new java.util.HashMap[Long, Integer]())
-          // docId → slot value, from the SAME stats rows. putIfAbsent: a
-          // tombstone sentinel's "" may win the slot, but a sentineled doc
-          // is never scored or counted, so its value is never consulted
-          val slot = if (hasSlot) new java.util.HashMap[Long, String]() else null
+          // docId → slot values, from the SAME stats rows. A -1 sentinel
+          // row's values are not kept: its doc is never scored or counted,
+          // so none of them is ever consulted
+          val slots = Array.fill(nSlots)(new java.util.HashMap[Long, String]())
           // iterator order after the shuffle is arbitrary: a -1 tombstone
           // sentinel must win over the doc's real norm either way round
-          stats.foreach { case (f, s) =>
-            if (s.docLen == -1) docLens(f).put(s.docId, Integer.valueOf(-1))
-            else docLens(f).putIfAbsent(s.docId, Integer.valueOf(s.docLen))
-            if (slot != null) { slot.putIfAbsent(s.docId, s.url); () }
-            ()
+          stats.foreach { s =>
+            if (s.docLen == -1) docLens(s.field).put(s.docId, Integer.valueOf(-1))
+            else {
+              docLens(s.field).putIfAbsent(s.docId, Integer.valueOf(s.docLen))
+              var i = 0
+              while (i < nSlots) { slots(i).putIfAbsent(s.docId, s.slots(i)); i += 1 }
+            }
           }
           val byFieldTerm: Map[(Int, Int), Array[DecodedBlock]] =
             blockArr.groupBy(p => (p._1, p._2.termId)).map { case (key, ps) =>
@@ -1592,7 +1655,7 @@ object Wand {
                     c.phrases.forall { case (ph, sl) => phraseAt(ph, sl, doc) } &&
                     !c.excludedPhrases.exists { case (ph, sl) => phraseAt(ph, sl, doc) }
               }
-              emit(new BucketQuery(qid, cursors, docLens, slot, admit,
+              emit(new BucketQuery(qid, cursors, docLens, slots, admit,
                 bTheta.value.getOrElse(qid, Double.NegativeInfinity), metrics))
             }
           }
