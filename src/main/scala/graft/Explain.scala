@@ -33,7 +33,9 @@ object Explain {
     section("Dictionary aggregation (partial+final hash agg, one exchange)",
       td.groupBy("term").agg(count(lit(1)).as("df"), sum(col("tf")).as("cf")))
 
-    val dict = IndexBuilder.dictionary(td, 8).collect().map(e => e.term -> e).toMap
+    val (ranked, _, release) = IndexBuilder.dictionaryRanked(td, 8)
+    val dict = ranked.collect().map(e => e.term -> e).toMap
+    release()
     section("Posting-block build (one salted exchange on (termId, bucket) + local sort)",
       IndexBuilder.postingBlocks(td, dict, IndexConfig()).toDF())
 

@@ -112,6 +112,49 @@ object IndexBuilder {
   def readDocstats(spark: SparkSession, indexDir: String, m: IndexManifest): DataFrame =
     spark.read.parquet(docstatsDirs(indexDir, m): _*)
 
+  /** The live tombstone table as one `docId` column — an empty local
+    * relation (which the optimizer folds out of anti-joins) when the index
+    * was never deleted from. */
+  def readTombstones(spark: SparkSession, indexDir: String, m: IndexManifest): DataFrame = {
+    import spark.implicits._
+    if (m.tombVersion < 0) Seq.empty[Long].toDF("docId")
+    else spark.read.parquet(tombDirFor(indexDir, m.tombVersion)).toDF("docId")
+  }
+
+  /** Every directory manifest `m` names: its segments, its dictionary
+    * version and its tombstone version if any. [[vacuum]] keeps exactly
+    * these; [[Snapshots.export]] copies exactly these. */
+  def referencedDirs(indexDir: String, m: IndexManifest): Seq[String] =
+    m.segments.map(segmentDir(indexDir, _)) ++ Seq(dictDirFor(indexDir, m.dictVersion)) ++
+      (if (m.tombVersion >= 0) Seq(tombDirFor(indexDir, m.tombVersion)) else Nil)
+
+  /** The docId-keyed table write (docstats, tombstones): rows hashed on
+    * their docId bucket into `buckets` files and sorted by docId, so each
+    * file's docId min/max stays tight for the range-predicate pruning. */
+  private def writeDocIdClustered(rows: Dataset[_], buckets: Int, bucketRange: Long,
+      dest: String): Unit =
+    rows.repartition(buckets, (col("docId") / lit(bucketRange)).cast("long"))
+      .sortWithinPartitions(col("docId"))
+      .write.mode("overwrite").parquet(dest)
+
+  /** Tombstones v(N+1) of manifest `m`'s index, clustered like docstats. */
+  private def writeNextTombstones(docIds: DataFrame, indexDir: String, m: IndexManifest): Unit =
+    writeDocIdClustered(docIds, m.postingsBuckets, m.bucketRange, tombDirFor(indexDir, m.tombVersion + 1))
+
+  /** The postings write: blocks hashed on termId into `buckets` files and
+    * sorted by (termId, blockId), so a term's blocks are one contiguous run. */
+  private def writePostings(blocks: Dataset[_], buckets: Int, dest: String): Unit =
+    blocks.repartition(buckets, col("termId"))
+      .sortWithinPartitions(col("termId"), col("blockId"))
+      .write.mode("overwrite").parquet(dest)
+
+  /** Dictionary v(N+1) of manifest `m`'s index, in `m.postingsBuckets`
+    * files like every version before it — a fixed count, so termId-range
+    * clustering survives any number of appends, deletes and merges. */
+  private def writeNextDict(dict: DataFrame, indexDir: String, m: IndexManifest,
+      vocabSize: Long): Unit =
+    writeClusteredDict(dict, m.postingsBuckets, vocabSize, dictDirFor(indexDir, m.dictVersion + 1))
+
   /** Tombstone delete — the third lifecycle verb (build / append / delete).
     * Postings, docstats and block metadata keep deleted rows physically
     * until compaction (Lucene-style), but scoring stays EXACT: the
@@ -131,15 +174,13 @@ object IndexBuilder {
   def delete(spark: SparkSession, indexDir: String, docIds: Seq[Long]): IndexManifest = {
     import spark.implicits._
     val old = Manifest.read(s"$indexDir/manifest.json")
-    val oldTombs: Dataset[Long] =
-      if (old.tombVersion < 0) spark.emptyDataset[Long]
-      else spark.read.parquet(tombDirFor(indexDir, old.tombVersion)).as[Long]
+    val oldTombs = readTombstones(spark, indexDir, old)
     val requested = docIds.distinct.toDF("docId")
     val docstats = readDocstats(spark, indexDir, old)
     // genuinely-new = requested ∩ existing docs − already-tombstoned
     val fresh = requested
       .join(docstats.select("docId"), Seq("docId"), "left_semi")
-      .join(oldTombs.toDF("docId"), Seq("docId"), "left_anti")
+      .join(oldTombs, Seq("docId"), "left_anti")
       .as[Long].collect().sorted // bounded by the caller's request size
     if (fresh.isEmpty) return old
     val freshSet = fresh.toSet
@@ -200,9 +241,7 @@ object IndexBuilder {
   def deleteByIds(spark: SparkSession, indexDir: String, ids: DataFrame): IndexManifest = {
     import spark.implicits._
     val old = Manifest.read(s"$indexDir/manifest.json")
-    val oldTombs: Dataset[Long] =
-      if (old.tombVersion < 0) spark.emptyDataset[Long]
-      else spark.read.parquet(tombDirFor(indexDir, old.tombVersion)).as[Long]
+    val oldTombs = readTombstones(spark, indexDir, old)
     val docstats = readDocstats(spark, indexDir, old)
     // genuinely-new = requested ∩ existing docs − already-tombstoned;
     // multi-consumer (agg + buckets + posting join + tombstone union) →
@@ -210,7 +249,7 @@ object IndexBuilder {
     val fresh = ids
       .select(col(ids.columns.head).cast("long").as("docId")).distinct()
       .join(docstats.select("docId"), Seq("docId"), "left_semi")
-      .join(oldTombs.toDF("docId"), Seq("docId"), "left_anti")
+      .join(oldTombs, Seq("docId"), "left_anti")
       .localCheckpoint(true)
     val delAgg = docstats
       .join(fresh, Seq("docId"), "left_semi")
@@ -249,29 +288,21 @@ object IndexBuilder {
     * lineage + manifest commit (manifest LAST — crash-replay re-derives the
     * same versions from untouched v(N) inputs). Fully distributed. */
   private def commitDelete(spark: SparkSession, indexDir: String, old: IndexManifest,
-      oldTombs: Dataset[Long], fresh: DataFrame, termDeltas: DataFrame,
+      oldTombs: DataFrame, fresh: DataFrame, termDeltas: DataFrame,
       nDel: Long, lenDel: Long): IndexManifest = {
-    // dictionary v(N+1): decremented stats, stable termIds, distributed
-    // write preserving the CURRENT layout (bucket count = the live
-    // dictionary's file count, so termId-range clustering survives deletes
-    // regardless of the original build's postingsBuckets)
-    val oldDict = spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
-    val nBuckets = math.max(1, oldDict.inputFiles.length)
-    // dictionary v(N+1) and tombstones v(N+1) are independent writes —
-    // overlap them (optimization guide §2.6; Overlap quiesces on failure)
+    // dictionary v(N+1) (decremented stats, stable termIds) and tombstones
+    // v(N+1) = v(N) ∪ fresh are independent writes — overlap them
+    // (optimization guide §2.6; Overlap quiesces on failure)
     Overlap.overlap {
-      writeClusteredDict(
-        oldDict.join(termDeltas, Seq("termId"), "left_outer")
+      writeNextDict(
+        spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
+          .join(termDeltas, Seq("termId"), "left_outer")
           .select(col("termId"), col("term"),
             (col("df") - coalesce(col("d_df"), lit(0L))).cast("long").as("df"),
             (col("cf") - coalesce(col("d_cf"), lit(0L))).cast("long").as("cf")),
-        nBuckets, old.vocabSize, dictDirFor(indexDir, old.dictVersion + 1))
+        indexDir, old, old.vocabSize)
     } {
-      // tombstones v(N+1) = v(N) ∪ fresh, bucket-clustered
-      oldTombs.toDF("docId").unionByName(fresh.select("docId"))
-        .repartition(old.postingsBuckets, (col("docId") / lit(old.bucketRange)).cast("long"))
-        .sortWithinPartitions(col("docId"))
-        .write.mode("overwrite").parquet(tombDirFor(indexDir, old.tombVersion + 1))
+      writeNextTombstones(oldTombs.unionByName(fresh.select("docId")), indexDir, old)
     }
 
     Lineage.append(spark, indexDir,
@@ -370,11 +401,6 @@ object IndexBuilder {
         }
       }
   }
-
-  /** Convenience wrapper (tests/ad-hoc); leaks the rank cache — production
-    * paths use [[dictionaryRanked]]/[[rankedFromStats]] and release. */
-  def dictionary(td: Dataset[TermDoc], partitions: Int): Dataset[TermEntry] =
-    dictionaryRanked(td, partitions)._1
 
   /** Streaming block builder over rows pre-sorted by (termId, bucket, docId).
     * Constant memory: at most `blockSize` postings buffered (the SPIMI
@@ -576,21 +602,18 @@ object IndexBuilder {
     // multi-consumer relations here are DIRECT parquet scans (tombstones,
     // blocks) — re-scanning per consumer beats materializing a whole-index
     // checkpoint, the same columnar re-scan trade as cacheTermDocs=false
-    val tombs =
-      if (old.tombVersion < 0) spark.range(0).select(col("id").as("docId"))
-      else spark.read.parquet(tombDirFor(indexDir, old.tombVersion)).toDF("docId")
+    val tombs = readTombstones(spark, indexDir, old)
     val tombsIn = tombs.filter(col("docId") >= spanLo && col("docId") < spanHi)
     val tombsOut = tombs.filter(col("docId") < spanLo || col("docId") >= spanHi)
 
     // in-span docstats lose their tombstoned rows; out-of-span segments are
-    // never even read
-    val statsIn = spark.read
-      .parquet(touched.map(s => s"${segmentDir(indexDir, s)}/docstats"): _*)
+    // never even read (the manifest narrowed to the touched run)
+    val slice = old.copy(segments = touched)
+    val statsIn = readDocstats(spark, indexDir, slice)
       .select("docId", "url", "docLen")
       .join(broadcast(tombsIn), Seq("docId"), "left_anti")
 
-    val surviving = spark.read
-      .parquet(touched.map(s => s"${segmentDir(indexDir, s)}/postings"): _*)
+    val surviving = readPostings(spark, indexDir, slice)
       .as[PostingBlock]
       .flatMap { b =>
         val ids = VByte.decodeDocIds(b.docIdGaps)
@@ -611,28 +634,16 @@ object IndexBuilder {
     // segment — overlap them (optimization guide §2.6; Overlap quiesces
     // the background write if the foreground fails)
     Overlap.overlap {
-      statsIn
-        .repartition(cfg.postingsBuckets, (col("docId") / lit(old.bucketRange)).cast("long"))
-        .sortWithinPartitions(col("docId"))
-        .write.mode("overwrite").parquet(s"$mergedDir/docstats")
+      writeDocIdClustered(statsIn, cfg.postingsBuckets, old.bucketRange, s"$mergedDir/docstats")
     } {
-      assembleBlocks(surviving, cfg)
-        .repartition(cfg.postingsBuckets, col("termId"))
-        .sortWithinPartitions(col("termId"), col("blockId"))
-        .write.mode("overwrite").parquet(s"$mergedDir/postings")
+      writePostings(assembleBlocks(surviving, cfg), cfg.postingsBuckets, s"$mergedDir/postings")
     }
 
     // tombstones that survive outside the span (none on a full compaction)
     val remaining = if (old.tombVersion < 0) 0L else tombsOut.count()
     val newTombVersion =
       if (remaining == 0L) -1
-      else {
-        tombsOut
-          .repartition(old.postingsBuckets, (col("docId") / lit(old.bucketRange)).cast("long"))
-          .sortWithinPartitions(col("docId"))
-          .write.mode("overwrite").parquet(tombDirFor(indexDir, old.tombVersion + 1))
-        old.tombVersion + 1
-      }
+      else { writeNextTombstones(tombsOut, indexDir, old); old.tombVersion + 1 }
 
     Lineage.append(spark, indexDir,
       LineageRow(-1, "compact", old.nDocs, System.currentTimeMillis(), "committed"))
@@ -706,22 +717,16 @@ object IndexBuilder {
     val retained = Manifest.history(indexDir)
       .filter(_.snapshotId < live.snapshotId)
       .sortBy(-_.snapshotId).take(retainSnapshots - 1) :+ live
-    val liveSegs = retained.flatMap(_.segments.map(_.name)).toSet
-    val liveDicts = retained.map(m => f"v${m.dictVersion}%05d").toSet
-    val liveTombs = retained.filter(_.tombVersion >= 0)
-      .map(m => f"v${m.tombVersion}%05d").toSet
-    val liveSnaps = (retained.map(m => f"v${m.snapshotId}%05d.json") :+
-      f"v${live.snapshotId}%05d.json").toSet
-    val segGarbage = Store.list(s"$indexDir/segments").filterNot(liveSegs.contains)
-      .map(n => s"segments/$n")
-    val dictGarbage = Store.list(s"$indexDir/dictionary")
-      .filterNot(liveDicts.contains).map(n => s"dictionary/$n")
-    val tombGarbage = Store.list(s"$indexDir/tombstones")
-      .filterNot(liveTombs.contains).map(n => s"tombstones/$n")
+    val liveDirs = retained.flatMap(referencedDirs(indexDir, _)).toSet
+    val liveSnaps = retained.map(m => Manifest.snapshotPath(indexDir, m.snapshotId)).toSet
+    val tableGarbage = Seq("segments", "dictionary", "tombstones").flatMap { table =>
+      Store.list(s"$indexDir/$table").map(n => s"$table/$n")
+        .filterNot(rel => liveDirs.contains(s"$indexDir/$rel"))
+    }
     val snapGarbage = Store.list(Manifest.snapshotDir(indexDir))
-      .filter(_.matches("v\\d{5,}\\.json")).filterNot(liveSnaps.contains)
-      .map(n => s"snapshots/$n")
-    val garbage = segGarbage ++ dictGarbage ++ tombGarbage ++ snapGarbage
+      .filter(_.matches("v\\d{5,}\\.json")).map(n => s"snapshots/$n")
+      .filterNot(rel => liveSnaps.contains(s"$indexDir/$rel"))
+    val garbage = tableGarbage ++ snapGarbage
     garbage.foreach(rel => Store.delete(s"$indexDir/$rel"))
     garbage
   }
@@ -739,14 +744,6 @@ object IndexBuilder {
     buildFrom(spark, Pages.withInjections(spark, sfDir), indexDir, cfg)
 
   /** Same, over an arbitrary pages DataFrame (input_hint shape + doc_id). */
-  private val timing = sys.env.get("SPARK_GRAFT_BUILD_TIMING").contains("1")
-  private def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (timing) System.err.println(f"[build-timing] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
   def buildFrom(spark: SparkSession, pages: org.apache.spark.sql.DataFrame, indexDir: String, cfg: IndexConfig): IndexManifest = {
     import spark.implicits._
     // a committed build is a pure no-op (idempotent skip) — the manifest is
@@ -770,9 +767,8 @@ object IndexBuilder {
     // the doc span materializes the cleaned cache; a doc-span failure
     // quiesces the count before propagating)
     val (skippedCorrupt, maxDocId) = Overlap.overlap(
-      timed("corrupt-count")(pages.filter(col("text").isNull).count()))(
-      timed("doc-span")(cleaned
-        .agg(coalesce(max(col("doc_id").cast("long")), lit(0L))).head().getLong(0)))
+      pages.filter(col("text").isNull).count())(
+      cleaned.agg(coalesce(max(col("doc_id").cast("long")), lit(0L))).head().getLong(0))
 
     // -- stage: dictionary ----------------------------------------------
     val td = termDocs(cleaned, tok)
@@ -783,7 +779,7 @@ object IndexBuilder {
     // in THIS build — reused below as the posting-build broadcast map, so the
     // committed dictionary is never re-read (no headDict collect job)
     var driverEntries: Array[TermEntry] = null
-    if (!success(dictDir)) timed("dictionary") {
+    if (!success(dictDir)) {
       // vocab-sized stats persisted ONCE, shared by both ranking paths (the
       // count materializes the cache; everything later reads it — one full
       // tokenize+aggregate pass total, guide §1.2 step 1)
@@ -846,9 +842,9 @@ object IndexBuilder {
     val nChunks =
       if (cfg.nChunks > 0) cfg.nChunks
       else {
-        val totalTokens = timed("auto-sizing")(cleaned.select(col("text")).as[String]
+        val totalTokens = cleaned.select(col("text")).as[String]
           .map(t => tok.termCount(t).toLong)
-          .agg(coalesce(sum(col("value")), lit(0L))).head().getLong(0))
+          .agg(coalesce(sum(col("value")), lit(0L))).head().getLong(0)
         math.max(1L, (totalTokens + cfg.targetTokensPerChunk - 1) / cfg.targetTokensPerChunk).toInt
       }
     val rawChunk = (maxDocId + 1 + nChunks - 1) / nChunks
@@ -871,23 +867,19 @@ object IndexBuilder {
       // overlap them (§2.6) so the postings stage's map tasks back-fill the
       // docstats write's tail instead of waiting behind it
       Overlap.overlap {
-        if (!success(s"$sdir/docstats")) timed(s"docstats-$chunk") {
+        if (!success(s"$sdir/docstats")) {
           // termCount == terms().length (spec-pinned) without materializing a
-          // single token string; deterministic bucket clustering (hash on
-          // docId/bucketRange + local sort) keeps row-group docId min/max
-          // tight for the query path's range-predicate pruning
-          cleaned
+          // single token string
+          writeDocIdClustered(cleaned
             .filter(col("doc_id").cast("long") >= lo && col("doc_id").cast("long") < hi)
             .select(col("doc_id").cast("long"), col("url"), col("text"))
             .as[(Long, String, String)]
-            .map { case (docId, url, text) => DocStat(docId, url, tok.termCount(text)) }
-            .repartition(cfg.postingsBuckets, (col("docId") / lit(cfg.bucketRange)).cast("long"))
-            .sortWithinPartitions(col("docId"))
-            .write.mode("overwrite").parquet(s"$sdir/docstats")
+            .map { case (docId, url, text) => DocStat(docId, url, tok.termCount(text)) },
+            cfg.postingsBuckets, cfg.bucketRange, s"$sdir/docstats")
           Lineage.append(spark, indexDir, LineageRow(chunk, "docstats", -1L, System.currentTimeMillis(), "committed"))
         }
       } {
-        if (!success(s"$sdir/postings")) timed(s"postings-$chunk") {
+        if (!success(s"$sdir/postings")) {
           // uncached term docs: slice the CLEANED relation before the
           // tokenize flatMap (a closure filter on Dataset[TermDoc] cannot
           // push below it), so a multi-chunk build tokenizes each doc ONCE
@@ -901,10 +893,7 @@ object IndexBuilder {
           val blocks =
             if (useBroadcastDict) postingBlocks(part, dict, cfg)
             else postingBlocksJoinDict(part, headDict, cfg)
-          blocks
-            .repartition(cfg.postingsBuckets, col("termId"))
-            .sortWithinPartitions(col("termId"), col("blockId"))
-            .write.mode("overwrite").parquet(s"$sdir/postings")
+          writePostings(blocks, cfg.postingsBuckets, s"$sdir/postings")
           // no read-back count: the block total was only ever an informational
           // lineage field (no consumer reads it — ResumeSpec checks stage
           // names), and the count was one whole Spark job per chunk (§1.2
@@ -919,10 +908,9 @@ object IndexBuilder {
 
     // global stats from the committed segment docstats (one cheap columnar
     // agg — this also revalidates the segment set is readable)
-    val agg = timed("global-stats")(spark.read
-      .parquet(segments.map(s => s"${segmentDir(indexDir, s)}/docstats"): _*)
+    val agg = spark.read.parquet(segments.map(s => s"${segmentDir(indexDir, s)}/docstats"): _*)
       .agg(count(lit(1)), coalesce(sum(col("docLen")), lit(0L)),
-        coalesce(max(col("docLen")), lit(0))).head())
+        coalesce(max(col("docLen")), lit(0))).head()
     val manifest = IndexManifest(nDocs = agg.getLong(0), totalLen = agg.getLong(1),
       vocabSize = vocabSize, skippedCorrupt = skippedCorrupt,
       blockSize = cfg.blockSize, bucketRange = cfg.bucketRange, maxDocId = maxDocId,
@@ -1037,9 +1025,7 @@ object IndexBuilder {
     // dictionary/postings chain — overlap it (§2.6; quiesced on failure
     // by Overlap so a retry never races an orphaned write)
     val (_, vocabSize) = Overlap.overlap {
-      stats.repartition(ecfg.postingsBuckets, (col("docId") / lit(cfg.bucketRange)).cast("long"))
-        .sortWithinPartitions(col("docId"))
-        .write.mode("overwrite").parquet(s"$sdir/docstats")
+      writeDocIdClustered(stats, ecfg.postingsBuckets, ecfg.bucketRange, s"$sdir/docstats")
     } {
 
     // dictionary v(N+1) from v(N): update df/cf of existing terms, append
@@ -1072,15 +1058,14 @@ object IndexBuilder {
       deltaStats.filter { case (t, _, _) => !matchedTerms.contains(t) },
       base = old.vocabSize)
     val updated = streamDictUpdate(oldDict.toDF(), deltaMap)
-    val newDictDir = dictDirFor(indexDir, old.dictVersion + 1)
     val vocabSize0 = old.vocabSize + freshDict.length
     // the v(N+1) dictionary write and the delta postings write are also
     // independent — the posting build's broadcast map is driver-derived
     // below, not read back from the written dictionary — overlap them too
     Overlap.overlap {
-      writeClusteredDict(
+      writeNextDict(
         updated.toDF().unionByName(freshDict.toSeq.toDF("termId", "term", "df", "cf")),
-        ecfg.postingsBuckets, vocabSize0, newDictDir)
+        indexDir, old, vocabSize0)
     } {
       // postings: the delta segment's blocks under the UPDATED dictionary.
       // Broadcast map = matched old entries (delta-updated) + fresh entries —
@@ -1094,10 +1079,7 @@ object IndexBuilder {
       val dict: Map[String, TermEntry] = cfg.vocabCap
         .fold(deltaDictAll)(cap => deltaDictAll.filter(_.termId < cap))
         .map(e => e.term -> e).toMap
-      postingBlocks(td, dict, ecfg)
-        .repartition(ecfg.postingsBuckets, col("termId"))
-        .sortWithinPartitions(col("termId"), col("blockId"))
-        .write.mode("overwrite").parquet(s"$sdir/postings")
+      writePostings(postingBlocks(td, dict, ecfg), ecfg.postingsBuckets, s"$sdir/postings")
     }
     vocabSize0
     } // end docstats overlap — all three writes complete (or quiesced)
@@ -1202,15 +1184,10 @@ object IndexBuilder {
     if (minPhys <= old.maxDocId) {
       // committed replay vs genuine id-space collision: a replay's live
       // source docs are ALL already live here (bounded by the source size)
-      val srcTombs =
-        if (src.tombVersion < 0) spark.range(0).select(col("id").as("docId"))
-        else spark.read.parquet(tombDirFor(otherDir, src.tombVersion)).toDF("docId")
-      val srcLive = srcStats.select("docId").join(srcTombs, Seq("docId"), "left_anti")
-      val destTombs =
-        if (old.tombVersion < 0) spark.range(0).select(col("id").as("docId"))
-        else spark.read.parquet(tombDirFor(indexDir, old.tombVersion)).toDF("docId")
+      val srcLive = srcStats.select("docId")
+        .join(readTombstones(spark, otherDir, src), Seq("docId"), "left_anti")
       val destLive = readDocstats(spark, indexDir, old).select("docId")
-        .join(destTombs, Seq("docId"), "left_anti")
+        .join(readTombstones(spark, indexDir, old), Seq("docId"), "left_anti")
       val fullyContained = srcLive.join(destLive, Seq("docId"), "left_anti").isEmpty
       require(fullyContained,
         s"merge source docIds must lie beyond the destination's maxDocId=${old.maxDocId}, " +
@@ -1236,10 +1213,10 @@ object IndexBuilder {
     //  - beyond the bound: the distributed full-outer + GlobalRank shape
     //    as before (nothing corpus-vocabulary-sized may reach the driver).
     val dictA = spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
-    // written UNCONDITIONALLY (mode overwrite, like append/delete): the
-    // v(N+1) path is shared across verb types, so a _SUCCESS left by a
-    // DIFFERENT crashed verb (an uncommitted delete) must not be trusted
-    val newDictDir = dictDirFor(indexDir, old.dictVersion + 1)
+    // v(N+1) is written UNCONDITIONALLY (mode overwrite, like
+    // append/delete): the path is shared across verb types, so a _SUCCESS
+    // left by a DIFFERENT crashed verb (an uncommitted delete) must not be
+    // trusted
     val smallSrc = src.vocabSize <= broadcastVocabMax
     var vocabSize = 0L
     val remap: org.apache.spark.sql.DataFrame = if (smallSrc) {
@@ -1261,9 +1238,9 @@ object IndexBuilder {
       vocabSize = old.vocabSize + freshDict.length
       val updated = streamDictUpdate(dictA,
         srcEntries.map(e => e.term -> ((e.df, e.cf))).toMap)
-      writeClusteredDict(
+      writeNextDict(
         updated.toDF().unionByName(freshDict.toSeq.toDF("termId", "term", "df", "cf")),
-        old.postingsBuckets, vocabSize, newDictDir)
+        indexDir, old, vocabSize)
       // srcTermId → merged termId, covering the WHOLE source vocabulary
       // (df-0 rows included — dead terms still sit in uncompacted blocks);
       // driver-derived, so the segment-rewrite broadcast costs no scan job
@@ -1290,8 +1267,7 @@ object IndexBuilder {
         (col("rn") - 1 + old.vocabSize).cast("int").as("termId"),
         col("term"), col("df").cast("long"), col("cf").cast("long"), col("srcTermId"))
       vocabSize = old.vocabSize + freshRanked.total
-      writeClusteredDict(updated.unionByName(freshDict.drop("srcTermId")),
-        old.postingsBuckets, vocabSize, newDictDir)
+      writeNextDict(updated.unionByName(freshDict.drop("srcTermId")), indexDir, old, vocabSize)
       // srcTermId → merged termId, covering the WHOLE source vocabulary;
       // materialized once, consumed by every segment rewrite
       val remap0 = joined
@@ -1319,13 +1295,11 @@ object IndexBuilder {
       val srcSeg = segmentDir(otherDir, s)
       val dstSeg = segmentDir(indexDir, ns)
       val blocks = spark.read.parquet(s"$srcSeg/postings")
-      blocks.join(remapRel, blocks("termId") === remapRel("srcTermId"))
+      writePostings(blocks.join(remapRel, blocks("termId") === remapRel("srcTermId"))
         .select(col("newTermId").as("termId"), col("blockId"), col("firstDocId"),
           col("nDocs"), col("docIdGaps"), col("tfs"), col("positions"),
-          col("maxTf"), col("minDocLen"), col("meta"))
-        .repartition(old.postingsBuckets, col("termId"))
-        .sortWithinPartitions(col("termId"), col("blockId"))
-        .write.mode("overwrite").parquet(s"$dstSeg/postings")
+          col("maxTf"), col("minDocLen"), col("meta")),
+        old.postingsBuckets, s"$dstSeg/postings")
       // docstats carry no termIds: a pure (server-side) file copy
       Store.delete(s"$dstSeg/docstats")
       Store.copy(s"$srcSeg/docstats", s"$dstSeg/docstats")
@@ -1336,14 +1310,8 @@ object IndexBuilder {
     val newTombVersion =
       if (src.tombVersion < 0) old.tombVersion
       else {
-        val srcTombs = spark.read.parquet(tombDirFor(otherDir, src.tombVersion)).toDF("docId")
-        val destTombs =
-          if (old.tombVersion < 0) spark.range(0).select(col("id").as("docId"))
-          else spark.read.parquet(tombDirFor(indexDir, old.tombVersion)).toDF("docId")
-        destTombs.unionByName(srcTombs)
-          .repartition(old.postingsBuckets, (col("docId") / lit(old.bucketRange)).cast("long"))
-          .sortWithinPartitions(col("docId"))
-          .write.mode("overwrite").parquet(tombDirFor(indexDir, old.tombVersion + 1))
+        writeNextTombstones(readTombstones(spark, indexDir, old)
+          .unionByName(readTombstones(spark, otherDir, src)), indexDir, old)
         old.tombVersion + 1
       }
 

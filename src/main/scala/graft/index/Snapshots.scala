@@ -33,12 +33,8 @@ object Snapshots {
     require(!Store.exists(s"$destDir/manifest.json"),
       s"destination $destDir already holds a committed index")
     Store.mkdirs(destDir)
-    val referenced =
-      m.segments.map(s => s"segments/${s.name}") ++
-        Seq(f"dictionary/v${m.dictVersion}%05d") ++
-        (if (m.tombVersion >= 0) Seq(f"tombstones/v${m.tombVersion}%05d") else Nil)
-    referenced.foreach { rel =>
-      val src = s"$indexDir/$rel"
+    IndexBuilder.referencedDirs(indexDir, m).foreach { src =>
+      val rel = src.stripPrefix(s"$indexDir/")
       require(Store.exists(src), s"snapshot $snapshotId references $rel but it is " +
         "missing on disk — vacuumed concurrently? re-read the snapshot history")
       Store.delete(s"$destDir/$rel") // replayed export: clean partial copy

@@ -171,9 +171,7 @@ final case class IndexHandle(spark: SparkSession, dir: String, manifest: IndexMa
   }
   /** Tombstoned docIds (empty dataset when no delete ever ran). */
   lazy val tombstones: Dataset[Long] =
-    if (manifest.tombVersion < 0) spark.emptyDataset[Long]
-    else spark.read
-      .parquet(graft.index.IndexBuilder.tombDirFor(dir, manifest.tombVersion)).as[Long]
+    graft.index.IndexBuilder.readTombstones(spark, dir, manifest).as[Long]
   /** Anti-join `docCol` against the tombstone set — a no-op (the input
     * plan, untouched) on never-deleted indexes, a result-sized anti-join
     * otherwise. Every non-WAND query path routes its doc-bearing rows
@@ -717,22 +715,72 @@ object Wand {
     * (a groupBy(query, doc) over all postings of a stopword term would
     * shuffle the corpus). Queries with any OOV term return empty (AND
     * semantics). Returns (query_id, doc_id) rows. */
-  def booleanAnd(index: IndexHandle, queries: Seq[QuerySpec]): org.apache.spark.sql.DataFrame = {
+  def booleanAnd(index: IndexHandle, queries: Seq[QuerySpec]): org.apache.spark.sql.DataFrame =
+    booleanAndNot(index, queries.map(q => (q.queryId, q.terms, Nil)))
+
+  /** OR (disjunctive) retrieval: docs containing ANY query term — the U1
+    * analog over the index. Same bucket walk as [[booleanAnd]]; per bucket
+    * each query takes the sorted dedupe-union of its terms' decoded lists,
+    * so the output is exactly result-sized (for OR the result IS the
+    * posting union — there is no tighter bound). OOV terms are ignored; an
+    * all-OOV query is empty. */
+  def booleanOr(index: IndexHandle, queries: Seq[QuerySpec]): org.apache.spark.sql.DataFrame = {
+    val dict = index.lookupTerms(queries.flatMap(_.terms))
+    val qTerms: Map[Int, Array[Int]] = queries.flatMap { q =>
+      val ids = q.terms.distinct.flatMap(dict.get).map(_.termId)
+      if (ids.nonEmpty) Some(q.queryId -> ids.sorted.toArray) else None
+    }.toMap
+    bucketWalk(index, qTerms)(identity) { (termIds, byTerm) =>
+      Intersect.unionSorted(termIds.flatMap(byTerm.get))
+    }
+  }
+
+  /** AND-NOT retrieval: docs containing every positive term and none of
+    * the negative terms — the boolean-algebra complement of [[booleanAnd]]
+    * (which is this with no negatives), same bucket walk (a doc and all its
+    * postings share a bucket, so exclusion is bucket-local too). OOV
+    * positives empty the query; OOV negatives are no-ops. `queries` maps
+    * queryId -> (positives, negatives). */
+  def booleanAndNot(
+      index: IndexHandle,
+      queries: Seq[(Int, Seq[String], Seq[String])]
+  ): org.apache.spark.sql.DataFrame = {
+    val dict = index.lookupTerms(queries.flatMap(q => q._2 ++ q._3))
+    val resolved: Map[Int, (Array[Int], Array[Int])] = queries.flatMap { case (qid, pos, neg) =>
+      val ps = pos.distinct
+      val pIds = ps.flatMap(dict.get).map(_.termId)
+      if (pIds.length < ps.length || pIds.isEmpty) None // OOV positive → empty
+      else Some(qid -> (pIds.sorted.toArray, neg.distinct.flatMap(dict.get).map(_.termId).toArray))
+    }.toMap
+    bucketWalk(index, resolved)(q => q._1 ++ q._2) { case ((pos, neg), byTerm) =>
+      val posLists = pos.flatMap(byTerm.get)
+      if (posLists.length < pos.length) Array.emptyLongArray // a positive absent from this bucket
+      else {
+        val hits = Intersect.gallop(posLists)
+        val excluded = neg.flatMap(byTerm.get)
+        // both sides sorted ascending: linear merge-difference, no boxed
+        // hash set even when a negative term is a stopword
+        if (excluded.isEmpty || hits.isEmpty) hits
+        else Intersect.diffSorted(hits, Intersect.unionSorted(excluded))
+      }
+    }
+  }
+
+  /** The boolean operators' shared skeleton: fetch the postings of every
+    * resolved query's terms (termId predicate pushed to parquet), group the
+    * blocks by docId bucket, decode each term's ascending docId list once
+    * per bucket, let `hitsOf` pick each query's sorted hits, and drop
+    * tombstoned docs. The per-query terms ride the task closure (no
+    * broadcast to release). Returns (query_id, doc_id) rows. */
+  private def bucketWalk[Q](index: IndexHandle, resolved: Map[Int, Q])(termIds: Q => Array[Int])(
+      hitsOf: (Q, Map[Int, Array[Long]]) => Array[Long]): org.apache.spark.sql.DataFrame = {
     val spark = index.spark
     import spark.implicits._
-    val dict = index.lookupTerms(queries.flatMap(_.terms))
-    // resolvable queries only; any OOV term empties the conjunction
-    val qTerms: Map[Int, Array[Int]] = queries.flatMap { q =>
-      val ts = q.terms.distinct
-      val ids = ts.flatMap(dict.get).map(_.termId)
-      if (ids.length == ts.length && ids.nonEmpty) Some(q.queryId -> ids.sorted.toArray) else None
-    }.toMap
-    val allIds = qTerms.values.flatten.toSeq.distinct
+    val allIds = resolved.values.flatMap(q => termIds(q)).toSeq.distinct
     if (allIds.isEmpty) return Seq.empty[(Int, Long)].toDF("query_id", "doc_id")
     val blocksPerBucket = index.manifest.bucketRange / index.manifest.blockSize
-    val bQ = spark.sparkContext.broadcast(qTerms)
     index.postings
-      .filter(col("termId").isin(allIds: _*)) // pushed to parquet row groups
+      .filter(col("termId").isin(allIds: _*))
       .as[PostingBlock]
       .groupByKey(b => b.blockId / blocksPerBucket)
       .flatMapGroups { (_, blocks) =>
@@ -741,96 +789,7 @@ object Wand {
             // blocks of one term in one bucket are disjoint ascending runs
             t -> bs.sortBy(_.firstDocId).iterator.flatMap(b => VByte.decodeDocIds(b.docIdGaps)).toArray
         }
-        bQ.value.iterator.flatMap { case (qid, termIds) =>
-          val lists = termIds.flatMap(byTerm.get)
-          if (lists.length < termIds.length) Iterator.empty // a term absent from this bucket
-          else Intersect.gallop(lists).iterator.map(d => (qid, d))
-        }
-      }
-      .toDF("query_id", "doc_id")
-      .transform(index.excludeDeleted(_, "doc_id"))
-  }
-
-  /** OR (disjunctive) retrieval: docs containing ANY query term — the U1
-    * analog over the index. Same bucket-cogroup shape as [[booleanAnd]];
-    * per bucket each query takes the sorted dedupe-union of its terms'
-    * decoded lists, so the output is exactly result-sized (for OR the
-    * result IS the posting union — there is no tighter bound). OOV terms
-    * are ignored; an all-OOV query is empty. */
-  def booleanOr(index: IndexHandle, queries: Seq[QuerySpec]): org.apache.spark.sql.DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    val dict = index.lookupTerms(queries.flatMap(_.terms))
-    val qTerms: Map[Int, Array[Int]] = queries.flatMap { q =>
-      val ids = q.terms.distinct.flatMap(dict.get).map(_.termId)
-      if (ids.nonEmpty) Some(q.queryId -> ids.sorted.toArray) else None
-    }.toMap
-    val allIds = qTerms.values.flatten.toSeq.distinct
-    if (allIds.isEmpty) return Seq.empty[(Int, Long)].toDF("query_id", "doc_id")
-    val blocksPerBucket = index.manifest.bucketRange / index.manifest.blockSize
-    val bQ = spark.sparkContext.broadcast(qTerms)
-    index.postings
-      .filter(col("termId").isin(allIds: _*))
-      .as[PostingBlock]
-      .groupByKey(b => b.blockId / blocksPerBucket)
-      .flatMapGroups { (_, blocks) =>
-        val byTerm: Map[Int, Array[Long]] = blocks.toArray.groupBy(_.termId).map {
-          case (t, bs) =>
-            t -> bs.sortBy(_.firstDocId).iterator.flatMap(b => VByte.decodeDocIds(b.docIdGaps)).toArray
-        }
-        bQ.value.iterator.flatMap { case (qid, termIds) =>
-          Intersect.unionSorted(termIds.flatMap(byTerm.get)).iterator.map(d => (qid, d))
-        }
-      }
-      .toDF("query_id", "doc_id")
-      .transform(index.excludeDeleted(_, "doc_id"))
-  }
-
-  /** AND-NOT retrieval: docs containing every positive term and none of
-    * the negative terms — the boolean-algebra complement of [[booleanAnd]],
-    * same bucket-cogroup shape (a doc and all its postings share a bucket,
-    * so exclusion is bucket-local too). OOV positives empty the query; OOV
-    * negatives are no-ops. `queries` maps queryId -> (positives, negatives). */
-  def booleanAndNot(
-      index: IndexHandle,
-      queries: Seq[(Int, Seq[String], Seq[String])]
-  ): org.apache.spark.sql.DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    val dict = index.lookupTerms(queries.flatMap(q => q._2 ++ q._3))
-    val resolved: Map[Int, (Array[Int], Array[Int])] = queries.flatMap { case (qid, pos, neg) =>
-      val ps = pos.distinct
-      val pIds = ps.flatMap(dict.get).map(_.termId)
-      if (pIds.length < ps.length || pIds.isEmpty) None // OOV positive → empty
-      else Some(qid -> (pIds.sorted.toArray, neg.distinct.flatMap(dict.get).map(_.termId).toArray))
-    }.toMap
-    val allIds = resolved.values.flatMap(v => v._1 ++ v._2).toSeq.distinct
-    if (allIds.isEmpty) return Seq.empty[(Int, Long)].toDF("query_id", "doc_id")
-    val blocksPerBucket = index.manifest.bucketRange / index.manifest.blockSize
-    val bQ = spark.sparkContext.broadcast(resolved)
-    index.postings
-      .filter(col("termId").isin(allIds: _*))
-      .as[PostingBlock]
-      .groupByKey(b => b.blockId / blocksPerBucket)
-      .flatMapGroups { (_, blocks) =>
-        val byTerm: Map[Int, Array[Long]] = blocks.toArray.groupBy(_.termId).map {
-          case (t, bs) =>
-            t -> bs.sortBy(_.firstDocId).iterator.flatMap(b => VByte.decodeDocIds(b.docIdGaps)).toArray
-        }
-        bQ.value.iterator.flatMap { case (qid, (pos, neg)) =>
-          val posLists = pos.flatMap(byTerm.get)
-          if (posLists.length < pos.length) Iterator.empty
-          else {
-            val hits = Intersect.gallop(posLists)
-            val excluded = neg.flatMap(byTerm.get)
-            // both sides sorted ascending: linear merge-difference, no
-            // boxed hash set even when a negative term is a stopword
-            val out =
-              if (excluded.isEmpty || hits.isEmpty) hits
-              else Intersect.diffSorted(hits, Intersect.unionSorted(excluded))
-            out.iterator.map(d => (qid, d))
-          }
-        }
+        resolved.iterator.flatMap { case (qid, q) => hitsOf(q, byTerm).iterator.map(d => (qid, d)) }
       }
       .toDF("query_id", "doc_id")
       .transform(index.excludeDeleted(_, "doc_id"))

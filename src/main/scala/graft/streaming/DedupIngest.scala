@@ -301,13 +301,9 @@ object DedupIngest {
       // live tombstones as a safety net, so re-crawled deleted content is
       // admissible again. Shadow (dropped-doc) rows are probed for the
       // pair LOG but can never veto admission.
-      val tombTables: Seq[DataFrame] = Seq(
-        if (old.tombVersion < 0) None
-        else Some(spark.read
-          .parquet(IndexBuilder.tombDirFor(indexDir, old.tombVersion)).toDF("doc_id")),
-        if (dm.tombVersion < 0) None
-        else Some(spark.read.parquet(tombDir(dedupDir, dm.tombVersion)))
-      ).flatten
+      val tombTables: Seq[DataFrame] =
+        IndexBuilder.readTombstones(spark, indexDir, old).toDF("doc_id") +:
+          (if (dm.tombVersion < 0) Nil else Seq(spark.read.parquet(tombDir(dedupDir, dm.tombVersion))))
       def committed(df: DataFrame): DataFrame = {
         val own = df.filter(col("part") =!= s"b$batchId" && col("part") =!= s"s$batchId")
         tombTables.foldLeft(own)((d, t) => d.join(t, Seq("doc_id"), "left_anti"))

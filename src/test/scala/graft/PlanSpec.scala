@@ -73,7 +73,8 @@ class PlanSpec extends AnyFunSuite {
   test("posting-block build plan has exactly one exchange (the salted shuffle)") {
     val cleaned = Pages.cleaned(Pages.withInjections(spark, sfDir))
     val td = IndexBuilder.termDocs(cleaned, Tokenizers.default)
-    val dictRows = IndexBuilder.dictionary(td, 4).collect()
+    val (ranked, _, release) = IndexBuilder.dictionaryRanked(td, 4)
+    val dictRows = try ranked.collect() finally release()
     val dict = dictRows.map(e => e.term -> e).toMap
     val blocks = IndexBuilder.postingBlocks(td, dict, graft.index.IndexConfig())
     val plan = planOf(blocks.toDF())
