@@ -234,13 +234,7 @@ final case class IndexConfig(
       * materialization) — a 100M-term web vocabulary must not become a
       * multi-GB driver Map. vocabCap-ped builds always broadcast (the head
       * is bounded by construction). */
-    broadcastVocabMax: Long = 4000000L,
-    /** persist the tokenized TermDoc dataset between dictionary and
-      * postings passes. Default OFF: measured 1.9× faster end-to-end to
-      * re-tokenize from the (persisted, compact) cleaned pages than to
-      * cache 70 rows/doc of TermDoc objects — the same reason to prefer
-      * columnar re-scan at 100 TB. */
-    cacheTermDocs: Boolean = false
+    broadcastVocabMax: Long = 4000000L
 ) {
   require(bucketRange % blockSize == 0, "bucketRange must be a multiple of blockSize")
   def blocksPerBucket: Long = bucketRange / blockSize

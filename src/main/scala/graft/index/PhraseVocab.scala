@@ -1,7 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** One BPE merge step. */
 final case class MergeStep(step: Int, left: String, right: String, count: Long, merged: String)
@@ -11,52 +13,41 @@ final case class MergeStep(step: Int, left: String, right: String, count: Long, 
 final case class WpMergeStep(step: Int, left: String, right: String, count: Long,
     score: Double, merged: String)
 
-/** Iterative frequency-driven vocabulary merges — the faithful engine analog
-  * of MidiTok's BPE `train` loop (midi_tokenizer.py:2681-2938): repeatedly
-  * count adjacent token pairs over the whole corpus, merge the most frequent
-  * pair into a new vocabulary unit, rewrite the corpus, repeat.
+/** Iterative frequency-driven vocabulary training — the engine analog of
+  * MidiTok's `train` surface (midi_tokenizer.py:2681-2938), which trains
+  * BPE, Unigram and WordPiece models alike (:2784-2832). Here the three
+  * trainers are three step rules over one iteration core ([[iterate]]):
+  * count the corpus's adjacent token pairs, let the rule pick this step's
+  * pair set, fuse it into new vocabulary units, rewrite the corpus, repeat.
   *
-  * Shape at scale: a driver loop over a cached typed Dataset; each iteration
-  * is one partial+final hash aggregation (pair count) + one map (merge
-  * rewrite). Deterministic: argmax tie-break is (count desc, left asc,
-  * right asc); merge application is leftmost-non-overlapping, like the
-  * reference's deterministic BPE path (vs its explicitly-nondeterministic
-  * Unigram path, midi_tokenizer.py:2723-2727, which we avoid). */
+  * Deterministic: every rule ranks its candidates under one total order
+  * (key desc, then left and right in UTF-8 binary order), and a rewrite is
+  * leftmost-non-overlapping, like the reference's deterministic BPE path
+  * (vs its explicitly-nondeterministic Unigram path,
+  * midi_tokenizer.py:2723-2727, which we avoid). */
 object PhraseVocab {
+  private type Docs = RDD[(Long, Array[String])]
+  private type Pair = (String, String)
+  /** A candidate pair with its count and its ranking key. */
+  private type Cand = (Pair, Long, Double)
 
-  /** Argmax/candidate orderings tie-break term strings in UTF-8 BINARY
-    * (code-point) order — the collation of the DataFrame `orderBy` these
-    * RDD loops replaced AND of the DuckDB replay oracles; Java
-    * `String.compareTo` (UTF-16 units) would diverge on
-    * supplementary-plane terms. */
-  private def cmp2(a: (String, String), b: (String, String)): Int = {
-    val c = Overlap.utf8Compare(a._1, b._1)
-    if (c != 0) c else Overlap.utf8Compare(a._2, b._2)
+  private val Cached = StorageLevel.MEMORY_AND_DISK
+
+  /** The one candidate order: key descending, then (left, right) in UTF-8
+    * BINARY (code-point) order, the collation of the DuckDB replay oracles;
+    * Java `String.compareTo` (UTF-16 units) would diverge on
+    * supplementary-plane terms. BPE and Unigram rank by count, which a
+    * double holds exactly below 2^53. */
+  private val KeyDesc: Ordering[Cand] = new Ordering[Cand] {
+    def compare(a: Cand, b: Cand): Int = {
+      val k = java.lang.Double.compare(b._3, a._3)
+      if (k != 0) k
+      else {
+        val l = Overlap.utf8Compare(a._1._1, b._1._1)
+        if (l != 0) l else Overlap.utf8Compare(a._1._2, b._1._2)
+      }
+    }
   }
-
-  private val PairCountDescOrd: Ordering[((String, String), Long)] =
-    new Ordering[((String, String), Long)] {
-      def compare(a: ((String, String), Long), b: ((String, String), Long)): Int = {
-        val c = java.lang.Long.compare(b._2, a._2) // count desc
-        if (c != 0) c else cmp2(a._1, b._1)
-      }
-    }
-
-  private val ScoreDescOrd: Ordering[(String, String, Long, Double)] =
-    new Ordering[(String, String, Long, Double)] {
-      def compare(a: (String, String, Long, Double), b: (String, String, Long, Double)): Int = {
-        val c = java.lang.Double.compare(b._4, a._4) // score desc
-        if (c != 0) c else cmp2((a._1, a._2), (b._1, b._2))
-      }
-    }
-
-  private val CountDescOrd: Ordering[(String, String, Long)] =
-    new Ordering[(String, String, Long)] {
-      def compare(a: (String, String, Long), b: (String, String, Long)): Int = {
-        val c = java.lang.Long.compare(b._3, a._3) // count desc
-        if (c != 0) c else cmp2((a._1, a._2), (b._1, b._2))
-      }
-    }
 
   /** Apply one merge to a token sequence: leftmost non-overlapping. */
   def applyMerge(tokens: Array[String], left: String, right: String, merged: String): Array[String] = {
@@ -75,127 +66,9 @@ object PhraseVocab {
     out.toArray
   }
 
-  /** Adjacent-pair counts over the corpus (one hash-agg job). */
-  def pairCounts(docs: Dataset[(Long, Array[String])]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.flatMap { case (_, ts) =>
-      if (ts.length < 2) Iterator.empty
-      else (0 until ts.length - 1).iterator.map(i => (ts(i), ts(i + 1)))
-    }.toDF("left", "right").groupBy("left", "right").agg(count(lit(1)).as("cnt"))
-  }
-
-  /** Adjacent pairs of one document, as an iterator (shared by the RDD
-    * trainer cores). */
-  private def adjacentPairs(ts: Array[String]): Iterator[(String, String)] =
-    if (ts.length < 2) Iterator.empty
-    else (0 until ts.length - 1).iterator.map(i => (ts(i), ts(i + 1)))
-
-  /** Run `numMerges` BPE iterations; returns the merge table, the final
-    * rewritten corpus, and a release handle freeing the trainer's cache
-    * (call it once the final corpus has been consumed).
-    *
-    * The iteration loop runs on the RDD layer (guide §1.2: per-task work):
-    * the corpus caches as JVM OBJECTS (`MEMORY_AND_DISK`), so each of the
-    * loop's full-corpus scans skips the columnar encode/decode a Dataset
-    * cache pays per pass, the per-iteration Catalyst analyze/optimize cost
-    * of a logical plan that grows with every rewrite disappears, and each
-    * iteration is exactly ONE job: `reduceByKey` (map-side combine — the
-    * same partial-aggregation shape as the DF hash agg) + a driver
-    * `takeOrdered(1)` under the (count desc, left, right) total order.
-    * Counts are exact integers and the order is total, so the merge
-    * sequence is bit-identical to the previous DataFrame loop (BpeSpec
-    * asserts equality with the single-threaded reference). */
-  def train(docs0: Dataset[(Long, Array[String])], numMerges: Int): (Seq[MergeStep], Dataset[(Long, Array[String])], () => Unit) = {
-    val spark = docs0.sparkSession
-    import spark.implicits._
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var docs = docs0.rdd.persist(sl)
-    // the parent of `docs`; unpersisted only AFTER a job has materialized
-    // `docs` (the pair-count job), so each iteration stays one job
-    var parent: org.apache.spark.rdd.RDD[(Long, Array[String])] = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[MergeStep]
-    var step = 0
-    var done = false
-    while (step < numMerges && !done) {
-      val top = docs.flatMap { case (_, ts) => adjacentPairs(ts) }
-        .map((_, 1L)).reduceByKey(_ + _)
-        .takeOrdered(1)(PairCountDescOrd)
-      if (parent != null) { parent.unpersist(); parent = null }
-      if (top.isEmpty || top(0)._2 < 2) done = true
-      else {
-        val ((l, r), c) = top(0)
-        val m = l + "_" + r
-        merges += MergeStep(step, l, r, c, m)
-        parent = docs
-        docs = docs.map { case (id, ts) => (id, applyMerge(ts, l, r, m)) }.persist(sl)
-        step += 1
-      }
-    }
-    // materialize the final rewrite once so the last parent can be dropped
-    if (parent != null) { docs.count(); parent.unpersist() }
-    val out = docs
-    (merges.toSeq, spark.createDataset(out), () => { out.unpersist(); () })
-  }
-
-  /** WordPiece-style training: the merge argmax is the LIKELIHOOD score
-    * `count(l,r) / (count(l)·count(r))` — pairs that co-occur more than
-    * their unigram frequencies predict win, rather than the raw-count BPE
-    * argmax. The reference trains BPE, Unigram AND WordPiece through the
-    * same surface (midi_tokenizer.py:2784-2832); this is the engine's
-    * second trainer, exercising a join-scored aggregation the BPE loop
-    * never does (pair counts ⋈ unigram counts).
-    *
-    * Determinism (cross-engine): candidates are pairs with count >= 2;
-    * the score is one double multiply + one divide of exact integer
-    * counts — bit-identical in the JVM and the SQL oracle — and ties break
-    * on (left, right). Each iteration is ONE Spark action (the pair and
-    * unigram aggregations meet in a single top-1 job). */
-  def trainWordPiece(docs0: Dataset[(Long, Array[String])], numMerges: Int): (Seq[WpMergeStep], Dataset[(Long, Array[String])], () => Unit) = {
-    val spark = docs0.sparkSession
-    import spark.implicits._
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var docs = docs0.rdd.persist(sl)
-    var parent: org.apache.spark.rdd.RDD[(Long, Array[String])] = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[WpMergeStep]
-    var step = 0
-    var done = false
-    while (step < numMerges && !done) {
-      // one object-cache scan feeds BOTH aggregations; the pair⋈unigram
-      // scoring joins stay distributed (the unigram relation is the CORPUS
-      // vocabulary — never collected to the driver, same discipline as the
-      // dictionary build's broadcastVocabMax split). The score is one
-      // double multiply + one divide of exact integer counts — bit-
-      // identical to the previous DataFrame loop and the SQL oracle.
-      val uni = docs.flatMap { case (_, ts) => ts.iterator }
-        .map((_, 1L)).reduceByKey(_ + _)
-      val top = docs.flatMap { case (_, ts) => adjacentPairs(ts) }
-        .map((_, 1L)).reduceByKey(_ + _)
-        .filter(_._2 >= 2)
-        .map { case ((l, r), c) => (l, (r, c)) }.join(uni)
-        .map { case (l, ((r, c), cl)) => (r, (l, c, cl)) }.join(uni)
-        .map { case (r, ((l, c, cl), cr)) =>
-          (l, r, c, c.toDouble / (cl.toDouble * cr.toDouble))
-        }
-        .takeOrdered(1)(ScoreDescOrd)
-      if (parent != null) { parent.unpersist(); parent = null }
-      if (top.isEmpty) done = true
-      else {
-        val (l, r, c, sc) = top(0)
-        val m = l + "_" + r
-        merges += WpMergeStep(step, l, r, c, sc, m)
-        parent = docs
-        docs = docs.map { case (id, ts) => (id, applyMerge(ts, l, r, m)) }.persist(sl)
-        step += 1
-      }
-    }
-    if (parent != null) { docs.count(); parent.unpersist() }
-    val out = docs
-    (merges.toSeq, spark.createDataset(out), () => { out.unpersist(); () })
-  }
-
-  /** Apply one E-step fuse pass: every adjacent pair in `qualifying` is
-    * fused leftmost-non-overlapping into `l_r`. */
+  /** Apply one fuse pass: every adjacent pair in `qualifying` is fused
+    * leftmost-non-overlapping into `l_r`. A one-pair set is exactly
+    * `applyMerge(tokens, l, r, l + "_" + r)`. */
   def applyFuseSet(tokens: Array[String], qualifying: Set[(String, String)]): Array[String] = {
     if (tokens.length < 2) return tokens
     val out = new scala.collection.mutable.ArrayBuffer[String](tokens.length)
@@ -212,60 +85,134 @@ object PhraseVocab {
     out.toArray
   }
 
-  /** Unigram-style EM training — the third trainer of the reference's
-    * multi-model surface (midi_tokenizer.py:2784-2832). Unlike the
-    * bottom-up single-pair argmax of BPE/WordPiece, each iteration is a
-    * full E/M cycle: the E-step SEGMENTS the whole corpus under the current
-    * unigram model — every adjacent pair whose joint count beats its
-    * independence prediction (cnt(l,r)·N > cnt(l)·cnt(r), i.e. positive
-    * PMI; top-`cap` such pairs by (cnt desc, l, r)) is fused leftmost-
-    * non-overlapping in ONE pass — and the M-step re-estimates unit
-    * frequencies from the new segmentation (the next iteration's counts).
-    * The fuse decision is pure int64 arithmetic (exact below ~3·10^9
-    * corpus tokens; beyond that compare in log space), so the whole chain
-    * replays exactly in SQL. Each iteration is ONE Spark job collecting at
-    * most `cap` qualifying pairs — never a vocabulary-sized collect. */
-  def trainUnigram(
-      docs0: Dataset[(Long, Array[String])],
-      iters: Int,
-      cap: Int
-  ): (Seq[Int], Dataset[(Long, Array[String])], () => Unit) = {
+  /** Adjacent-pair counts over the corpus (one hash-agg job). */
+  def pairCounts(docs: Dataset[(Long, Array[String])]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.flatMap { case (_, ts) => adjacentPairs(ts) }
+      .toDF("left", "right").groupBy("left", "right").agg(count(lit(1)).as("cnt"))
+  }
+
+  private def adjacentPairs(ts: Array[String]): Iterator[Pair] =
+    if (ts.length < 2) Iterator.empty
+    else (0 until ts.length - 1).iterator.map(i => (ts(i), ts(i + 1)))
+
+  /** Corpus-wide counts of the adjacent pairs that occur at least twice. */
+  private def pairs(docs: Docs): RDD[(Pair, Long)] =
+    docs.flatMap { case (_, ts) => adjacentPairs(ts) }
+      .map((_, 1L)).reduceByKey(_ + _).filter(_._2 >= 2)
+
+  private def unigrams(docs: Docs): RDD[(String, Long)] =
+    docs.flatMap { case (_, ts) => ts.iterator }.map((_, 1L)).reduceByKey(_ + _)
+
+  /** (pair, cnt(l,r), cnt(l), cnt(r)) for every pair of [[pairs]]. Both
+    * joins stay distributed: `uni` is the corpus vocabulary and never
+    * reaches the driver (the dictionary build's broadcastVocabMax
+    * discipline). */
+  private def withUnigrams(docs: Docs, uni: RDD[(String, Long)]): RDD[(Pair, Long, Long, Long)] =
+    pairs(docs).map { case ((l, r), c) => (l, (r, c)) }.join(uni)
+      .map { case (l, ((r, c), cl)) => (r, (l, c, cl)) }.join(uni)
+      .map { case (r, ((l, c, cl), cr)) => ((l, r), c, cl, cr) }
+
+  /** The best candidate as a one-pair set, with its record. */
+  private def top1[R](cands: RDD[Cand])(record: Cand => R): Option[(Set[Pair], R)] =
+    cands.takeOrdered(1)(KeyDesc).headOption.map(c => (Set(c._1), record(c)))
+
+  /** The iteration core of all three trainers. Each step, `rule(docs,
+    * step)` runs the step's own Spark job(s) over the persisted corpus and
+    * picks a pair set and the step's record, or nothing (the loop stops).
+    * Only then is the previous corpus unpersisted — a job has materialized
+    * its child, so no step recomputes the rewrite chain. The corpus is
+    * rewritten by [[applyFuseSet]] and persisted (`MEMORY_AND_DISK`). After
+    * the last step one job materializes the final rewrite so its parent can
+    * go too.
+    *
+    * Job shape (TrainerLoopSpec pins it): n steps that end at the step
+    * limit cost n + 1 jobs for BPE and WordPiece (one `takeOrdered` per
+    * step, pair and unigram aggregations meeting in it) and 2n + 1 for
+    * Unigram (a `fold` total and a `takeOrdered` per step), the last job
+    * being the final materialization. A loop that stops because the rule
+    * picked nothing pays that step's jobs on top.
+    *
+    * The core runs on the RDD layer, the engine's one exception to its
+    * Dataset-only rule: the corpus caches as JVM objects, so each
+    * full-corpus scan skips a Dataset cache's columnar decode, and no
+    * Catalyst plan grows with the rewrites. Against the Dataset loop it
+    * replaced, `q_wp_merges` went from 61 jobs / 19.2 s to 11 jobs / 5.8 s
+    * (OPTIMIZATION_r06.md §5). Returns the records, the final corpus and a
+    * handle that frees its cache (call it once the corpus is consumed). */
+  private def iterate[R](docs0: Dataset[(Long, Array[String])], maxSteps: Int)(
+      rule: (Docs, Int) => Option[(Set[Pair], R)]
+  ): (Seq[R], Dataset[(Long, Array[String])], () => Unit) = {
     val spark = docs0.sparkSession
     import spark.implicits._
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var docs = docs0.rdd.persist(sl)
-    var parent: org.apache.spark.rdd.RDD[(Long, Array[String])] = null
-    val perStep = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var step = 0
+    var docs = docs0.rdd.persist(Cached)
+    var parent: Docs = null
+    val records = scala.collection.mutable.ArrayBuffer.empty[R]
     var done = false
-    while (step < iters && !done) {
-      // unigram model cached for this iteration (it feeds the total-count
-      // reduce AND both scoring joins); the PMI test stays pure int64
-      val uni = docs.flatMap { case (_, ts) => ts.iterator }
-        .map((_, 1L)).reduceByKey(_ + _).persist(sl)
-      val total = uni.map(_._2).fold(0L)(_ + _)
-      val q = docs.flatMap { case (_, ts) => adjacentPairs(ts) }
-        .map((_, 1L)).reduceByKey(_ + _)
-        .filter(_._2 >= 2)
-        .map { case ((l, r), c) => (l, (r, c)) }.join(uni)
-        .map { case (l, ((r, c), cl)) => (r, (l, c, cl)) }.join(uni)
-        .collect { case (r, ((l, c, cl), cr)) if c * total > cl * cr => (l, r, c) }
-        .takeOrdered(cap)(CountDescOrd)
-      uni.unpersist()
+    while (records.size < maxSteps && !done) {
+      val pick = rule(docs, records.size)
       if (parent != null) { parent.unpersist(); parent = null }
-      if (q.isEmpty) done = true
-      else {
-        val set = q.map { case (l, r, _) => (l, r) }.toSet
-        perStep += set.size
-        parent = docs
-        docs = docs.map { case (id, ts) => (id, applyFuseSet(ts, set)) }.persist(sl)
-        step += 1
+      pick match {
+        case None => done = true
+        case Some((set, record)) =>
+          records += record
+          parent = docs
+          docs = docs.map { case (id, ts) => (id, applyFuseSet(ts, set)) }.persist(Cached)
       }
     }
     if (parent != null) { docs.count(); parent.unpersist() }
     val out = docs
-    (perStep.toSeq, spark.createDataset(out), () => { out.unpersist(); () })
+    (records.toSeq, spark.createDataset(out), () => { out.unpersist(); () })
   }
+
+  /** BPE: each step merges the most frequent adjacent pair (count >= 2).
+    * Counts are exact integers and the order is total, so the merge table
+    * equals [[trainLocal]]'s (BpeSpec). */
+  def train(docs0: Dataset[(Long, Array[String])], numMerges: Int): (Seq[MergeStep], Dataset[(Long, Array[String])], () => Unit) =
+    iterate(docs0, numMerges) { (docs, step) =>
+      top1(pairs(docs).map { case (p, c) => (p, c, c.toDouble) }) { case ((l, r), c, _) =>
+        MergeStep(step, l, r, c, l + "_" + r)
+      }
+    }
+
+  /** WordPiece: each step merges the pair (count >= 2) with the best
+    * LIKELIHOOD score `count(l,r) / (count(l)·count(r))` — pairs that
+    * co-occur more than their unigram frequencies predict win, rather than
+    * BPE's raw-count argmax. The score is one double multiply + one divide
+    * of exact integer counts, bit-identical in the JVM and the SQL oracle. */
+  def trainWordPiece(docs0: Dataset[(Long, Array[String])], numMerges: Int): (Seq[WpMergeStep], Dataset[(Long, Array[String])], () => Unit) =
+    iterate(docs0, numMerges) { (docs, step) =>
+      top1(withUnigrams(docs, unigrams(docs)).map { case (p, c, cl, cr) =>
+        (p, c, c.toDouble / (cl.toDouble * cr.toDouble))
+      }) { case ((l, r), c, sc) => WpMergeStep(step, l, r, c, sc, l + "_" + r) }
+    }
+
+  /** Unigram-style EM: unlike the single-pair argmax of BPE/WordPiece, each
+    * step is a full E/M cycle. The E-step SEGMENTS the whole corpus under
+    * the current unigram model — every adjacent pair (count >= 2) whose
+    * joint count beats its independence prediction (cnt(l,r)·N >
+    * cnt(l)·cnt(r), i.e. positive PMI; the top `cap` by (cnt desc, l, r))
+    * is fused in ONE pass — and the M-step re-estimates unit frequencies
+    * from the new segmentation (the next step's counts). The fuse decision
+    * is pure int64 arithmetic (exact below ~3·10^9 corpus tokens), so the
+    * chain replays exactly in SQL; at most `cap` pairs reach the driver per
+    * step. Returns each step's fused-set size. */
+  def trainUnigram(
+      docs0: Dataset[(Long, Array[String])],
+      iters: Int,
+      cap: Int
+  ): (Seq[Int], Dataset[(Long, Array[String])], () => Unit) =
+    iterate(docs0, iters) { (docs, _) =>
+      // the unigram model feeds the total AND both joins of this step
+      val uni = unigrams(docs).persist(Cached)
+      val total = uni.map(_._2).fold(0L)(_ + _)
+      val q = withUnigrams(docs, uni)
+        .collect { case (p, c, cl, cr) if c * total > cl * cr => (p, c, c.toDouble) }
+        .takeOrdered(cap)(KeyDesc)
+      uni.unpersist()
+      if (q.isEmpty) None else { val set = q.map(_._1).toSet; Some((set, set.size)) }
+    }
 
   /** Single-threaded Unigram-EM reference for tests (the oracle twin). */
   def trainUnigramLocal(corpus: Seq[Array[String]], iters: Int, cap: Int): (Seq[Int], Seq[Array[String]]) = {
