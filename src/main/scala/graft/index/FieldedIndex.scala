@@ -33,6 +33,14 @@ object FieldedIndex {
   def fieldDir(baseDir: String, name: String): String = s"$baseDir/field_$name"
   private def manifestPath(baseDir: String) = s"$baseDir/fielded.json"
 
+  /** The committed (name, weight) of every field, in build order — the one
+    * reader of `fielded.json` ([[fieldedJson]] writes it). */
+  private def committedFields(baseDir: String): Seq[(String, Double)] = {
+    val re = """\{"name":"([A-Za-z0-9_]+)","weight":([-0-9.eE]+),[^}]*\}""".r
+    re.findAllMatchIn(Store.readString(manifestPath(baseDir)))
+      .map(m => (m.group(1), m.group(2).toDouble)).toSeq
+  }
+
   /** Build every field's sub-index from one pages relation. `pages` must
     * carry the standard page columns (doc_id, url, warc_ts, lang) plus one
     * text column per [[FieldSpec.textCol]]; a doc whose field text is
@@ -125,11 +133,8 @@ object FieldedIndex {
     * everywhere keeps per-field df/cf stats exact rather than relying on
     * that union). Each sub-delete is idempotent, so replays compose. */
   def delete(spark: SparkSession, baseDir: String, docIds: Seq[Long]): Unit = {
-    val s = Store.readString(manifestPath(baseDir))
-    val re = """"name":"([A-Za-z0-9_]+)"""".r
-    re.findAllMatchIn(s).map(_.group(1)).foreach { name =>
+    committedFields(baseDir).foreach { case (name, _) =>
       IndexBuilder.delete(spark, fieldDir(baseDir, name), docIds)
-      ()
     }
   }
 
@@ -150,8 +155,7 @@ object FieldedIndex {
     require(dst == src,
       s"fielded merge requires identical field specs; destination $dst != source $src " +
         "(no side effects were taken)")
-    val re = """"name":"([A-Za-z0-9_]+)"""".r
-    re.findAllMatchIn(dst).map(_.group(1)).foreach { name =>
+    committedFields(baseDir).foreach { case (name, _) =>
       IndexBuilder.merge(spark, fieldDir(baseDir, name), fieldDir(otherDir, name))
     }
   }
@@ -159,9 +163,7 @@ object FieldedIndex {
   /** Load the fielded index as [[graft.query.Bm25f.topK]]'s input: one
     * (handle, weight) per field, in build order. */
   def load(spark: SparkSession, baseDir: String): Seq[(graft.query.IndexHandle, Double)] = {
-    val s = Store.readString(manifestPath(baseDir))
-    val re = """\{"name":"([A-Za-z0-9_]+)","weight":([-0-9.eE]+),[^}]*\}""".r
-    val fields = re.findAllMatchIn(s).map(m => (m.group(1), m.group(2).toDouble)).toSeq
+    val fields = committedFields(baseDir)
     require(fields.nonEmpty, s"no fields in ${manifestPath(baseDir)}")
     fields.map { case (name, w) =>
       graft.query.IndexReader.load(spark, fieldDir(baseDir, name)) -> w

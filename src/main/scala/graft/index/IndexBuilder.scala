@@ -155,105 +155,51 @@ object IndexBuilder {
       vocabSize: Long): Unit =
     writeClusteredDict(dict, m.postingsBuckets, vocabSize, dictDirFor(indexDir, m.dictVersion + 1))
 
-  /** Tombstone delete — the third lifecycle verb (build / append / delete).
+  /** Tombstone delete of a driver-side id list: a local relation through
+    * [[deleteByIds]] (duplicate, nonexistent and already-deleted ids are
+    * tolerated). */
+  def delete(spark: SparkSession, indexDir: String, docIds: Seq[Long]): IndexManifest = {
+    import spark.implicits._
+    deleteByIds(spark, indexDir, docIds.distinct.toDF("docId"))
+  }
+
+  /** Tombstone delete — the third lifecycle verb (build / append /
+    * delete) — of the docIds in the FIRST column of `ids` (castable
+    * to long; duplicates, nonexistent and already-deleted ids tolerated) —
+    * e.g. the output of a predicate over docstats. Nothing docId-shaped
+    * ever reaches the driver: the fresh set, the affected buckets, the
+    * per-term deltas and the tombstone union are all joins (reference
+    * analog: corpus-level operations never materialize the corpus on one
+    * node, the process_map fan-out, midi_tokenizer.py:3186-3195).
+    *
     * Postings, docstats and block metadata keep deleted rows physically
     * until compaction (Lucene-style), but scoring stays EXACT: the
     * dictionary's df/cf are eagerly decremented by the deleted docs'
     * contributions (decoded from the affected BUCKETS' posting blocks
-    * only — a pushed blockId predicate, never a full postings scan), the
-    * manifest's nDocs/totalLen become live stats (idf and avgdl reflect
-    * the live corpus), and every query path skips tombstoned docIds.
-    * Stale per-block (maxTf, minDocLen) bounds remain conservative upper
-    * bounds — pruning efficiency decays, correctness never.
+    * only), the manifest's nDocs/totalLen become live stats (idf and avgdl
+    * reflect the live corpus), and every query path skips tombstoned
+    * docIds. Stale per-block (maxTf, minDocLen) bounds remain conservative
+    * upper bounds — pruning efficiency decays, correctness never.
     *
     * Idempotent like append: the genuinely-new ids are the requested set
     * minus already-tombstoned minus nonexistent; an empty delta is a
     * no-op, and a crash-and-replay between the versioned writes and the
-    * manifest commit re-derives the SAME v(N+1) tables from untouched
-    * v(N) inputs. */
-  def delete(spark: SparkSession, indexDir: String, docIds: Seq[Long]): IndexManifest = {
-    import spark.implicits._
-    val old = Manifest.read(s"$indexDir/manifest.json")
-    val oldTombs = readTombstones(spark, indexDir, old)
-    val requested = docIds.distinct.toDF("docId")
-    val docstats = readDocstats(spark, indexDir, old)
-    // genuinely-new = requested ∩ existing docs − already-tombstoned
-    val fresh = requested
-      .join(docstats.select("docId"), Seq("docId"), "left_semi")
-      .join(oldTombs, Seq("docId"), "left_anti")
-      .as[Long].collect().sorted // bounded by the caller's request size
-    if (fresh.isEmpty) return old
-    val freshSet = fresh.toSet
-    val bFresh = spark.sparkContext.broadcast(freshSet)
-
-    // live-stat delta from the deleted docs' norms — a semi-join against
-    // the fresh-id relation (an isin() literal list would blow up Catalyst
-    // plan construction on bulk deletes)
-    val delAgg = docstats
-      .join(fresh.toSeq.toDF("docId"), Seq("docId"), "left_semi")
-      .agg(count(lit(1)), coalesce(sum(col("docLen")), lit(0L))).head()
-    val (nDel, lenDel) = (delAgg.getLong(0), delAgg.getLong(1))
-
-    // per-term df/cf deltas decoded from the affected buckets' blocks only:
-    // an OR-of-blockId-ranges predicate (pushed to parquet row groups) for
-    // bounded bucket sets, a distributed semi-join beyond that — same
-    // two-path discipline as WAND's docstats pruning
-    val bpb = old.bucketRange / old.blockSize
-    val buckets = fresh.map(_ / old.bucketRange).distinct
-    val allBlocks = readPostings(spark, indexDir, old)
-    val affectedBlocks =
-      if (buckets.length <= graft.query.Wand.MaxPredicateBuckets)
-        allBlocks.filter(buckets.map { b =>
-          col("blockId") >= b * bpb && col("blockId") < (b + 1) * bpb
-        }.reduce(_ || _))
-      else
-        allBlocks
-          .withColumn("__bucket", (col("blockId") / lit(bpb)).cast("long"))
-          .join(buckets.toSeq.toDF("__bucket"), Seq("__bucket"), "left_semi")
-          .drop("__bucket")
-    val termDeltas = affectedBlocks
-      .as[PostingBlock]
-      .flatMap { b =>
-        val ids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-        val tfs = graft.codec.VByte.decodeInts(b.tfs)
-        val dead = bFresh.value
-        ids.indices.iterator
-          .filter(j => dead.contains(ids(j)))
-          .map(j => (b.termId, 1L, tfs(j).toLong))
-      }
-      .toDF("termId", "d_df", "d_cf")
-      .groupBy("termId")
-      .agg(sum(col("d_df")).as("d_df"), sum(col("d_cf")).as("d_cf"))
-
-    commitDelete(spark, indexDir, old, oldTombs, fresh.toSeq.toDF("docId"),
-      termDeltas, nDel, lenDel)
-  }
-
-  /** Bulk (GDPR-scale) tombstone delete: the `ids` RELATION variant — same
-    * semantics, versioning and idempotence as the Seq overload, but NOTHING
-    * docId-shaped ever reaches the driver: the fresh set, the affected
-    * buckets, the per-term deltas and the tombstone union are all joins.
-    * `ids` is any DataFrame whose FIRST column is the docIds to delete
-    * (castable to long; duplicates/nonexistent/already-deleted tolerated) —
-    * e.g. the output of a predicate over docstats. Reference analog:
-    * corpus-level operations never materialize the corpus on one node
-    * (the process_map fan-out, midi_tokenizer.py:3186-3195). */
+    * manifest commit (LAST) re-derives the SAME v(N+1) tables from
+    * untouched v(N) inputs. */
   def deleteByIds(spark: SparkSession, indexDir: String, ids: DataFrame): IndexManifest = {
     import spark.implicits._
     val old = Manifest.read(s"$indexDir/manifest.json")
     val oldTombs = readTombstones(spark, indexDir, old)
     val docstats = readDocstats(spark, indexDir, old)
-    // genuinely-new = requested ∩ existing docs − already-tombstoned;
-    // multi-consumer (agg + buckets + posting join + tombstone union) →
-    // materialize once, GC-reclaimed
-    val fresh = ids
-      .select(col(ids.columns.head).cast("long").as("docId")).distinct()
-      .join(docstats.select("docId"), Seq("docId"), "left_semi")
+    // genuinely-new = existing docs ∩ requested − already-tombstoned, each
+    // with its norm: docstats docIds are unique, so the semi-join from the
+    // docstats side needs no distinct. Multi-consumer (agg + buckets +
+    // posting join + tombstone union) → materialize once, GC-reclaimed
+    val fresh = docstats.select("docId", "docLen")
+      .join(ids.select(col(ids.columns.head).cast("long").as("docId")), Seq("docId"), "left_semi")
       .join(oldTombs, Seq("docId"), "left_anti")
       .localCheckpoint(true)
-    val delAgg = docstats
-      .join(fresh, Seq("docId"), "left_semi")
-      .agg(count(lit(1)), coalesce(sum(col("docLen")), lit(0L))).head()
+    val delAgg = fresh.agg(count(lit(1)), coalesce(sum(col("docLen")), lit(0L))).head()
     val (nDel, lenDel) = (delAgg.getLong(0), delAgg.getLong(1))
     if (nDel == 0L) return old
 
@@ -277,19 +223,10 @@ object IndexBuilder {
         ids.indices.iterator.map(j => (b.termId, ids(j), tfs(j).toLong))
       }
       .toDF("termId", "docId", "tf")
-      .join(fresh, Seq("docId"), "left_semi")
+      .join(fresh.select("docId"), Seq("docId"), "left_semi")
       .groupBy("termId")
       .agg(count(lit(1)).as("d_df"), sum(col("tf")).as("d_cf"))
 
-    commitDelete(spark, indexDir, old, oldTombs, fresh, termDeltas, nDel, lenDel)
-  }
-
-  /** Shared delete tail: dictionary v(N+1) decrement, tombstones v(N+1),
-    * lineage + manifest commit (manifest LAST — crash-replay re-derives the
-    * same versions from untouched v(N) inputs). Fully distributed. */
-  private def commitDelete(spark: SparkSession, indexDir: String, old: IndexManifest,
-      oldTombs: DataFrame, fresh: DataFrame, termDeltas: DataFrame,
-      nDel: Long, lenDel: Long): IndexManifest = {
     // dictionary v(N+1) (decremented stats, stable termIds) and tombstones
     // v(N+1) = v(N) ∪ fresh are independent writes — overlap them
     // (optimization guide §2.6; Overlap quiesces on failure)
@@ -382,24 +319,37 @@ object IndexBuilder {
       .write.mode("overwrite").parquet(dest)
   }
 
-  /** Stream a committed dictionary once through a broadcast (term →
-    * (df delta, cf delta)) map — the corpus-vocabulary-sized side never
-    * shuffles and never reaches the driver (append/merge fast paths). */
-  private[index] def streamDictUpdate(
-      dict: DataFrame, delta: Map[String, (Long, Long)]): Dataset[TermEntry] = {
-    val spark = dict.sparkSession
+  /** Dictionary v(N+1) of manifest `old`'s index: v(N) with a
+    * driver-bounded (term, df, cf) `delta` folded in — the one dictionary
+    * update of [[append]] (the batch's term stats) and of [[merge]]'s
+    * small-source branch (the source dictionary's). Existing termIds never
+    * change; the terms v(N) lacks are ranked on the driver
+    * ([[rankFreshOnDriver]], termIds identical to GlobalRank's) and
+    * numbered from `old.vocabSize`. The corpus-vocabulary-sized v(N)
+    * streams once through a broadcast term map — it never shuffles and
+    * never reaches the driver; only its rows for the delta's terms are
+    * collected (a semi-join bounded by the delta).
+    *
+    * Returns the v(N+1) rows, the new vocabulary size and the v(N+1) entry
+    * of every delta term. */
+  private def foldDelta(spark: SparkSession, indexDir: String, old: IndexManifest,
+      delta: Array[(String, Long, Long)]): (DataFrame, Long, Array[TermEntry]) = {
     import spark.implicits._
-    val b = spark.sparkContext.broadcast(delta)
-    dict.select(col("termId"), col("term"), col("df"), col("cf"))
-      .as[TermEntry].mapPartitions { it =>
-        val d = b.value
-        it.map { e =>
-          d.get(e.term) match {
-            case Some((ddf, dcf)) => e.copy(df = e.df + ddf, cf = e.cf + dcf)
-            case None             => e
-          }
-        }
-      }
+    val oldDict = spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
+      .select(col("termId"), col("term"), col("df"), col("cf")).as[TermEntry]
+    val byTerm = delta.iterator.map { case (t, df, cf) => t -> ((df, cf)) }.toMap
+    def add(e: TermEntry, d: (Long, Long)) = e.copy(df = e.df + d._1, cf = e.cf + d._2)
+    val matched = oldDict.join(delta.map(_._1).toSeq.toDF("term"), Seq("term"), "left_semi")
+      .as[TermEntry].collect()
+    val known = matched.iterator.map(_.term).toSet
+    val fresh = rankFreshOnDriver(delta.filterNot(d => known.contains(d._1)), base = old.vocabSize)
+    val b = spark.sparkContext.broadcast(byTerm)
+    val updated = oldDict.mapPartitions { it =>
+      val d = b.value
+      it.map(e => d.get(e.term).fold(e)(add(e, _)))
+    }
+    (updated.toDF().unionByName(fresh.toSeq.toDF()), old.vocabSize + fresh.length,
+      matched.map(e => add(e, byTerm(e.term))) ++ fresh)
   }
 
   /** Streaming block builder over rows pre-sorted by (termId, bucket, docId).
@@ -946,9 +896,10 @@ object IndexBuilder {
     * informational lineage row.
     *
     * Scale discipline: the dictionary is NEVER collected to the driver.
-    * The merged dictionary is written distributed (termId-range-clustered),
-    * and the broadcast map for the delta's posting build is a semi-join of
-    * the new dictionary against the DELTA's terms — driver memory is
+    * Dictionary v(N+1) is the batch's term stats folded into v(N) by
+    * [[foldDelta]] (shared with [[merge]]), written distributed
+    * (termId-range-clustered); the fold's driver-side entries for the
+    * batch's terms are the posting build's broadcast map — driver memory is
     * bounded by the batch's vocabulary, not the corpus vocabulary (the
     * reference's trained vocab likewise streams through the trainer and is
     * never materialized monolithically mid-train, midi_tokenizer
@@ -973,25 +924,17 @@ object IndexBuilder {
     val cleaned = Pages.cleaned(deltaPages, cfg.langs)
       .select(col("doc_id"), col("url"), col("text")).persist()
 
-    // corrupt-row count over the raw delta, overlapped with the append's
-    // own jobs (§2.6) — it is consumed only at the manifest commit. This
-    // future is READ-ONLY (no writes), so unlike the write overlaps below
-    // it needs no failure-path quiesce: an abandoned count job races
-    // nothing.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val skippedF = Future(deltaPages.filter(col("text").isNull).count())
-    def awaitSkipped(): Long =
-      Await.result(skippedF, scala.concurrent.duration.Duration.Inf)
-
     val stats = cleaned
       .select(col("doc_id").cast("long"), col("url"), col("text"))
       .as[(Long, String, String)]
       .map { case (docId, url, text) => DocStat(docId, url, tok.termCount(text)) }
       .persist()
-    val agg = stats.agg(coalesce(min(col("docId")), lit(Long.MaxValue)),
-      coalesce(max(col("docId")), lit(-1L)), count(lit(1)), coalesce(sum(col("docLen")), lit(0L)),
-      coalesce(max(col("docLen")), lit(0))).head()
+    // the corrupt-row count over the raw delta runs beside the batch's
+    // stats aggregate — independent jobs (§2.6, as in [[buildFrom]])
+    val (skippedNew, agg) = Overlap.overlap(deltaPages.filter(col("text").isNull).count())(
+      stats.agg(coalesce(min(col("docId")), lit(Long.MaxValue)),
+        coalesce(max(col("docId")), lit(-1L)), count(lit(1)), coalesce(sum(col("docLen")), lit(0L)),
+        coalesce(max(col("docLen")), lit(0))).head())
     val (minNew, maxNew, nNew, lenNew) = (agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3))
     val maxDlNew = agg.getInt(4)
     require(nNew == 0 || minNew > old.maxDocId,
@@ -1001,8 +944,8 @@ object IndexBuilder {
         "so they coalesce into one batch)")
     if (nNew == 0) {
       // nothing survived cleaning: no segment, but the cursor still commits
-      val skipped0 = old.skippedCorrupt + awaitSkipped()
-      val m0 = old.copy(skippedCorrupt = skipped0, lastBatchId = batchId.getOrElse(old.lastBatchId),
+      val m0 = old.copy(skippedCorrupt = old.skippedCorrupt + skippedNew,
+        lastBatchId = batchId.getOrElse(old.lastBatchId),
         snapshotId = old.snapshotId + 1, operation = "append")
       Manifest.commit(indexDir, m0)
       stats.unpersist(); cleaned.unpersist()
@@ -1022,70 +965,32 @@ object IndexBuilder {
     val (_, vocabSize) = Overlap.overlap {
       writeDocIdClustered(stats, ecfg.postingsBuckets, ecfg.bucketRange, s"$sdir/docstats")
     } {
-
-    // dictionary v(N+1) from v(N): update df/cf of existing terms, append
-    // NEW terms after vocabSize. The delta's term statistics are bounded by
-    // the BATCH's vocabulary — the same bound under which this path has
-    // always collected its posting-build broadcast map — so they collect
-    // ONCE here and drive everything batch-sized on the driver: the fresh
-    // (unseen) terms' ranking (df desc, term — the same unique total order
-    // GlobalRank produced, so termIds are identical), and the posting
-    // build's broadcast dictionary. The CORPUS-sized work stays distributed:
-    // the old dictionary streams once through a broadcast-hash join against
-    // the delta deltas (no full-outer shuffle join, no range-sampling pass)
-    // into the v(N+1) write. Net: 3 fewer Spark jobs and 2 fewer exchanges
-    // per append, same bytes on disk.
-    val deltaStats = td.groupBy("term")
-      .agg(count(lit(1)).as("d_df"), sum(col("tf")).as("d_cf"))
-      .as[(String, Long, Long)].collect()
-    val deltaMap = deltaStats.map { case (t, ddf, dcf) => t -> ((ddf, dcf)) }.toMap
-    val oldDict = spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
-    // which delta terms already exist (batch-bounded collect: termId + OLD
-    // df/cf ride along so the posting-build dictionary needs no re-read)
-    val matchedOld: Array[TermEntry] = oldDict
-      .join(deltaStats.map(_._1).toSeq.toDF("term"), Seq("term"), "left_semi")
-      .select("termId", "term", "df", "cf").as[TermEntry].collect()
-    val matchedTerms = matchedOld.iterator.map(_.term).toSet
-    // fresh terms ranked on the driver ([[rankFreshOnDriver]]: the shared
-    // (df desc, term asc UTF-8-binary) discipline — termIds identical to
-    // GlobalRank's), appended after the base vocabulary
-    val freshDict = rankFreshOnDriver(
-      deltaStats.filter { case (t, _, _) => !matchedTerms.contains(t) },
-      base = old.vocabSize)
-    val updated = streamDictUpdate(oldDict.toDF(), deltaMap)
-    val vocabSize0 = old.vocabSize + freshDict.length
-    // the v(N+1) dictionary write and the delta postings write are also
-    // independent — the posting build's broadcast map is driver-derived
-    // below, not read back from the written dictionary — overlap them too
-    Overlap.overlap {
-      writeNextDict(
-        updated.toDF().unionByName(freshDict.toSeq.toDF("termId", "term", "df", "cf")),
-        indexDir, old, vocabSize0)
-    } {
-      // postings: the delta segment's blocks under the UPDATED dictionary.
-      // Broadcast map = matched old entries (delta-updated) + fresh entries —
-      // fully driver-derived (batch-bounded, no extra job), head-filtered
-      // under a vocabulary cap exactly like the base build.
-      val deltaDictAll: Iterator[TermEntry] =
-        matchedOld.iterator.map { e =>
-          val (ddf, dcf) = deltaMap(e.term)
-          e.copy(df = e.df + ddf, cf = e.cf + dcf)
-        } ++ freshDict.iterator
-      val dict: Map[String, TermEntry] = cfg.vocabCap
-        .fold(deltaDictAll)(cap => deltaDictAll.filter(_.termId < cap))
-        .map(e => e.term -> e).toMap
-      writePostings(postingBlocks(td, dict, ecfg), ecfg.postingsBuckets, s"$sdir/postings")
-    }
-    vocabSize0
+      // dictionary v(N+1) from v(N) through [[foldDelta]]: the delta's
+      // term stats are bounded by the BATCH's vocabulary, so they collect
+      // once and the fold returns, driver-side, the v(N+1) entry of every
+      // batch term — the posting build's broadcast map, head-filtered under
+      // a vocabulary cap exactly like the base build
+      val deltaStats = td.groupBy("term")
+        .agg(count(lit(1)).as("d_df"), sum(col("tf")).as("d_cf"))
+        .as[(String, Long, Long)].collect()
+      val (dictRows, vocabSize0, entries) = foldDelta(spark, indexDir, old, deltaStats)
+      // the v(N+1) dictionary write and the delta postings write are also
+      // independent — the broadcast map is driver-derived, not read back
+      // from the written dictionary — overlap them too
+      Overlap.overlap(writeNextDict(dictRows, indexDir, old, vocabSize0)) {
+        val dict = cfg.vocabCap.fold(entries)(cap => entries.filter(_.termId < cap))
+          .iterator.map(e => e.term -> e).toMap
+        writePostings(postingBlocks(td, dict, ecfg), ecfg.postingsBuckets, s"$sdir/postings")
+      }
+      vocabSize0
     } // end docstats overlap — all three writes complete (or quiesced)
     Lineage.append(spark, indexDir,
       LineageRow(old.nChunks, "append", nNew, System.currentTimeMillis(), "committed"))
 
-    val skipped = old.skippedCorrupt + awaitSkipped()
     // old.copy: tombVersion (and any future field) carries over — appends
     // never disturb tombstones or other segments
     val manifest = old.copy(nDocs = old.nDocs + nNew, totalLen = old.totalLen + lenNew,
-      vocabSize = vocabSize, skippedCorrupt = skipped,
+      vocabSize = vocabSize, skippedCorrupt = old.skippedCorrupt + skippedNew,
       maxDocId = math.max(old.maxDocId, maxNew),
       dictVersion = old.dictVersion + 1, lastBatchId = batchId.getOrElse(old.lastBatchId),
       maxDocLen = math.max(old.maxDocLen, maxDlNew),
@@ -1115,7 +1020,10 @@ object IndexBuilder {
     *    optional tombstone union, and the source's re-keyed segments are
     *    written).
     *
-    * Cost at 100 TB: one dictionary full-outer join (vocab-sized), one
+    * Cost at 100 TB: one dictionary fold — the append verb's
+    * [[foldDelta]] (the destination dictionary streams once through a
+    * broadcast term map) when the source vocabulary fits
+    * `broadcastVocabMax`, a vocab-sized full-outer join beyond it — one
     * remap join + re-cluster exchange over the SOURCE's compressed blocks
     * (broadcast map-side when the source vocabulary fits
     * `broadcastVocabMax` — plan-verified BroadcastHashJoin, blocks never
@@ -1192,58 +1100,34 @@ object IndexBuilder {
     }
 
     // dictionary v(N+1): df/cf summed from the two LIVE dictionaries,
-    // source-only terms appended after vocabSize — the append discipline
-    // with the delta stats read from the source dictionary instead of
-    // re-tokenized. Two shapes, split on the SAME bound that already
-    // governs the remap broadcast below:
+    // source-only terms appended after vocabSize. Two shapes, split on the
+    // SAME bound that governs the remap broadcast below:
     //  - source vocabulary ≤ broadcastVocabMax: the source dictionary
-    //    collects ONCE (bounded — this is the bound under which the remap
-    //    relation was already shipped to every executor) and drives, on the
-    //    driver, the fresh-term ranking ((df desc, term) in UTF-8-binary
-    //    order — identical termIds to GlobalRank's) and the srcTermId →
-    //    mergedTermId map; the corpus-vocabulary-sized destination
-    //    dictionary streams ONCE through a broadcast term map into the
-    //    v(N+1) write. No full-outer exchange, no range-sampling pass —
-    //    the exact diet the append verb got this round.
-    //  - beyond the bound: the distributed full-outer + GlobalRank shape
-    //    as before (nothing corpus-vocabulary-sized may reach the driver).
-    val dictA = spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
+    //    collects ONCE (the bound under which the remap relation ships to
+    //    every executor anyway) and folds into v(N) through [[foldDelta]],
+    //    the append verb's fold; the srcTermId → mergedTermId map comes
+    //    from the fold's driver-side entries.
+    //  - beyond the bound: a distributed full-outer + GlobalRank shape
+    //    (nothing corpus-vocabulary-sized may reach the driver).
     // v(N+1) is written UNCONDITIONALLY (mode overwrite, like
     // append/delete): the path is shared across verb types, so a _SUCCESS
     // left by a DIFFERENT crashed verb (an uncommitted delete) must not be
     // trusted
     val smallSrc = src.vocabSize <= broadcastVocabMax
-    var vocabSize = 0L
-    val remap: org.apache.spark.sql.DataFrame = if (smallSrc) {
+    val (vocabSize, remap) = if (smallSrc) {
       val srcEntries = spark.read.parquet(dictDirFor(otherDir, src.dictVersion))
         .select(col("termId"), col("term"), col("df"), col("cf"))
         .as[TermEntry].collect()
-      // which source terms the destination already knows — only (termId,
-      // term) are consumed (the v(N+1) stats come from streaming dictA, not
-      // from this collect); bounded by the source vocabulary
-      val matchedId: Map[String, Int] = dictA
-        .join(srcEntries.map(_.term).toSeq.toDF("term"), Seq("term"), "left_semi")
-        .select(col("term"), col("termId")).as[(String, Int)].collect().toMap
-      // fresh (source-only) terms ranked on the driver ([[rankFreshOnDriver]]:
-      // the shared (df desc, term asc UTF-8-binary) discipline — termIds
-      // identical to GlobalRank's), appended after the destination vocabulary
-      val freshDict = rankFreshOnDriver(
-        srcEntries.collect { case e if !matchedId.contains(e.term) => (e.term, e.df, e.cf) },
-        base = old.vocabSize)
-      vocabSize = old.vocabSize + freshDict.length
-      val updated = streamDictUpdate(dictA,
-        srcEntries.map(e => e.term -> ((e.df, e.cf))).toMap)
-      writeNextDict(
-        updated.toDF().unionByName(freshDict.toSeq.toDF("termId", "term", "df", "cf")),
-        indexDir, old, vocabSize)
+      val (dictRows, vocabSize0, entries) =
+        foldDelta(spark, indexDir, old, srcEntries.map(e => (e.term, e.df, e.cf)))
+      writeNextDict(dictRows, indexDir, old, vocabSize0)
       // srcTermId → merged termId, covering the WHOLE source vocabulary
       // (df-0 rows included — dead terms still sit in uncompacted blocks);
       // driver-derived, so the segment-rewrite broadcast costs no scan job
-      val freshId = freshDict.iterator.map(e => e.term -> e.termId).toMap
-      srcEntries.map { e =>
-        (e.termId, matchedId.getOrElse(e.term, freshId(e.term)))
-      }.toSeq.toDF("srcTermId", "newTermId")
+      val newId = entries.iterator.map(e => e.term -> e.termId).toMap
+      (vocabSize0, srcEntries.map(e => (e.termId, newId(e.term))).toSeq.toDF("srcTermId", "newTermId"))
     } else {
+      val dictA = spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
       val dictB = spark.read.parquet(dictDirFor(otherDir, src.dictVersion))
         .select(col("term"), col("termId").as("srcTermId"),
           col("df").as("s_df"), col("cf").as("s_cf"))
@@ -1261,8 +1145,8 @@ object IndexBuilder {
       val freshDict = freshRanked.df.select(
         (col("rn") - 1 + old.vocabSize).cast("int").as("termId"),
         col("term"), col("df").cast("long"), col("cf").cast("long"), col("srcTermId"))
-      vocabSize = old.vocabSize + freshRanked.total
-      writeNextDict(updated.unionByName(freshDict.drop("srcTermId")), indexDir, old, vocabSize)
+      val vocabSize0 = old.vocabSize + freshRanked.total
+      writeNextDict(updated.unionByName(freshDict.drop("srcTermId")), indexDir, old, vocabSize0)
       // srcTermId → merged termId, covering the WHOLE source vocabulary;
       // materialized once, consumed by every segment rewrite
       val remap0 = joined
@@ -1272,7 +1156,7 @@ object IndexBuilder {
         .localCheckpoint(true)
       freshRanked.release()
       joined.unpersist()
-      remap0
+      (vocabSize0, remap0)
     }
 
     // source segments, re-keyed into the destination: lo clamped to the
@@ -1285,7 +1169,7 @@ object IndexBuilder {
     val maxVA = old.segments.map(_.v).foldLeft(-1)(math.max)
     val kept = src.segments.filter(_.hi > old.maxDocId + 1)
     val newSegs = kept.map(s => Segment(math.max(s.lo, old.maxDocId + 1), s.hi, s.v + maxVA + 1))
-    val remapRel = if (src.vocabSize <= broadcastVocabMax) broadcast(remap) else remap
+    val remapRel = if (smallSrc) broadcast(remap) else remap
     kept.zip(newSegs).foreach { case (s, ns) =>
       val srcSeg = segmentDir(otherDir, s)
       val dstSeg = segmentDir(indexDir, ns)

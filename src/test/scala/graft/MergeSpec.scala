@@ -324,4 +324,28 @@ class MergeSpec extends AnyFunSuite {
     // remapped payloads identical term-keyed
     assert(decodedContent(hS) == decodedContent(hD))
   }
+
+  test("append and merge fold the same delta into the same dictionary v(N+1): identical " +
+    "(termId, term, df, cf) rows and manifest stats") {
+    // one copy ingests the delta pages through append, the other merges an
+    // index built from those same pages; every delta doc carries one of five
+    // terms the destination lacks, so fresh termIds (df ties included) are
+    // assigned by both verbs
+    val delta = pages.filter(col("doc_id") >= Split && col("doc_id") < Hi)
+      .withColumn("text", concat(col("text"), lit(" novel"), (col("doc_id") % 5).cast("string")))
+    val (lowA, _) = buildPair("/tmp/graft_merge_spec/fold_append")
+    val (lowM, _) = buildPair("/tmp/graft_merge_spec/fold_merge")
+    val src = "/tmp/graft_merge_spec/fold_merge/delta"
+    IndexBuilder.buildFrom(spark, delta, src, cfg)
+    val mA = IndexBuilder.append(spark, delta, lowA, cfg)
+    val mM = IndexBuilder.merge(spark, lowM, src)
+
+    def rows(dir: String) = IndexReader.load(spark, dir).dictionary.collect()
+      .map(e => (e.termId, e.term, e.df, e.cf)).sorted.toSeq
+    assert(rows(lowA).count(_._2.startsWith("novel")) == 5)
+    assert(rows(lowA) == rows(lowM), "append and merge assigned termIds or stats differently")
+    def stats(m: graft.index.IndexManifest) = (m.nDocs, m.totalLen, m.vocabSize, m.maxDocId,
+      m.maxDocLen, m.skippedCorrupt, m.dictVersion)
+    assert(stats(mA) == stats(mM))
+  }
 }
