@@ -208,21 +208,13 @@ object IndexBuilder {
     // JOIN the per-posting rows against the fresh relation. The explode is
     // bounded by the affected buckets' postings, the join output by the
     // deleted docs' postings.
-    val bpb = old.bucketRange / old.blockSize
     val freshBuckets = fresh
       .select((col("docId") / lit(old.bucketRange)).cast("long").as("__bucket")).distinct()
     val affectedBlocks = readPostings(spark, indexDir, old)
-      .withColumn("__bucket", (col("blockId") / lit(bpb)).cast("long"))
+      .withColumn("__bucket", (col("blockId") / lit(old.blocksPerBucket)).cast("long"))
       .join(freshBuckets, Seq("__bucket"), "left_semi")
       .drop("__bucket")
-    val termDeltas = affectedBlocks
-      .as[PostingBlock]
-      .flatMap { b =>
-        val ids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-        val tfs = graft.codec.VByte.decodeInts(b.tfs)
-        ids.indices.iterator.map(j => (b.termId, ids(j), tfs(j).toLong))
-      }
-      .toDF("termId", "docId", "tf")
+    val termDeltas = Postings.decode(affectedBlocks.as[PostingBlock], positions = false)
       .join(fresh.select("docId"), Seq("docId"), "left_semi")
       .groupBy("termId")
       .agg(count(lit(1)).as("d_df"), sum(col("tf")).as("d_cf"))
@@ -296,7 +288,7 @@ object IndexBuilder {
     * plane terms) — and assign dense termIds from `base`. Fails loudly
     * when the ids would run past the Int termId space instead of wrapping
     * into negative (or colliding) termIds. */
-  private[index] def rankFreshOnDriver(
+  private[graft] def rankFreshOnDriver(
       entries: Array[(String, Long, Long)], base: Long): Array[TermEntry] = {
     require(base + entries.length <= Int.MaxValue.toLong + 1,
       s"termId overflow: ${entries.length} fresh terms from base $base exceed Int.MaxValue")
@@ -563,15 +555,7 @@ object IndexBuilder {
       .select("docId", "url", "docLen")
       .join(broadcast(tombsIn), Seq("docId"), "left_anti")
 
-    val surviving = readPostings(spark, indexDir, slice)
-      .as[PostingBlock]
-      .flatMap { b =>
-        val ids = VByte.decodeDocIds(b.docIdGaps)
-        val tfs = VByte.decodeInts(b.tfs)
-        val poss = VByte.decodePositions(b.positions, tfs)
-        ids.indices.iterator.map(j => (b.termId, ids(j), tfs(j), poss(j)))
-      }
-      .toDF("termId", "docId", "tf", "positions")
+    val surviving = Postings.decode(readPostings(spark, indexDir, slice).as[PostingBlock], positions = true)
       // the inner join with LIVE in-span docstats drops tombstoned rows by
       // itself (statsIn is already anti-joined) — no separate anti-join
       .join(statsIn.select(col("docId"), col("docLen")), "docId")

@@ -339,6 +339,9 @@ final case class IndexManifest(
   /** Exact avgdl = integer total / integer count — bit-identical across
     * engines and reruns. */
   def avgdl: Double = totalLen.toDouble / nDocs.toDouble
+  /** blocks per docId bucket: bucket `b` owns blockIds
+    * `[b * blocksPerBucket, (b + 1) * blocksPerBucket)`. */
+  def blocksPerBucket: Long = bucketRange / blockSize
 
   def metaComputers: Seq[BlockMetaComputer] =
     BlockMetaComputers.fromNames(metaComputerNames)

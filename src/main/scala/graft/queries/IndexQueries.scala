@@ -4,7 +4,7 @@ import graft.corpus.Pages
 import graft.index._
 import graft.query._
 import graft.tokenize.Tokenizers
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared per-sfDir index cache: builds each index once per JVM into a fresh
@@ -926,30 +926,8 @@ object IndexQueries {
     // the round-trip-decoded docId sum, and the decoded POSITION sum
     // (proves the docId, tf, and positional codecs are all lossless
     // through the whole build → write → read cycle).
-    "q_postings_stats" -> ((spark, sfDir) => {
-      import spark.implicits._
-      val h = IndexCache.handle(spark, sfDir)
-      h.postings
-        .map { b =>
-          val ids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-          val tfs = graft.codec.VByte.decodeInts(b.tfs)
-          val poss = graft.codec.VByte.decodePositions(b.positions, tfs)
-          (b.termId, b.nDocs, ids.length, ids.sum, tfs.map(_.toLong).sum,
-            poss.iterator.map(_.iterator.map(_.toLong).sum).sum, ids.min, ids.max)
-        }
-        .toDF("term_id", "n_docs", "n_decoded", "docid_sum", "tf_sum", "p_sum", "min_doc", "max_doc")
-        .groupBy("term_id")
-        .agg(
-          sum("n_decoded").cast("long").as("df"),
-          sum("tf_sum").cast("long").as("cf"),
-          sum("docid_sum").cast("long").as("docid_sum"),
-          sum("p_sum").cast("long").as("pos_sum"),
-          min("min_doc").as("first_doc"),
-          max("max_doc").as("last_doc"),
-          count(lit(1)).cast("long").as("n_blocks")
-        )
-        .orderBy("term_id")
-    }),
+    "q_postings_stats" -> ((spark, sfDir) =>
+      decodedTermStats(IndexCache.handle(spark, sfDir)).orderBy("term_id")),
 
     // The LOSSLESS INVERSE (decode): reconstruct the ordered per-document
     // term stream of a docId range FROM THE INDEX ALONE — the reference's
@@ -1086,23 +1064,8 @@ object IndexQueries {
     // docId sums, decoded position sums, block counts. Keyed by term
     // (termIds stay stable but the oracle re-derives its own ids).
     "q_compact_stats" -> ((spark, sfDir) => {
-      import spark.implicits._
       val h = DeletedIndexCache.getCompacted(spark, sfDir)
-      val stats = h.postings
-        .map { b =>
-          val ids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-          val tfs = graft.codec.VByte.decodeInts(b.tfs)
-          val poss = graft.codec.VByte.decodePositions(b.positions, tfs)
-          (b.termId, ids.length.toLong, tfs.map(_.toLong).sum, ids.sum,
-            poss.iterator.map(_.iterator.map(_.toLong).sum).sum, 1L)
-        }
-        .toDF("term_id", "n", "tf_sum", "docid_sum", "p_sum", "blk")
-        .groupBy("term_id")
-        .agg(sum("n").cast("long").as("df"), sum("tf_sum").cast("long").as("cf"),
-          sum("docid_sum").cast("long").as("docid_sum"),
-          sum("p_sum").cast("long").as("pos_sum"),
-          sum("blk").cast("long").as("n_blocks"))
-      stats
+      decodedTermStats(h)
         .join(h.dictionary.toDF().select(col("termId").as("term_id"), col("term")), "term_id")
         .select(col("term"), col("df"), col("cf"), col("docid_sum"), col("pos_sum"), col("n_blocks"))
         .orderBy("term")
@@ -1120,7 +1083,6 @@ object IndexQueries {
     // the fixture spans multiple buckets and the merge is genuinely
     // slice-local (MaintainSpec asserts the file-level byte-identity).
     "q_maintain_stats" -> ((spark, sfDir) => {
-      import spark.implicits._
       val base = s"/tmp/graft_maintain_q/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
       IndexCache.deleteRecursively(new java.io.File(base))
       val pages = Pages.withInjections(spark, sfDir)
@@ -1135,20 +1097,7 @@ object IndexQueries {
       require(m.segments.length <= 2,
         s"maintain(maxSegments = 2) left ${m.segments.length} segments")
       val h = graft.query.IndexReader.load(spark, base)
-      val stats = h.postings
-        .map { b =>
-          val ids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-          val tfs = graft.codec.VByte.decodeInts(b.tfs)
-          val poss = graft.codec.VByte.decodePositions(b.positions, tfs)
-          (b.termId, ids.length.toLong, tfs.map(_.toLong).sum, ids.sum,
-            poss.iterator.map(_.iterator.map(_.toLong).sum).sum)
-        }
-        .toDF("term_id", "n", "tf_sum", "docid_sum", "p_sum")
-        .groupBy("term_id")
-        .agg(sum("n").cast("long").as("df"), sum("tf_sum").cast("long").as("cf"),
-          sum("docid_sum").cast("long").as("docid_sum"),
-          sum("p_sum").cast("long").as("pos_sum"))
-      stats
+      decodedTermStats(h)
         .join(h.dictionary.toDF().select(col("termId").as("term_id"), col("term")), "term_id")
         .select(col("term"), col("df"), col("cf"), col("docid_sum"), col("pos_sum"))
         .orderBy("term")
@@ -1613,25 +1562,10 @@ object IndexQueries {
     * driver-side vocabulary. Cost is O(range's tokens + dictionary scan),
     * independent of corpus size. */
   def decodeRange(spark: SparkSession, h: graft.query.IndexHandle, lo: Long, hi: Long): DataFrame = {
-    import spark.implicits._
     val m = h.manifest
-    val blocksPerBucket = m.bucketRange / m.blockSize
-    val bLo = lo / m.bucketRange
-    val bHi = (hi - 1) / m.bucketRange
-    val occ = h.postings
-      .filter(col("blockId") >= bLo * blocksPerBucket &&
-        col("blockId") < (bHi + 1) * blocksPerBucket) // bucket-exact, pushed down
-      .as[graft.index.PostingBlock]
-      .flatMap { b =>
-        val ids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-        val tfs = graft.codec.VByte.decodeInts(b.tfs)
-        val poss = graft.codec.VByte.decodePositions(b.positions, tfs)
-        ids.indices.iterator
-          .filter(j => ids(j) >= lo && ids(j) < hi)
-          .flatMap(j => poss(j).iterator.map(p => (b.termId, ids(j), p)))
-      }
-      .toDF("term_id", "doc_id", "pos")
-      .transform(h.excludeDeleted(_, "doc_id"))
+    val occ = occurrences(h, h.postings // bucket-exact, pushed down
+        .filter(Postings.inBuckets(m, lo / m.bucketRange to (hi - 1) / m.bucketRange)))
+      .filter(col("doc_id") >= lo && col("doc_id") < hi)
     occ.join(h.dictionary.toDF().select(col("termId").as("term_id"), col("term")), "term_id")
       .select(col("doc_id"), col("pos"), col("term"))
   }
@@ -1652,19 +1586,10 @@ object IndexQueries {
       docId: Long, m: Int): Seq[String] = {
     import spark.implicits._
     val mf = h.manifest
-    val blocksPerBucket = mf.bucketRange / mf.blockSize
-    val b = docId / mf.bucketRange
-    val prof = h.postings
-      .filter(col("blockId") >= b * blocksPerBucket &&
-        col("blockId") < (b + 1) * blocksPerBucket)
-      .as[graft.index.PostingBlock]
-      .flatMap { blk =>
-        val ids = graft.codec.VByte.decodeDocIds(blk.docIdGaps)
-        val tfs = graft.codec.VByte.decodeInts(blk.tfs)
-        ids.indices.iterator.filter(j => ids(j) == docId)
-          .map(j => (blk.termId, tfs(j)))
-      }
-      .toDF("term_id", "tf")
+    val prof = Postings.decode(
+        h.postings.filter(Postings.inBuckets(mf, Seq(docId / mf.bucketRange))), positions = false)
+      .filter(col("docId") === docId)
+      .select(col("termId").as("term_id"), col("tf"))
     prof
       .join(h.dictionary.toDF().select(col("termId").as("term_id"),
         col("term"), col("df")), "term_id")
@@ -1698,23 +1623,27 @@ object IndexQueries {
   /** Decoded (term_id, doc_id, pos) rows for the given termIds only — the
     * postings scan is pruned by termId pushdown, so row volume is bounded
     * by the looked-up terms' postings, never the corpus. */
-  private def positionalOccurrences(
-      spark: SparkSession,
-      h: graft.query.IndexHandle,
-      termIds: Seq[Int]
-  ): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    h.postings
-      .filter(col("termId").isin(termIds.map(Int.box): _*)) // pruned point scan
-      .as[graft.index.PostingBlock]
-      .flatMap { b =>
-        val ids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-        val tfs = graft.codec.VByte.decodeInts(b.tfs)
-        val poss = graft.codec.VByte.decodePositions(b.positions, tfs)
-        ids.indices.iterator.flatMap(j => poss(j).iterator.map(p => (b.termId, ids(j), p)))
-      }
-      .toDF("term_id", "doc_id", "pos")
+  private def positionalOccurrences(h: graft.query.IndexHandle, termIds: Seq[Int]): DataFrame =
+    occurrences(h, h.postings.filter(col("termId").isin(termIds.map(Int.box): _*))) // pruned point scan
+
+  /** Live (term_id, doc_id, pos) rows, one per token occurrence, of the
+    * given blocks. */
+  private def occurrences(h: graft.query.IndexHandle, blocks: Dataset[PostingBlock]): DataFrame =
+    Postings.decode(blocks, positions = true)
+      .select(col("termId").as("term_id"), col("docId").as("doc_id"), explode(col("positions")).as("pos"))
       .transform(h.excludeDeleted(_, "doc_id"))
+
+  /** Per-term decoded postings stats — df, cf, docId sum, position sum,
+    * first and last docId, block count — for the build, compaction and
+    * maintenance round-trip rows. */
+  private def decodedTermStats(h: graft.query.IndexHandle): DataFrame = {
+    val blocks = h.postings.groupBy(col("termId").as("term_id")).agg(count(lit(1)).as("n_blocks"))
+    Postings.decode(h.postings, positions = true)
+      .groupBy(col("termId").as("term_id"))
+      .agg(count(lit(1)).as("df"), sum("tf").as("cf"), sum("docId").as("docid_sum"),
+        sum(aggregate(col("positions"), lit(0L), (acc, p) => acc + p)).as("pos_sum"),
+        min("docId").as("first_doc"), max("docId").as("last_doc"))
+      .join(blocks, "term_id")
   }
 
   /** Ordered proximity pairs: (first, second) with 1 <= pos2 - pos1 <= Window. */
@@ -1738,7 +1667,7 @@ object IndexQueries {
     val dict = h.lookupTerms(SnippetTerms)
     val entries = SnippetTerms.flatMap(t => dict.get(t).map(e => (e.termId, t)))
     val qdf = entries.toDF("term_id", "q_term")
-    val hits = positionalOccurrences(spark, h, entries.map(_._1))
+    val hits = positionalOccurrences(h, entries.map(_._1))
       .filter(col("doc_id") >= lit(DecodeLo) && col("doc_id") < lit(DecodeHi))
       .groupBy("term_id", "doc_id")
       .agg(min(col("pos")).as("hit_pos"))
@@ -1760,16 +1689,23 @@ object IndexQueries {
     * decode. Indexes built without the computer degrade to the un-prunable
     * span [1, ∞). Positions fit in int; spans are widened to long so the
     * `max_pos + window` comparison cannot overflow under ANSI. */
-  private def blockSpans(h: graft.query.IndexHandle, termId: Int): org.apache.spark.sql.DataFrame = {
-    val bpb = h.manifest.bucketRange / h.manifest.blockSize
+  private def blockSpans(h: graft.query.IndexHandle, termIds: Seq[Int]): DataFrame =
     h.postings.toDF()
-      .filter(col("termId") === termId)
-      .select(col("blockId"),
-        (col("blockId") / lit(bpb)).cast("long").as("bucket"),
+      .filter(col("termId").isin(termIds.map(Int.box): _*))
+      .select(col("termId"), col("blockId"),
+        (col("blockId") / lit(h.manifest.blocksPerBucket)).cast("long").as("bucket"),
         coalesce(element_at(col("meta"), lit(graft.index.PosSpanComputer.MinPosKey)), lit(1))
           .cast("long").as("min_pos"),
         coalesce(element_at(col("meta"), lit(graft.index.PosSpanComputer.MaxPosKey)), lit(Int.MaxValue))
           .cast("long").as("max_pos"))
+
+  /** The (t1-block, t2-block) pairs of `spans` ([[blockSpans]] rows) in one
+    * bucket whose pos-spans allow a t2 position in [minPosA+1, maxPosA+window]. */
+  private def spanPairs(spans: DataFrame, t1: Int, t2: Int, window: Int): DataFrame = {
+    def side(t: Int, s: String) = spans.filter(col("termId") === t).select(col("blockId").as(s"block_$s"),
+      col("bucket"), col("min_pos").as(s"min_$s"), col("max_pos").as(s"max_$s"))
+    side(t1, "a").join(side(t2, "b"), Seq("bucket"))
+      .filter(col("max_b") >= col("min_a") + 1 && col("min_b") <= col("max_a") + window)
   }
 
   /** E6 metadata as a pruning bound: the (t1-block, t2-block) pairs that
@@ -1783,12 +1719,7 @@ object IndexQueries {
       t2: Int,
       window: Int
   ): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val a = blockSpans(h, t1).select(col("blockId").as("block_a"), col("bucket"),
-      col("min_pos").as("min_a"), col("max_pos").as("max_a"))
-    val b = blockSpans(h, t2).select(col("blockId").as("block_b"), col("bucket"),
-      col("min_pos").as("min_b"), col("max_pos").as("max_b"))
-    val pairs = a.join(b, Seq("bucket"))
-      .filter(col("max_b") >= col("min_a") + 1 && col("min_b") <= col("max_a") + window)
+    val pairs = spanPairs(blockSpans(h, Seq(t1, t2)), t1, t2, window)
     (pairs.select(col("block_a").as("blockId")).distinct(),
       pairs.select(col("block_b").as("blockId")).distinct())
   }
@@ -1812,42 +1743,19 @@ object IndexQueries {
     val empty = Seq.empty[(Int, Long, Long)].toDF("pair_id", "doc_id", "n_matches")
     if (resolved.isEmpty) return empty.orderBy("pair_id", "doc_id")
     val allIds = resolved.flatMap(p => Seq(p._2, p._3)).distinct
-    val bpb = h.manifest.bucketRange / h.manifest.blockSize
     // one metadata pass: (termId, blockId, bucket, posSpan) — block rows only
-    val spans = h.postings.toDF()
-      .filter(col("termId").isin(allIds.map(Int.box): _*))
-      .select(col("termId"), col("blockId"),
-        (col("blockId") / lit(bpb)).cast("long").as("bucket"),
-        coalesce(element_at(col("meta"), lit(graft.index.PosSpanComputer.MinPosKey)), lit(1))
-          .cast("long").as("min_pos"),
-        coalesce(element_at(col("meta"), lit(graft.index.PosSpanComputer.MaxPosKey)), lit(Int.MaxValue))
-          .cast("long").as("max_pos"))
-      .localCheckpoint(true)
+    val spans = blockSpans(h, allIds).localCheckpoint(true)
     // surviving (termId, blockId) union over all pairs
-    val keeps = resolved.flatMap { case (_, ta, tb) =>
-      val a = spans.filter(col("termId") === ta).select(col("termId").as("tid_a"),
-        col("blockId").as("block_a"), col("bucket"), col("min_pos").as("min_a"), col("max_pos").as("max_a"))
-      val b = spans.filter(col("termId") === tb).select(col("termId").as("tid_b"),
-        col("blockId").as("block_b"), col("bucket"), col("min_pos").as("min_b"), col("max_pos").as("max_b"))
-      val pr = a.join(b, Seq("bucket"))
-        .filter(col("max_b") >= col("min_a") + 1 && col("min_b") <= col("max_a") + NearWindow)
-      Seq(pr.select(col("tid_a").as("termId"), col("block_a").as("blockId")),
-        pr.select(col("tid_b").as("termId"), col("block_b").as("blockId")))
-    }
-    val keep = keeps.reduce(_ unionByName _).distinct()
+    val keep = resolved.flatMap { case (_, ta, tb) =>
+      val pr = spanPairs(spans, ta, tb, NearWindow)
+      Seq(pr.select(lit(ta).as("termId"), col("block_a").as("blockId")),
+        pr.select(lit(tb).as("termId"), col("block_b").as("blockId")))
+    }.reduce(_ unionByName _).distinct()
     // one decode pass over the surviving blocks only
-    val occ = h.postings.toDF()
-      .filter(col("termId").isin(allIds.map(Int.box): _*))
-      .join(keep, Seq("termId", "blockId"), "left_semi")
-      .as[graft.index.PostingBlock]
-      .flatMap { b =>
-        val ids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-        val tfs = graft.codec.VByte.decodeInts(b.tfs)
-        val poss = graft.codec.VByte.decodePositions(b.positions, tfs)
-        ids.indices.iterator.flatMap(j => poss(j).iterator.map(p => (b.termId, ids(j), p)))
-      }
-      .toDF("term_id", "doc_id", "pos")
-      .transform(h.excludeDeleted(_, "doc_id"))
+    val occ = occurrences(h, h.postings
+        .filter(col("termId").isin(allIds.map(Int.box): _*))
+        .join(keep, Seq("termId", "blockId"), "left_semi")
+        .as[PostingBlock])
       .localCheckpoint(true)
     val results = resolved.map { case (pid, ta, tb) =>
       val a = occ.filter(col("term_id") === ta).select(col("doc_id"), col("pos").as("pos_a"))
@@ -1867,7 +1775,7 @@ object IndexQueries {
     val h = IndexCache.handle(spark, sfDir)
     val dict = h.lookupTerms(Phrases.flatMap(_._2))
     val allIds = Phrases.flatMap(_._2).distinct.flatMap(dict.get).map(_.termId)
-    val occ = positionalOccurrences(spark, h, allIds)
+    val occ = positionalOccurrences(h, allIds)
     val results = Phrases.map { case (pid, ts) =>
       val resolved = ts.map(dict.get)
       if (resolved.exists(_.isEmpty))
@@ -1918,15 +1826,9 @@ object IndexQueries {
       es.map(e => (qid, e.termId, QlMu * (e.cf.toDouble / total.toDouble)))
     }.toDF("query_id", "term_id", "mu_p")
     val ids = resolved.flatMap(_._2.map(_.termId)).distinct
-    val occ = h.postings
-      .filter(col("termId").isin(ids.map(Int.box): _*)) // pushed to row groups
-      .as[graft.index.PostingBlock]
-      .flatMap { b =>
-        val docIds = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-        val tfs = graft.codec.VByte.decodeInts(b.tfs)
-        docIds.indices.iterator.map(j => (b.termId, docIds(j), tfs(j)))
-      }
-      .toDF("term_id", "doc_id", "tf")
+    val occ = Postings.decode(h.postings // termId pushed to row groups
+        .filter(col("termId").isin(ids.map(Int.box): _*)), positions = false)
+      .select(col("termId").as("term_id"), col("docId").as("doc_id"), col("tf"))
       .transform(h.excludeDeleted(_, "doc_id"))
     val scored = occ
       .join(broadcast(qterms), "term_id")

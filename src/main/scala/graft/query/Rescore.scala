@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.index.Postings
 import graft.tokenize.TokenizerStrategy
 import org.apache.spark.sql.functions._
 
@@ -56,31 +57,18 @@ object Rescore {
     val occ: Map[(Int, Long), Array[Int]] =
       if (dict.isEmpty || candDocs.isEmpty) Map.empty
       else {
-        val spark = index.postings.sparkSession
-        import spark.implicits._
         val m = index.manifest
-        val bpb = m.bucketRange / m.blockSize
         val ids = dict.valuesIterator.map(_.termId).toSeq
-        val buckets = candDocs.map(_ / m.bucketRange).toSeq
         // candDocs rides the closure so the candidate filter runs INSIDE
         // the decode pass — only the ~queries×W candidate rows ever ship
         // to the driver, never every doc sharing a candidate's bucket
         val cand = candDocs
-        index.postings.toDF()
-          .filter(col("termId").isin(ids.map(Int.box): _*) &&
-            (col("blockId") / lit(bpb)).cast("long").isin(buckets.map(Long.box): _*))
-          .as[graft.index.PostingBlock]
-          .flatMap { b =>
-            val docIds = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-            val tfs = graft.codec.VByte.decodeInts(b.tfs)
-            val poss = graft.codec.VByte.decodePositions(b.positions, tfs)
-            docIds.indices.iterator
-              .filter(j => cand(docIds(j)))
-              .map(j => (b.termId, docIds(j), poss(j)))
-          }
+        Postings.decode(index.postings.filter(col("termId").isin(ids.map(Int.box): _*) &&
+            Postings.inBuckets(m, candDocs.toSeq.map(_ / m.bucketRange))), positions = true)
+          .filter(p => cand(p.docId))
           .collect()
           .iterator
-          .map { case (t, d, p) => (t, d) -> p }.toMap
+          .map(p => (p.termId, p.docId) -> p.positions).toMap
       }
     base.map { case (qid, wnd) =>
       val bgs = bigrams.getOrElse(qid, Seq.empty)

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.index.{PostingBlock, Postings}
 import graft.tokenize.TokenizerStrategy
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
@@ -349,7 +350,6 @@ object Search {
       : Map[(Int, Long), Seq[(String, Double, Int, Long, Double, Int, Double)]] = {
     import graft.query.{Bm25 => B}
     val m = index.manifest
-    val bpb = m.bucketRange / m.blockSize
     val dict = index.lookupTerms(pairs.flatMap(_._1.scoring.map(_._1)).distinct)
     val resolvedByPair = pairs.map { case (q, d) =>
       (q.queryId, d) -> q.scoring.map(_._1).flatMap(t => dict.get(t)).sortBy(_.termId)
@@ -361,26 +361,18 @@ object Search {
         .filter(col("docId").isin(docIds.map(Long.box): _*))
         .collect().map(s => s.docId -> s.docLen).toMap
     val allIds = resolvedByPair.valuesIterator.flatten.map(_.termId).toSeq.distinct
-    val buckets = docIds.map(_ / m.bucketRange).distinct
     val blocks =
-      if (allIds.isEmpty || docLens.isEmpty) Array.empty[graft.index.PostingBlock]
+      if (allIds.isEmpty || docLens.isEmpty) Array.empty[PostingBlock]
       else index.postings
         .filter(col("termId").isin(allIds.map(Int.box): _*) &&
-          buckets.map(b => col("blockId") >= b * bpb && col("blockId") < (b + 1) * bpb)
-            .reduce(_ || _))
+          Postings.inBuckets(m, docIds.map(_ / m.bucketRange)))
         .collect()
     // per (termId, bucket): blocks sorted by firstDocId for the point probe
-    val byTermBucket = blocks.groupBy(b => (b.termId, b.blockId / bpb))
+    val byTermBucket = blocks.groupBy(b => (b.termId, b.blockId / m.blocksPerBucket))
       .map { case (k, bs) => k -> bs.sortBy(_.firstDocId) }
-    def tfOf(tid: Int, doc: Long): Option[Int] = {
-      val bs = byTermBucket.getOrElse((tid, doc / m.bucketRange), null)
-      if (bs == null) return None
-      bs.filter(_.firstDocId <= doc).flatMap { b =>
-        val dids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-        val ix = java.util.Arrays.binarySearch(dids, doc)
-        if (ix < 0) None else Some(graft.codec.VByte.decodeInts(b.tfs)(ix))
-      }.headOption
-    }
+    def tfOf(tid: Int, doc: Long): Option[Int] =
+      byTermBucket.getOrElse((tid, doc / m.bucketRange), Array.empty[PostingBlock])
+        .iterator.filter(_.firstDocId <= doc).flatMap(Postings.tfAt(_, doc)).nextOption()
     pairs.map { case (q, d) =>
       val weights = q.scoring.toMap
       val rows = docLens.get(d) match {
@@ -416,8 +408,6 @@ object Search {
     val m = index.manifest
     val dict = index.lookupTerms(q.scoring.map(_._1))
     val weights = q.scoring.toMap
-    val bpb = m.bucketRange / m.blockSize
-    val bucket = docId / m.bucketRange
     val resolved = q.scoring.map(_._1).flatMap(t => dict.get(t)).sortBy(_.termId)
     if (resolved.isEmpty)
       return Seq.empty[(String, Double, Int, Long, Double, Int, Double)]
@@ -432,15 +422,9 @@ object Search {
       case Some(dl) =>
         val tfs: Map[Int, Int] = index.postings
           .filter(col("termId").isin(ids.map(Int.box): _*) &&
-            col("blockId") >= bucket * bpb && col("blockId") < (bucket + 1) * bpb &&
-            col("firstDocId") <= docId)
+            Postings.inBuckets(m, Seq(docId / m.bucketRange)) && col("firstDocId") <= docId)
           .collect()
-          .flatMap { b =>
-            val dids = graft.codec.VByte.decodeDocIds(b.docIdGaps)
-            val ix = java.util.Arrays.binarySearch(dids, docId)
-            if (ix < 0) None
-            else Some(b.termId -> graft.codec.VByte.decodeInts(b.tfs)(ix))
-          }.toMap
+          .flatMap(b => Postings.tfAt(b, docId).map(b.termId -> _)).toMap
         resolved.flatMap { e =>
           tfs.get(e.termId).map { tf =>
             val w = weights(e.term)

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.index.Postings
 import graft.tokenize.TokenizerStrategy
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -50,16 +51,11 @@ object Significant {
       return Seq.empty[(Int, Int, String, Long, Double)]
         .toDF("query_id", "rank", "term", "fg", "score")
     val m = index.manifest
-    val bpb = m.bucketRange / m.blockSize
-    val buckets = sample.map(_._2 / m.bucketRange).distinct
     // forward-term reconstruction for the sample docs: every term's blocks
     // in the sample buckets only (one (term, doc) pair per posting entry)
-    val pairs = index.postings.toDF()
-      .filter((col("blockId") / lit(bpb)).cast("long").isin(buckets.map(Long.box): _*))
-      .as[graft.index.PostingBlock]
-      .flatMap(b => graft.codec.VByte.decodeDocIds(b.docIdGaps).iterator
-        .map(d => (b.termId, d)))
-      .toDF("term_id", "doc_id")
+    val pairs = Postings.decode(
+        index.postings.filter(Postings.inBuckets(m, sample.map(_._2 / m.bucketRange))), positions = false)
+      .select(col("termId").as("term_id"), col("docId").as("doc_id"))
       .transform(index.excludeDeleted(_, "doc_id"))
     val sampleDf = sample.toDF("query_id", "doc_id")
     val wnDf = base.toSeq.map { case (qid, ds) => (qid, ds.length.toLong) }

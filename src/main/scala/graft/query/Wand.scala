@@ -778,7 +778,7 @@ object Wand {
     import spark.implicits._
     val allIds = resolved.values.flatMap(q => termIds(q)).toSeq.distinct
     if (allIds.isEmpty) return Seq.empty[(Int, Long)].toDF("query_id", "doc_id")
-    val blocksPerBucket = index.manifest.bucketRange / index.manifest.blockSize
+    val blocksPerBucket = index.manifest.blocksPerBucket
     index.postings
       .filter(col("termId").isin(allIds: _*))
       .as[PostingBlock]

@@ -3,8 +3,9 @@ package graft
 import graft.codec.VByte
 import graft.corpus.Pages
 import graft.index._
-import graft.query.{IndexReader, Wand}
+import graft.query.{IndexReader, QuerySpec, Wand}
 import graft.queries.QuerySet
+import graft.tokenize.Tokenizers
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -110,5 +111,41 @@ class AppendSpec extends AnyFunSuite {
     assert(eLang.getMessage.contains("analyzer"), s"unexpected: ${eLang.getMessage}")
     assert(Manifest.read(s"$appended/manifest.json") == snapBefore,
       "a refused append must leave the manifest untouched")
+  }
+
+  test("append assigns fresh termIds from vocabSize in (df desc, term) order; WAND finds the new terms") {
+    // the base covers the fixture's whole vocabulary, so only the novel
+    // terms are fresh; novelK rides on docs with doc_id % 8 <= K, which
+    // makes the dfs distinct and ranks them against their name order
+    val dir = "/tmp/graft_test_index/append_fresh"
+    graft.queries.IndexCache.deleteRecursively(new java.io.File(dir))
+    val pages = Pages.withInjections(spark, sfDir)
+    val base = IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), dir, cfg)
+    val delta = (0 until 4).foldLeft(pages.filter(col("doc_id") >= SplitAt)) { (df, k) =>
+      df.withColumn("text", when(col("doc_id") % 8 <= k, concat(col("text"), lit(s" novel$k")))
+        .otherwise(col("text")))
+    }
+    IndexBuilder.append(spark, delta, dir, cfg)
+    val h = IndexReader.load(spark, dir)
+
+    val td = IndexBuilder.termDocs(Pages.cleaned(delta, cfg.langs), Tokenizers(cfg.tokenizer)).collect()
+    val dict = h.dictionary.collect()
+    val baseTerms = dict.filter(_.termId < base.vocabSize).map(_.term).toSet
+    val freshStats = td.groupBy(_.term).collect {
+      case (t, rows) if !baseTerms(t) => (t, rows.length.toLong, rows.map(_.tf.toLong).sum)
+    }.toArray
+    val want = IndexBuilder.rankFreshOnDriver(freshStats, base.vocabSize).toSeq
+    val got = dict.filter(_.termId >= base.vocabSize).sortBy(_.termId).toSeq
+    assert(got.map(_.term) == Seq("novel3", "novel2", "novel1", "novel0"),
+      s"fresh terms out of (df desc, term) order: $got")
+    assert(got.map(_.df).distinct.length == 4, s"fixture dfs must be distinct: $got")
+    assert(got.map(_.termId) == (0 until 4).map(i => (base.vocabSize + i).toInt))
+    assert(got == want, s"v(N+1) fresh rows != rankFreshOnDriver:\n$got\n$want")
+
+    (0 until 4).foreach { k =>
+      val docs = td.filter(_.term == s"novel$k").map(_.docId).toSet
+      val hits = Wand.topK(h, Seq(QuerySpec(1, Seq(s"novel$k"))), k = h.manifest.nDocs.toInt)(1)
+      assert(hits.map(_._2).toSet == docs && hits.length == docs.size, s"novel$k: WAND hits differ")
+    }
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import graft.corpus.Pages
-import graft.queries.{IndexCache, IndexQueries}
+import graft.index.{IndexBuilder, IndexConfig, Postings}
+import graft.queries.{IndexCache, IndexQueries, QuerySet}
+import graft.query.{IndexReader, Significant}
 import graft.tokenize.Tokenizers
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -74,5 +76,33 @@ class DecodeSpec extends AnyFunSuite {
     assert(got == want, s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
     assert(!got.exists(_._1 == "zzzoov"), "OOV snippet term must produce no rows")
     assert(got.nonEmpty, "fixture must produce snippets")
+  }
+
+  test("Postings.inBuckets selects exactly the listed buckets' blocks as pushed blockId ranges") {
+    // a small bucketRange spreads the fixture over many buckets, so {0, 2, 3}
+    // is a run plus a gap, not the whole index
+    val dir = "/tmp/graft_test_index/decode_buckets"
+    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexBuilder.buildFrom(spark, Pages.withInjections(spark, sfDir), dir,
+      IndexConfig(blockSize = 16, bucketRange = 64, postingsBuckets = 2))
+    val h = IndexReader.load(spark, dir)
+    val m = h.manifest
+    val buckets = Set(0L, 2L, 3L)
+    val all = h.postings.collect().map(b => (b.termId, b.blockId))
+    val want = all.filter { case (_, id) => buckets(id / m.blocksPerBucket) }.toSet
+    assert(all.map(_._2 / m.blocksPerBucket).toSet.size > 4, "fixture must span more buckets")
+    assert(buckets.forall(b => want.exists(_._2 / m.blocksPerBucket == b)), "every listed bucket has blocks")
+    val sel = h.postings.filter(Postings.inBuckets(m, Seq(0L, 2L, 3L)))
+    assert(sel.collect().map(b => (b.termId, b.blockId)).toSet == want)
+    val plan = sel.queryExecution.executedPlan.toString
+    assert("PushedFilters: .*GreaterThanOrEqual\\(blockId".r.findFirstIn(plan).isDefined,
+      s"blockId ranges not pushed down:\n${plan.take(2000)}")
+  }
+
+  test("Significant.terms reads only the sample buckets' blocks through a pushed blockId range") {
+    val plan = Significant.terms(IndexCache.handle(spark, sfDir), QuerySet.significant,
+      Tokenizers.default, topN = 10).queryExecution.executedPlan.toString
+    assert("PushedFilters: .*GreaterThanOrEqual\\(blockId".r.findFirstIn(plan).isDefined,
+      s"sample-bucket filter not pushed down:\n${plan.take(3000)}")
   }
 }
