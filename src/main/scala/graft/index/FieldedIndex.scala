@@ -19,6 +19,17 @@ final case class FieldSpec(
   require(weight > 0d && !weight.isInfinite, s"field weight must be positive, got $weight")
 }
 
+/** One field's committed spec in `fielded.json`: name, weight, source
+  * column, and the build-relevant cfg fingerprint (analyzer + cap +
+  * geometry; vocabCap -1 = uncapped) — so the committed-destination checks
+  * catch EVERY spec change that would silently no-op against
+  * already-built sub-indexes. */
+final case class FieldRecord(name: String, weight: Double, textCol: String, analyzer: String,
+    vocabCap: Int, blockSize: Int, bucketRange: Long)
+
+/** `fielded.json`: the committed fields, in build order. */
+final case class FieldedManifest(fields: Seq[FieldRecord])
+
 /** First-class fielded-index build artifact (the engine analog of the
   * reference's multi-vocabulary tokenizers — Octuple/CPWord emit parallel
   * token streams per timestep, tokenizations/octuple.py:173-203,
@@ -33,13 +44,15 @@ object FieldedIndex {
   def fieldDir(baseDir: String, name: String): String = s"$baseDir/field_$name"
   private def manifestPath(baseDir: String) = s"$baseDir/fielded.json"
 
-  /** The committed (name, weight) of every field, in build order — the one
-    * reader of `fielded.json` ([[fieldedJson]] writes it). */
-  private def committedFields(baseDir: String): Seq[(String, Double)] = {
-    val re = """\{"name":"([A-Za-z0-9_]+)","weight":([-0-9.eE]+),[^}]*\}""".r
-    re.findAllMatchIn(Store.readString(manifestPath(baseDir)))
-      .map(m => (m.group(1), m.group(2).toDouble)).toSeq
-  }
+  /** The `fielded.json` record of `fields`. */
+  private[graft] def manifestOf(fields: Seq[FieldSpec]): FieldedManifest =
+    FieldedManifest(fields.map(f => FieldRecord(f.name, f.weight, f.textCol, f.cfg.analyzerId,
+      f.cfg.vocabCap.getOrElse(-1), f.cfg.blockSize, f.cfg.bucketRange)))
+
+  /** The committed spec — the one reader of `fielded.json`. */
+  private def committed(baseDir: String): FieldedManifest =
+    Store.readJson[FieldedManifest](manifestPath(baseDir),
+      "fielded.json format too old for this engine version; rebuild the fielded index")
 
   /** Build every field's sub-index from one pages relation. `pages` must
     * carry the standard page columns (doc_id, url, warc_ts, lang) plus one
@@ -61,10 +74,10 @@ object FieldedIndex {
     // queries would then run against stale sub-indexes with no error. A
     // crashed build (no fielded.json yet, manifest commits last) still
     // resumes each sub-index's own checkpointed stages.
-    val json = fieldedJson(fields)
+    val spec = manifestOf(fields)
     if (Store.exists(manifestPath(baseDir))) {
-      val existing = Store.readString(manifestPath(baseDir))
-      require(existing == json,
+      val existing = committed(baseDir)
+      require(existing == spec,
         s"fielded index already committed at $baseDir with a different field spec " +
           s"($existing); sub-index builds are idempotent skips, so rebuilding in place " +
           "would silently keep the old tokenization — build into a fresh directory")
@@ -90,18 +103,8 @@ object FieldedIndex {
         ()
       } finally { shared.unpersist(); () }
     }
-    Store.writeString(manifestPath(baseDir), json)
+    Store.writeJson(manifestPath(baseDir), spec)
   }
-
-  /** The committed spec, in full: name, weight, source column, and the
-    * build-relevant cfg fingerprint (analyzer + cap + geometry) per field —
-    * so the committed-destination check above catches EVERY spec change
-    * that would silently no-op against already-built sub-indexes. */
-  private def fieldedJson(fields: Seq[FieldSpec]): String = fields
-    .map(f => s"""{"name":"${f.name}","weight":${f.weight},"textCol":"${f.textCol}",""" +
-      s""""analyzer":"${f.cfg.analyzerId}","vocabCap":${f.cfg.vocabCap.getOrElse(-1)},""" +
-      s""""blockSize":${f.cfg.blockSize},"bucketRange":${f.cfg.bucketRange}}""")
-    .mkString("""{"fields":[""", ",", "]}")
 
   /** Incremental fielded append — the fielded crawl loop: one
     * [[IndexBuilder.append]] per field from ONE pages relation (docIds
@@ -116,9 +119,9 @@ object FieldedIndex {
     * verb's crash contract. */
   def append(spark: SparkSession, pages: DataFrame, baseDir: String,
       fields: Seq[FieldSpec], batchId: Option[Long] = None): Unit = {
-    val committed = Store.readString(manifestPath(baseDir))
-    require(committed == fieldedJson(fields),
-      s"fielded append spec != committed spec $committed (no side effects were taken)")
+    val spec = committed(baseDir)
+    require(spec == manifestOf(fields),
+      s"fielded append spec != committed spec $spec (no side effects were taken)")
     fields.foreach { f =>
       val fieldPages = pages.select(
         col("doc_id"), col("url"), col("warc_ts"),
@@ -133,9 +136,8 @@ object FieldedIndex {
     * everywhere keeps per-field df/cf stats exact rather than relying on
     * that union). Each sub-delete is idempotent, so replays compose. */
   def delete(spark: SparkSession, baseDir: String, docIds: Seq[Long]): Unit = {
-    committedFields(baseDir).foreach { case (name, _) =>
-      IndexBuilder.delete(spark, fieldDir(baseDir, name), docIds)
-    }
+    committed(baseDir).fields.foreach(f =>
+      IndexBuilder.delete(spark, fieldDir(baseDir, f.name), docIds))
   }
 
   /** Merge an independently built fielded index into this one — the
@@ -150,23 +152,20 @@ object FieldedIndex {
     * completes the rest, and `fielded.json` itself never changes — the
     * spec is merge-invariant. */
   def merge(spark: SparkSession, baseDir: String, otherDir: String): Unit = {
-    val dst = Store.readString(manifestPath(baseDir))
-    val src = Store.readString(manifestPath(otherDir))
+    val dst = committed(baseDir)
+    val src = committed(otherDir)
     require(dst == src,
       s"fielded merge requires identical field specs; destination $dst != source $src " +
         "(no side effects were taken)")
-    committedFields(baseDir).foreach { case (name, _) =>
-      IndexBuilder.merge(spark, fieldDir(baseDir, name), fieldDir(otherDir, name))
-    }
+    dst.fields.foreach(f =>
+      IndexBuilder.merge(spark, fieldDir(baseDir, f.name), fieldDir(otherDir, f.name)))
   }
 
   /** Load the fielded index as [[graft.query.Bm25f.topK]]'s input: one
     * (handle, weight) per field, in build order. */
   def load(spark: SparkSession, baseDir: String): Seq[(graft.query.IndexHandle, Double)] = {
-    val fields = committedFields(baseDir)
+    val fields = committed(baseDir).fields
     require(fields.nonEmpty, s"no fields in ${manifestPath(baseDir)}")
-    fields.map { case (name, w) =>
-      graft.query.IndexReader.load(spark, fieldDir(baseDir, name)) -> w
-    }
+    fields.map(f => graft.query.IndexReader.load(spark, fieldDir(baseDir, f.name)) -> f.weight)
   }
 }

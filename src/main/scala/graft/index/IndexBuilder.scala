@@ -4,11 +4,14 @@ import graft.codec.VByte
 import graft.corpus.Pages
 import graft.query.Bm25
 import graft.tokenize.{TokenizerStrategy, Tokenizers}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 import java.io.ByteArrayOutputStream
-import java.nio.file.{Files, Paths}
+import scala.reflect.runtime.universe.TypeTag
 
 /** TermIdDoc + docId skew-bucket — the shuffle key of the segment build. */
 final case class BucketedPosting(termId: Int, bucket: Long, docId: Long, tf: Int, docLen: Int,
@@ -103,14 +106,23 @@ object IndexBuilder {
   def docstatsDirs(indexDir: String, m: IndexManifest): Seq[String] =
     m.segments.map(s => s"${segmentDir(indexDir, s)}/docstats")
 
+  /** A scan of index table directories under the schema their row type
+    * fixes — no one-task parquet-footer job to infer it. */
+  private def readTable[T <: Product : TypeTag](spark: SparkSession, dirs: Seq[String]): DataFrame =
+    spark.read.schema(Encoders.product[T].schema).parquet(dirs: _*)
+
   /** All live postings blocks: a multi-path scan over the manifest's
     * segment list (predicates on termId/blockId push into every path). */
   def readPostings(spark: SparkSession, indexDir: String, m: IndexManifest): DataFrame =
-    spark.read.parquet(postingsDirs(indexDir, m): _*)
+    readTable[PostingBlock](spark, postingsDirs(indexDir, m))
 
   /** All live (physical) docstats rows, manifest-driven like postings. */
   def readDocstats(spark: SparkSession, indexDir: String, m: IndexManifest): DataFrame =
-    spark.read.parquet(docstatsDirs(indexDir, m): _*)
+    readTable[DocStat](spark, docstatsDirs(indexDir, m))
+
+  /** Dictionary version `version` of the index at `indexDir`. */
+  def readDict(spark: SparkSession, indexDir: String, version: Int): DataFrame =
+    readTable[TermEntry](spark, Seq(dictDirFor(indexDir, version)))
 
   /** The live tombstone table as one `docId` column — an empty local
     * relation (which the optimizer folds out of anti-joins) when the index
@@ -118,7 +130,7 @@ object IndexBuilder {
   def readTombstones(spark: SparkSession, indexDir: String, m: IndexManifest): DataFrame = {
     import spark.implicits._
     if (m.tombVersion < 0) Seq.empty[Long].toDF("docId")
-    else spark.read.parquet(tombDirFor(indexDir, m.tombVersion)).toDF("docId")
+    else spark.read.schema("docId LONG").parquet(tombDirFor(indexDir, m.tombVersion))
   }
 
   /** Every directory manifest `m` names: its segments, its dictionary
@@ -224,7 +236,7 @@ object IndexBuilder {
     // (optimization guide §2.6; Overlap quiesces on failure)
     Overlap.overlap {
       writeNextDict(
-        spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
+        readDict(spark, indexDir, old.dictVersion)
           .join(termDeltas, Seq("termId"), "left_outer")
           .select(col("termId"), col("term"),
             (col("df") - coalesce(col("d_df"), lit(0L))).cast("long").as("df"),
@@ -327,8 +339,7 @@ object IndexBuilder {
   private def foldDelta(spark: SparkSession, indexDir: String, old: IndexManifest,
       delta: Array[(String, Long, Long)]): (DataFrame, Long, Array[TermEntry]) = {
     import spark.implicits._
-    val oldDict = spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
-      .select(col("termId"), col("term"), col("df"), col("cf")).as[TermEntry]
+    val oldDict = readDict(spark, indexDir, old.dictVersion).as[TermEntry]
     val byTerm = delta.iterator.map { case (t, df, cf) => t -> ((df, cf)) }.toMap
     def add(e: TermEntry, d: (Long, Long)) = e.copy(df = e.df + d._1, cf = e.cf + d._2)
     val matched = oldDict.join(delta.map(_._1).toSeq.toDF("term"), Seq("term"), "left_semi")
@@ -651,18 +662,9 @@ object IndexBuilder {
     val retained = Manifest.history(indexDir)
       .filter(_.snapshotId < live.snapshotId)
       .sortBy(-_.snapshotId).take(retainSnapshots - 1) :+ live
-    val liveDirs = retained.flatMap(referencedDirs(indexDir, _)).toSet
-    val liveSnaps = retained.map(m => Manifest.snapshotPath(indexDir, m.snapshotId)).toSet
-    val tableGarbage = Seq("segments", "dictionary", "tombstones").flatMap { table =>
-      Store.list(s"$indexDir/$table").map(n => s"$table/$n")
-        .filterNot(rel => liveDirs.contains(s"$indexDir/$rel"))
-    }
-    val snapGarbage = Store.list(Manifest.snapshotDir(indexDir))
-      .filter(_.matches("v\\d{5,}\\.json")).map(n => s"snapshots/$n")
-      .filterNot(rel => liveSnaps.contains(s"$indexDir/$rel"))
-    val garbage = tableGarbage ++ snapGarbage
-    garbage.foreach(rel => Store.delete(s"$indexDir/$rel"))
-    garbage
+    Store.sweep(indexDir, Seq("segments", "dictionary", "tombstones", "snapshots"),
+      retained.flatMap(m =>
+        referencedDirs(indexDir, m) :+ Manifest.snapshotPath(indexDir, m.snapshotId)).toSet)
   }
 
   // ---------------------------------------------------------------- build
@@ -741,7 +743,7 @@ object IndexBuilder {
       }
       Lineage.append(spark, indexDir, LineageRow(-1, "dictionary", -1L, System.currentTimeMillis(), "committed"))
     }
-    if (vocabSize < 0) vocabSize = spark.read.parquet(dictDir).count()
+    if (vocabSize < 0) vocabSize = readDict(spark, indexDir, 0).count()
     // head/tail split: broadcast (and index) only the head under a cap —
     // dense df-ordered termIds make the head exactly termId < cap, and the
     // predicate is pushed BELOW the collect into the termId-clustered scan
@@ -750,7 +752,7 @@ object IndexBuilder {
     // again; the web-scale / capped paths evaluate it once (a def would
     // re-list the dictionary dir per chunk on the distributed-join path)
     lazy val headDict: org.apache.spark.sql.DataFrame = {
-      val dictSource = spark.read.parquet(dictDir)
+      val dictSource = readDict(spark, indexDir, 0)
       cfg.vocabCap.fold(dictSource)(cap => dictSource.filter(col("termId") < cap))
     }
     // J3 two-flavor dispatch: the broadcast Map is collected ONLY when the
@@ -838,7 +840,7 @@ object IndexBuilder {
 
     // global stats from the committed segment docstats (one cheap columnar
     // agg — this also revalidates the segment set is readable)
-    val agg = spark.read.parquet(segments.map(s => s"${segmentDir(indexDir, s)}/docstats"): _*)
+    val agg = readTable[DocStat](spark, segments.map(s => s"${segmentDir(indexDir, s)}/docstats"))
       .agg(count(lit(1)), coalesce(sum(col("docLen")), lit(0L)),
         coalesce(max(col("docLen")), lit(0))).head()
     val manifest = IndexManifest(nDocs = agg.getLong(0), totalLen = agg.getLong(1),
@@ -1099,9 +1101,7 @@ object IndexBuilder {
     // trusted
     val smallSrc = src.vocabSize <= broadcastVocabMax
     val (vocabSize, remap) = if (smallSrc) {
-      val srcEntries = spark.read.parquet(dictDirFor(otherDir, src.dictVersion))
-        .select(col("termId"), col("term"), col("df"), col("cf"))
-        .as[TermEntry].collect()
+      val srcEntries = readDict(spark, otherDir, src.dictVersion).as[TermEntry].collect()
       val (dictRows, vocabSize0, entries) =
         foldDelta(spark, indexDir, old, srcEntries.map(e => (e.term, e.df, e.cf)))
       writeNextDict(dictRows, indexDir, old, vocabSize0)
@@ -1111,12 +1111,11 @@ object IndexBuilder {
       val newId = entries.iterator.map(e => e.term -> e.termId).toMap
       (vocabSize0, srcEntries.map(e => (e.termId, newId(e.term))).toSeq.toDF("srcTermId", "newTermId"))
     } else {
-      val dictA = spark.read.parquet(dictDirFor(indexDir, old.dictVersion))
-      val dictB = spark.read.parquet(dictDirFor(otherDir, src.dictVersion))
+      val dictA = readDict(spark, indexDir, old.dictVersion)
+      val dictB = readDict(spark, otherDir, src.dictVersion)
         .select(col("term"), col("termId").as("srcTermId"),
           col("df").as("s_df"), col("cf").as("s_cf"))
-      val joined = dictA.select(col("termId"), col("term"), col("df"), col("cf"))
-        .join(dictB, Seq("term"), "full_outer").persist()
+      val joined = dictA.join(dictB, Seq("term"), "full_outer").persist()
       val updated = joined.filter(col("termId").isNotNull)
         .select(col("termId"), col("term"),
           (col("df") + coalesce(col("s_df"), lit(0L))).cast("long").as("df"),
@@ -1157,7 +1156,7 @@ object IndexBuilder {
     kept.zip(newSegs).foreach { case (s, ns) =>
       val srcSeg = segmentDir(otherDir, s)
       val dstSeg = segmentDir(indexDir, ns)
-      val blocks = spark.read.parquet(s"$srcSeg/postings")
+      val blocks = readTable[PostingBlock](spark, Seq(s"$srcSeg/postings"))
       writePostings(blocks.join(remapRel, blocks("termId") === remapRel("srcTermId"))
         .select(col("newTermId").as("termId"), col("blockId"), col("firstDocId"),
           col("nDocs"), col("docIdGaps"), col("tfs"), col("positions"),
@@ -1195,90 +1194,41 @@ object IndexBuilder {
 }
 
 /** Per-stage lineage rows (FIXTURES.md §5), appended to ONE JSON-lines log
-  * (`lineage.jsonl`). The previous layout — one `coalesce(1)` parquet file
-  * per stage event — ran a Spark job per commit and accumulated thousands
-  * of tiny files on a long-lived streaming index; a driver-side line append
-  * is O(1) files forever and costs no job at all. Stage/status strings are
-  * fixed identifiers (no escaping needed); a torn final line from a crash
-  * mid-append is skipped on load (lineage is informational — the
-  * transactional commit marker is each stage's parquet `_SUCCESS`). */
+  * (`lineage.jsonl`, one [[Store]]-codec line per row). The previous
+  * layout — one `coalesce(1)` parquet file per stage event — ran a Spark
+  * job per commit and accumulated thousands of tiny files on a long-lived
+  * streaming index; a driver-side line append is O(1) files forever and
+  * costs no job at all. A torn final line from a crash mid-append is
+  * skipped on load (lineage is informational — the transactional commit
+  * marker is each stage's parquet `_SUCCESS`). */
 object Lineage {
-  private def logPath(indexDir: String) = Paths.get(s"$indexDir/lineage.jsonl")
-
-  private val appendLock = new Object
-
-  private def appendLine(indexDir: String, row: LineageRow): Unit = appendLock.synchronized {
-    // synchronized: build/compaction stages may commit their lineage rows
-    // from concurrent driver threads (the §2.6 overlapped writes); each
-    // line is a single O_APPEND write, the lock keeps the torn-tail check
-    // race-free within one JVM
-    val p = logPath(indexDir)
-    // a crash mid-append can leave a torn, newline-less tail; writing the
-    // next record straight after it would merge two lines and lose BOTH —
-    // terminate the torn fragment first so only it is lost
-    val needsNl = Files.exists(p) && Files.size(p) > 0 && {
-      val ch = java.nio.file.Files.newByteChannel(p)
-      try {
-        ch.position(Files.size(p) - 1)
-        val buf = java.nio.ByteBuffer.allocate(1)
-        ch.read(buf)
-        buf.get(0) != '\n'.toByte
-      } finally ch.close()
-    }
-    val line = (if (needsNl) "\n" else "") +
-      s"""{"partitionId":${row.partitionId},"stage":"${row.stage}",""" +
-      s""""rowCount":${row.rowCount},"snapshotId":${row.snapshotId},"status":"${row.status}"}\n"""
-    Files.writeString(p, line,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-  }
+  private def logPath(indexDir: String) = s"$indexDir/lineage.jsonl"
 
   def append(spark: SparkSession, indexDir: String, row: LineageRow): Unit =
-    appendLine(indexDir, row)
+    Store.appendLine(logPath(indexDir), Store.encode(row))
 
   def load(spark: SparkSession, indexDir: String): Dataset[LineageRow] = {
     import spark.implicits._
     val p = logPath(indexDir)
-    val lines =
-      if (Files.exists(p))
-        scala.jdk.CollectionConverters.ListHasAsScala(Files.readAllLines(p)).asScala.toSeq
-      else Seq.empty[String]
-    val re = ("\\{\"partitionId\":(-?\\d+),\"stage\":\"(\\w+)\",\"rowCount\":(-?\\d+)," +
-      "\"snapshotId\":(-?\\d+),\"status\":\"(\\w+)\"\\}").r
-    val rows = lines.flatMap {
-      case re(pid, stage, rc, snap, status) =>
-        Some(LineageRow(pid.toInt, stage, rc.toLong, snap.toLong, status))
-      case _ => None // torn tail line from a crash mid-append
-    }
-    spark.createDataset(rows)
+    val lines = if (Store.exists(p)) Store.readString(p).split('\n').toSeq else Seq.empty
+    spark.createDataset(lines.flatMap(l => scala.util.Try(Store.decode[LineageRow](l)).toOption))
   }
 }
 
-/** Tiny hand-rolled JSON manifest I/O (numeric fields + two constrained
-  * string fields; no extra deps). The string fields are alphabet-restricted
-  * so the regex parser stays exact: `metaComputerNames` to registry names
-  * `[A-Za-z0-9,]` ([[graft.index.BlockMetaComputers]] enforces it by
-  * construction) and `segments` to `[0-9_,]` ([[Segment.encoded]]). */
+/** Manifest I/O through [[Store]]'s control-file codec: the manifest's
+  * fields in declaration order, except `segments`, which stays the compact
+  * `lo_hi_v,…` string ([[Segment.encode]]) on disk. */
 object Manifest {
-  def write(path: String, m: IndexManifest): Unit = {
-    require(m.metaComputerNames.matches("[A-Za-z0-9,]*"),
-      s"metaComputerNames '${m.metaComputerNames}' outside the manifest-safe alphabet")
-    require(m.operation.matches("[a-z]+"),
-      s"operation '${m.operation}' outside the manifest-safe alphabet")
-    require(m.analyzer.matches("[a-z0-9.|]*"),
-      s"analyzer '${m.analyzer}' outside the manifest-safe alphabet")
-    val segStr = Segment.encode(m.segments)
-    val json =
-      s"""{"nDocs":${m.nDocs},"totalLen":${m.totalLen},"vocabSize":${m.vocabSize},""" +
-        s""""skippedCorrupt":${m.skippedCorrupt},"blockSize":${m.blockSize},""" +
-        s""""bucketRange":${m.bucketRange},"maxDocId":${m.maxDocId},""" +
-        s""""dictVersion":${m.dictVersion},"lastBatchId":${m.lastBatchId},""" +
-        s""""tombVersion":${m.tombVersion},""" +
-        s""""maxDocLen":${m.maxDocLen},"postingsBuckets":${m.postingsBuckets},""" +
-        s""""snapshotId":${m.snapshotId},"operation":"${m.operation}",""" +
-        s""""metaComputerNames":"${m.metaComputerNames}","segments":"$segStr",""" +
-        s""""analyzer":"${m.analyzer}"}"""
-    Store.writeString(path, json)
-  }
+  private val TooOld = "index format too old for this engine version; rebuild the index"
+
+  def write(path: String, m: IndexManifest): Unit =
+    Store.writeJson(path, Store.tree[ObjectNode](m).put("segments", Segment.encode(m.segments)))
+
+  def read(path: String): IndexManifest =
+    Store.readJson[IndexManifest](path, TooOld, edit = t =>
+      if (t.has("segments"))
+        t.set[ObjectNode]("segments",
+          Store.tree[JsonNode](Segment.decode(t.get("segments").asText))))
 
   def snapshotDir(indexDir: String): String = s"$indexDir/snapshots"
   def snapshotPath(indexDir: String, snapshotId: Int): String =
@@ -1308,42 +1258,17 @@ object Manifest {
     read(p)
   }
 
-  /** All retained snapshots, ascending by snapshotId (commit order).
-    * Unparseable snapshot files are skipped, not fatal: committed snapshots
-    * are immutable, so a torn file can only be the one a crashed
-    * [[commit]] was writing when it died — the replayed verb overwrites
-    * it, and [[IndexBuilder.vacuum]] collects it as garbage (it is never
-    * in the retained set); dying on it here would wedge vacuum, loadAt's
-    * error path and history itself until someone hand-deleted the file.
-    * The name filter is `v\d{5,}`: ids are %05d-padded but GROW past five
-    * digits (one snapshot per commit; a streaming crawl loop commits one
-    * per micro-batch), and numeric sort keys off the parsed manifest. */
+  /** All retained snapshots, ascending by snapshotId (commit order; ids
+    * are %05d-padded but grow past five digits, so the sort keys off the
+    * parsed manifest). Unparseable snapshot files are skipped, not fatal:
+    * committed snapshots are immutable, so a torn file can only be the one
+    * a crashed [[commit]] was writing when it died — the replayed verb
+    * overwrites it, and [[IndexBuilder.vacuum]] collects it as garbage (it
+    * is never in the retained set); dying on it here would wedge vacuum,
+    * loadAt's error path and history itself until someone hand-deleted
+    * the file. */
   def history(indexDir: String): Seq[IndexManifest] =
-    Store.list(snapshotDir(indexDir)).filter(_.matches("v\\d{5,}\\.json"))
+    Store.list(snapshotDir(indexDir))
       .flatMap(n => scala.util.Try(read(s"${snapshotDir(indexDir)}/$n")).toOption)
       .sortBy(_.snapshotId)
-
-  def read(path: String): IndexManifest = {
-    val s = Store.readString(path)
-    // every field is required: an index written before the r5 segment
-    // layout (or before any field existed) cannot be read by this engine
-    // version — fail with an actionable message, not a cryptic one
-    def f(k: String): Long = ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s)
-      .map(_.group(1).toLong).getOrElse(sys.error(
-        s"manifest missing '$k' at $path — index format too old for this engine version; rebuild the index"))
-    def str(k: String, alphabet: String): String = ("\"" + k + "\":\"(" + alphabet + "*)\"").r
-      .findFirstMatchIn(s).map(_.group(1)).getOrElse(sys.error(
-        s"manifest missing '$k' at $path — index format too old for this engine version; rebuild the index"))
-    IndexManifest(f("nDocs"), f("totalLen"), f("vocabSize"), f("skippedCorrupt"),
-      f("blockSize").toInt, f("bucketRange"), f("maxDocId"),
-      f("dictVersion").toInt, f("lastBatchId"),
-      f("tombVersion").toInt,
-      f("maxDocLen").toInt,
-      f("postingsBuckets").toInt,
-      snapshotId = f("snapshotId").toInt,
-      operation = str("operation", "[a-z]"),
-      metaComputerNames = str("metaComputerNames", "[A-Za-z0-9,]"),
-      segments = Segment.decode(str("segments", "[0-9_,]")),
-      analyzer = str("analyzer", "[a-z0-9.|]"))
-  }
 }

@@ -170,7 +170,7 @@ final case class Segment(lo: Long, hi: Long, v: Int) {
   /** directory name; docId bounds zero-padded so listings sort in range
     * order (13 digits covers the 10^12-doc design point). */
   def name: String = f"seg_$lo%013d_$hi%013d_v$v%05d"
-  /** compact manifest encoding (alphabet [0-9_] — manifest-regex-safe). */
+  /** compact manifest encoding (`lo_hi_v`). */
   def encoded: String = s"${lo}_${hi}_$v"
   def overlaps(l: Long, h: Long): Boolean = lo < h && hi > l
 }
@@ -245,21 +245,19 @@ final case class IndexConfig(
     * and REQUIRED to match on append — two batches tokenized differently
     * (or cleaned under different allowlists) silently corrupt one shared
     * dictionary otherwise (the reference likewise persists its tokenizer
-    * config JSON and validates on load, midi_tokenizer.py:3510-3540).
-    * Alphabet `[a-z0-9.|]` (manifest-regex-safe; enforced here). */
+    * config JSON and validates on load, midi_tokenizer.py:3510-3540). */
   def analyzerId: String = {
     val t = tokenizer
     def b(x: Boolean) = if (x) "1" else "0"
-    val id = s"${t.strategy}.${b(t.lowercase)}.${t.minTermLen}.${b(t.stripPunct)}." +
+    s"${t.strategy}.${b(t.lowercase)}.${t.minTermLen}.${b(t.stripPunct)}." +
       s"${t.ngram}.${t.langs.toSeq.sorted.mkString("|")}.${langs.toSeq.sorted.mkString("|")}"
-    require(id.matches("[a-z0-9.|]*"),
-      s"analyzer id '$id' outside the manifest-safe alphabet [a-z0-9.|]")
-    id
   }
 }
 
 /** Global index stats + config — the persisted manifest (the analog of
-  * MidiTok's tokenizer save/load JSON, midi_tokenizer.py:3510-3540). */
+  * MidiTok's tokenizer save/load JSON, midi_tokenizer.py:3510-3540). The
+  * field order IS the on-disk key order ([[Manifest.write]] encodes it
+  * through [[Store]]'s codec). */
 final case class IndexManifest(
     nDocs: Long,
     totalLen: Long,
@@ -301,10 +299,6 @@ final case class IndexManifest(
       * persisted so compaction (and any other rewriting verb) preserves the
       * layout instead of silently reverting to the default config's count. */
     postingsBuckets: Int = 8,
-    /** comma-joined [[BlockMetaComputers]] registry names the index was
-      * built with — rewriting verbs rehydrate the SAME computer set, so
-      * block meta never silently changes across generations. */
-    metaComputerNames: String = "posSpan,tfQuantile",
     /** linear snapshot counter (Iceberg-snapshot-shaped time travel): every
       * committing verb archives the full manifest it is about to make live
       * as `snapshots/v%05d.json` BEFORE flipping `manifest.json`, so the
@@ -318,8 +312,12 @@ final case class IndexManifest(
     /** the committing verb that produced this snapshot (`build` / `append`
       * / `delete` / `compact`) — deterministic, so resumed builds stay
       * bit-identical to uninterrupted ones; wall-clock commit times live in
-      * the lineage log, not here. Alphabet `[a-z]` (manifest-regex-safe). */
+      * the lineage log, not here. */
     operation: String = "build",
+    /** comma-joined [[BlockMetaComputers]] registry names the index was
+      * built with — rewriting verbs rehydrate the SAME computer set, so
+      * block meta never silently changes across generations. */
+    metaComputerNames: String = "posSpan,tfQuantile",
     /** the live [[Segment]] list, ascending by `lo` — THE read truth for
       * postings and docstats (manifest-driven multi-path scans; nothing
       * reads by directory discovery). Builds commit one segment per chunk,

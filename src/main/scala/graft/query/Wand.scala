@@ -134,8 +134,8 @@ object Intersect {
 }
 
 /** Loaded index handle: a fixed manifest plus its tables, each resolved
-  * (file listing + parquet schema inference, one small Spark job per
-  * table) ONCE per handle, on first use, instead of once per query pass.
+  * (file listing; the schema is the row type's, so no Spark job) ONCE per
+  * handle, on first use, instead of once per query pass.
   *
   * Caching the resolved relations is safe because everything they name is
   * immutable once a manifest that names it is committed: dictionary and
@@ -151,8 +151,7 @@ object Intersect {
 final case class IndexHandle(spark: SparkSession, dir: String, manifest: IndexManifest) {
   import spark.implicits._
   lazy val dictionary: Dataset[TermEntry] =
-    spark.read.parquet(graft.index.IndexBuilder.dictDirFor(dir, manifest.dictVersion))
-      .select("termId", "term", "df", "cf").as[TermEntry]
+    graft.index.IndexBuilder.readDict(spark, dir, manifest.dictVersion).as[TermEntry]
   lazy val postings: Dataset[PostingBlock] =
     graft.index.IndexBuilder.readPostings(spark, dir, manifest).as[PostingBlock]
   /** PHYSICAL docstats — includes tombstoned docs' rows until compaction.

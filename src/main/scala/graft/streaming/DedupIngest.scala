@@ -106,18 +106,14 @@ object DedupIngest {
   def demotedDir(dedupDir: String, v: Int): String = f"$dedupDir/demoted/v$v%05d"
   private def manifestPath(dedupDir: String) = s"$dedupDir/manifest.json"
 
-  def readManifest(dedupDir: String): DedupManifest = {
-    val s = Store.readString(manifestPath(dedupDir))
-    def f(k: String): Int = ("\"" + k + "\":(-?\\d+)").r.findFirstMatchIn(s)
-      .map(_.group(1).toInt).getOrElse(sys.error(
-        s"dedup manifest missing '$k' at ${manifestPath(dedupDir)} — re-bootstrap the dedup index"))
-    DedupManifest(f("baseVersion"), f("tombVersion"), f("demotedVersion"), f("buckets"))
-  }
+  def readManifest(dedupDir: String): DedupManifest =
+    Store.readJson[DedupManifest](manifestPath(dedupDir), "re-bootstrap the dedup index")
 
-  private def writeManifest(dedupDir: String, m: DedupManifest): Unit =
-    Store.writeString(manifestPath(dedupDir),
-      s"""{"baseVersion":${m.baseVersion},"tombVersion":${m.tombVersion},""" +
-        s""""demotedVersion":${m.demotedVersion},"buckets":${m.buckets}}""")
+  /** The manifest-last commit of every dedup verb. */
+  private def commit(dedupDir: String, m: DedupManifest): DedupManifest = {
+    Store.writeJson(manifestPath(dedupDir), m)
+    m
+  }
 
   /** The live bands/sigs/pairs tables (spec + ad-hoc accessors). */
   def liveBands(spark: SparkSession, dedupDir: String): DataFrame =
@@ -137,17 +133,8 @@ object DedupIngest {
     * the inverted index's tombVersion scheme. */
   def purge(spark: SparkSession, dedupDir: String, ids: DataFrame): DedupManifest = {
     val dm = ensureInit(spark, dedupDir)
-    val fresh = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-    val merged =
-      if (dm.tombVersion < 0) fresh
-      else spark.read.parquet(tombDir(dedupDir, dm.tombVersion)).unionByName(fresh).distinct()
-    merged
-      .repartition(dm.buckets, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(tombDir(dedupDir, dm.tombVersion + 1))
-    val next = dm.copy(tombVersion = dm.tombVersion + 1)
-    writeManifest(dedupDir, next)
-    next
+    writeNextIds(spark, ids, dm.buckets, tombDir(dedupDir, _), dm.tombVersion)
+    commit(dedupDir, dm.copy(tombVersion = dm.tombVersion + 1))
   }
 
   /** Demote docs to SHADOW status ([[reconcile]]'s dedup-side verb): they
@@ -157,18 +144,18 @@ object DedupIngest {
     * versioned write + manifest-flip discipline as [[purge]]. */
   def demote(spark: SparkSession, dedupDir: String, ids: DataFrame): DedupManifest = {
     val dm = ensureInit(spark, dedupDir)
+    writeNextIds(spark, ids, dm.buckets, demotedDir(dedupDir, _), dm.demotedVersion)
+    commit(dedupDir, dm.copy(demotedVersion = dm.demotedVersion + 1))
+  }
+
+  /** Version v+1 of a doc-id table (tombstones, demoted): version v (none
+    * when v < 0) ∪ the first column of `ids`, bucket-clustered on doc_id. */
+  private def writeNextIds(spark: SparkSession, ids: DataFrame, buckets: Int,
+      dir: Int => String, v: Int): Unit = {
     val fresh = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-    val merged =
-      if (dm.demotedVersion < 0) fresh
-      else spark.read.parquet(demotedDir(dedupDir, dm.demotedVersion))
-        .unionByName(fresh).distinct()
-    merged
-      .repartition(dm.buckets, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(demotedDir(dedupDir, dm.demotedVersion + 1))
-    val next = dm.copy(demotedVersion = dm.demotedVersion + 1)
-    writeManifest(dedupDir, next)
-    next
+    val merged = if (v < 0) fresh else spark.read.parquet(dir(v)).unionByName(fresh).distinct()
+    merged.repartition(buckets, col("doc_id")).sortWithinPartitions(col("doc_id"))
+      .write.mode("overwrite").parquet(dir(v + 1))
   }
 
   /** One streaming lineage per index: the checkpointed batchId sequence is
@@ -221,8 +208,7 @@ object DedupIngest {
       dedupDir, dm, "base")
     writePairsPart(spark, spark.emptyDataset[(Long, Long)].toDF("doc_a", "doc_b"),
       dedupDir, dm, "base")
-    writeManifest(dedupDir, dm)
-    dm
+    commit(dedupDir, dm)
   }
 
   /** The dedup index's manifest, auto-initializing an EMPTY index when none
@@ -518,8 +504,7 @@ object DedupIngest {
     carryInFlight(bandsDir(dedupDir, _))
     carryInFlight(sigsDir(dedupDir, _))
     carryInFlight(pairsDir(dedupDir, _))
-    writeManifest(dedupDir, next)
-    next
+    commit(dedupDir, next)
   }
 
   /** Drop generation directories no longer referenced by the dedup
@@ -527,18 +512,10 @@ object DedupIngest {
     * attempts). Returns the deleted paths relative to dedupDir. */
   def vacuum(spark: SparkSession, dedupDir: String): Seq[String] = {
     val dm = readManifest(dedupDir)
-    val liveBase = f"v${dm.baseVersion}%05d"
-    val baseGarbage = Seq("bands", "sigs", "pairs").flatMap(t =>
-      Store.list(s"$dedupDir/$t").filterNot(_ == liveBase).map(v => s"$t/$v"))
-    val tombGarbage = Store.list(s"$dedupDir/tombstones")
-      .filterNot(v => dm.tombVersion >= 0 && v == f"v${dm.tombVersion}%05d")
-      .map(v => s"tombstones/$v")
-    val demGarbage = Store.list(s"$dedupDir/demoted")
-      .filterNot(v => dm.demotedVersion >= 0 && v == f"v${dm.demotedVersion}%05d")
-      .map(v => s"demoted/$v")
-    val garbage = baseGarbage ++ tombGarbage ++ demGarbage
-    garbage.foreach(rel => Store.delete(s"$dedupDir/$rel"))
-    garbage
+    val live = Seq(bandsDir _, sigsDir _, pairsDir _).map(_(dedupDir, dm.baseVersion)) ++
+      Seq(dm.tombVersion -> tombDir _, dm.demotedVersion -> demotedDir _)
+        .collect { case (v, dir) if v >= 0 => dir(dedupDir, v) }
+    Store.sweep(dedupDir, Seq("bands", "sigs", "pairs", "tombstones", "demoted"), live.toSet)
   }
 
   /** Drain all available input files: one dedup+append per micro-batch. */

@@ -933,15 +933,26 @@ class SearchSpec extends AnyFunSuite {
     }
     // parquet schema inference shows as a job whose stage is "parquet at …"
     def inference(stages: Seq[String]) = stages.filter(_.startsWith("parquet at"))
+    // resolving a table lists its files: Spark's file-discovery counters
+    // (listed, or served from the file-status cache) grow by its file count
+    def listed[T](f: => T): (T, Long) = {
+      import org.apache.spark.metrics.source.HiveCatalogMetrics._
+      def files = METRIC_FILES_DISCOVERED.getCount + METRIC_FILE_CACHE_HITS.getCount
+      val before = files
+      val r = f
+      (r, files - before)
+    }
     val fresh = IndexReader.load(spark, dir)
     val req = Search.SearchRequest("merge join -batch", k = 5,
       facetKey = Some((col("docId") % 10).cast("string")), facetTopN = 3)
-    val (first, firstStages) = withStages(Search.run(fresh, req, analyzer))
-    assert(inference(firstStages).nonEmpty,
-      s"a fresh handle must resolve its tables: $firstStages")
-    val (second, secondStages) = withStages(Search.run(fresh, req, analyzer))
-    assert(inference(secondStages).isEmpty,
-      s"the second run re-resolved index tables: ${inference(secondStages)}")
+    val ((first, firstStages), firstFiles) = listed(withStages(Search.run(fresh, req, analyzer)))
+    assert(firstFiles > 0, "a fresh handle must resolve its tables")
+    // the tables' schemas are their row types': resolution runs no job
+    assert(inference(firstStages).isEmpty,
+      s"a fresh handle inferred a table schema: ${inference(firstStages)}")
+    val ((second, secondStages), secondFiles) = listed(withStages(Search.run(fresh, req, analyzer)))
+    assert(secondFiles == 0 && inference(secondStages).isEmpty,
+      s"the second run re-resolved index tables: $secondFiles files, ${inference(secondStages)}")
     assert(second.hits.toSeq == first.hits.toSeq && second.total == first.total &&
       second.facets == first.facets)
   }
