@@ -52,15 +52,15 @@ object Bench {
     * in C2 compilation that swamps the scaling signal). */
   def measure(spark: SparkSession, sfDir: String, factor: Int, tag: String): (Long, Double, Double, Long, Double, Double) = {
     val warmDir = s"$benchDir/index_warm_${tag}"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(warmDir))
+    graft.queries.IndexCache.deleteRecursively(warmDir)
     IndexBuilder.buildFrom(spark, CorpusGen.scaledPages(spark, sfDir, math.max(1, factor / 10)),
       warmDir, IndexConfig(nChunks = 1, postingsBuckets = 32, bucketRange = 2048))
     val warmHandle = IndexReader.load(spark, warmDir)
     Wand.topK(warmHandle, queryBatch(warmHandle.dictMap.keys.toArray.sorted, 64), 10)
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(warmDir))
+    graft.queries.IndexCache.deleteRecursively(warmDir)
 
     val indexDir = s"$benchDir/index_${tag}"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(indexDir))
+    graft.queries.IndexCache.deleteRecursively(indexDir)
 
     val pages = CorpusGen.scaledPages(spark, sfDir, factor)
     val t0 = System.nanoTime()

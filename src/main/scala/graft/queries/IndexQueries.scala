@@ -15,14 +15,15 @@ object IndexCache {
   def handle(spark: SparkSession, sfDir: String): IndexHandle =
     cache.computeIfAbsent(sfDir, { _ =>
       val dir = s"/tmp/graft_index/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      deleteRecursively(new java.io.File(dir))
+      deleteRecursively(dir)
       IndexBuilder.build(spark, sfDir, dir, IndexConfig())
       IndexReader.load(spark, dir)
     })
 
-  /** Fixture-dir cleanup, routed through the storage layer (the File-typed
-    * signature is kept for the many spec call sites). */
-  def deleteRecursively(f: java.io.File): Unit = graft.index.Store.delete(f.getPath)
+  /** Fixture-dir cleanup, routed through the storage layer. The path
+    * reaches [[graft.index.Store.delete]] untouched, so a URI keeps its
+    * authority (`hdfs://nn:8020/idx`). */
+  def deleteRecursively(dir: String): Unit = graft.index.Store.delete(dir)
 }
 
 /** Two shard indexes over the docId-space halves — the federated-search
@@ -34,7 +35,7 @@ object ShardedIndexCache {
   def shards(spark: SparkSession, sfDir: String): Seq[IndexHandle] =
     cache.computeIfAbsent(sfDir, { _ =>
       val base = s"/tmp/graft_shard_index/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      IndexCache.deleteRecursively(new java.io.File(base))
+      IndexCache.deleteRecursively(base)
       val pages = Pages.withInjections(spark, sfDir)
       val mid = pages.agg(org.apache.spark.sql.functions.max(col("doc_id"))).head().getLong(0) / 2
       // the two shard builds are independent (separate dirs) — overlap them
@@ -63,7 +64,7 @@ object DeletedIndexCache {
     cache.computeIfAbsent(sfDir, { _ =>
       import spark.implicits._
       val dir = dirFor(sfDir)
-      IndexCache.deleteRecursively(new java.io.File(dir))
+      IndexCache.deleteRecursively(dir)
       IndexBuilder.build(spark, sfDir, dir, IndexConfig())
       val h0 = IndexReader.load(spark, dir)
       val ids = h0.docstats
@@ -981,7 +982,7 @@ object IndexQueries {
     "q_vocab_cap" -> ((spark, sfDir) => {
       import spark.implicits._
       val base = s"/tmp/graft_cap_q/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      IndexCache.deleteRecursively(new java.io.File(base))
+      IndexCache.deleteRecursively(base)
       IndexBuilder.buildFrom(spark, Pages.withInjections(spark, sfDir), base,
         graft.index.IndexConfig(vocabCap = Some(10)))
       val h = graft.query.IndexReader.load(spark, base)
@@ -1001,7 +1002,7 @@ object IndexQueries {
     // (termIds are append-order-dependent by design, so keyed by term).
     "q_append_dict" -> ((spark, sfDir) => {
       val base = s"/tmp/graft_append_q/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      IndexCache.deleteRecursively(new java.io.File(base))
+      IndexCache.deleteRecursively(base)
       val pages = Pages.withInjections(spark, sfDir)
       val mid = pages.agg(max(col("doc_id"))).head().getLong(0) / 2
       val cfg = graft.index.IndexConfig()
@@ -1021,7 +1022,7 @@ object IndexQueries {
     // design, exactly like append's, so keyed by term).
     "q_merge_dict" -> ((spark, sfDir) => {
       val base = s"/tmp/graft_merge_q/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      IndexCache.deleteRecursively(new java.io.File(base))
+      IndexCache.deleteRecursively(base)
       val pages = Pages.withInjections(spark, sfDir)
       val mid = pages.agg(max(col("doc_id"))).head().getLong(0) / 2
       val cfg = graft.index.IndexConfig()
@@ -1084,7 +1085,7 @@ object IndexQueries {
     // slice-local (MaintainSpec asserts the file-level byte-identity).
     "q_maintain_stats" -> ((spark, sfDir) => {
       val base = s"/tmp/graft_maintain_q/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      IndexCache.deleteRecursively(new java.io.File(base))
+      IndexCache.deleteRecursively(base)
       val pages = Pages.withInjections(spark, sfDir)
       val cfg = graft.index.IndexConfig(blockSize = 16, bucketRange = 64,
         nChunks = 2, postingsBuckets = 2)

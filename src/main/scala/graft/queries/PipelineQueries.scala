@@ -184,7 +184,7 @@ object PipelineQueries {
         .select((col("doc_id") + lit(IncrementalPlantBase)).as("doc_id"),
           concat(lit("copy "), col("text")).as("text"))
       val idxDir = s"/tmp/graft_lsh_index/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
-      graft.queries.IndexCache.deleteRecursively(new java.io.File(idxDir))
+      graft.queries.IndexCache.deleteRecursively(idxDir)
       Dedup.writeLshIndex(Dedup.signaturesOf(corpus), idxDir)
       val cands = Dedup.probeLshIndex(s, idxDir, Dedup.signaturesOf(batch))
       val pairs = cands.select(col("corpus_doc").as("doc_a"), col("batch_doc").as("doc_b"))

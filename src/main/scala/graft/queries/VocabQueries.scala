@@ -33,7 +33,7 @@ object MergedIndexCache {
           encode(col("text"), "UTF-8").as("html"),
           col("text"), lit("en").as("lang"))
       val dir = s"/tmp/graft_merged_index/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      IndexCache.deleteRecursively(new java.io.File(dir))
+      IndexCache.deleteRecursively(dir)
       IndexBuilder.buildFrom(spark, pages, dir,
         IndexConfig(tokenizer = TokenizerConfig(stripPunct = false)))
       release()

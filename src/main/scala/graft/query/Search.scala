@@ -274,8 +274,9 @@ object Search {
     * over the same decoded blocks, so one pass yields the hits, the exact
     * total and, when `facetKey` is set, the facet panel (the per-value
     * counts partition the match set, so their sum is the total). Measured
-    * on 4 cores over seven one-per-shape requests with a facet panel: 7
-    * Spark jobs per plain request, 9 with a wildcard, 10 with a fuzzy term. */
+    * on 4 cores over seven one-per-shape requests with a facet panel, all
+    * in [[Wand.search]]'s driver placement: 3 Spark jobs per plain request
+    * (lookup, blocks, docstats), 5 with a wildcard, 6 with a fuzzy term. */
   def run(index: IndexHandle, req: SearchRequest,
       analyzer: TokenizerStrategy): SearchResponse = {
     val compiled = compile(index,

@@ -2,7 +2,7 @@ package graft.query
 
 import graft.codec.VByte
 import graft.index._
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
@@ -315,9 +315,11 @@ object IndexReader {
   * by the north rule; its stateful cursor machinery is the engine analog of
   * the reference's replay-interpreter decode path, remi.py:368-651).
   *
-  * Distribution: postings and docstats are cogrouped by docId bucket —
+  * Distribution: postings and docstats are grouped by docId bucket —
   * each bucket runs an independent exact WAND producing a local top-k;
-  * local top-ks are reduced to the global top-k with a bounded heap.
+  * local top-ks are reduced to the global top-k with a bounded heap. A
+  * small pass does this on the driver, a large one as a cogroup
+  * ([[Wand.search]]'s two placements).
   * Wall-clock scales with the largest bucket, not the largest term
   * (head-term skew immunity), and no stage ever materializes more than
   * (buckets × k) candidate rows.
@@ -684,24 +686,27 @@ object Wand {
     if (heap != null) heap.ranked else cheap.ranked
   }
 
-  /** Bucket-count cap for the predicate-pushdown docstats path; beyond it
-    * the caller keeps the distributed semi-join. */
+  /** Bucket-count cap for one docId range per bucket in the docstats
+    * predicate, and for the cogroup placement's bucket probe; beyond it
+    * the probe keeps the distributed semi-join. */
   final val MaxPredicateBuckets = 256
 
 
   /** docstats restricted to the given docId buckets as an
     * OR-of-docId-ranges predicate pushed INTO the parquet scan — docstats
     * are clustered by docId bucket on write, so min/max footer stats skip
-    * whole files/row groups, not just rows. For sets beyond
-    * [[MaxPredicateBuckets]] use a distributed semi-join instead (topK
-    * does — the bucket set is never fully collected to the driver). */
+    * whole files/row groups, not just rows. Beyond [[MaxPredicateBuckets]]
+    * buckets the pushed predicate is the one range spanning them all,
+    * narrowed to the listed buckets after the scan. */
   def docstatsForBuckets(index: IndexHandle, buckets: Array[Long]): Dataset[DocStat] = {
-    require(buckets.nonEmpty && buckets.length <= MaxPredicateBuckets,
-      s"predicate path expects 1..$MaxPredicateBuckets buckets, got ${buckets.length}")
+    require(buckets.nonEmpty, "at least one bucket")
     val bucketRange = index.manifest.bucketRange
-    val pred = buckets.map { b =>
-      col("docId") >= b * bucketRange && col("docId") < (b + 1) * bucketRange
-    }.reduce(_ || _)
+    def range(lo: Long, hi: Long): Column =
+      col("docId") >= lo * bucketRange && col("docId") < (hi + 1) * bucketRange
+    val pred =
+      if (buckets.length <= MaxPredicateBuckets) buckets.map(b => range(b, b)).reduce(_ || _)
+      else range(buckets.min, buckets.max) &&
+        (col("docId") / lit(bucketRange)).cast("long").isin(buckets.toIndexedSeq.map(Long.box): _*)
     index.docstatsRaw.filter(pred)
   }
 
@@ -827,7 +832,8 @@ object Wand {
       * taken from the mode, so no Column reaches an executor. */
     private[query] def emitter: BucketQuery => Iterator[ScoredDoc]
     /** One query's rows from every bucket folded into its result, on an
-      * executor; built like [[emitter]]. */
+      * executor or, in [[search]]'s driver placement, the driver; built
+      * like [[emitter]]. */
     private[query] def fold: Iterator[ScoredDoc] => R
     /** Every bucket's rows reduced per query, in one job. */
     private[query] final def reduce(rows: Dataset[ScoredDoc]): Map[Int, R] =
@@ -1261,8 +1267,19 @@ object Wand {
     * impact is linear in idf), so upper bounds, block-max refinement and
     * threshold seeding compose per field with no kernel changes. Every
     * mode shares term lookup, constraint resolution, bucket pruning and
-    * the cogroup kernel; the mode decides what each bucket emits and how
-    * the rows reduce.
+    * the one per-bucket body; the mode decides what each bucket emits and
+    * how the rows reduce.
+    *
+    * Two placements run that body. Before any fetch, the lookup's df and
+    * cf bound what the pass would collect ([[collectBound]]). Within
+    * `spark.sql.autoBroadcastJoinThreshold` — the size Spark itself would
+    * broadcast — the DRIVER placement collects the blocks (one job), takes
+    * the exact candidate buckets from their blockIds, collects those
+    * buckets' docstats (one job) and runs the body bucket by bucket on the
+    * driver. Otherwise, or at -1 (Spark's "never broadcast"), the COGROUP
+    * placement probes the candidate buckets, cogroups blocks and docstats
+    * by bucket and reduces per query on the executors. Answers and
+    * [[WandMetrics]] are identical either way.
     *
     * Global threshold seeding (zero-cost, stats-only, the score-ordered
     * [[Ranked]] part of a mode only): every (field, term) with df_f >= k
@@ -1275,7 +1292,7 @@ object Wand {
     * deleted from another sub-index still counts in this field's df — so
     * seeding disables on tombstoned multi-field runs.
     *
-    * Tombstoned docs ride into each bucket's cogroup as docLen = -1
+    * Tombstoned docs ride into each bucket's docstats as docLen = -1
     * sentinels for EVERY field (a doc deleted from any sub-index is dead
     * for the logical document); the kernel skips them before scoring. */
   def search[R](fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec], mode: Mode[R],
@@ -1410,6 +1427,14 @@ object Wand {
     def fetchIds(f: Int): Seq[Int] =
       if (f == 0) idsByField(0) ++ exIds else idsByField(f)
 
+    // the placement, decided before any fetch: an upper bound on what a
+    // driver-side pass would collect, against the size Spark itself would
+    // broadcast — so -1 (Spark's "never broadcast") forces the cogroup
+    val onDriver = (0 until nF).iterator.map { f =>
+      val byId = dicts(f).valuesIterator.map(e => e.termId -> e).toMap
+      collectBound(fields(f)._1, fetchIds(f).map(byId), idsByField(f).map(byId))
+    }.sum <= spark.sessionState.conf.autoBroadcastJoinThreshold
+
     // field-tagged candidate blocks — the termId IN (...) predicate pushes
     // to parquet row groups per field
     val fBlocks: Dataset[(Int, PostingBlock)] = (0 until nF).map { f =>
@@ -1420,86 +1445,57 @@ object Wand {
         .map(b => (f, b))
     }.reduce(_ union _)
 
-    // prune docstats (norms) to buckets that actually hold candidate blocks —
-    // at 10^12 docs most buckets have no postings for a given query batch,
-    // and their norms must never enter the cogroup exchange. The candidate
-    // bucket set is tiny (≤ the query terms' block count), so collect a
-    // BOUNDED probe of it and push an OR-of-docId-ranges predicate INTO the
-    // docstats scan (docstats are range-clustered by docId on write, so
-    // parquet min/max stats skip whole files/row groups); batches touching
-    // more than MaxPredicateBuckets buckets keep the fully-distributed
-    // semi-join — the driver never materializes a web-scale bucket set.
-    val candBuckets = (0 until nF).flatMap { f =>
-      val ids = idsByField(f)
-      if (ids.isEmpty) None
-      else Some(fields(f)._1.postings.toDF()
-        .filter(col("termId").isin(ids.map(Int.box): _*))
-        .select((col("blockId") / lit(blocksPerBucket)).cast("long").as("bucket")))
-    }.reduce(_ unionByName _).distinct()
-    val probe: Array[Long] =
-      candBuckets.limit(MaxPredicateBuckets + 1).as[Long].collect()
-    if (probe.isEmpty) return empty
-
-    // tombstone union across fields → docLen = -1 sentinels for EVERY
-    // field's map (bucket-pruned like the norms)
-    val tombSentinels: Dataset[SlotStat] = {
-      val tombed = fields.map(_._1).filter(_.manifest.tombVersion >= 0)
-      if (tombed.isEmpty) spark.emptyDataset[SlotStat]
-      else {
-        val ids = tombed.map(_.tombstones.toDF("docId")).reduce(_ unionByName _).distinct()
-          .withColumn("bucket", (col("docId") / lit(bucketRange)).cast("long"))
-        // bounded path: reuse the already-collected probe array instead of
-        // re-deriving candidate buckets with another postings scan
-        val pruned =
-          if (probe.length <= MaxPredicateBuckets)
-            ids.filter(col("bucket").isin(probe.toIndexedSeq.map(Long.box): _*))
-          else ids.join(candBuckets, Seq("bucket"), "left_semi")
-        pruned.select("docId").as[Long]
-          .flatMap(d => (0 until nF).iterator.map(f => SlotStat(f, d, -1, Seq.empty)))
-      }
-    }
-
     // the mode's slot values (collapse/facet/sort keys or a boost: one
     // codegen'd expression each over the docstats row, computed AFTER
-    // docFilter reads the raw url) ride next to the norms into the cogroup
+    // docFilter reads the raw url) ride next to the norms
     val slotCols = mode.slots.map(c => coalesce(c.cast("string"), lit("")))
-    val fStats: Dataset[SlotStat] = (0 until nF).map { f =>
-      val h = fields(f)._1
-      val pruned =
-        if (probe.length <= MaxPredicateBuckets) docstatsForBuckets(h, probe)
-        else h.docstatsRaw.toDF()
-          .withColumn("bucket", (col("docId") / lit(bucketRange)).cast("long"))
-          .join(candBuckets, Seq("bucket"), "left_semi")
-          .drop("bucket")
-          .as[DocStat]
-      // a metadata filter marks non-matching docs with the same -1 skip
-      // sentinel as tombstones — one codegen'd when() on the pruned scan
-      val dlCol = docFilter match {
-        case Some(p) => when(p, col("docLen")).otherwise(lit(-1)).cast("int")
-        case None    => col("docLen")
-      }
-      pruned.toDF().select(lit(f).as("field"), col("docId"), dlCol.as("docLen"),
-        array(slotCols: _*).cast("array<string>").as("slots"))
-        .as[SlotStat]
-    }.reduce(_ union _).union(tombSentinels)
     val nSlots = slotCols.length
+    // the docstats rows of the candidate buckets — `Left` the listed
+    // buckets (a docId-range predicate pushed INTO the parquet scan), `Right`
+    // a semi-join against a bucket relation — plus the tombstone union
+    // across fields as docLen = -1 sentinels for EVERY field's map
+    def fStats(buckets: Either[Array[Long], DataFrame]): Dataset[SlotStat] = {
+      def keep(df: DataFrame): DataFrame = buckets match {
+        case Left(bs)  => df.filter(col("bucket").isin(bs.toIndexedSeq.map(Long.box): _*))
+        case Right(cb) => df.join(cb, Seq("bucket"), "left_semi")
+      }
+      val tombed = fields.map(_._1).filter(_.manifest.tombVersion >= 0)
+      val tombSentinels =
+        if (tombed.isEmpty) spark.emptyDataset[SlotStat]
+        // a doc tombstoned in several fields repeats its sentinel, which
+        // sets the same -1 again
+        else keep(tombed.map(_.tombstones.toDF("docId")).reduce(_ unionByName _)
+          .withColumn("bucket", (col("docId") / lit(bucketRange)).cast("long")))
+          .select("docId").as[Long]
+          .flatMap(d => (0 until nF).iterator.map(f => SlotStat(f, d, -1, Seq.empty)))
+      (0 until nF).map { f =>
+        val h = fields(f)._1
+        val pruned = buckets match {
+          case Left(bs) => docstatsForBuckets(h, bs).toDF()
+          case Right(_) => keep(h.docstatsRaw.toDF()
+            .withColumn("bucket", (col("docId") / lit(bucketRange)).cast("long")))
+        }
+        // a metadata filter marks non-matching docs with the same -1 skip
+        // sentinel as tombstones — one codegen'd when() on the pruned scan
+        val dlCol = docFilter match {
+          case Some(p) => when(p, col("docLen")).otherwise(lit(-1)).cast("int")
+          case None    => col("docLen")
+        }
+        pruned.select(lit(f).as("field"), col("docId"), dlCol.as("docLen"),
+          array(slotCols: _*).cast("array<string>").as("slots"))
+          .as[SlotStat]
+      }.reduce(_ union _).union(tombSentinels)
+    }
+
+    // THE per-bucket body of both placements: one bucket's field-tagged
+    // blocks and docstats rows in, every live query's rows out. Its plain
+    // driver-side values (cursor specs, constraints, seeds) ride the closure
     val boundKey = mode.boundKey
     val emit = mode.emitter
-
-    // per-pass broadcasts, created after the last early return and
-    // destroyed once the mode's reduce (which always collects) has returned
-    val bTheta = spark.sparkContext.broadcast(thetaSeed)
-    val bQ = spark.sparkContext.broadcast(qSpecs)
-    val bCons = spark.sparkContext.broadcast(resolvedCons)
-    val bPhraseTids = spark.sparkContext.broadcast(
-      (resolvedCons.values.flatMap(_.phrases.iterator.flatMap(_._1)) ++
-        resolvedCons.values.flatMap(_.excludedPhrases.iterator.flatMap(_._1))).toSet)
-    val blocksByBucket = fBlocks.groupByKey(_._2.blockId / blocksPerBucket)
-    val statsByBucket = fStats.groupByKey(_.docId / bucketRange)
-
-    val candidates: Dataset[ScoredDoc] = blocksByBucket.cogroup(statsByBucket) {
-      (bucket, blocks, stats) =>
-        val blockArr = blocks.toArray
+    val phraseTids = (resolvedCons.values.flatMap(_.phrases.iterator.flatMap(_._1)) ++
+      resolvedCons.values.flatMap(_.excludedPhrases.iterator.flatMap(_._1))).toSet
+    val body: (Array[(Int, PostingBlock)], Iterator[SlotStat]) => Iterator[ScoredDoc] = {
+      (blockArr, stats) =>
         if (blockArr.isEmpty) Iterator.empty
         else {
           val docLens = Array.fill(nF)(new java.util.HashMap[Long, Integer]())
@@ -1507,8 +1503,8 @@ object Wand {
           // row's values are not kept: its doc is never scored or counted,
           // so none of them is ever consulted
           val slots = Array.fill(nSlots)(new java.util.HashMap[Long, String]())
-          // iterator order after the shuffle is arbitrary: a -1 tombstone
-          // sentinel must win over the doc's real norm either way round
+          // row order is arbitrary (a shuffle's, or the collect's): a -1
+          // tombstone sentinel must win over the doc's real norm either way
           stats.foreach { s =>
             if (s.docLen == -1) docLens(s.field).put(s.docId, Integer.valueOf(-1))
             else {
@@ -1525,7 +1521,6 @@ object Wand {
           // phrase termId, positions decoded lazily per block (one decode no
           // matter how many queries/docs probe it) — the WAND scoring path
           // still never touches positions
-          val phraseTids = bPhraseTids.value
           val rawPos: Map[Int, Array[PostingBlock]] =
             if (phraseTids.isEmpty) Map.empty
             else blockArr.iterator
@@ -1569,8 +1564,8 @@ object Wand {
             }
             true
           }
-          bQ.value.iterator.flatMap { case (qid, specs) =>
-            val rc = bCons.value.get(qid)
+          qSpecs.iterator.flatMap { case (qid, specs) =>
+            val rc = resolvedCons.get(qid)
             // a required term with no postings in this bucket → no doc here
             // can satisfy the conjunction; same for a phrase term
             val hopeless = rc.exists(c =>
@@ -1614,15 +1609,86 @@ object Wand {
                     !c.excludedPhrases.exists { case (ph, sl) => phraseAt(ph, sl, doc) }
               }
               emit(new BucketQuery(qid, cursors, docLens, slots, admit,
-                bTheta.value.getOrElse(qid, Double.NegativeInfinity), metrics))
+                thetaSeed.getOrElse(qid, Double.NegativeInfinity), metrics))
             }
           }
         }
     }
 
-    try {
-      val reduced = mode.reduce(candidates)
-      queries.map(q => q.queryId -> reduced.getOrElse(q.queryId, mode.empty)).toMap
-    } finally Seq(bTheta, bQ, bCons, bPhraseTids).foreach(_.destroy())
+    val reduced: Map[Int, R] =
+      if (onDriver) {
+        // driver placement: the blocks in one job; their blockIds give the
+        // exact candidate buckets, so no probe runs; their docstats in one
+        // more job; then the body bucket by bucket and the mode's fold
+        val blocks = fBlocks.collect()
+        val scoring = idsByField.map(_.toSet)
+        val buckets = blocks.collect {
+          case (f, b) if scoring(f)(b.termId) => b.blockId / blocksPerBucket }.distinct.sorted
+        if (buckets.isEmpty) return empty
+        val statsByBucket = fStats(Left(buckets)).collect().groupBy(_.docId / bucketRange)
+        blocks.groupBy(_._2.blockId / blocksPerBucket).iterator.flatMap { case (b, bs) =>
+          body(bs, statsByBucket.getOrElse(b, Array.empty[SlotStat]).iterator)
+        }.toSeq.groupBy(_.queryId).map { case (qid, rows) => qid -> mode.fold(rows.iterator) }
+      } else {
+        // cogroup placement: prune docstats (norms) to buckets that actually
+        // hold candidate blocks — at 10^12 docs most buckets have no
+        // postings for a given query batch, and their norms must never
+        // enter the cogroup exchange. The candidate bucket set is tiny (≤
+        // the query terms' block count), so collect a BOUNDED probe of it
+        // and push an OR-of-docId-ranges predicate INTO the docstats scan
+        // (docstats are range-clustered by docId on write, so parquet
+        // min/max stats skip whole files/row groups); batches touching more
+        // than MaxPredicateBuckets buckets keep the fully-distributed
+        // semi-join — the driver never materializes a web-scale bucket set.
+        val candBuckets = (0 until nF).flatMap { f =>
+          val ids = idsByField(f)
+          if (ids.isEmpty) None
+          else Some(fields(f)._1.postings.toDF()
+            .filter(col("termId").isin(ids.map(Int.box): _*))
+            .select((col("blockId") / lit(blocksPerBucket)).cast("long").as("bucket")))
+        }.reduce(_ unionByName _).distinct()
+        val probe: Array[Long] =
+          candBuckets.limit(MaxPredicateBuckets + 1).as[Long].collect()
+        if (probe.isEmpty) return empty
+        val stats = fStats(if (probe.length <= MaxPredicateBuckets) Left(probe) else Right(candBuckets))
+        mode.reduce(fBlocks.groupByKey(_._2.blockId / blocksPerBucket)
+          .cogroup(stats.groupByKey(_.docId / bucketRange)) { (_, blocks, rows) =>
+            body(blocks.toArray, rows)
+          })
+      }
+    queries.map(q => q.queryId -> reduced.getOrElse(q.queryId, mode.empty)).toMap
+  }
+
+  /** Bytes per posting block beyond its VByte streams: the fixed-width
+    * fields, the field tag, three array lengths and the metadata map. */
+  private final val BlockOverheadBytes = 128.0
+
+  /** An upper bound on the bytes a driver-placed [[search]] pass collects
+    * from one field, from the manifest, the lookup and Spark's plan
+    * statistics alone (no job): every block of the `fetched` terms at
+    * worst-case VByte widths (a docId gap no wider than maxDocId, a tf or
+    * position no wider than maxDocLen; ≤ one block per posting, ≤
+    * ⌈df / blockSize⌉ + one per bucket) plus [[BlockOverheadBytes]] each,
+    * and the docstats rows of at most min(buckets, Σ `scoring` df) buckets,
+    * costed at Spark's own size estimate of the docstats relation per doc
+    * and counted twice on a tombstoned index (its -1 sentinels). In
+    * doubles, so no product overflows. */
+  private def collectBound(h: IndexHandle, fetched: Seq[TermEntry], scoring: Seq[TermEntry]): Double = {
+    val m = h.manifest
+    def width(v: Long): Double = math.max(1, (70 - java.lang.Long.numberOfLeadingZeros(v)) / 7)
+    val maxLen = if (m.maxDocLen > 0) m.maxDocLen else Int.MaxValue
+    val (wDoc, wLen) = (width(m.maxDocId), width(maxLen))
+    val nBuckets = (m.maxDocId / m.bucketRange + 1).toDouble
+    // df and cf are live counts, but until compaction the blocks also hold
+    // the postings of every doc that may be deleted (≤ maxDocId + 1 − nDocs)
+    val dead = if (m.tombVersion >= 0) math.max(0L, m.maxDocId + 1 - m.nDocs).toDouble else 0.0
+    def df(e: TermEntry): Double = e.df + dead
+    val blocks = fetched.iterator.map { e =>
+      val nBlocks = math.min(df(e), math.ceil(df(e) / m.blockSize) + nBuckets)
+      df(e) * (wDoc + wLen) + (e.cf + dead * maxLen) * wLen + nBlocks * BlockOverheadBytes
+    }.sum
+    val rows = math.min(m.maxDocId + 1.0, math.min(nBuckets, scoring.iterator.map(df).sum) * m.bucketRange)
+    val rowBytes = h.docstatsRaw.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble / math.max(m.nDocs, 1L)
+    blocks + rowBytes * rows * (if (m.tombVersion >= 0) 2 else 1)
   }
 }

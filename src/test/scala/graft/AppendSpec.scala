@@ -26,7 +26,7 @@ class AppendSpec extends AnyFunSuite {
   private lazy val dirs: (String, String) = {
     val appended = "/tmp/graft_test_index/append_inc"
     val full = "/tmp/graft_test_index/append_full"
-    Seq(appended, full).foreach(d => graft.queries.IndexCache.deleteRecursively(new java.io.File(d)))
+    Seq(appended, full).foreach(d => graft.queries.IndexCache.deleteRecursively(d))
     val pages = Pages.withInjections(spark, sfDir)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), appended, cfg)
     IndexBuilder.append(spark, pages.filter(col("doc_id") >= SplitAt), appended, cfg)
@@ -68,7 +68,7 @@ class AppendSpec extends AnyFunSuite {
   test("old termIds are stable across append (new terms go after vocabSize)") {
     val (appended, _) = dirs
     val base = "/tmp/graft_test_index/append_base_only"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(base))
+    graft.queries.IndexCache.deleteRecursively(base)
     IndexBuilder.buildFrom(spark,
       Pages.withInjections(spark, sfDir).filter(col("doc_id") < SplitAt), base, cfg)
     val baseIds = IndexReader.load(spark, base).dictMap.map { case (t, e) => t -> e.termId }
@@ -118,7 +118,7 @@ class AppendSpec extends AnyFunSuite {
     // terms are fresh; novelK rides on docs with doc_id % 8 <= K, which
     // makes the dfs distinct and ranks them against their name order
     val dir = "/tmp/graft_test_index/append_fresh"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dir))
+    graft.queries.IndexCache.deleteRecursively(dir)
     val pages = Pages.withInjections(spark, sfDir)
     val base = IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), dir, cfg)
     val delta = (0 until 4).foldLeft(pages.filter(col("doc_id") >= SplitAt)) { (df, k) =>

@@ -20,7 +20,7 @@ class BlockMetaSpec extends AnyFunSuite {
   private lazy val plantedDir: String = {
     import spark.implicits._
     val dir = "/tmp/graft_test_index/blockmeta_planted"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     val filler = (1 to 37).map(i => s"w${i % 7}").mkString(" ")
     val pages = (0L until 400L).map { id =>
       (id, s"planted://$id", s"alpha beta $filler omega")

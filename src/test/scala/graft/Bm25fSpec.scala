@@ -195,7 +195,7 @@ class Bm25fSpec extends AnyFunSuite {
         timestamp_seconds(lit(Pages.EpochSeconds)).as("warc_ts"),
         col("text"), lit("en").as("lang"))
     val base = "/tmp/graft_bm25f_spec_3f"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(base))
+    graft.queries.IndexCache.deleteRecursively(base)
     val ranges = Seq((0, 4), (4, 8), (8, Int.MaxValue))
     val weights = Seq(3.0, 2.0, 1.0)
     ranges.zipWithIndex.foreach { case ((lo, hi), i) =>

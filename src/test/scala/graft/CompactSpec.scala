@@ -20,7 +20,7 @@ class CompactSpec extends AnyFunSuite {
   private lazy val (compHandle, rebuiltHandle, deletedIds) = {
     val dir = "/tmp/graft_compact_spec/compacted"
     val reb = "/tmp/graft_compact_spec/rebuilt"
-    Seq(dir, reb).foreach(d => IndexCache.deleteRecursively(new java.io.File(d)))
+    Seq(dir, reb).foreach(d => IndexCache.deleteRecursively(d))
     IndexBuilder.build(spark, sfDir, dir, IndexConfig())
     val h0 = IndexReader.load(spark, dir)
     import spark.implicits._
@@ -63,7 +63,7 @@ class CompactSpec extends AnyFunSuite {
   test("crash before the manifest commit: replayed compaction re-derives identical content") {
     import spark.implicits._
     val dir = "/tmp/graft_compact_spec/crash_replay"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     IndexBuilder.build(spark, sfDir, dir, IndexConfig())
     val h0 = IndexReader.load(spark, dir)
     val ids = h0.docstats.filter(col("docId") % 5 === 2).map(_.docId).collect().toSeq
@@ -102,7 +102,7 @@ class CompactSpec extends AnyFunSuite {
     "non-default layout survives") {
     import spark.implicits._
     val dir = "/tmp/graft_compact_spec/partial"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     // non-default layout: 3 postings buckets + small geometry + a 4-segment
     // build — the manifest must carry the layout through every compaction
     // (r3 bug: compact silently reverted to the default config's bucket
@@ -202,7 +202,7 @@ class CompactSpec extends AnyFunSuite {
     // own COPY of the compacted index: appending into the shared fixture
     // would make the docstats-equality test order-dependent
     val dir = "/tmp/graft_compact_spec/append_copy"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     val _ = compHandle // force the shared fixture to exist first
     copyDir(java.nio.file.Paths.get("/tmp/graft_compact_spec/compacted"),
       java.nio.file.Paths.get(dir))

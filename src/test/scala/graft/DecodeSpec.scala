@@ -82,7 +82,7 @@ class DecodeSpec extends AnyFunSuite {
     // a small bucketRange spreads the fixture over many buckets, so {0, 2, 3}
     // is a run plus a gap, not the whole index
     val dir = "/tmp/graft_test_index/decode_buckets"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     IndexBuilder.buildFrom(spark, Pages.withInjections(spark, sfDir), dir,
       IndexConfig(blockSize = 16, bucketRange = 64, postingsBuckets = 2))
     val h = IndexReader.load(spark, dir)

@@ -18,7 +18,7 @@ class DeleteSpec extends AnyFunSuite {
   private lazy val (delHandle, rebuiltHandle, deletedIds) = {
     val delDir = "/tmp/graft_delete_spec/deleted"
     val rebDir = "/tmp/graft_delete_spec/rebuilt"
-    Seq(delDir, rebDir).foreach(d => IndexCache.deleteRecursively(new java.io.File(d)))
+    Seq(delDir, rebDir).foreach(d => IndexCache.deleteRecursively(d))
     IndexBuilder.build(spark, sfDir, delDir, IndexConfig())
     val h0 = IndexReader.load(spark, delDir)
     import spark.implicits._
@@ -51,7 +51,7 @@ class DeleteSpec extends AnyFunSuite {
   test("append then delete FROM the appended chunk: dictionary stays exact") {
     import spark.implicits._
     val dir = "/tmp/graft_delete_spec/append_del"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     IndexBuilder.build(spark, sfDir, dir, IndexConfig())
     val m0 = IndexBuilder.append(spark, Pages.withInjections(spark, sfDir)
       .filter(col("doc_id").cast("long") < 0), dir, IndexConfig()) // empty append is a no-op shape
@@ -104,7 +104,7 @@ class DeleteSpec extends AnyFunSuite {
   test("crash before the manifest commit: replayed delete re-derives identical versions") {
     import spark.implicits._
     val dir = "/tmp/graft_delete_spec/crash_replay"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     IndexBuilder.build(spark, sfDir, dir, IndexConfig())
     val h0 = IndexReader.load(spark, dir)
     val ids = h0.docstats.filter(col("docId") % 7 === 3).map(_.docId).collect().toSeq
@@ -129,7 +129,7 @@ class DeleteSpec extends AnyFunSuite {
 
   test("BULK delete via an id RELATION (deleteByIds) == Seq delete; no driver-side id set") {
     val dir = "/tmp/graft_delete_spec/bulk_df"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     IndexBuilder.build(spark, sfDir, dir, IndexConfig())
     val h0 = IndexReader.load(spark, dir)
     // the deletion set arrives as a PREDICATE over docstats (~33% of the
@@ -162,7 +162,7 @@ class DeleteSpec extends AnyFunSuite {
 
   test("delete then append composes (live stats stay exact)") {
     val dir = "/tmp/graft_delete_spec/del_append"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     IndexBuilder.build(spark, sfDir, dir, IndexConfig())
     val h0 = IndexReader.load(spark, dir)
     import spark.implicits._

@@ -24,7 +24,7 @@ class JoinDictSpec extends AnyFunSuite {
   test("distributed-join dictionary build == broadcast build, bit-for-bit") {
     val bcast = "/tmp/graft_test_index/joindict_bcast"
     val joined = "/tmp/graft_test_index/joindict_join"
-    Seq(bcast, joined).foreach(d => graft.queries.IndexCache.deleteRecursively(new java.io.File(d)))
+    Seq(bcast, joined).foreach(d => graft.queries.IndexCache.deleteRecursively(d))
     IndexBuilder.build(spark, sfDir, bcast, IndexConfig())
     // threshold 0 forces EVERY vocabulary onto the join path
     IndexBuilder.build(spark, sfDir, joined, IndexConfig(broadcastVocabMax = 0L))
@@ -46,7 +46,7 @@ class JoinDictSpec extends AnyFunSuite {
     // tiny: the HEAD is driver-sized by construction
     val capped = "/tmp/graft_test_index/joindict_cap"
     val cappedJ = "/tmp/graft_test_index/joindict_cap_join"
-    Seq(capped, cappedJ).foreach(d => graft.queries.IndexCache.deleteRecursively(new java.io.File(d)))
+    Seq(capped, cappedJ).foreach(d => graft.queries.IndexCache.deleteRecursively(d))
     IndexBuilder.build(spark, sfDir, capped, IndexConfig(vocabCap = Some(10)))
     IndexBuilder.build(spark, sfDir, cappedJ,
       IndexConfig(vocabCap = Some(10), broadcastVocabMax = 0L))

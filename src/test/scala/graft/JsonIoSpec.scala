@@ -11,7 +11,7 @@ class JsonIoSpec extends AnyFunSuite {
 
   private lazy val indexDir = {
     val d = "/tmp/graft_test_index/jsonio"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d))
+    graft.queries.IndexCache.deleteRecursively(d)
     graft.index.IndexBuilder.build(spark, "/root/testdata/sf0.001", d,
       graft.index.IndexConfig(blockSize = 32, bucketRange = 128, postingsBuckets = 2))
     d

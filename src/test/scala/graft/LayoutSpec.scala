@@ -32,7 +32,7 @@ class LayoutSpec extends AnyFunSuite {
   test("three deletes keep the build's dictionary file count and termId ranges") {
     import spark.implicits._
     val dir = s"$root/deletes"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     IndexBuilder.build(spark, sfDir, dir, IndexConfig())
     val built = dictRanges(dir)
     assert(built.length > 1, s"the build should cluster the dictionary into several files: $built")
@@ -51,7 +51,7 @@ class LayoutSpec extends AnyFunSuite {
   test("append then delete: the delete keeps the append's dictionary ranges") {
     import spark.implicits._
     val dir = s"$root/append_delete"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     val pages = Pages.withInjections(spark, sfDir)
     val cut = pages.agg(max(col("doc_id").cast("long"))).head().getLong(0) / 2
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id").cast("long") <= cut), dir, IndexConfig())

@@ -27,7 +27,7 @@ class LshIndexSpec extends AnyFunSuite {
       concat(lit("copy "), col("text")).as("text"))
 
   test("probe against the persisted index == in-memory LSH over the union (cross pairs)") {
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(idxDir))
+    graft.queries.IndexCache.deleteRecursively(idxDir)
     Dedup.writeLshIndex(Dedup.signaturesOf(corpus), idxDir)
     val batch = batchOf(7, 1000000L)
     val probed = Dedup.probeLshIndex(spark, idxDir, Dedup.signaturesOf(batch))

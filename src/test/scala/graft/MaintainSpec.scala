@@ -27,7 +27,7 @@ class MaintainSpec extends AnyFunSuite {
 
   /** crawl-shaped fixture: 2-chunk base + two appends = 4 live segments. */
   private def buildCrawl(dir: String): Unit = {
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     val pages = Pages.withInjections(spark, sfDir)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < 160), dir, cfg)
     IndexBuilder.append(spark, pages.filter(col("doc_id") >= 160 && col("doc_id") < 320), dir, cfg)
@@ -36,7 +36,7 @@ class MaintainSpec extends AnyFunSuite {
 
   private lazy val freshHandle = {
     val d = "/tmp/graft_maintain_spec/fresh"
-    IndexCache.deleteRecursively(new java.io.File(d))
+    IndexCache.deleteRecursively(d)
     IndexBuilder.buildFrom(spark,
       Pages.withInjections(spark, sfDir).filter(col("doc_id") < 480), d, cfg)
     IndexReader.load(spark, d)
@@ -116,7 +116,7 @@ class MaintainSpec extends AnyFunSuite {
     assert(m.tombVersion == -1, "full-span maintain must clear tombstones")
     // content == fresh build minus the deleted docs
     val reb = "/tmp/graft_maintain_spec/tombed_rebuilt"
-    IndexCache.deleteRecursively(new java.io.File(reb))
+    IndexCache.deleteRecursively(reb)
     IndexBuilder.buildFrom(spark,
       Pages.withInjections(spark, sfDir)
         .filter(col("doc_id") < 480 && !col("doc_id").cast("long").isin(ids.map(Long.box): _*)),

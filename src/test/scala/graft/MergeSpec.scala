@@ -30,7 +30,7 @@ class MergeSpec extends AnyFunSuite {
   private def pages = Pages.withInjections(spark, sfDir)
 
   private def buildPair(root: String): (String, String) = {
-    IndexCache.deleteRecursively(new java.io.File(root))
+    IndexCache.deleteRecursively(root)
     val (low, high) = (s"$root/low", s"$root/high")
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < Split), low, cfg)
     IndexBuilder.buildFrom(spark,
@@ -40,7 +40,7 @@ class MergeSpec extends AnyFunSuite {
 
   private lazy val freshHandle = {
     val d = "/tmp/graft_merge_spec/fresh"
-    IndexCache.deleteRecursively(new java.io.File(d))
+    IndexCache.deleteRecursively(d)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < Hi), d, cfg)
     IndexReader.load(spark, d)
   }
@@ -134,7 +134,7 @@ class MergeSpec extends AnyFunSuite {
 
     val freshDel = {
       val d = "/tmp/graft_merge_spec/fresh_del"
-      IndexCache.deleteRecursively(new java.io.File(d))
+      IndexCache.deleteRecursively(d)
       IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < Hi), d, cfg)
       IndexBuilder.delete(spark, d, delIds)
       d
@@ -235,7 +235,7 @@ class MergeSpec extends AnyFunSuite {
     }
     val freshAll = {
       val d = "/tmp/graft_merge_spec/compose_fresh"
-      IndexCache.deleteRecursively(new java.io.File(d))
+      IndexCache.deleteRecursively(d)
       IndexBuilder.buildFrom(spark, pages, d, cfg)
       IndexReader.load(spark, d)
     }
@@ -279,7 +279,7 @@ class MergeSpec extends AnyFunSuite {
 
     // collision: an index overlapping the destination's span, not contained
     val clash = "/tmp/graft_merge_spec/clash"
-    IndexCache.deleteRecursively(new java.io.File(clash))
+    IndexCache.deleteRecursively(clash)
     IndexBuilder.buildFrom(spark,
       pages.filter(col("doc_id") >= 100 && col("doc_id") < 600), clash, cfg)
     val before = Manifest.read(s"$low/manifest.json")
@@ -290,7 +290,7 @@ class MergeSpec extends AnyFunSuite {
 
     // geometry mismatch
     val geo = "/tmp/graft_merge_spec/geo"
-    IndexCache.deleteRecursively(new java.io.File(geo))
+    IndexCache.deleteRecursively(geo)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") >= Hi), geo,
       cfg.copy(blockSize = 32, bucketRange = 128))
     val eGeo = intercept[IllegalArgumentException](IndexBuilder.merge(spark, low, geo))
@@ -298,7 +298,7 @@ class MergeSpec extends AnyFunSuite {
 
     // analyzer mismatch
     val ana = "/tmp/graft_merge_spec/ana"
-    IndexCache.deleteRecursively(new java.io.File(ana))
+    IndexCache.deleteRecursively(ana)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") >= Hi), ana,
       cfg.copy(tokenizer = cfg.tokenizer.copy(lowercase = false)))
     val eAna = intercept[IllegalArgumentException](IndexBuilder.merge(spark, low, ana))

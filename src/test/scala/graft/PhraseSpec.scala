@@ -16,7 +16,7 @@ class PhraseSpec extends AnyFunSuite {
 
   private lazy val dir = {
     val d = "/tmp/graft_test_index/phrase"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d))
+    graft.queries.IndexCache.deleteRecursively(d)
     graft.index.IndexBuilder.build(spark, sfDir, d,
       graft.index.IndexConfig(blockSize = 16, bucketRange = 64, nChunks = 2, postingsBuckets = 2))
     d

@@ -39,7 +39,7 @@ class PruneSpec extends AnyFunSuite {
   private lazy val handle = {
     import spark.implicits._
     val dir = "/tmp/graft_prune_spec/index"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     val pages = docs.zipWithIndex
       .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
@@ -161,7 +161,7 @@ class PruneSpec extends AnyFunSuite {
     // term, a provable lower bound on the kth-best full score — prunes the
     // head-only buckets wholesale.
     val dir = "/tmp/graft_prune_spec/bucketed"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     val pages = docs.zipWithIndex
       .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")

@@ -23,7 +23,7 @@ class ResumeSpec extends AnyFunSuite {
   test("crash after partial postings commit resumes to a bit-identical index") {
     val full = "/tmp/graft_test_index/resume_full"
     val crash = "/tmp/graft_test_index/resume_crash"
-    Seq(full, crash).foreach(d => graft.queries.IndexCache.deleteRecursively(new java.io.File(d)))
+    Seq(full, crash).foreach(d => graft.queries.IndexCache.deleteRecursively(d))
 
     IndexBuilder.build(spark, sfDir, full, cfg)
 
@@ -35,7 +35,7 @@ class ResumeSpec extends AnyFunSuite {
     val segDirs = new java.io.File(s"$crash/segments").listFiles().map(_.getName).sorted
     assert(segDirs.length == 4, s"fixture shape: want 4 segments, got ${segDirs.toSeq}")
     segDirs.takeRight(2).foreach(n =>
-      graft.queries.IndexCache.deleteRecursively(new java.io.File(s"$crash/segments/$n")))
+      graft.queries.IndexCache.deleteRecursively(s"$crash/segments/$n"))
 
     // resume: must rebuild ONLY the missing segments and produce identical bits
     val m2 = IndexBuilder.build(spark, sfDir, crash, cfg)
@@ -89,7 +89,7 @@ class ResumeSpec extends AnyFunSuite {
 
   test("AUTO chunk sizing (P1): chunk count derives from corpus tokens; bits unchanged") {
     val auto = "/tmp/graft_test_index/resume_auto"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(auto))
+    graft.queries.IndexCache.deleteRecursively(auto)
     // sf0.001 has ~35k tokens → target 6000 tokens/chunk → ≥ 4 chunks
     val m = IndexBuilder.build(spark, sfDir, auto,
       cfg.copy(nChunks = 0, targetTokensPerChunk = 6000L))

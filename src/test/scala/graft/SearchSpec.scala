@@ -21,7 +21,7 @@ class SearchSpec extends AnyFunSuite {
 
   private lazy val dir = {
     val d = "/tmp/graft_test_index/search"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d))
+    graft.queries.IndexCache.deleteRecursively(d)
     // small bucketRange (4 blocks/bucket) to exercise multi-bucket paths
     IndexBuilder.build(spark, sfDir, d,
       IndexConfig(blockSize = 16, bucketRange = 64, nChunks = 3, postingsBuckets = 4))
@@ -996,7 +996,7 @@ class SearchSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     // tombstone a docId range on a dedicated copy of the fixture index
     val delDir = "/tmp/graft_test_index/search_del"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(delDir))
+    graft.queries.IndexCache.deleteRecursively(delDir)
     IndexBuilder.build(spark, sfDir, delDir,
       IndexConfig(blockSize = 16, bucketRange = 64, nChunks = 3, postingsBuckets = 4))
     val (dLo, dHi) = (40L, 120L)

@@ -29,7 +29,7 @@ class SerpPassSpec extends AnyFunSuite {
     * total, panel and ranking below differs from the undeleted index's. */
   private lazy val (handle, fullTotals) = {
     val dir = "/tmp/graft_test_index/serp_pass"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dir))
+    graft.queries.IndexCache.deleteRecursively(dir)
     IndexBuilder.build(spark, sfDir, dir,
       IndexConfig(blockSize = 16, bucketRange = 64, nChunks = 3, postingsBuckets = 4))
     val full = IndexReader.load(spark, dir)
@@ -101,7 +101,7 @@ class SerpPassSpec extends AnyFunSuite {
     // below the stats-only seed (the tail term's guaranteed impact), which
     // the fixture corpus's flat vocabulary never shows
     val dir = "/tmp/graft_test_index/serp_pass_seed"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dir))
+    graft.queries.IndexCache.deleteRecursively(dir)
     val pages = (0L until 2048L).map { d =>
       val filler = Seq.tabulate((d % 7).toInt + 3)(i => s"f${(d * 31 + i) % 101}")
       (d, (Seq("head") ++ (if (d % 64 == 0) Seq("tail") else Nil) ++ filler).mkString(" "))

@@ -23,7 +23,7 @@ class SnapshotsSpec extends AnyFunSuite {
   /** build(0) → append(1) → delete(2) → compact(3), plus the delete set. */
   private lazy val (dir, deletedIds) = {
     val d = "/tmp/graft_snap_spec/chain"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d))
+    graft.queries.IndexCache.deleteRecursively(d)
     val pages = Pages.withInjections(spark, sfDir)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), d, cfg)
     IndexBuilder.append(spark, pages.filter(col("doc_id") >= SplitAt), d, cfg)
@@ -37,7 +37,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("exported snapshot is standalone and answer-identical; only referenced dirs travel") {
     val dest = "/tmp/graft_snap_spec/export1"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dest))
+    graft.queries.IndexCache.deleteRecursively(dest)
     val m = Snapshots.export(spark, dir, 1, dest)
     // loads as a plain index and answers exactly like loadAt(source, 1)
     val he = IndexReader.load(spark, dest)
@@ -56,7 +56,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("export of the compacted snapshot carries one merged segment and no garbage") {
     val dest = "/tmp/graft_snap_spec/export3"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dest))
+    graft.queries.IndexCache.deleteRecursively(dest)
     val m = Snapshots.export(spark, dir, 3, dest)
     assert(m.tombVersion == -1 && m.segments.length == 1)
     assert(Store.list(s"$dest/segments").length == 1)
@@ -65,7 +65,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("export roots a fresh chain: append composes on the exported index") {
     val dest = "/tmp/graft_snap_spec/export_grow"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dest))
+    graft.queries.IndexCache.deleteRecursively(dest)
     Snapshots.export(spark, dir, 0, dest) // base-only state
     val m1 = IndexBuilder.append(spark,
       Pages.withInjections(spark, sfDir).filter(col("doc_id") >= SplitAt), dest, cfg)
@@ -86,7 +86,7 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("export refuses a committed destination; replayed torn export self-heals") {
     val dest = "/tmp/graft_snap_spec/export_replay"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dest))
+    graft.queries.IndexCache.deleteRecursively(dest)
     Snapshots.export(spark, dir, 2, dest)
     intercept[IllegalArgumentException](Snapshots.export(spark, dir, 2, dest))
     // torn export = copied dirs but no committed manifest → replay succeeds

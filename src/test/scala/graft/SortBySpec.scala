@@ -71,7 +71,7 @@ class SortBySpec extends AnyFunSuite {
 
   private lazy val handle = {
     val dir = "/tmp/graft_test_index/sortby_del"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dir))
+    graft.queries.IndexCache.deleteRecursively(dir)
     IndexBuilder.build(spark, sfDir, dir,
       IndexConfig(blockSize = 16, bucketRange = 64, nChunks = 3, postingsBuckets = 4))
     IndexBuilder.delete(spark, dir, deleted.toSeq.sorted)

@@ -28,7 +28,7 @@ class StrategySpec extends AnyFunSuite {
   test("full engine under the chargram strategy: build validates clean, decode round-trips") {
     import spark.implicits._
     val dir = "/tmp/graft_test_index/strategy_chargram"
-    IndexCache.deleteRecursively(new java.io.File(dir))
+    IndexCache.deleteRecursively(dir)
     val cfg = IndexConfig(tokenizer = TokenizerConfig(strategy = "chargram"),
       blockSize = 16, bucketRange = 64, postingsBuckets = 2)
     val m = IndexBuilder.buildFrom(spark, Pages.withInjections(spark, sfDir), dir, cfg)

@@ -29,7 +29,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("two batches: cross-corpus dups, in-batch dups, and cross-BATCH dups all drop; " +
     "survivors == rebuild; replay is a no-op") {
     val root = "/tmp/graft_test_index/stream_dedup"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val dedupDir = s"$root/dedup"
     val inputDir = s"$root/incoming"
@@ -90,7 +90,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("mixing plain and dedup streaming on one index fails loudly (mode marker)") {
     // self-contained: a fresh index dir stamped with the dedup mode
     val indexDir = "/tmp/graft_test_index/stream_dedup_mode"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(indexDir))
+    graft.queries.IndexCache.deleteRecursively(indexDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$indexDir/_ingest_mode"), "dedup")
@@ -105,7 +105,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     "without purge the stale signature would veto it") {
     import spark.implicits._
     def setup(root: String, doPurge: Boolean): Long = {
-      graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+      graft.queries.IndexCache.deleteRecursively(root)
       val indexDir = s"$root/index"
       val dedupDir = s"$root/dedup"
       val bootstrapPages = Pages.withInjections(spark, sfDir).filter(col("doc_id") < 192)
@@ -151,7 +151,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     "identical to pre-compaction, bounded file count, multi-file tombstone write") {
     import spark.implicits._
     val root = "/tmp/graft_test_index/dedup_lifecycle"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val dedupDir = s"$root/dedup"
     val bootstrapPages = Pages.withInjections(spark, sfDir).filter(col("doc_id") < 192)
@@ -180,7 +180,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // clone BOTH indexes, compact only the original's dedup index — then
     // the same batch must make identical admission decisions on both
     val clone = s"${root}_clone"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(clone))
+    graft.queries.IndexCache.deleteRecursively(clone)
     copyDir(root, clone)
     val dmC = DedupIngest.compactIndex(spark, dedupDir, indexDir)
     assert(dmC.baseVersion == 1 && dmC.tombVersion == -1)
@@ -226,7 +226,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     "keep-min live set; demoted victims stop vetoing but keep their edges") {
     import spark.implicits._
     val root = "/tmp/graft_test_index/dedup_reconcile"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val dedupDir = s"$root/dedup"
     val t = 0.8
@@ -300,7 +300,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("replayed batch id (at-least-once delivery) is a committed no-op for BOTH indexes") {
     val root = "/tmp/graft_test_index/stream_dedup_replay"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val dedupDir = s"$root/dedup"
     val pages = Pages.withInjections(spark, sfDir)
@@ -322,7 +322,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("compactIndex between a crashed batch and its replay: the in-flight partitions " +
     "pass through by name, so the replay cannot estimator-match its own partial write") {
     val root = "/tmp/graft_test_index/dedup_crash_compact"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val dedupDir = s"$root/dedup"
     val bootstrapPages = Pages.withInjections(spark, sfDir).filter(col("doc_id") < 192)
@@ -378,7 +378,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     "re-bootstrapped as an empty index") {
     import spark.implicits._
     val dedupDir = "/tmp/graft_test_index/dedup_not_an_index"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(dedupDir))
+    graft.queries.IndexCache.deleteRecursively(dedupDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dedupDir/bands"))
     val e = intercept[IllegalArgumentException] {
       DedupIngest.purge(spark, dedupDir, Seq(1L).toDF("doc_id"))
@@ -392,7 +392,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     import graft.query.{Percolate, QueryParser}
     import graft.tokenize.Tokenizers
     val root = "/tmp/graft_test_index/stream_percolate"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val dedupDir = s"$root/dedup"
     val analyzer = Tokenizers.default

@@ -33,7 +33,7 @@ class StreamingIngestSpec extends AnyFunSuite {
 
   test("streaming ingest (2 micro-batch appends) == full batch rebuild") {
     val root = "/tmp/graft_test_index/stream_ingest"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val fullDir = s"$root/full"
     val inputDir = s"$root/incoming"
@@ -76,7 +76,7 @@ class StreamingIngestSpec extends AnyFunSuite {
 
   test("replayed micro-batch (at-least-once delivery) does not double-apply df/cf") {
     val root = "/tmp/graft_test_index/stream_replay"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val pages = Pages.withInjections(spark, sfDir).persist()
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < 192), indexDir, cfg)
@@ -100,7 +100,7 @@ class StreamingIngestSpec extends AnyFunSuite {
 
   test("same-instant files coalesce into one batch under the default trigger (no ordering hazard)") {
     val root = "/tmp/graft_test_index/stream_coalesce"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(root))
+    graft.queries.IndexCache.deleteRecursively(root)
     val indexDir = s"$root/index"
     val inputDir = s"$root/incoming"
     val pages = Pages.withInjections(spark, sfDir).persist()

@@ -29,7 +29,7 @@ class TimeTravelSpec extends AnyFunSuite {
     * reference index in the equivalent state. */
   private lazy val dir: String = {
     val d = "/tmp/graft_tt_spec/chain"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d))
+    graft.queries.IndexCache.deleteRecursively(d)
     val pages = Pages.withInjections(spark, sfDir)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), d, cfg)
     IndexBuilder.append(spark, pages.filter(col("doc_id") >= SplitAt), d, cfg)
@@ -55,7 +55,7 @@ class TimeTravelSpec extends AnyFunSuite {
 
   test("loadAt(0): pre-append state — WAND equals a fresh base-only build") {
     val ref = "/tmp/graft_tt_spec/ref_base"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(ref))
+    graft.queries.IndexCache.deleteRecursively(ref)
     IndexBuilder.buildFrom(spark,
       Pages.withInjections(spark, sfDir).filter(col("doc_id") < SplitAt), ref, cfg)
     val at0 = IndexReader.loadAt(spark, dir, 0)
@@ -67,7 +67,7 @@ class TimeTravelSpec extends AnyFunSuite {
     val at1 = IndexReader.loadAt(spark, dir, 1)
     assert(at1.manifest.tombVersion == -1)
     val ref = "/tmp/graft_tt_spec/ref_full"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(ref))
+    graft.queries.IndexCache.deleteRecursively(ref)
     IndexBuilder.buildFrom(spark, Pages.withInjections(spark, sfDir), ref, cfg)
     val hRef = IndexReader.load(spark, ref)
     // candidate sets identical; scores match up to float summation order
@@ -104,7 +104,7 @@ class TimeTravelSpec extends AnyFunSuite {
   test("vacuum(retain=2) keeps the last two snapshots queryable, expires the rest") {
     // work on a copy so the shared chain fixture stays intact for other tests
     val d2 = "/tmp/graft_tt_spec/vac"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d2))
+    graft.queries.IndexCache.deleteRecursively(d2)
     val pages = Pages.withInjections(spark, sfDir)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), d2, cfg)
     IndexBuilder.append(spark, pages.filter(col("doc_id") >= SplitAt), d2, cfg)
@@ -137,7 +137,7 @@ class TimeTravelSpec extends AnyFunSuite {
 
   test("crash between snapshot archive and pointer flip: replay re-derives the same commit") {
     val d3 = "/tmp/graft_tt_spec/crash"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d3))
+    graft.queries.IndexCache.deleteRecursively(d3)
     val pages = Pages.withInjections(spark, sfDir)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), d3, cfg)
     IndexBuilder.append(spark, pages.filter(col("doc_id") >= SplitAt), d3, cfg)
@@ -154,7 +154,7 @@ class TimeTravelSpec extends AnyFunSuite {
   test("a TORN snapshot file (crash mid-archive) is skipped by history and collected " +
     "by vacuum instead of wedging both until hand-deleted") {
     val d4 = "/tmp/graft_tt_spec/torn"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d4))
+    graft.queries.IndexCache.deleteRecursively(d4)
     val pages = Pages.withInjections(spark, sfDir)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), d4, cfg)
     // a commit that died mid-write of its snapshot file: partial JSON,
@@ -170,7 +170,7 @@ class TimeTravelSpec extends AnyFunSuite {
 
   test("snapshot ids format/parse consistently past five digits (long-lived crawl loops)") {
     val d5 = "/tmp/graft_tt_spec/bigid"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d5))
+    graft.queries.IndexCache.deleteRecursively(d5)
     val pages = Pages.withInjections(spark, sfDir)
     IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < SplitAt), d5, cfg)
     // fabricate a six-digit-id snapshot the way a 100k-commit index would

@@ -50,4 +50,13 @@ class UriIndexSpec extends AnyFunSuite {
       "snapshots/v00000.json", "snapshots/v00001.json"), s"vacuum removed $removed")
     assert(IndexReader.load(spark, dir).manifest.snapshotId == 2)
   }
+
+  test("IndexCache.deleteRecursively resets an index directory given as a file:/// URI") {
+    val dir = s"file://$root/reset"
+    IndexBuilder.buildFrom(spark, Pages.withInjections(spark, sfDir).filter(col("doc_id") < 64L), dir, cfg)
+    assert(new java.io.File(s"$root/reset/manifest.json").isFile)
+    graft.queries.IndexCache.deleteRecursively(dir)
+    assert(!new java.io.File(s"$root/reset").exists(), s"$dir survived its reset")
+    assert(!new java.io.File("file:").exists(), "the reset went under the working directory")
+  }
 }

@@ -17,7 +17,7 @@ class ValidatorSpec extends AnyFunSuite {
 
   private def freshCopy(src: String, dst: String, postings: org.apache.spark.sql.DataFrame,
       dropTermId: Option[Int] = None): Unit = {
-    IndexCache.deleteRecursively(new java.io.File(dst))
+    IndexCache.deleteRecursively(dst)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     val m = Manifest.read(s"$src/manifest.json")
     // single consolidated segment in the copy

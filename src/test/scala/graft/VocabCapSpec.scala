@@ -16,7 +16,7 @@ class VocabCapSpec extends AnyFunSuite {
 
   private lazy val dir = {
     val d = "/tmp/graft_test_index/vocabcap"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d))
+    graft.queries.IndexCache.deleteRecursively(d)
     IndexBuilder.build(spark, sfDir, d,
       IndexConfig(blockSize = 16, bucketRange = 64, vocabCap = Some(Cap)))
     d

@@ -16,7 +16,7 @@ class WandSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val dir = {
     val d = "/tmp/graft_test_index/wand"
-    graft.queries.IndexCache.deleteRecursively(new java.io.File(d))
+    graft.queries.IndexCache.deleteRecursively(d)
     // small bucketRange (512 = 4 blocks/bucket) to exercise multi-bucket paths
     IndexBuilder.build(spark, sfDir, d,
       IndexConfig(blockSize = 16, bucketRange = 64, nChunks = 3, postingsBuckets = 4))
