@@ -38,7 +38,7 @@ final case class FieldedManifest(fields: Seq[FieldRecord])
   * `fielded.json` manifest recording the field names and weights —
   * committed LAST, so a crash mid-build leaves no readable fielded index
   * and a re-run resumes each sub-index's own checkpointed stages.
-  * [[graft.query.Bm25f.topK]] consumes [[load]]'s output directly. */
+  * [[graft.query.Wand.search]] takes [[load]]'s output as its fields. */
 object FieldedIndex {
 
   def fieldDir(baseDir: String, name: String): String = s"$baseDir/field_$name"
@@ -161,7 +161,7 @@ object FieldedIndex {
       IndexBuilder.merge(spark, fieldDir(baseDir, f.name), fieldDir(otherDir, f.name)))
   }
 
-  /** Load the fielded index as [[graft.query.Bm25f.topK]]'s input: one
+  /** Load the fielded index as [[graft.query.Wand.search]]'s fields: one
     * (handle, weight) per field, in build order. */
   def load(spark: SparkSession, baseDir: String): Seq[(graft.query.IndexHandle, Double)] = {
     val fields = committed(baseDir).fields

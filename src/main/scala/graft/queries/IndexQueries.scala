@@ -1117,7 +1117,7 @@ object IndexQueries {
     // q_merge_dict: search the shards without ever merging them.
     "q_bm25_sharded" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Wand.topKSharded(ShardedIndexCache.shards(spark, sfDir), QuerySet.queries, k = 40),
+        Wand.topKSharded(ShardedIndexCache.shards(spark, sfDir), QuerySet.queries, Wand.Ranked(40)),
         kWand = 40)),
 
     // FUNCTION SCORE (doc-value boost): BM25 × a per-doc multiplier from
@@ -1129,8 +1129,9 @@ object IndexQueries {
     // expression); per-doc values are validated against maxBoost loudly.
     "q_bm25_func" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Wand.topKBoosted(IndexCache.handle(spark, sfDir), QuerySet.queries, k = 40,
-          boost = lit(1.0) + (col("docId") % 3).cast("double"), maxBoost = 3.0),
+        Wand.search(Seq(IndexCache.handle(spark, sfDir) -> 1.0), QuerySet.queries,
+          Wand.Ranked(40, Wand.ByScore(boost =
+            Some((lit(1.0) + (col("docId") % 3).cast("double"), 3.0))))),
         kWand = 40)),
 
     // FILTERED ranked retrieval: BM25 top-10 restricted to a document
@@ -1144,16 +1145,16 @@ object IndexQueries {
     // under a filter); block-max pruning still applies.
     "q_bm25_filtered" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Wand.topKFiltered(IndexCache.handle(spark, sfDir), QuerySet.queries,
-          k = 40, filter = col("docId") % 3 === 0), kWand = 40)),
+        Wand.search(Seq(IndexCache.handle(spark, sfDir) -> 1.0), QuerySet.queries,
+          Wand.Ranked(40), docFilter = Some(col("docId") % 3 === 0)), kWand = 40)),
 
     // FILTERED FEDERATION: the same metadata predicate over the two
     // unmerged shard indexes — global stats, shard-local skip sentinels;
     // must equal the filtered single-index oracle exactly.
     "q_bm25_sharded_filtered" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Wand.topKShardedFiltered(ShardedIndexCache.shards(spark, sfDir), QuerySet.queries,
-          k = 40, filter = col("docId") % 3 === 0), kWand = 40)),
+        Wand.topKSharded(ShardedIndexCache.shards(spark, sfDir), QuerySet.queries,
+          Wand.Ranked(40), Some(col("docId") % 3 === 0)), kWand = 40)),
 
     // BOOSTED ranked retrieval: query-time per-term weights (the `term^w`
     // search-box syntax; fixture weights 1, 1.5, 2, ... per term). BM25
@@ -1185,11 +1186,11 @@ object IndexQueries {
     // ParsedQuery objects — parser and engine are checked as one surface.
     "q_search_dsl" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Search.topKRaw(IndexCache.handle(spark, sfDir), QuerySet.dsl, k = 40,
-          Tokenizers.default), kWand = 40)),
+        Search.search(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.dsl, Tokenizers.default), Wand.Ranked(40)), kWand = 40)),
 
     // WILDCARD retrieval (`pre*`): expansion is ONE dictionary prefix range
-    // scan per clause (StartsWith pushdown — autocomplete's plan), capped
+    // scan per batch (StartsWith pushdown — autocomplete's plan), capped
     // loudly (Lucene's TooManyClauses analog); expansions then ride the
     // standard WAND driver as ordinary weighted cursors — `+pre*` adds an
     // at-least-one-of (requiredAny) group to the bucket-local verifier,
@@ -1197,8 +1198,8 @@ object IndexQueries {
     // expansion itself (term LIKE) plus every constraint in SQL.
     "q_wildcard" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Search.topKRaw(IndexCache.handle(spark, sfDir), QuerySet.wildcard, k = 40,
-          Tokenizers.default), kWand = 40)),
+        Search.search(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.wildcard, Tokenizers.default), Wand.Ranked(40)), kWand = 40)),
 
     // FUZZY retrieval (`term~1`): the batch's needles expand in ONE
     // SymSpell deletion-key join (both sides explode to {self} ∪ del1
@@ -1209,8 +1210,8 @@ object IndexQueries {
     // neighborhood with DuckDB's levenshtein.
     "q_fuzzy" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Search.topKRaw(IndexCache.handle(spark, sfDir), QuerySet.fuzzy, k = 40,
-          Tokenizers.default), kWand = 40)),
+        Search.search(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.fuzzy, Tokenizers.default), Wand.Ranked(40)), kWand = 40)),
 
     // OR GROUPS (`a|b` — simple_query_string's default OR): alternatives
     // are resolved at PARSE time (no dictionary pass needed): bare groups
@@ -1221,8 +1222,8 @@ object IndexQueries {
     // subquery from the SAME ParsedQuery objects.
     "q_or_group" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Search.topKRaw(IndexCache.handle(spark, sfDir), QuerySet.orGroup, k = 40,
-          Tokenizers.default), kWand = 40)),
+        Search.search(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.orGroup, Tokenizers.default), Wand.Ranked(40)), kWand = 40)),
 
     // MINIMUM SHOULD MATCH (`msm:N`): a result doc must contain at least
     // N DISTINCT of the query's scoring terms — the bool-should knob
@@ -1233,8 +1234,8 @@ object IndexQueries {
     // wholesale. The oracle re-derives the count as a HAVING subquery.
     "q_msm" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Search.topKRaw(IndexCache.handle(spark, sfDir), QuerySet.msm, k = 40,
-          Tokenizers.default), kWand = 40)),
+        Search.search(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.msm, Tokenizers.default), Wand.Ranked(40)), kWand = 40)),
 
     // RESULT COLLAPSING (field collapse / site dedup): the DSL fixture
     // set re-ranked one-result-per-group — each group's best doc, top-k
@@ -1244,13 +1245,13 @@ object IndexQueries {
     // the url slot that already ships to the bucket cogroup: no extra
     // pass, no extra shuffle. Exactness is two-level (bucket-local
     // group-aware WAND threshold + group-aware global reduce —
-    // Wand.topKCollapsed); the oracle re-derives it as a per-(query,
+    // Wand.Collapse); the oracle re-derives it as a per-(query,
     // group) best-doc window under the same brute-force score CTE.
     "q_collapse" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Search.topKRaw(IndexCache.handle(spark, sfDir), QuerySet.collapse, k = 40,
-          Tokenizers.default,
-          collapse = Some(col("docId") % 100)), kWand = 40)),
+        Search.search(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.collapse, Tokenizers.default),
+          Wand.Ranked(40, Wand.Collapse(col("docId") % 100))), kWand = 40)),
 
     // TOTAL HITS ("About N results", exact): match counts over the full
     // DSL constraint surface. Count mode strips scoring and the heap from
@@ -1260,8 +1261,8 @@ object IndexQueries {
     // counts the same brute-force branch rows, zero-filled per query.
     "q_hits" -> ((spark, sfDir) => {
       import spark.implicits._
-      Search.countRaw(IndexCache.handle(spark, sfDir), QuerySet.hits,
-          Tokenizers.default)
+      Search.count(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.hits, Tokenizers.default))
         .toSeq.sortBy(_._1).toDF("query_id", "hits")
         .orderBy("query_id")
     }),
@@ -1275,8 +1276,9 @@ object IndexQueries {
     // oracle re-groups the brute-force match rows.
     "q_facets" -> ((spark, sfDir) => {
       import spark.implicits._
-      Search.facetsRaw(IndexCache.handle(spark, sfDir), QuerySet.hits,
-          Tokenizers.default, (col("docId") % 10).cast("string"), topN = 5)
+      Search.facets(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.hits, Tokenizers.default),
+          (col("docId") % 10).cast("string"), topN = 5)
         .toSeq.sortBy(_._1)
         .flatMap { case (qid, fs) => fs.map { case (v, n) => (qid, v, n) } }
         .toDF("query_id", "facet", "hits")
@@ -1294,7 +1296,6 @@ object IndexQueries {
     "q_serp" -> ((spark, sfDir) => {
       import spark.implicits._
       val h = IndexCache.handle(spark, sfDir)
-      def r4(s: Double) = BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       // BATCHED endpoint (Search.runAll): one ranked-count-facet pass per
       // distinct filter signature across ALL requests — per-request
       // results identical to Search.run's (SearchSpec asserts it), but the
@@ -1306,7 +1307,7 @@ object IndexQueries {
         val r = responses(qid)
         val hitRows = Search.windowByRoundedKey(r.hits, 40, 10, s"query $qid serp")
           .zipWithIndex.map { case ((d, sc), i) =>
-            (qid, "hit", i + 1, d.toString, r4(sc)) }
+            (qid, "hit", i + 1, d.toString, Search.halfUp(sc, 4)) }
         val totalRow = Seq((qid, "total", 0, "", r.total.toDouble))
         val facetRows = r.facets.zipWithIndex.map { case ((v, n), i) =>
           (qid, "facet", i + 1, v, n.toDouble) }
@@ -1334,8 +1335,7 @@ object IndexQueries {
         k = 10)
       fused.toSeq.sortBy(_._1).flatMap { case (qid, arr) =>
         arr.zipWithIndex.map { case ((s, d), i) =>
-          (qid, i + 1, d,
-            BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          (qid, i + 1, d, Search.halfUp(s, 6))
         }
       }.toDF("query_id", "rank", "doc_id", "rrf").orderBy("query_id", "rank")
     }),
@@ -1354,8 +1354,7 @@ object IndexQueries {
         Tokenizers.default, k = 10)
       got.toSeq.sortBy(_._1).flatMap { case (qid, arr) =>
         arr.zipWithIndex.map { case ((s, d), i) =>
-          (qid, i + 1, d,
-            BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          (qid, i + 1, d, Search.halfUp(s, 4))
         }
       }.toDF("query_id", "rank", "doc_id", "score").orderBy("query_id", "rank")
     }),
@@ -1399,8 +1398,8 @@ object IndexQueries {
     "q_sort_by" -> ((spark, sfDir) => {
       import spark.implicits._
       val key = lpad(col("docLen").cast("string"), 10, "0")
-      val got = Search.sortByRaw(IndexCache.handle(spark, sfDir),
-        QuerySet.percolate, Tokenizers.default, key, k = 10)
+      val got = Search.search(IndexCache.handle(spark, sfDir),
+        QueryParser.parseAll(QuerySet.percolate, Tokenizers.default), Wand.SortBy(key, 10))
       got.toSeq.sortBy(_._1).flatMap { case (qid, rows) =>
         rows.zipWithIndex.map { case ((k0, d), i) => (qid, i + 1, d, k0) }
       }.toDF("query_id", "rank", "doc_id", "key")
@@ -1415,8 +1414,9 @@ object IndexQueries {
     // no index state) and re-derives the expanded retrieval brute-force.
     "q_synonyms" -> ((spark, sfDir) =>
       rankedReport(spark,
-        Search.topKRaw(IndexCache.handle(spark, sfDir), QuerySet.synonyms, k = 40,
-          Tokenizers.default, synonyms = Some(QuerySet.synTable)), kWand = 40)),
+        Search.search(IndexCache.handle(spark, sfDir),
+          QueryParser.parseAll(QuerySet.synonyms, Tokenizers.default), Wand.Ranked(40),
+          Some(QuerySet.synTable)), kWand = 40)),
 
     // DEEP PAGINATION (search_after): page 2 of the DSL fixture set — run
     // page 1 at k=10 (exact), cursor on its last (score, docId), fetch the
@@ -1427,14 +1427,12 @@ object IndexQueries {
     // ties order by docId asc in BOTH systems, so they compare equal).
     "q_search_page2" -> ((spark, sfDir) => {
       val h = IndexCache.handle(spark, sfDir)
-      val parsed = QuerySet.dsl.map { case (qid, s) =>
-        QueryParser.parse(qid, s, Tokenizers.default) }
-      val p1 = Search.topK(h, parsed, 10)
+      val parsed = QueryParser.parseAll(QuerySet.dsl, Tokenizers.default)
+      val p1 = Search.search(h, parsed, Wand.Ranked(10))
       val after = p1.collect { case (qid, rows) if rows.nonEmpty => qid -> rows.last }
       // k=11: the 11th row extends the guard below past the window's FAR
       // edge (oracle rank 20 vs 21); only 10 are reported
-      val p2 = Search.page(h, parsed, 11, after)
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val p2 = Search.search(h, parsed, Wand.Ranked(11, Wand.ByScore(after)))
       // Guard: the engine pages in EXACT-double order, the oracle ranks by
       // round(score, 6). The two orders coincide iff every 6dp collision
       // inside exact ranks 1..21 is an EXACT tie (exact ties sort docId-asc
@@ -1446,7 +1444,7 @@ object IndexQueries {
         val both = p1(q.queryId) ++ p2(q.queryId)
         both.sliding(2).foreach {
           case Array((s1, _), (s2, _)) =>
-            require(s1 == s2 || r6(s1) != r6(s2),
+            require(s1 == s2 || Search.halfUp(s1, 6) != Search.halfUp(s2, 6),
               s"query ${q.queryId}: 6dp score collision without exact tie across pages — raise oracle precision")
           case _ => ()
         }
@@ -1457,7 +1455,7 @@ object IndexQueries {
     // EXPLAIN (the Lucene-explain analog as a driver row): for each boosted
     // fixture query, take the rank-1 doc under the oracle's ordering
     // (round(score,6) desc, docId asc — rankedReport's re-sort), then emit
-    // Search.explain's per-term breakdown for that (query, doc). The oracle
+    // Search.explainAll's per-term breakdown for that (query, doc). The oracle
     // re-derives the SAME rank-1 doc in SQL and recomputes every component
     // (tf, df, doc_len, idf, impact) from raw text, so a green row proves
     // the published breakdown IS the truth of the ranking, not a parallel
@@ -1466,22 +1464,18 @@ object IndexQueries {
     "q_explain" -> ((spark, sfDir) => {
       import spark.implicits._
       val h = IndexCache.handle(spark, sfDir)
-      def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      def r4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       val top1 = Wand.topK(h, QuerySet.boosted, k = 40).collect {
         case (qid, arr) if arr.nonEmpty =>
-          qid -> arr.toSeq.sortBy { case (s, d) => (-r6(s), d) }.head._2
+          qid -> arr.toSeq.sortBy { case (s, d) => (-Search.halfUp(s, 6), d) }.head._2
       }
       val byId = QuerySet.boosted.map(q => q.queryId ->
         ParsedQuery(q.queryId, q.terms.distinct.map(t => t -> q.boost(t)))).toMap
-      // BATCHED breakdown (Search.explainAll): 3 jobs for the whole fixture
-      // set instead of 3 per (query, doc) — rows identical to the solo
-      // explain's (SearchSpec asserts it)
+      // one batched breakdown: 3 jobs for the whole fixture set
       val pairs = top1.toSeq.sortBy(_._1).map { case (qid, doc) => (byId(qid), doc) }
       val explained = Search.explainAll(h, pairs)
       val rows = top1.toSeq.sortBy(_._1).flatMap { case (qid, doc) =>
         explained((qid, doc)).map { case (term, w, tf, df, idf, dl, impact) =>
-          (qid, doc, term, w, tf, df, dl, r4(idf), r4(impact))
+          (qid, doc, term, w, tf, df, dl, Search.halfUp(idf, 4), Search.halfUp(impact, 4))
         }
       }
       rows.toDF("query_id", "doc_id", "term", "weight", "tf", "df",
@@ -1507,7 +1501,7 @@ object IndexQueries {
     // avgdl per field) from raw text.
     "q_bm25f_topk" -> ((spark, sfDir) =>
       rankedReport(spark,
-        graft.query.Bm25f.topK(FieldedIndexCache.get(spark, sfDir), QuerySet.queries, k = 40),
+        Wand.search(FieldedIndexCache.get(spark, sfDir), QuerySet.queries, Wand.Ranked(40)),
         kWand = 40)),
 
     // TIERED retrieval (the approximate fast path): same WAND kernel, but
@@ -1519,8 +1513,8 @@ object IndexQueries {
     // the driver records a rows-only check, the spec carries the gate.
     "q_bm25_tiered" -> ((spark, sfDir) =>
       rankedReport(spark,
-        graft.query.Wand.topKApprox(IndexCache.handle(spark, sfDir), QuerySet.queries,
-          k = 40, boundKey = graft.index.TfQuantileComputer.TfP90Key),
+        Wand.search(Seq(IndexCache.handle(spark, sfDir) -> 1.0), QuerySet.queries,
+          Wand.Ranked(40, boundKey = Some(graft.index.TfQuantileComputer.TfP90Key))),
         kWand = 40)),
 
     // TIME TRAVEL (Iceberg-snapshot-shaped): the tombstone delete committed
@@ -1609,8 +1603,8 @@ object IndexQueries {
       docId: Long, m: Int, k: Int): Array[(Double, Long)] = {
     val terms = mltTerms(spark, h, docId, m)
     if (terms.isEmpty) Array.empty
-    else Wand.topKFiltered(h, Seq(QuerySpec(1, terms)), k,
-      col("docId") =!= docId)(1)
+    else Wand.search(Seq(h -> 1.0), Seq(QuerySpec(1, terms)), Wand.Ranked(k),
+      docFilter = Some(col("docId") =!= docId))(1)
   }
 
   /** The fixed phrase-query set: two bigrams (incl. a repeated-term one —
@@ -1858,26 +1852,16 @@ object IndexQueries {
   private def wandReport(spark: SparkSession, h: graft.query.IndexHandle): DataFrame =
     rankedReport(spark, Wand.topK(h, QuerySet.queries, k = 40), kWand = 40)
 
-  /** Shared ranked-result report (WAND + BM25F): re-rank by the ROUNDED
-    * score (the oracle comparison key) with headroom k and a guard that no
-    * rounded tie spans the retrieval-k boundary. */
+  /** Shared ranked-result report (WAND + BM25F): the top 10 by the ROUNDED
+    * score (the oracle comparison key) out of `kWand` rows of headroom,
+    * guarded against a rounded tie spanning the cut
+    * ([[Search.windowByRoundedKey]]). */
   private def rankedReport(spark: SparkSession, res: Map[Int, Array[(Double, Long)]],
       kWand: Int): DataFrame = {
     import spark.implicits._
-    def r6(s: Double): Double = BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val rows = res.toSeq.flatMap { case (qid, arr) =>
-      val ranked = arr.toSeq
-        .map { case (s, d) => (qid, d, s) }
-        .sortBy { case (_, d, s) => (-r6(s), d) }
-      if (arr.length == kWand && ranked.length > 10)
-        require(r6(ranked(9)._3) != r6(arr.last._1),
-          s"query $qid: rounded-score tie spans the WAND k=$kWand boundary — raise headroom")
-      ranked
-        .take(10)
-        .zipWithIndex
-        .map { case ((q, d, s), i) =>
-          (q, i + 1, d, BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
+      Search.windowByRoundedKey(arr, kWand, 10, s"query $qid").zipWithIndex
+        .map { case ((d, s), i) => (qid, i + 1, d, Search.halfUp(s, 4)) }
     }
     rows.toDF("query_id", "rank", "doc_id", "score").orderBy("query_id", "rank")
   }

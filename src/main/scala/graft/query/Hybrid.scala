@@ -64,7 +64,8 @@ object Hybrid {
       analyzer: TokenizerStrategy, k: Int, window: Int = 20,
       c: Int = 60): Map[Int, Array[(Double, Long)]] = {
     val fetch = 2 * window
-    val bm = Search.topKRaw(index, fixtures, fetch, analyzer).map { case (qid, arr) =>
+    val parsed = QueryParser.parseAll(fixtures, analyzer)
+    val bm = Search.search(index, parsed, Wand.Ranked(fetch)).map { case (qid, arr) =>
       qid -> Search.windowByRoundedKey(arr, fetch, window,
         s"query $qid fusion").map(_._1)
     }

@@ -49,7 +49,7 @@ final case class FuzzyClause(term: String, weight: Double = 1.0, op: Char = ' ')
 }
 
 /** A parsed search-box query: the compile target of [[QueryParser]] and the
-  * input of [[Search.topK]].
+  * input of [[Search.search]].
   *
   * Semantics (the Lucene-practical subset, recast for this engine):
   *  - `scoring` terms contribute BM25 impact (weight × idf folds into the
@@ -154,6 +154,10 @@ object QueryParser {
     if (raw == null) throw ParseException("null query")
     ParsedQueryBuilder.build(queryId, lex(raw), analyzer)
   }
+
+  /** A batch of (queryId, raw query string) pairs, parsed in order. */
+  def parseAll(raw: Seq[(Int, String)], analyzer: TokenizerStrategy): Seq[ParsedQuery] =
+    raw.map { case (qid, s) => parse(qid, s, analyzer) }
 
   /** One lexed clause: (op, isPhrase, body, slop) with op ∈ {' ', '+', '-'};
     * slop is the `~N` suffix of a quoted segment (0 = exact adjacency). */

@@ -36,11 +36,10 @@ object Rescore {
   def topK(index: IndexHandle, fixtures: Seq[(Int, String)],
       analyzer: TokenizerStrategy, k: Int, window: Int = 20,
       beta: Double = 2.0): Map[Int, Array[(Double, Long)]] = {
-    def r6(s: Double) = BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val parsed = fixtures.map { case (qid, s) => QueryParser.parse(qid, s, analyzer) }
+    val parsed = QueryParser.parseAll(fixtures, analyzer)
     val fetch = 2 * window
     val base: Map[Int, Seq[(Long, Double)]] =
-      Search.topKRaw(index, fixtures, fetch, analyzer).map { case (qid, arr) =>
+      Search.search(index, parsed, Wand.Ranked(fetch)).map { case (qid, arr) =>
         qid -> Search.windowByRoundedKey(arr, fetch, window, s"query $qid rescore")
       }
     // consecutive scoring-term bigrams, deduped (the oracle derives the
@@ -84,7 +83,7 @@ object Rescore {
           }).getOrElse(false)
         }
         (s + beta * n, d)
-      }.sortBy { case (fs, d) => (-r6(fs), d) }.take(k).toArray
+      }.sortBy { case (fs, d) => (-Search.halfUp(fs, 6), d) }.take(k).toArray
       qid -> rescored
     }
   }

@@ -41,8 +41,9 @@ object Significant {
     val spark = index.spark
     import spark.implicits._
     val fetch = 2 * window
+    val parsed = QueryParser.parseAll(fixtures, analyzer)
     val base: Map[Int, Seq[Long]] =
-      Search.topKRaw(index, fixtures, fetch, analyzer).map { case (qid, arr) =>
+      Search.search(index, parsed, Wand.Ranked(fetch)).map { case (qid, arr) =>
         qid -> Search.windowByRoundedKey(arr, fetch, window,
           s"query $qid sample").map(_._1)
       }

@@ -199,62 +199,34 @@ final case class IndexHandle(spark: SparkSession, dir: String, manifest: IndexMa
   lazy val dictMap: Map[String, TermEntry] =
     dictionary.collect().map(e => e.term -> e).toMap
 
-  /** Wildcard expansion: every dictionary term with `prefix`, ascending —
-    * a prefix RANGE scan (the StartsWith predicate pushes to the parquet
-    * dictionary, same plan as autocomplete), so one keystroke's expansion
-    * touches only its term range even at a 100M-term vocabulary. More than
-    * `max` matches is a LOUD error (Lucene's TooManyClauses analog): a
-    * silently-truncated expansion set would make scoring depend on scan
-    * order. Deletes never shrink the dictionary (tombstones are doc-level),
-    * so expansion over a deleted corpus may include df-stale terms — their
-    * cursors simply find no live docs, exactly like any stale df. */
-  def expandPrefix(prefix: String, max: Int): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    require(prefix.nonEmpty, "empty wildcard prefix")
-    val hits = dictionary.filter(col("term").startsWith(prefix))
-      .select("term").limit(max + 1).as[String].collect()
-    if (hits.length > max)
-      throw new IllegalArgumentException(
-        s"wildcard '$prefix*' expands to more than $max terms — narrow the prefix or raise maxExpansions")
-    hits.sorted.toSeq
-  }
-
   /** Wildcard expansion for a whole BATCH of prefixes in ONE dictionary
-    * scan (the per-clause [[expandPrefix]] pays one Spark job per prefix;
-    * a 12-clause batch was 12 jobs of pure overhead at fixture scale).
-    * The OR-of-StartsWith predicate still pushes to the parquet dictionary
-    * scan, so the scan touches only the prefixes' term ranges. Expansion
-    * results are IDENTICAL per prefix (same terms, same loud cap). The
-    * collect is bounded by `|prefixes| · (max+1)` rows: if the limit is
-    * hit, some prefix must exceed `max` (pigeonhole), and the per-prefix
-    * path re-runs to attribute the loud error precisely. */
+    * scan: prefix → every dictionary term with it, ascending. The
+    * OR-of-StartsWith predicate pushes to the parquet dictionary scan (the
+    * autocomplete plan), so the scan touches only the prefixes' term
+    * ranges even at a 100M-term vocabulary. More than `max` matches under
+    * any prefix is a LOUD error (Lucene's TooManyClauses analog): a
+    * silently-truncated expansion set would make scoring depend on scan
+    * order. The collect is bounded by `|prefixes| · (max+1)` terms, each
+    * under at least one prefix; a collect that hits that bound holds more
+    * than `max` terms under some prefix (pigeonhole), so the cap check
+    * throws for it.
+    * Deletes never shrink the dictionary (tombstones are doc-level), so
+    * expansion over a deleted corpus may include df-stale terms — their
+    * cursors simply find no live docs, exactly like any stale df. */
   def expandPrefixes(prefixes: Seq[String], max: Int): Map[String, Seq[String]] = {
     import org.apache.spark.sql.functions.col
     val ps = prefixes.distinct
     if (ps.isEmpty) return Map.empty
     ps.foreach(p => require(p.nonEmpty, "empty wildcard prefix"))
-    if (ps.lengthCompare(1) == 0) return Map(ps.head -> expandPrefix(ps.head, max))
-    val pred = ps.map(p => col("term").startsWith(p)).reduce(_ || _)
-    val cap = ps.length * (max + 1)
-    val hits = dictionary.filter(pred)
-      .select("term").as[String]
-      .flatMap(t => ps.iterator.filter(t.startsWith(_)).map(p => (p, t)))
-      .limit(cap).collect()
-    if (hits.length >= cap) {
-      // someone exceeds the cap — re-derive per prefix for the precise error
-      ps.foreach(p => expandPrefix(p, max))
-    }
-    val byPrefix = hits.groupBy(_._1)
-    val out = ps.map { p =>
-      p -> byPrefix.getOrElse(p, Array.empty[(String, String)])
-        .map(_._2).distinct.sorted.toSeq
-    }.toMap
-    out.foreach { case (p, terms) =>
+    val hits = dictionary.filter(ps.map(p => col("term").startsWith(p)).reduce(_ || _))
+      .select("term").as[String].limit(ps.length * (max + 1)).collect().sorted
+    ps.map { p =>
+      val terms = hits.filter(_.startsWith(p)).toSeq
       if (terms.length > max)
         throw new IllegalArgumentException(
           s"wildcard '$p*' expands to more than $max terms — narrow the prefix or raise maxExpansions")
-    }
-    out
+      p -> terms
+    }.toMap
   }
 
   /** Fuzzy expansion for a whole BATCH of needles in one job: needle →
@@ -266,7 +238,7 @@ final case class IndexHandle(spark: SparkSession, dir: String, manifest: IndexMa
     * (deletion/insertion/substitution all share a deletion key), verified
     * exactly by the built-in levenshtein. One vocabulary-linear pass per
     * BATCH, not per clause — the reason this takes Seq. Any needle
-    * expanding past `max` is a loud error ([[expandPrefix]]'s cap
+    * expanding past `max` is a loud error ([[expandPrefixes]]' cap
     * discipline). */
   def expandFuzzy(needles: Seq[String], maxExp: Int): Map[String, Seq[String]] = {
     import org.apache.spark.sql.functions.{array, array_distinct, broadcast,
@@ -843,24 +815,59 @@ object Wand {
   /** How a [[Ranked]] pass orders its hits. */
   sealed trait Order
 
-  /** (score desc, docId asc). `after` holds per-query search_after
-    * cursors ([[topKAfter]]); `boost` is a function score: the boost
-    * Column and the caller-asserted bound on its values ([[topKBoosted]]). */
+  /** (score desc, docId asc).
+    *
+    * `after` holds per-query search_after cursors — DEEP PAGINATION: the
+    * next k docs STRICTLY after a query's `(score, docId)` cursor in the
+    * global ranking, page N+1 given page N's last row, exactly, without
+    * re-materializing pages 1..N. Stateless (the cursor IS the state, like
+    * Elasticsearch's search_after vs scroll contexts), so it composes with
+    * index appends only in the same snapshot — page against one `loadAt`
+    * snapshot for a stable ranking. Scores are deterministic doubles (fixed
+    * summation order), so a cursor taken from one run is exact in the next.
+    * The cutoff is one-sided-high and cannot interact with WAND/block-max
+    * pruning; before-cursor docs re-pay exact evaluation and are rejected
+    * at the heap. Queries absent from `after` get their first page.
+    *
+    * `boost` is a FUNCTION SCORE (doc-value boost): score' = boost(doc) ×
+    * BM25(query, doc), where the Column is any expression over the docstats
+    * row (recency, a quality signal, pagerank — Lucene's FunctionScoreQuery
+    * in multiply mode) and the Double the caller-asserted global bound on
+    * its values (validated per doc, loudly). Pruning stays EXACT: every
+    * term upper bound and block max scales by that bound, so the cost of a
+    * wide boost spread is weaker pruning, never a wrong ranking. Single
+    * field only. */
   final case class ByScore(after: Map[Int, (Double, Long)] = Map.empty,
       boost: Option[(Column, Double)] = None) extends Order {
     boost.foreach { case (_, mb) =>
       require(mb > 0.0 && !mb.isInfinite, s"maxBoost must be finite positive, got $mb") }
   }
 
-  /** One hit per group of `key`, the k best groups ranked by their best
-    * docs ([[topKCollapsed]]). */
+  /** COLLAPSED ranking: one result per GROUP of `key` (any Column over the
+    * docstats row, e.g. a host extracted from url) — the best-scoring doc
+    * of each of the k best groups, ranked by their bests; the "field
+    * collapse" / site-dedup of a web SERP. Exact by a two-level argument:
+    * bucket-locally the kth-best group-best is a sound WAND threshold (a
+    * doc scoring ≤ θ either can't improve its group or is beaten by k
+    * groups — [[CollapseTopK]]), and a group in the GLOBAL top-k has its
+    * best doc inside some bucket's local top-k group-bests. A collapsed
+    * ranking has no stable per-doc cursor, so it carries none. */
   final case class Collapse(key: Column) extends Order
 
   /** Exact top-k (score, docId) per query, ranked (score desc, docId asc)
-    * or collapsed. `boundKey` names the block metadata entry of a tiered
-    * approximate pass ([[topKApprox]]). */
+    * or collapsed.
+    *
+    * `boundKey` makes the pass a TIERED approximate one: block pruning
+    * bounds derive from the named E6 metadata entry (e.g.
+    * [[graft.index.TfQuantileComputer.TfP90Key]]) instead of maxTf — an
+    * UNSAFE (quantile) bound, so high-tf postings in blocks whose quantile
+    * bound sits under the threshold can be missed. The trade is deliberate
+    * and measured (PruneSpec: evals saved vs recall); blocks without the
+    * key fall back to the exact maxTf bound, so an index built without the
+    * computer degrades to exact, never to wrong-er. */
   final case class Ranked(k: Int, order: Order = ByScore(),
       override val boundKey: Option[String] = None) extends Mode[Array[(Double, Long)]] {
+    require(k > 0, s"Ranked requires k > 0, got $k")
     private[query] def slots: Seq[Column] = order match {
       case ByScore(_, boost) => boost.map(_._1).toSeq
       case Collapse(key)     => Seq(key)
@@ -1103,108 +1110,12 @@ object Wand {
     v
   }
 
-  /** Distributed top-k for a batch of queries. Returns exact (score, docId)
-    * per query, ranked (score desc, docId asc), up to k rows each. */
-  def topK(index: IndexHandle, queries: Seq[QuerySpec], k: Int): Map[Int, Array[(Double, Long)]] =
-    topK(index, queries, k, None)
-
+  /** Plain exact BM25 top-k for a batch of queries over one index:
+    * (score, docId) per query, ranked (score desc, docId asc), up to k rows
+    * each — [[search]] in `Ranked(k)`. */
   def topK(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
-      metrics: Option[WandMetrics]): Map[Int, Array[(Double, Long)]] =
+      metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
     search(Seq(index -> 1.0), queries, Ranked(k), metrics = metrics)
-
-  /** FILTERED exact top-k: BM25 over only the documents satisfying a
-    * metadata predicate (a Column over the docstats row: docId, url,
-    * docLen) — the "site:/date-range/lang filter" of a search engine.
-    * Scoring statistics (idf, avgdl, N) stay CORPUS-global (the standard
-    * semantics: a filter narrows the result set, it does not re-weight
-    * terms), and the result is exact among matching docs: non-matching
-    * docs ride into the bucket cogroup as docLen = -1 skip sentinels —
-    * the same mechanism as tombstones, ONE when() over the already
-    * bucket-pruned docstats scan, no extra pass, no extra shuffle. At
-    * 10^12 docs the marginal cost over unfiltered WAND is one codegen'd
-    * predicate per candidate-bucket norm row. Upper bounds still include
-    * filtered docs (less pruning, never wrong); the stats-only threshold
-    * seed is UNSOUND under a filter (its guaranteed docs may be filtered
-    * out) and is disabled. */
-  def topKFiltered(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
-      filter: org.apache.spark.sql.Column,
-      metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
-    search(Seq(index -> 1.0), queries, Ranked(k), docFilter = Some(filter), metrics = metrics)
-
-  /** COLLAPSED exact top-k: one result per GROUP — the best-scoring doc
-    * of each of the k best groups, where a doc's group is `collapseKey`
-    * (any Column over the docstats row: docId, url, docLen — e.g. a host
-    * extracted from url), ranked by their bests. The "field collapse" /
-    * site-dedup of a web SERP. Exact by a two-level argument: bucket-
-    * locally the kth-best group-best is a sound WAND threshold (a doc
-    * scoring ≤ θ either can't improve its group or is beaten by k groups —
-    * [[CollapseTopK]]), and a group in the GLOBAL top-k has its best doc
-    * inside some bucket's local top-k group-bests (k better groups locally
-    * would imply k better groups globally). Cost shape over [[topK]]: the
-    * collapse key is ONE codegen'd expression on the already bucket-pruned
-    * docstats scan, riding a slot of the docstats row into the cogroup
-    * — no extra pass, no extra shuffle; candidates carry the group string
-    * to the bounded group-aware reduce. The stats-only threshold seed is
-    * UNSOUND under collapse (a term's df ≥ k guaranteed docs may collapse
-    * into fewer than k groups) and is disabled. Composes with filters and
-    * constraints; not with search_after (a collapsed ranking has no stable
-    * per-doc cursor — enforced loudly). */
-  def topKCollapsed(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
-      collapseKey: org.apache.spark.sql.Column,
-      metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
-    search(Seq(index -> 1.0), queries, Ranked(k, Collapse(collapseKey)), metrics = metrics)
-
-  /** FUNCTION SCORE (doc-value boost): exact top-k under
-    * score' = boost(doc) × BM25(query, doc), where `boost` is any Column
-    * over the docstats row (recency from an ingest timestamp, a quality
-    * signal, pagerank — Lucene's FunctionScoreQuery in multiply mode) and
-    * `maxBoost` is the caller-asserted global bound on its values
-    * (validated per doc, loudly). Pruning stays EXACT: every term upper
-    * bound and block max scales by maxBoost, so no boosted doc can hide
-    * above a pruned bound — the cost of a wide boost spread is weaker
-    * pruning, never a wrong ranking. The boost value rides a slot of the
-    * docstats row into the bucket cogroup (one codegen'd expression on the
-    * bucket-pruned scan — no extra pass or shuffle); the stats-only
-    * threshold seed disables (per-doc boosts void the df ≥ k bound).
-    * Composes with docFilter; excludes collapse/count modes. */
-  def topKBoosted(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
-      boost: org.apache.spark.sql.Column, maxBoost: Double,
-      metrics: Option[WandMetrics] = None,
-      docFilter: Option[org.apache.spark.sql.Column] = None): Map[Int, Array[(Double, Long)]] =
-    search(Seq(index -> 1.0), queries, Ranked(k, ByScore(boost = Some((boost, maxBoost)))),
-      docFilter, metrics = metrics)
-
-  /** DEEP PAGINATION (search_after): the next k docs STRICTLY after each
-    * query's `(score, docId)` cursor in the global (score desc, docId asc)
-    * ranking — page N+1 given page N's last row, exactly, without
-    * re-materializing pages 1..N. Stateless (the cursor IS the state, like
-    * Elasticsearch's search_after vs scroll contexts), so it composes with
-    * index appends only in the same snapshot — page against one `loadAt`
-    * snapshot for a stable ranking. Scores are deterministic doubles
-    * (fixed summation order), so a cursor taken from one run is exact in
-    * the next. Cost shape: identical to [[topK]] — the cutoff is
-    * one-sided-high and cannot interact with WAND/block-max pruning;
-    * before-cursor docs re-pay exact evaluation and are rejected at the
-    * heap (bounded by the preceding pages' per-bucket result counts). The
-    * stats-only threshold seed is UNSOUND under a cursor (its guaranteed
-    * docs may rank before it) and disables per cursored query. Queries
-    * absent from `after` run as plain page-1 [[topK]]. */
-  def topKAfter(index: IndexHandle, queries: Seq[QuerySpec], k: Int,
-      after: Map[Int, (Double, Long)],
-      metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
-    search(Seq(index -> 1.0), queries, Ranked(k, ByScore(after)), metrics = metrics)
-
-  /** TIERED approximate top-k: identical machinery, but block pruning
-    * bounds derive from the named E6 metadata entry (e.g.
-    * [[graft.index.TfQuantileComputer.TfP90Key]]) instead of maxTf — an
-    * UNSAFE (quantile) bound, so high-tf outlier postings in blocks whose
-    * quantile bound sits under the threshold can be missed. The trade is
-    * deliberate and measured (PruneSpec: evals saved vs recall); blocks
-    * without the metadata key fall back to the exact maxTf bound, so an
-    * index built without the computer degrades to exact, never to wrong-er. */
-  def topKApprox(index: IndexHandle, queries: Seq[QuerySpec], k: Int, boundKey: String,
-      metrics: Option[WandMetrics] = None): Map[Int, Array[(Double, Long)]] =
-    search(Seq(index -> 1.0), queries, Ranked(k, boundKey = Some(boundKey)), metrics = metrics)
 
   /** FEDERATED exact top-k over DISJOINT shard indexes — search without
     * merging, the query-side dual of [[graft.index.IndexBuilder.merge]].
@@ -1214,31 +1125,18 @@ object Wand {
     * the shards' LIVE dictionaries — so a federated query ranks exactly
     * like the merged index would (same idf/avgdl doubles; per-doc addend
     * order is shard-local, so scores agree to rounding). Machinery: the
-    * shards enter the ONE fielded driver as weight-1.0 fields — disjoint
-    * docId spaces make each doc's cross-field sum degenerate to its own
-    * shard's BM25 — so bucket cogrouping, block-max pruning, tombstone
+    * shards enter [[search]] as weight-1.0 fields — disjoint docId spaces
+    * make each doc's cross-field sum degenerate to its own shard's BM25 —
+    * so bucket grouping, block-max pruning, tombstone and `docFilter`
     * sentinels and the bounded-heap reduce are all unchanged, and the only
     * extra cost over single-index WAND is one query-term-pruned dictionary
     * lookup per shard (driver-tiny). Reference analog: querying a corpus
     * tokenized in independent chunks without first concatenating them
     * (midi_tokenizer.py:3084-3198's per-chunk outputs). */
-  def topKSharded(shards: Seq[IndexHandle], queries: Seq[QuerySpec], k: Int,
-      metrics: Option[WandMetrics] = None,
-      collapse: Option[org.apache.spark.sql.Column] = None): Map[Int, Array[(Double, Long)]] =
-    search(shards.map(_ -> 1.0), queries, Ranked(k, collapse.fold[Order](ByScore())(Collapse)),
-      globalStats = Some(shardStats(shards, queries)), metrics = metrics)
-
-  /** Filtered federation: [[topKSharded]] restricted to documents
-    * satisfying a metadata predicate over the docstats row — global
-    * scoring statistics, shard-local evaluation, the same docLen = -1
-    * skip-sentinel mechanism as [[topKFiltered]] (stats stay corpus-global:
-    * a filter narrows the result set, it does not re-weight terms). */
-  def topKShardedFiltered(shards: Seq[IndexHandle], queries: Seq[QuerySpec], k: Int,
-      filter: org.apache.spark.sql.Column,
-      metrics: Option[WandMetrics] = None,
-      collapse: Option[org.apache.spark.sql.Column] = None): Map[Int, Array[(Double, Long)]] =
-    search(shards.map(_ -> 1.0), queries, Ranked(k, collapse.fold[Order](ByScore())(Collapse)),
-      Some(filter), globalStats = Some(shardStats(shards, queries)), metrics = metrics)
+  def topKSharded(shards: Seq[IndexHandle], queries: Seq[QuerySpec], mode: Ranked,
+      docFilter: Option[Column] = None): Map[Int, Array[(Double, Long)]] =
+    search(shards.map(_ -> 1.0), queries, mode, docFilter,
+      globalStats = Some(shardStats(shards, queries)))
 
   /** Corpus-global (nDocs, avgdl, per-term df) summed across the shards'
     * manifests and LIVE dictionaries — identical doubles to the merged
@@ -1260,17 +1158,40 @@ object Wand {
     * ranked top-k, exact count, facet counts, sort-by-key, or a whole
     * search result page (hits + total + facets, [[Serp]]) — generalized
     * over weighted FIELDS: plain BM25 is the single-field instance (weight
-    * 1.0), BM25F the multi-field one ([[Bm25f.topK]] delegates here),
-    * federated shards another ([[topKSharded]]). Per field: its own
-    * dictionary lookup, (nDocs, avgdl), docstats; each (field, term) pair
-    * becomes an independent cursor with effective idf = w_f · idf_f (BM25
-    * impact is linear in idf), so upper bounds, block-max refinement and
-    * threshold seeding compose per field with no kernel changes. Every
-    * mode shares term lookup, constraint resolution, bucket pruning and
-    * the one per-bucket body; the mode decides what each bucket emits and
-    * how the rows reduce.
+    * 1.0), federated shards another ([[topKSharded]]).
     *
-    * Two placements run that body. Before any fetch, the lookup's df and
+    * FIELDED (multi-vocabulary) BM25F is the multi-field instance — the
+    * engine analog of the reference's parallel-token-stream tokenizers:
+    * Octuple/CPWord emit MULTIPLE vocabularies over one document per
+    * timestep (tokenizations/octuple.py:173-203, cp_word.py:319-416;
+    * `is_multi_voc` midi_tokenizer.py:3691-3698). One logical document
+    * carries several fields (title/body/anchor…), each with its own
+    * sub-index ([[graft.index.FieldedIndex]]) — own dictionary, postings,
+    * norms, (nDocs, avgdl) — and the ranked score is the weighted per-field
+    * BM25 sum, score(q, d) = Σ_f w_f · Σ_t BM25_f(t, d). Per field: its
+    * own dictionary lookup, (nDocs, avgdl), docstats; each (field, term)
+    * pair becomes an independent cursor with effective idf = w_f · idf_f
+    * (BM25 impact is linear in idf), so upper bounds, block-max refinement
+    * and threshold seeding compose per field with no kernel changes. A
+    * document absent from a field (e.g. no body) simply has no cursors
+    * there. Bm25fSpec pins bit-identical doubles vs a from-the-definition
+    * scorer; `q_bm25f_topk` is the oracle row.
+    *
+    * Every mode shares term lookup, constraint resolution, bucket pruning
+    * and the one per-bucket body; the mode decides what each bucket emits
+    * and how the rows reduce.
+    *
+    * `docFilter` restricts the pass to the documents satisfying a metadata
+    * predicate (a Column over the docstats row: docId, url, docLen) — the
+    * "site:/date-range/lang filter" of a search engine. Scoring statistics
+    * (idf, avgdl, N) stay CORPUS-global (a filter narrows the result set,
+    * it does not re-weight terms), and the result is exact among matching
+    * docs: non-matching docs ride into each bucket as docLen = -1 skip
+    * sentinels — the tombstone mechanism, one codegen'd when() over the
+    * already bucket-pruned docstats scan, no extra pass. Upper bounds
+    * still include filtered docs (less pruning, never wrong).
+    *
+    * Two placements run the body. Before any fetch, the lookup's df and
     * cf bound what the pass would collect ([[collectBound]]). Within
     * `spark.sql.autoBroadcastJoinThreshold` — the size Spark itself would
     * broadcast — the DRIVER placement collects the blocks (one job), takes
@@ -1287,14 +1208,19 @@ object Wand {
     * maxDocLen_f) — the max of those minima lower-bounds the true
     * kth-best score, computed from dictionary + manifest alone (measured:
     * 92% → 1.6% exact-evals at 512-doc buckets, PruneSpec; exactness
-    * oracle-asserted with seeding on). SOUNDNESS: single-field df is LIVE
-    * under deletes (eagerly decremented), but with multiple fields a doc
-    * deleted from another sub-index still counts in this field's df — so
-    * seeding disables on tombstoned multi-field runs.
+    * oracle-asserted with seeding on). The seed is UNSOUND, and so off,
+    * under a `docFilter`, a [[Collapse]] or a [[ByScore]] boost (the
+    * guaranteed docs may be filtered out, collapse into fewer groups or
+    * score lower), and per query for a constrained query or one with a
+    * search_after cursor. SOUNDNESS under deletes: single-field df is LIVE
+    * (eagerly decremented), but with multiple fields a doc deleted from
+    * another sub-index still counts in this field's df — so seeding
+    * disables on tombstoned multi-field runs.
     *
     * Tombstoned docs ride into each bucket's docstats as docLen = -1
     * sentinels for EVERY field (a doc deleted from any sub-index is dead
-    * for the logical document); the kernel skips them before scoring. */
+    * for the logical document, and per-field live stats keep the surviving
+    * scores exact); the kernel skips them before scoring. */
   def search[R](fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec], mode: Mode[R],
       docFilter: Option[Column] = None,
       constraints: Map[Int, Constraints] = Map.empty,

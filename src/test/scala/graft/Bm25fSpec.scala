@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.Pages
-import graft.query.{Bm25, Bm25f, IndexHandle, QuerySpec}
+import graft.query.{Bm25, IndexHandle, QuerySpec, Wand}
 import graft.queries.FieldedIndexCache
 import graft.tokenize.Tokenizers
 import org.scalatest.funsuite.AnyFunSuite
@@ -99,7 +99,7 @@ class Bm25fSpec extends AnyFunSuite {
       QuerySpec(qid, Seq.fill(1 + rnd.nextInt(3))(vocab(rnd.nextInt(vocab.size))))
     }
     val queries = graft.queries.QuerySet.queries ++ random
-    assertExact(Bm25f.topK(fields, queries, 10),
+    assertExact(Wand.search(fields, queries, Wand.Ranked(10)),
       brute(fields, titleBodySplit(corpus), queries, 10), queries)
   }
 
@@ -124,7 +124,7 @@ class Bm25fSpec extends AnyFunSuite {
     val queries = Seq(
       QuerySpec(1, Seq("fox")), QuerySpec(2, Seq("dog")),
       QuerySpec(3, Seq("quick", "dog")), QuerySpec(4, Seq("body", "lazy")))
-    assertExact(Bm25f.topK(pair, queries, 10),
+    assertExact(Wand.search(pair, queries, Wand.Ranked(10)),
       brute(pair, titleBodySplit(localCorpus), queries, 10), queries)
   }
 
@@ -154,8 +154,8 @@ class Bm25fSpec extends AnyFunSuite {
     val queries = Seq(
       QuerySpec(1, Seq("fox")), QuerySpec(2, Seq("dog", "w1")),
       QuerySpec(3, Seq("t2", "e1")), QuerySpec(4, Seq("filler", "w3", "t0")))
-    val got = Bm25f.topK(deletedPair, queries, 10)
-    val want = Bm25f.topK(rebuilt, queries, 10)
+    val got = Wand.search(deletedPair, queries, Wand.Ranked(10))
+    val want = Wand.search(rebuilt, queries, Wand.Ranked(10))
     for (q <- queries) {
       val (g, w) = (got(q.queryId).toSeq, want(q.queryId).toSeq)
       assert(g.map(_._2) == w.map(_._2),
@@ -212,7 +212,7 @@ class Bm25fSpec extends AnyFunSuite {
     val queries = Seq(
       QuerySpec(1, Seq("alpha")), QuerySpec(2, Seq("beta", "gamma")),
       QuerySpec(3, Seq("tail", "words")), QuerySpec(4, Seq("alpha", "two", "tail")))
-    assertExact(Bm25f.topK(fields3, queries, 10),
+    assertExact(Wand.search(fields3, queries, Wand.Ranked(10)),
       brute(fields3, splits, queries, 10), queries)
   }
 
@@ -243,7 +243,7 @@ class Bm25fSpec extends AnyFunSuite {
     assert(titleH.postings.collect().map(_.termId).distinct.length.toLong
       == titleH.manifest.vocabSize, "uncapped title field lost terms")
     // and the loaded pair is queryable end-to-end
-    val res = Bm25f.topK(loaded, Seq(QuerySpec(1, Seq("common"))), 5)(1)
+    val res = Wand.search(loaded, Seq(QuerySpec(1, Seq("common"))), Wand.Ranked(5))(1)
     assert(res.nonEmpty, "fielded query over the API-built pair returned nothing")
 
     // re-build over the committed dir: identical spec = idempotent no-op;
@@ -281,7 +281,7 @@ class Bm25fSpec extends AnyFunSuite {
     FieldedIndex.append(spark, delta, dir, FieldedIndexCache.fieldSpecs, batchId = Some(1L))
     val appended = FieldedIndex.load(spark, dir)
     val queries = graft.queries.QuerySet.queries
-    assertExact(Bm25f.topK(appended, queries, 10),
+    assertExact(Wand.search(appended, queries, Wand.Ranked(10)),
       brute(appended, titleBodySplit(corpus), queries, 10), queries)
 
     // committed-batch replay: every sub-index cursor already advanced
@@ -314,7 +314,7 @@ class Bm25fSpec extends AnyFunSuite {
       Seq(FieldedIndexCache.TitleWeight, FieldedIndexCache.BodyWeight),
       "fielded spec must be merge-invariant")
     val queries = graft.queries.QuerySet.queries
-    assertExact(Bm25f.topK(merged, queries, 10),
+    assertExact(Wand.search(merged, queries, Wand.Ranked(10)),
       brute(merged, titleBodySplit(corpus), queries, 10), queries)
 
     // a pair with a DIFFERENT committed spec (weights) must be refused

@@ -168,7 +168,7 @@ class MergeSpec extends AnyFunSuite {
     def top10(res: Map[Int, Array[(Double, Long)]], qid: Int): Seq[(Double, Long)] =
       res(qid).toSeq.sortBy { case (s, d) => (-r6(s), d) }.take(10)
     def compare(shards: Seq[graft.query.IndexHandle], mergedDir: String): Unit = {
-      val fed = Wand.topKSharded(shards, QuerySet.queries, 40)
+      val fed = Wand.topKSharded(shards, QuerySet.queries, Wand.Ranked(40))
       val want = Wand.topK(IndexReader.load(spark, mergedDir), QuerySet.queries, 40)
       QuerySet.queries.foreach { q =>
         val (g, w) = (top10(fed, q.queryId), top10(want, q.queryId))
@@ -191,8 +191,8 @@ class MergeSpec extends AnyFunSuite {
     // filtered federation == filtered single-index WAND over the merged
     // copy (global stats, metadata predicate narrows the result set only)
     val pred = org.apache.spark.sql.functions.col("docId") % 3 === 0
-    val fedF = Wand.topKShardedFiltered(shards, QuerySet.queries, 40, pred)
-    val wantF = Wand.topKFiltered(IndexReader.load(spark, low2), QuerySet.queries, 40, pred)
+    val fedF = Wand.topKSharded(shards, QuerySet.queries, Wand.Ranked(40), Some(pred))
+    val wantF = Wand.search(Seq(IndexReader.load(spark, low2) -> 1.0), QuerySet.queries, Wand.Ranked(40), Some(pred))
     QuerySet.queries.foreach { q =>
       val (g, w) = (top10(fedF, q.queryId), top10(wantF, q.queryId))
       assert(g.map(_._2) == w.map(_._2), s"filtered q=${q.terms}: ${g.map(_._2)} vs ${w.map(_._2)}")
@@ -206,8 +206,8 @@ class MergeSpec extends AnyFunSuite {
     // == the merged index's collapsed ranking (the group key is computed
     // per shard's docstats; group-bests merge in the group-aware reduce)
     val key = org.apache.spark.sql.functions.col("docId") % 7
-    val fedC = Wand.topKSharded(shards, QuerySet.queries, 10, collapse = Some(key))
-    val wantC = Wand.topKCollapsed(IndexReader.load(spark, low2), QuerySet.queries, 10, key)
+    val fedC = Wand.topKSharded(shards, QuerySet.queries, Wand.Ranked(10, Wand.Collapse(key)))
+    val wantC = Wand.search(Seq(IndexReader.load(spark, low2) -> 1.0), QuerySet.queries, Wand.Ranked(10, Wand.Collapse(key)))
     QuerySet.queries.foreach { q =>
       val (g, w) = (fedC(q.queryId).toSeq, wantC(q.queryId).toSeq)
       assert(g.map(_._2) == w.map(_._2),

@@ -5,9 +5,9 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The [[Overlap]] no-orphans contract that overlapped lifecycle writes and
-  * [[graft.query.Search]]'s concurrent signature passes rely on: no result and no
-  * error leaves `overlap` / `all` while a sibling is still running. Each
+/** The [[Overlap]] no-orphans contract that overlapped lifecycle writes rely
+  * on: no result and no error leaves `overlap` / `all` while a sibling is
+  * still running. Each
   * case holds the background inside its body until the foreground has
   * started failing, so the background is provably still running when the
   * failure happens. */

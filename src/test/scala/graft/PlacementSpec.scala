@@ -1,5 +1,6 @@
 package graft
 
+import graft.JobLog.jobs
 import graft.index._
 import graft.query._
 import graft.tokenize.Tokenizers
@@ -57,31 +58,6 @@ class PlacementSpec extends AnyFunSuite {
     val old = spark.conf.get(Threshold)
     spark.conf.set(Threshold, v)
     try f finally spark.conf.set(Threshold, old)
-  }
-
-  /** The number of Spark jobs submitted while `f` runs; a marker job is
-    * submitted last and awaited, so the asynchronous listener bus has
-    * delivered every earlier job by the time the count is read. */
-  private def jobs[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val marker = "placement-spec-listener-marker"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val sawMarker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          sawMarker.countDown()
-        else { n.incrementAndGet(); () }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      sc.setJobDescription(marker)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      assert(sawMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (r, n.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   /** One pass's answers (arrays as Seqs, so they compare by value), its

@@ -86,7 +86,7 @@ class SearchSpec extends AnyFunSuite {
   }
 
   private def assertIdentical(raw: Seq[(Int, String)], k: Int): Unit = {
-    val got = Search.topKRaw(handle, raw, k, analyzer)
+    val got = Search.search(handle, QueryParser.parseAll(raw, analyzer), Wand.Ranked(k))
     raw.foreach { case (qid, s) =>
       // expand is a no-op on wildcard-free queries; the brute-force side
       // always checks against the dictionary-resolved form
@@ -197,7 +197,7 @@ class SearchSpec extends AnyFunSuite {
     val slopQ = exactQ + "~2"
     assertIdentical(Seq(1 -> exactQ, 2 -> slopQ, 3 -> s"-$slopQ $a $b"), 40)
     // engine-side discrimination: the slop query admits the extra docs
-    val got = Search.topKRaw(handle, Seq(1 -> exactQ, 2 -> slopQ), 1000, analyzer)
+    val got = Search.search(handle, QueryParser.parseAll(Seq(1 -> exactQ, 2 -> slopQ), analyzer), Wand.Ranked(1000))
     assert(got(1).map(_._2).toSet == exact && got(2).map(_._2).toSet == slop2)
   }
 
@@ -232,16 +232,16 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("pure scoring query through Search == Wand.topK bit-for-bit") {
-    val got = Search.topKRaw(handle, Seq(1 -> "merge join fast"), 10, analyzer)
+    val got = Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge join fast"), analyzer), Wand.Ranked(10))
     val plain = Wand.topK(handle, Seq(QuerySpec(1, Seq("merge", "join", "fast"))), 10)
     assert(got(1).toSeq == plain(1).toSeq)
   }
 
   test("OOV discipline: required/phrase OOV empties; excluded OOV is a no-op") {
-    val got = Search.topKRaw(handle,
+    val got = Search.search(handle, QueryParser.parseAll(
       Seq(1 -> "+zzznotaterm spark", 2 -> "\"spark zzznotaterm\"",
           3 -> "spark -zzznotaterm", 4 -> "spark",
-          5 -> "spark -\"zzznotaterm merge\""), 10, analyzer)
+          5 -> "spark -\"zzznotaterm merge\""), analyzer), Wand.Ranked(10))
     assert(got(1).isEmpty, "OOV required must empty the query")
     assert(got(2).isEmpty, "OOV phrase term must empty the query")
     assert(got(3).toSeq == got(4).toSeq, "OOV excluded must be a no-op")
@@ -264,7 +264,7 @@ class SearchSpec extends AnyFunSuite {
     assert(adj.nonEmpty && coNonAdj.nonEmpty, s"weak fixture for ($a,$b)")
     val raw = Seq(1 -> s"""$a $b -"$a $b"""")
     assertIdentical(raw, 40)
-    val got = Search.topKRaw(handle, raw, 1000, analyzer)(1).map(_._2).toSet
+    val got = Search.search(handle, QueryParser.parseAll(raw, analyzer), Wand.Ranked(1000))(1).map(_._2).toSet
     assert(got.intersect(adj).isEmpty, "no adjacent doc may survive")
     assert(coNonAdj.subsetOf(got), "every non-adjacent co-occurrence must survive")
   }
@@ -279,7 +279,7 @@ class SearchSpec extends AnyFunSuite {
       4 -> "url:2/1 -url:/19 merge join",
       5 -> "url:zzz-no-such-url merge join")
     assertIdentical(raw, 10)
-    val got = Search.topKRaw(handle, raw, 10, analyzer)
+    val got = Search.search(handle, QueryParser.parseAll(raw, analyzer), Wand.Ranked(10))
     val alone = Wand.topK(handle, Seq(QuerySpec(9, Seq("merge", "join"))), 10)
     assert(got(1).toSeq == alone(9).toSeq, "filterless query in a mixed batch is unperturbed")
     assert(got(2).forall { case (_, d) => urlOf(d).contains("2/1") })
@@ -290,8 +290,8 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("mixed batch: constrained queries do not perturb unconstrained ones") {
-    val mixed = Search.topKRaw(handle,
-      Seq(1 -> "merge join", 2 -> "+key merge -batch", 3 -> "\"merge join\""), 10, analyzer)
+    val mixed = Search.search(handle, QueryParser.parseAll(
+      Seq(1 -> "merge join", 2 -> "+key merge -batch", 3 -> "\"merge join\""), analyzer), Wand.Ranked(10))
     val alone = Wand.topK(handle, Seq(QuerySpec(1, Seq("merge", "join"))), 10)
     assert(mixed(1).toSeq == alone(1).toSeq)
   }
@@ -362,7 +362,7 @@ class SearchSpec extends AnyFunSuite {
     var live = parsed
     var rounds = 0
     while (live.nonEmpty && rounds < maxRounds) {
-      val res = Search.page(handle, live, pageSize, after)
+      val res = Search.search(handle, live, Wand.Ranked(pageSize, Wand.ByScore(after)))
       live.foreach(q => acc(q.queryId) ++= res(q.queryId))
       live = live.filter(q => res(q.queryId).length == pageSize)
       after = live.map(q => q.queryId -> acc(q.queryId).last).toMap
@@ -378,7 +378,7 @@ class SearchSpec extends AnyFunSuite {
           s"full ranking ${all.length}, cap ${pageSize * maxRounds}")
       // a page past the very end is empty
       if (all.nonEmpty && all.length <= pageSize * maxRounds) {
-        val end = Search.page(handle, Seq(q), pageSize, Map(q.queryId -> all.last))
+        val end = Search.search(handle, Seq(q), Wand.Ranked(pageSize, Wand.ByScore(Map(q.queryId -> all.last))))
         assert(end(q.queryId).isEmpty, s"[${q.queryId}] page past the end must be empty")
       }
     }
@@ -388,59 +388,59 @@ class SearchSpec extends AnyFunSuite {
     assert(all8.nonEmpty, "weak fixture: no doubled-batch docs")
     var walked = Vector.empty[(Double, Long)]
     var cursor = Map.empty[Int, (Double, Long)]
-    var page = Search.page(handle, Seq(q8), 3, cursor)(80)
+    var page = Search.search(handle, Seq(q8), Wand.Ranked(3, Wand.ByScore(cursor)))(80)
     while (page.nonEmpty) {
       walked ++= page
       cursor = Map(80 -> walked.last)
-      page = Search.page(handle, Seq(q8), 3, cursor)(80)
+      page = Search.search(handle, Seq(q8), Wand.Ranked(3, Wand.ByScore(cursor)))(80)
     }
     assert(walked.toSeq == all8.toSeq, "exhaustive 3-row page walk != full constrained ranking")
   }
 
-  test("search_after: plain Wand.topKAfter slices match the brute-force ranking") {
+  test("search_after: plain ByScore cursor slices match the brute-force ranking") {
     QuerySet.queries.take(5).foreach { q =>
       val all = oracle.topK(q.terms, Int.MaxValue)
       if (all.length > 3) {
         val cursor = all(2) // cursor on rank 3
-        val got = Wand.topKAfter(handle, Seq(q), 10, Map(q.queryId -> cursor))
+        val got = Wand.search(Seq(handle -> 1.0), Seq(q), Wand.Ranked(10, Wand.ByScore(Map(q.queryId -> cursor))))
         assert(got(q.queryId).toSeq == all.slice(3, 13).toSeq, s"q=${q.terms}")
       }
     }
     // a query NOT in the after map runs as plain page 1
     val q0 = QuerySet.queries.head
-    val got = Wand.topKAfter(handle, Seq(q0), 10, Map.empty)
+    val got = Wand.search(Seq(handle -> 1.0), Seq(q0), Wand.Ranked(10, Wand.ByScore(Map.empty)))
     assert(got(q0.queryId).toSeq == Wand.topK(handle, Seq(q0), 10)(q0.queryId).toSeq)
   }
 
   test("explain: per-term breakdown sums bit-identically to the ranked score") {
     val raw = Seq(1 -> "merge join fast", 2 -> "window batch^2.5 stream^0.5",
       3 -> "+key merge -batch \"merge join\"")
-    val got = Search.topKRaw(handle, raw, 3, analyzer)
+    val got = Search.search(handle, QueryParser.parseAll(raw, analyzer), Wand.Ranked(3))
     raw.foreach { case (qid, s) =>
       val q = QueryParser.parse(qid, s, analyzer)
       got(qid).foreach { case (score, doc) =>
-        val rows = Search.explain(handle, q, doc).collect()
+        val rows = Search.explainAll(handle, Seq(q -> doc))((qid, doc))
         assert(rows.nonEmpty, s"[$s] no explain rows for doc $doc")
         // ascending-termId summation order == the kernel's
-        val byTid = rows.sortBy(r => handle.dictMap(r.getString(0)).termId)
+        val byTid = rows.sortBy(r => handle.dictMap(r._1).termId)
         var sum = 0.0
-        byTid.foreach(r => sum += r.getDouble(6))
+        byTid.foreach(r => sum += r._7)
         assert(sum == score, s"[$s] doc $doc: explain sum $sum != score $score (EXACT)")
         // each row's impact recomputes from its own published components
         rows.foreach { r =>
-          val w = r.getDouble(1); val tf = r.getInt(2); val idf = r.getDouble(4)
-          val dl = r.getInt(5)
+          val w = r._2; val tf = r._3; val idf = r._5
+          val dl = r._6
           val imp = graft.query.Bm25.scoreWithIdf(w * idf, tf, dl, handle.manifest.avgdl)
-          assert(imp == r.getDouble(6), s"[$s] ${r.getString(0)}: component mismatch")
-          assert(graft.query.Bm25.idf(handle.manifest.nDocs, r.getLong(3)) == idf)
+          assert(imp == r._7, s"[$s] ${r._1}: component mismatch")
+          assert(graft.query.Bm25.idf(handle.manifest.nDocs, r._4) == idf)
         }
       }
     }
     // an absent / OOV-everything explain is empty, not an error
     val qOov = QueryParser.parse(9, "zzznotaterm", analyzer)
-    assert(Search.explain(handle, qOov, 0L).count() == 0)
+    assert(Search.explainAll(handle, Seq(qOov -> 0L))((9, 0L)).isEmpty)
     val q1 = QueryParser.parse(10, "merge", analyzer)
-    assert(Search.explain(handle, q1, Long.MaxValue / 2).count() == 0)
+    assert(Search.explainAll(handle, Seq(q1 -> Long.MaxValue / 2))((10, Long.MaxValue / 2)).isEmpty)
   }
 
   // ------------------------------------------------------------- wildcards
@@ -506,12 +506,12 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("expand: TooManyClauses cap is a loud error, not a truncation") {
-    assertThrows[IllegalArgumentException](handle.expandPrefix("s", 2))
+    assertThrows[IllegalArgumentException](handle.expandPrefixes(Seq("s"), 2))
     assertThrows[IllegalArgumentException](
       Search.expand(handle, QueryParser.parse(1, "s*", analyzer), maxExpansions = 2))
     // at the exact cap it expands in full
     val n = handle.dictMap.keys.count(_.startsWith("s"))
-    assert(handle.expandPrefix("s", n).length == n)
+    assert(handle.expandPrefixes(Seq("s"), n)("s").length == n)
   }
 
   test("wildcard retrieval: rank- and score-identical to the expanded brute force") {
@@ -530,10 +530,10 @@ class SearchSpec extends AnyFunSuite {
       12 -> "s* url:2/1"         // wildcard + metadata filter
     ), 10)
     // zero-expansion identities against the plain query, exact arrays
-    val plain = Search.topKRaw(handle, Seq(1 -> "merge"), 10, analyzer)(1)
-    assert(Search.topKRaw(handle, Seq(1 -> "zz* merge"), 10, analyzer)(1).toSeq == plain.toSeq)
-    assert(Search.topKRaw(handle, Seq(1 -> "merge -zz*"), 10, analyzer)(1).toSeq == plain.toSeq)
-    assert(Search.topKRaw(handle, Seq(1 -> "+zz* merge"), 10, analyzer)(1).isEmpty)
+    val plain = Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge"), analyzer), Wand.Ranked(10))(1)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "zz* merge"), analyzer), Wand.Ranked(10))(1).toSeq == plain.toSeq)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge -zz*"), analyzer), Wand.Ranked(10))(1).toSeq == plain.toSeq)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "+zz* merge"), analyzer), Wand.Ranked(10))(1).isEmpty)
   }
 
   // ---------------------------------------------------------------- fuzzy
@@ -607,13 +607,13 @@ class SearchSpec extends AnyFunSuite {
       13 -> "s* joi~1"              // wildcard × fuzzy in one query
     ), 10)
     // zero-expansion identities, exact arrays
-    val plain = Search.topKRaw(handle, Seq(1 -> "merge"), 10, analyzer)(1)
-    assert(Search.topKRaw(handle, Seq(1 -> "zzz~1 merge"), 10, analyzer)(1).toSeq == plain.toSeq)
-    assert(Search.topKRaw(handle, Seq(1 -> "merge -zzz~1"), 10, analyzer)(1).toSeq == plain.toSeq)
-    assert(Search.topKRaw(handle, Seq(1 -> "+zzz~1 merge"), 10, analyzer)(1).isEmpty)
+    val plain = Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge"), analyzer), Wand.Ranked(10))(1)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "zzz~1 merge"), analyzer), Wand.Ranked(10))(1).toSeq == plain.toSeq)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge -zzz~1"), analyzer), Wand.Ranked(10))(1).toSeq == plain.toSeq)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "+zzz~1 merge"), analyzer), Wand.Ranked(10))(1).isEmpty)
     // and the distance-0 identity: an in-vocab single-member neighborhood
     // behaves as the plain term
-    val viaFuzzy = Search.topKRaw(handle, Seq(1 -> "mergee~1"), 10, analyzer)(1)
+    val viaFuzzy = Search.search(handle, QueryParser.parseAll(Seq(1 -> "mergee~1"), analyzer), Wand.Ranked(10))(1)
     assert(viaFuzzy.toSeq == plain.toSeq) // mergee's only neighbor IS merge
   }
 
@@ -655,12 +655,12 @@ class SearchSpec extends AnyFunSuite {
   test("|-group retrieval: rank- and score-identical to the constrained brute force") {
     assertIdentical(QuerySet.orGroup, 10)
     // all-OOV disciplines against the plain query, exact arrays
-    val plain = Search.topKRaw(handle, Seq(1 -> "merge"), 10, analyzer)(1)
-    assert(Search.topKRaw(handle, Seq(1 -> "merge -zzzoov|zzzoow"), 10, analyzer)(1).toSeq == plain.toSeq)
-    assert(Search.topKRaw(handle, Seq(1 -> "+zzzoov|zzzoow merge"), 10, analyzer)(1).isEmpty)
+    val plain = Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge"), analyzer), Wand.Ranked(10))(1)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge -zzzoov|zzzoow"), analyzer), Wand.Ranked(10))(1).toSeq == plain.toSeq)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "+zzzoov|zzzoow merge"), analyzer), Wand.Ranked(10))(1).isEmpty)
     // partial-OOV required group degrades to the in-vocab member's constraint
-    val viaGroup = Search.topKRaw(handle, Seq(1 -> "+zzzoov|merge join"), 10, analyzer)(1)
-    val viaPlain = Search.topKRaw(handle, Seq(1 -> "+merge join"), 10, analyzer)(1)
+    val viaGroup = Search.search(handle, QueryParser.parseAll(Seq(1 -> "+zzzoov|merge join"), analyzer), Wand.Ranked(10))(1)
+    val viaPlain = Search.search(handle, QueryParser.parseAll(Seq(1 -> "+merge join"), analyzer), Wand.Ranked(10))(1)
     assert(viaGroup.toSeq == viaPlain.toSeq)
   }
 
@@ -694,15 +694,15 @@ class SearchSpec extends AnyFunSuite {
   test("msm retrieval: rank- and score-identical to the counted brute force") {
     assertIdentical(QuerySet.msm, 10)
     // N == |terms| equals the all-required query, exact arrays
-    val viaMsm = Search.topKRaw(handle, Seq(1 -> "merge join msm:2"), 10, analyzer)(1)
-    val viaReq = Search.topKRaw(handle, Seq(1 -> "+merge +join"), 10, analyzer)(1)
+    val viaMsm = Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge join msm:2"), analyzer), Wand.Ranked(10))(1)
+    val viaReq = Search.search(handle, QueryParser.parseAll(Seq(1 -> "+merge +join"), analyzer), Wand.Ranked(10))(1)
     assert(viaMsm.toSeq == viaReq.toSeq)
     // msm:1 is the bare-OR default, exact arrays
-    val viaOne = Search.topKRaw(handle, Seq(1 -> "merge join msm:1"), 10, analyzer)(1)
-    val viaBare = Search.topKRaw(handle, Seq(1 -> "merge join"), 10, analyzer)(1)
+    val viaOne = Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge join msm:1"), analyzer), Wand.Ranked(10))(1)
+    val viaBare = Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge join"), analyzer), Wand.Ranked(10))(1)
     assert(viaOne.toSeq == viaBare.toSeq)
     // more in-vocab terms demanded than exist → empty
-    assert(Search.topKRaw(handle, Seq(1 -> "merge zzzoov msm:2"), 10, analyzer)(1).isEmpty)
+    assert(Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge zzzoov msm:2"), analyzer), Wand.Ranked(10))(1).isEmpty)
   }
 
   // --------------------------------------------------------------- collapse
@@ -721,8 +721,8 @@ class SearchSpec extends AnyFunSuite {
 
   test("collapsed retrieval: rank- and score-identical to the grouped brute force") {
     import org.apache.spark.sql.functions.col
-    val key = Some(col("docId") % 100)
-    val got = Search.topKRaw(handle, QuerySet.collapse, 10, analyzer, collapse = key)
+    val key = Wand.Collapse(col("docId") % 100)
+    val got = Search.search(handle, QueryParser.parseAll(QuerySet.collapse, analyzer), Wand.Ranked(10, key))
     QuerySet.collapse.foreach { case (qid, s) =>
       val q = Search.expand(handle, QueryParser.parse(qid, s, analyzer))
       val w = wantCollapsed(q, 10)
@@ -736,19 +736,19 @@ class SearchSpec extends AnyFunSuite {
       assert(groups.distinct.length == groups.length, s"[$s] duplicate group in results")
     }
     // k beyond the group count returns every matching group exactly once
-    val big = Search.topKRaw(handle, Seq(1 -> "merge join"), 500, analyzer, collapse = key)(1)
+    val big = Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge join"), analyzer), Wand.Ranked(500, key))(1)
     val wq = Search.expand(handle, QueryParser.parse(1, "merge join", analyzer))
     assert(big.toSeq == wantCollapsed(wq, 500).toSeq)
     // no stable per-doc cursor under a collapsed ranking — loud error
     assertThrows[IllegalArgumentException](
-      Search.page(handle, Seq(QueryParser.parse(1, "merge join", analyzer)),
-        10, after = Map(1 -> (1.0, 5L)), collapse = key))
+      Search.run(handle, Search.SearchRequest("merge join", k = 10, collapse = Some(key.key),
+        after = Some((1.0, 5L))), analyzer))
   }
 
   // ------------------------------------------------------------- total hits
 
   test("total hits: exact counts vs the brute force, including zero-hit shapes") {
-    val got = Search.countRaw(handle, QuerySet.hits, analyzer)
+    val got = Search.count(handle, QueryParser.parseAll(QuerySet.hits, analyzer))
     QuerySet.hits.foreach { case (qid, s) =>
       // a hit = a doc containing >= 1 (dictionary-expanded) scoring term
       // that satisfies every constraint and filter
@@ -768,7 +768,7 @@ class SearchSpec extends AnyFunSuite {
   test("function score: rank- and score-identical to the boosted brute force") {
     import org.apache.spark.sql.functions.{col, lit}
     val boost = lit(1.0) + (col("docId") % 3).cast("double")
-    val got = Wand.topKBoosted(handle, QuerySet.queries, 10, boost, maxBoost = 3.0)
+    val got = Wand.search(Seq(handle -> 1.0), QuerySet.queries, Wand.Ranked(10, Wand.ByScore(boost = Some((boost, 3.0)))))
     QuerySet.queries.foreach { q =>
       val want = oracle.topK(q.terms, Int.MaxValue)
         .map { case (s, d) => (s * (1.0 + (d % 3)), d) }
@@ -777,12 +777,12 @@ class SearchSpec extends AnyFunSuite {
       assert(g == want, s"q=${q.terms}: got $g want $want (EXACT)")
     }
     // a uniform 1.0 boost is the plain ranking, exact arrays
-    val one = Wand.topKBoosted(handle, QuerySet.queries, 10, lit(1.0), maxBoost = 1.0)
+    val one = Wand.search(Seq(handle -> 1.0), QuerySet.queries, Wand.Ranked(10, Wand.ByScore(boost = Some((lit(1.0), 1.0)))))
     val plain = Wand.topK(handle, QuerySet.queries, 10)
     QuerySet.queries.foreach(q => assert(one(q.queryId).toSeq == plain(q.queryId).toSeq))
     // an over-maxBoost per-doc value fails LOUDLY, never silently misranks
     val e = intercept[Exception](
-      Wand.topKBoosted(handle, QuerySet.queries.take(1), 10, boost, maxBoost = 2.0))
+      Wand.search(Seq(handle -> 1.0), QuerySet.queries.take(1), Wand.Ranked(10, Wand.ByScore(boost = Some((boost, 2.0))))))
     def causes(t: Throwable): Seq[String] =
       if (t == null) Seq.empty else t.getMessage +: causes(t.getCause)
     assert(causes(e).exists(m => m != null && m.contains("outside")), causes(e).toString)
@@ -791,8 +791,8 @@ class SearchSpec extends AnyFunSuite {
     // filtered run, and the filtered boosted ranking stays exact
     import org.apache.spark.sql.functions.when
     val partialBoost = when(col("docId") % 3 === 0, lit(2.0)).otherwise(lit(-1.0))
-    val gotF = Wand.topKBoosted(handle, QuerySet.queries, 10, partialBoost,
-      maxBoost = 2.0, docFilter = Some(col("docId") % 3 === 0))
+    val gotF = Wand.search(Seq(handle -> 1.0), QuerySet.queries,
+      Wand.Ranked(10, Wand.ByScore(boost = Some((partialBoost, 2.0)))), docFilter = Some(col("docId") % 3 === 0))
     QuerySet.queries.foreach { q =>
       val want = oracle.topK(q.terms, Int.MaxValue)
         .filter { case (_, d) => d % 3 == 0 }
@@ -807,7 +807,7 @@ class SearchSpec extends AnyFunSuite {
   test("facets: exact per-value match counts, topN cutoff, zero-hit empties") {
     import org.apache.spark.sql.functions.col
     val topN = 3
-    val got = Search.facetsRaw(handle, QuerySet.hits, analyzer,
+    val got = Search.facets(handle, QueryParser.parseAll(QuerySet.hits, analyzer),
       (col("docId") % 10).cast("string"), topN)
     QuerySet.hits.foreach { case (qid, s) =>
       val q = Search.expand(handle, QueryParser.parse(qid, s, analyzer))
@@ -821,7 +821,7 @@ class SearchSpec extends AnyFunSuite {
     assert(got(10).isEmpty && got(11).isEmpty) // the zero-hit shapes
     assert(got(1).nonEmpty)
     // facets × synonyms × filter: the panel counts the REWRITTEN match set
-    val sGot = Search.facetsRaw(handle, Seq(1 -> "scan url:2/1"), analyzer,
+    val sGot = Search.facets(handle, QueryParser.parseAll(Seq(1 -> "scan url:2/1"), analyzer),
       (col("docId") % 10).cast("string"), topN, synonyms = Some(QuerySet.synTable))(1)
     val sq = QuerySet.synTable.rewrite(QueryParser.parse(1, "scan url:2/1", analyzer))
     val sWant = allDocs.toSeq
@@ -841,7 +841,7 @@ class SearchSpec extends AnyFunSuite {
       facetKey = Some(fk), facetTopN = 3)
     val parsed = Seq(QueryParser.parse(1, req.query, analyzer))
     val r = Search.run(handle, req, analyzer)
-    assert(r.hits.toSeq == Search.topK(handle, parsed, 5)(1).toSeq)
+    assert(r.hits.toSeq == Search.search(handle, parsed, Wand.Ranked(5))(1).toSeq)
     assert(r.total == Search.count(handle, parsed)(1))
     assert(r.facets == Search.facets(handle, parsed, fk, 3)(1))
     assert(r.facets.map(_._2).sum <= r.total) // cutoff panel ≤ the total
@@ -855,7 +855,7 @@ class SearchSpec extends AnyFunSuite {
       cur = pg.nextCursor
       done = cur.isEmpty
     }
-    assert(walked.toSeq == Search.topK(handle, parsed, 100000)(1).toSeq)
+    assert(walked.toSeq == Search.search(handle, parsed, Wand.Ranked(100000))(1).toSeq)
     // collapse: no cursor, total still counts DOCS (not groups)
     val rc = Search.run(handle, req.copy(collapse = Some(col("docId") % 100)), analyzer)
     assert(rc.nextCursor.isEmpty && rc.total == r.total)
@@ -902,35 +902,34 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
-  test("Search.run resolves the index tables once per handle") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  test("a ranked pass with k <= 0 is refused up front, naming k") {
+    val viaRun = intercept[IllegalArgumentException](
+      Search.run(handle, Search.SearchRequest("merge join", k = 0), analyzer))
+    assert(viaRun.getMessage.contains("k > 0"), viaRun.getMessage)
+    val viaTopK = intercept[IllegalArgumentException](
+      Wand.topK(handle, Seq(QuerySpec(1, Seq("merge", "join"))), 0))
+    assert(viaTopK.getMessage.contains("k > 0"), viaTopK.getMessage)
+  }
+
+  test("count over three filter signatures: one pass per signature, one job in flight") {
     import org.apache.spark.sql.functions.col
-    val sc = spark.sparkContext
-    val marker = "search-spec-listener-marker"
-    // `f`'s result and the stage names of every job submitted while it
-    // runs; a marker job is submitted last and awaited, so the asynchronous
-    // listener bus has delivered every earlier job by the time the names
-    // are read
-    def withStages[T](f: => T): (T, Seq[String]) = {
-      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val sawMarker = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-            sawMarker.countDown()
-          else e.stageInfos.foreach(s => names.add(s.name))
-      }
-      sc.addSparkListener(listener)
-      val out = try {
-        val r = f
-        sc.setJobDescription(marker)
-        try spark.range(1).count() finally sc.setJobDescription(null)
-        assert(sawMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        r
-      } finally sc.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      (out, names.asScala.toSeq)
-    }
+    val parsed = QueryParser.parseAll(Seq(1 -> "merge join", 2 -> "merge url:2/1",
+      3 -> "scan -url:2/1", 4 -> "window url:2/1"), analyzer)
+    val (got, log) = JobLog.record(Search.count(handle, parsed))
+    assert(log.jobs > 0 && log.maxInFlight == 1,
+      s"${log.jobs} jobs, ${log.maxInFlight} of them in flight at once")
+    // each signature's own pass, straight through the WAND driver
+    val inUrl = col("url").contains("2/1")
+    def pass(qids: Set[Int], filter: Option[org.apache.spark.sql.Column]): Map[Int, Long] =
+      Wand.search(Seq(handle -> 1.0), parsed.filter(q => qids(q.queryId)).map(_.toQuerySpec),
+        Wand.Count, filter)
+    val want = pass(Set(1), None) ++ pass(Set(2, 4), Some(inUrl)) ++ pass(Set(3), Some(!inUrl))
+    assert(got == want)
+    assert(want.values.count(_ > 0) >= 3, s"weak fixture: $want")
+  }
+
+  test("Search.run resolves the index tables once per handle") {
+    import org.apache.spark.sql.functions.col
     // parquet schema inference shows as a job whose stage is "parquet at …"
     def inference(stages: Seq[String]) = stages.filter(_.startsWith("parquet at"))
     // resolving a table lists its files: Spark's file-discovery counters
@@ -945,19 +944,21 @@ class SearchSpec extends AnyFunSuite {
     val fresh = IndexReader.load(spark, dir)
     val req = Search.SearchRequest("merge join -batch", k = 5,
       facetKey = Some((col("docId") % 10).cast("string")), facetTopN = 3)
-    val ((first, firstStages), firstFiles) = listed(withStages(Search.run(fresh, req, analyzer)))
+    val ((first, firstLog), firstFiles) = listed(JobLog.record(Search.run(fresh, req, analyzer)))
+    val firstStages = firstLog.stageNames
     assert(firstFiles > 0, "a fresh handle must resolve its tables")
     // the tables' schemas are their row types': resolution runs no job
     assert(inference(firstStages).isEmpty,
       s"a fresh handle inferred a table schema: ${inference(firstStages)}")
-    val ((second, secondStages), secondFiles) = listed(withStages(Search.run(fresh, req, analyzer)))
+    val ((second, secondLog), secondFiles) = listed(JobLog.record(Search.run(fresh, req, analyzer)))
+    val secondStages = secondLog.stageNames
     assert(secondFiles == 0 && inference(secondStages).isEmpty,
       s"the second run re-resolved index tables: $secondFiles files, ${inference(secondStages)}")
     assert(second.hits.toSeq == first.hits.toSeq && second.total == first.total &&
       second.facets == first.facets)
   }
 
-  test("explainAll: batched breakdown == per-pair Search.explain rows") {
+  test("explainAll: one batch sums to the ranked scores, no rows for OOV or absent docs") {
     // pairs spanning: boosted multi-term, single-term, an OOV-only query
     // (zero rows), and a doc absent from a term's postings
     val qs = Seq(
@@ -967,24 +968,31 @@ class SearchSpec extends AnyFunSuite {
     val someDocs = allDocs.toSeq.sorted.take(3)
     val pairs = for (q <- qs; d <- someDocs) yield (q, d)
     val batched = Search.explainAll(handle, pairs)
+    // every matching doc's exact score: the ranked pass at a k that holds
+    // the whole match set
+    val scores = Search.search(handle, qs, Wand.Ranked(allDocs.size)).map { case (qid, hits) =>
+      qid -> hits.map { case (s, d) => d -> s }.toMap }
     pairs.foreach { case (q, d) =>
-      val solo = Search.explain(handle, q, d).collect().toSeq.map { r =>
-        (r.getString(0), r.getDouble(1), r.getInt(2), r.getLong(3),
-          r.getDouble(4), r.getInt(5), r.getDouble(6))
+      val rows = batched((q.queryId, d))
+      scores(q.queryId).get(d) match {
+        case None => assert(rows.isEmpty, s"explain rows for unmatched q=${q.queryId} doc=$d")
+        case Some(score) =>
+          var sum = 0.0
+          rows.sortBy(r => handle.dictMap(r._1).termId).foreach(r => sum += r._7)
+          assert(sum == score, s"q=${q.queryId} doc=$d: explain sum $sum != score $score (EXACT)")
       }
-      assert(batched((q.queryId, d)) == solo,
-        s"explain rows differ for q=${q.queryId} doc=$d")
     }
+    assert(pairs.exists { case (q, d) => batched((q.queryId, d)).nonEmpty }, "weak fixture: nothing to explain")
   }
 
-  test("expandPrefixes: one batched scan == per-prefix expandPrefix") {
+  test("expandPrefixes: one batched scan == the dictionary's own prefix filter") {
     val prefixes = Seq("s", "ba", "me", "zz", "c", "wind")
     val batched = handle.expandPrefixes(prefixes, Search.MaxExpansions)
     prefixes.foreach { p =>
-      assert(batched(p) == handle.expandPrefix(p, Search.MaxExpansions),
+      assert(batched(p) == handle.dictMap.keys.filter(_.startsWith(p)).toSeq.sorted,
         s"prefix '$p' expansion differs")
     }
-    // the loud cap survives batching (pigeonhole limit + precise re-check)
+    // the loud cap survives batching (the pigeonhole-bounded collect)
     val e = intercept[IllegalArgumentException](
       handle.expandPrefixes(Seq("s", "b"), 1))
     assert(e.getMessage.contains("expands to more than"))
@@ -1023,9 +1031,9 @@ class SearchSpec extends AnyFunSuite {
     // collapse: group bests drawn from live docs only (exact scores —
     // the deleted index keeps LIVE df, so impacts change vs `oracle`;
     // assert docIds against the per-group-best of the deleted ranking)
-    val ck = Some(col("docId") % 100)
-    val got = Search.topK(dh, parsed, 10, collapse = ck)
-    val plain = Search.topK(dh, parsed, 500)
+    val ck = Wand.Collapse(col("docId") % 100)
+    val got = Search.search(dh, parsed, Wand.Ranked(10, ck))
+    val plain = Search.search(dh, parsed, Wand.Ranked(500))
     parsed.foreach { q =>
       val seen = scala.collection.mutable.Set.empty[Long]
       val want = plain(q.queryId).filter { case (_, d) => seen.add(d % 100) }.take(10)
@@ -1076,7 +1084,7 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("synonym retrieval: rank- and score-identical to the rewritten brute force") {
-    val got = Search.topKRaw(handle, QuerySet.synonyms, 10, analyzer,
+    val got = Search.search(handle, QueryParser.parseAll(QuerySet.synonyms, analyzer), Wand.Ranked(10),
       synonyms = Some(QuerySet.synTable))
     QuerySet.synonyms.foreach { case (qid, s) =>
       val q = Search.expand(handle,
@@ -1089,7 +1097,7 @@ class SearchSpec extends AnyFunSuite {
       }
     }
     // counts see the same expansion
-    val cnt = Search.countRaw(handle, Seq(1 -> "scan window"), analyzer,
+    val cnt = Search.count(handle, QueryParser.parseAll(Seq(1 -> "scan window"), analyzer),
       synonyms = Some(QuerySet.synTable))(1)
     val q = QuerySet.synTable.rewrite(QueryParser.parse(1, "scan window", analyzer))
     assert(cnt == allDocs.count(d =>
@@ -1099,7 +1107,7 @@ class SearchSpec extends AnyFunSuite {
   test("repeated-term phrase (\"batch batch\") verifies true adjacency") {
     val q = QueryParser.parse(1, "\"batch batch\"", analyzer)
     assert(q.phrases == Seq(Phrase(Seq("batch", "batch"))))
-    val got = Search.topK(handle, Seq(q), 40)
+    val got = Search.search(handle, Seq(q), Wand.Ranked(40))
     val matching = allDocs.filter(d => hasPhrase(d, Phrase(Seq("batch", "batch"))))
     assert(got(1).map(_._2).toSet == matching.take(40).toSet ||
       got(1).map(_._2).forall(matching.contains), "every hit must contain the doubled term adjacently")
@@ -1298,7 +1306,7 @@ class SearchSpec extends AnyFunSuite {
     val doclens: Map[Long, Int] =
       positions.toSeq.groupBy(_._1._1).map { case (d, vs) => d -> vs.map(_._2.length).sum }
     val key = lpad(col("docLen").cast("string"), 10, "0")
-    val got = Search.sortByRaw(handle, QuerySet.percolate, analyzer, key, k = 10)
+    val got = Search.search(handle, QueryParser.parseAll(QuerySet.percolate, analyzer), Wand.SortBy(key, 10))
     val desc = Ordering.Tuple2(Ordering.String.reverse, Ordering.Long)
     QuerySet.percolate.foreach { case (qid, s) =>
       val q = QueryParser.parse(qid, s, analyzer)

@@ -34,7 +34,7 @@ class SerpPassSpec extends AnyFunSuite {
       IndexConfig(blockSize = 16, bucketRange = 64, nChunks = 3, postingsBuckets = 4))
     val full = IndexReader.load(spark, dir)
     val qs = unfiltered.zipWithIndex.map { case (s, i) => QueryParser.parse(i, s, analyzer) }
-    val top = Search.topK(full, qs, 3).valuesIterator.flatMap(_.map(_._2)).toSeq.distinct.sorted
+    val top = Search.search(full, qs, Wand.Ranked(3)).valuesIterator.flatMap(_.map(_._2)).toSeq.distinct.sorted
     val totals = unfiltered.map(s => s -> Search.count(full, Seq(parse(s)))(1)).toMap
     IndexBuilder.delete(spark, dir, top)
     (IndexReader.load(spark, dir), totals)
@@ -43,7 +43,8 @@ class SerpPassSpec extends AnyFunSuite {
   private def assertParts(s: String, r: Search.SearchResponse, k: Int,
       after: Option[(Double, Long)], collapse: Option[org.apache.spark.sql.Column]): Unit = {
     val q = Seq(parse(s))
-    val hits = Search.page(handle, q, k, after.map(1 -> _).toMap, collapse = collapse)(1)
+    val order = collapse.fold[Wand.Order](Wand.ByScore(after.map(1 -> _).toMap))(Wand.Collapse)
+    val hits = Search.search(handle, q, Wand.Ranked(k, order))(1)
     assert(r.hits.toSeq == hits.toSeq, s"[$s] hits differ")
     assert(r.total == Search.count(handle, q)(1), s"[$s] total differs")
     assert(r.facets == Search.facets(handle, q, facetKey, 3)(1), s"[$s] facets differ")
@@ -130,36 +131,12 @@ class SerpPassSpec extends AnyFunSuite {
   }
 
   test("Search.run submits no more Spark jobs than Search.facets on the same request") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val marker = "serp-pass-spec-listener-marker"
-    // the number of jobs submitted while `f` runs; a marker job is
-    // submitted last and awaited, so the asynchronous listener bus has
-    // delivered every earlier job by the time the count is read
-    def jobs(f: => Any): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val sawMarker = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-            sawMarker.countDown()
-          else { n.incrementAndGet(); () }
-      }
-      sc.addSparkListener(listener)
-      try {
-        f
-        sc.setJobDescription(marker)
-        try spark.range(1).count() finally sc.setJobDescription(null)
-        assert(sawMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        n.get
-      } finally sc.removeSparkListener(listener)
-    }
     val s = "merge join -batch"
     val req = Search.SearchRequest(s, k = 5, facetKey = Some(facetKey), facetTopN = 3)
     // warm: the handle resolves its tables on first use
     Search.run(handle, req, analyzer)
-    val facetJobs = jobs(Search.facets(handle, Seq(parse(s)), facetKey, 3))
-    val runJobs = jobs(Search.run(handle, req, analyzer))
+    val (_, facetJobs) = JobLog.jobs(Search.facets(handle, Seq(parse(s)), facetKey, 3))
+    val (_, runJobs) = JobLog.jobs(Search.run(handle, req, analyzer))
     assert(facetJobs > 0)
     assert(runJobs <= facetJobs, s"Search.run took $runJobs jobs, Search.facets $facetJobs")
   }

@@ -81,7 +81,7 @@ class SortBySpec extends AnyFunSuite {
   test("sort-by over a tombstoned index == the live-docs ground truth") {
     val live = docLens.keySet -- deleted
     keys.foreach { case (name, (keyCol, key)) =>
-      val got = Search.sortBy(handle, parsed, keyCol, k = 10)
+      val got = Search.search(handle, parsed, Wand.SortBy(keyCol, 10))
       parsed.foreach { q =>
         val w = want(live, q, key, 10)
         assert(got(q.queryId) == w, s"[$name] q=${q.queryId}: got ${got(q.queryId)} want $w")
@@ -94,15 +94,15 @@ class SortBySpec extends AnyFunSuite {
       // and the fixture is not vacuous: a live answer is full
       assert(got(1).length == 10, s"[$name] q=1 returned ${got(1).length}")
     }
-    assert(Search.sortBy(handle, parsed, keys.head._2._1, k = 10)(6).isEmpty)
+    assert(Search.search(handle, parsed, Wand.SortBy(keys.head._2._1, 10))(6).isEmpty)
   }
 
   test("sort-by rejects k <= 0 instead of falling into another mode") {
     val q = Seq(QueryParser.parse(1, "merge join", analyzer))
     val key = lpad(col("docLen").cast("string"), 10, "0")
-    assertThrows[IllegalArgumentException](Search.sortBy(handle, q, key, k = 0))
-    assertThrows[IllegalArgumentException](Search.sortBy(handle, q, key, k = -1))
+    assertThrows[IllegalArgumentException](Search.search(handle, q, Wand.SortBy(key, 0)))
+    assertThrows[IllegalArgumentException](Search.search(handle, q, Wand.SortBy(key, -1)))
     assertThrows[IllegalArgumentException](
-      Search.sortByRaw(handle, Seq(1 -> "merge join"), analyzer, key, k = 0))
+      Search.search(handle, QueryParser.parseAll(Seq(1 -> "merge join"), analyzer), Wand.SortBy(key, 0)))
   }
 }

@@ -1,8 +1,8 @@
 package graft
 
+import graft.JobLog.jobs
 import graft.index.PhraseVocab
 import graft.tokenize.Tokenizers
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,30 +22,6 @@ class TrainerLoopSpec extends AnyFunSuite {
       .filter(col("text").isNotNull && length(col("text")) > 0)
       .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .map { case (id, t) => (id, tok.terms(t)) }
-  }
-
-  /** The number of jobs submitted while `f` runs; a marker job is submitted
-    * last and awaited, so the asynchronous listener bus has delivered every
-    * earlier job by the time the count is read. */
-  private def jobs[R](f: => R): (R, Int) = {
-    val sc = spark.sparkContext
-    val marker = "trainer-loop-spec-listener-marker"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val sawMarker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          sawMarker.countDown()
-        else { n.incrementAndGet(); () }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      sc.setJobDescription(marker)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      assert(sawMarker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (r, n.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   /** (trainer, steps asked for, expected jobs, the call: steps taken and

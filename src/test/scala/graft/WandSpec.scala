@@ -91,7 +91,7 @@ class WandSpec extends AnyFunSuite {
 
   test("filtered top-k: exact among matching docs, corpus-global stats") {
     val pred: Long => Boolean = _ % 3 == 0
-    val got = Wand.topKFiltered(handle, QuerySet.queries, 10, col("docId") % 3 === 0)
+    val got = Wand.search(Seq(handle -> 1.0), QuerySet.queries, Wand.Ranked(10), Some(col("docId") % 3 === 0))
     QuerySet.queries.foreach { q =>
       // the definition: full brute-force ranking restricted to matching docs
       val want = oracle.topK(q.terms, Int.MaxValue)
@@ -108,20 +108,20 @@ class WandSpec extends AnyFunSuite {
 
   test("filtered top-k: always-true filter == unfiltered; empty filter == empty") {
     val all = Wand.topK(handle, QuerySet.queries, 10)
-    val allF = Wand.topKFiltered(handle, QuerySet.queries, 10,
-      org.apache.spark.sql.functions.lit(true))
+    val allF = Wand.search(Seq(handle -> 1.0), QuerySet.queries, Wand.Ranked(10),
+      Some(org.apache.spark.sql.functions.lit(true)))
     QuerySet.queries.foreach { q =>
       assert(allF(q.queryId).toSeq == all(q.queryId).toSeq, s"q=${q.terms}")
     }
-    val none = Wand.topKFiltered(handle, QuerySet.queries, 10,
-      org.apache.spark.sql.functions.lit(false))
+    val none = Wand.search(Seq(handle -> 1.0), QuerySet.queries, Wand.Ranked(10),
+      Some(org.apache.spark.sql.functions.lit(false)))
     assert(none.values.forall(_.isEmpty))
   }
 
   test("filtered top-k on url metadata (the site: filter shape)") {
     // urls end in the docId digits — filter to urls ending '0' == docId % 10 == 0
-    val got = Wand.topKFiltered(handle, QuerySet.queries, 10,
-      col("url").endsWith("0"))
+    val got = Wand.search(Seq(handle -> 1.0), QuerySet.queries, Wand.Ranked(10),
+      Some(col("url").endsWith("0")))
     QuerySet.queries.foreach { q =>
       val want = oracle.topK(q.terms, Int.MaxValue)
         .filter { case (_, d) => d % 10 == 0 }.take(10)
