@@ -84,6 +84,11 @@ object IndexBuilder {
       }
   }
 
+  /** The (term, df, cf) stats of term docs — the delta a build or an
+    * append folds into the dictionary ([[fold]]). */
+  private def termStats(td: Dataset[TermDoc]): DataFrame =
+    td.groupBy("term").agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
+
   /** The live dictionary directory for a given manifest version. Appends
     * write version N+1 derived from version N and commit the manifest last,
     * so a replayed append regenerates v(N+1) from the untouched base
@@ -160,13 +165,6 @@ object IndexBuilder {
       .sortWithinPartitions(col("termId"), col("blockId"))
       .write.mode("overwrite").parquet(dest)
 
-  /** Dictionary v(N+1) of manifest `m`'s index, in `m.postingsBuckets`
-    * files like every version before it — a fixed count, so termId-range
-    * clustering survives any number of appends, deletes and merges. */
-  private def writeNextDict(dict: DataFrame, indexDir: String, m: IndexManifest,
-      vocabSize: Long): Unit =
-    writeClusteredDict(dict, m.postingsBuckets, vocabSize, dictDirFor(indexDir, m.dictVersion + 1))
-
   /** Tombstone delete of a driver-side id list: a local relation through
     * [[deleteByIds]] (duplicate, nonexistent and already-deleted ids are
     * tolerated). */
@@ -235,13 +233,13 @@ object IndexBuilder {
     // v(N+1) = v(N) ∪ fresh are independent writes — overlap them
     // (optimization guide §2.6; Overlap quiesces on failure)
     Overlap.overlap {
-      writeNextDict(
+      writeClusteredDict(
         readDict(spark, indexDir, old.dictVersion)
           .join(termDeltas, Seq("termId"), "left_outer")
           .select(col("termId"), col("term"),
             (col("df") - coalesce(col("d_df"), lit(0L))).cast("long").as("df"),
             (col("cf") - coalesce(col("d_cf"), lit(0L))).cast("long").as("cf")),
-        indexDir, old, old.vocabSize)
+        old.postingsBuckets, old.vocabSize, dictDirFor(indexDir, old.dictVersion + 1))
     } {
       writeNextTombstones(oldTombs.unionByName(fresh.select("docId")), indexDir, old)
     }
@@ -254,56 +252,21 @@ object IndexBuilder {
     Manifest.commit(indexDir, manifest)
   }
 
-  /** Frequency-ordered dense termIds WITHOUT a single-partition global
-    * window (which would bottleneck at a 100M-term vocabulary):
-    * range-repartition on (df desc, term), per-partition row_number, plus
-    * prefix offsets from a tiny per-partition count collect.
-    * Total order (df desc, term asc) is unique ⇒ ids are deterministic
-    * regardless of range boundaries.
-    *
-    * Returns the ranked entries (already range-clustered: partition i holds
-    * a contiguous ascending termId range, so a direct write is
-    * termId-clustered with NO extra exchange), the vocabulary size, and the
-    * rank cache's release handle — call it after materializing. */
-  def dictionaryRanked(td: Dataset[TermDoc], partitions: Int): (Dataset[TermEntry], Long, () => Unit) = {
-    // persist the vocab-sized stats BEFORE the range exchange: GlobalRank's
-    // range sampling is its own pass over the input, which would otherwise
-    // re-tokenize the whole corpus a second time (the stats relation is
-    // |vocab| rows — cache cost is trivial, the saved pass is a full scan)
-    val stats = td.groupBy("term").agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      .persist()
-    val (ds, total, rel) = rankedFromStats(stats, partitions)
-    (ds, total, () => { rel(); stats.unpersist(); () })
-  }
+  /** The termId range guard of both [[fold]] placements: `fresh` ids
+    * numbered from `base` must stay inside the Int termId space — past it
+    * they would wrap into negative (or colliding) termIds. */
+  private def requireIdSpace(base: Long, fresh: Long): Unit =
+    require(base + fresh <= Int.MaxValue.toLong + 1,
+      s"termId overflow: $fresh fresh terms from base $base exceed Int.MaxValue")
 
-  /** Distributed dictionary ranking over an already-materialized
-    * (term, df, cf) stats relation (the GlobalRank core of
-    * [[dictionaryRanked]], shared with [[buildFrom]]'s web-scale branch).
-    * Caller invokes the release handle after materializing the output. */
-  private[index] def rankedFromStats(stats: DataFrame, partitions: Int): (Dataset[TermEntry], Long, () => Unit) = {
-    val spark = stats.sparkSession
-    import spark.implicits._
-    val ranked = graft.plans.GlobalRank.withRowNumber(
-      stats, Seq(col("df").desc, col("term").asc), "rn", partitions)
-    val ds = ranked.df
-      .select((col("rn") - 1).cast("int").as("termId"),
-        col("term"), col("df").cast("long"), col("cf").cast("long"))
-      .as[TermEntry]
-    (ds, ranked.total, () => { ranked.release(); () })
-  }
-
-  /** Driver-side fresh-term ranking shared by the build/append/merge verbs'
-    * broadcast-bounded fast paths: sort `(term, df, cf)` tuples by
-    * (df desc, term asc) in UTF-8 BINARY order — the exact unique total
-    * order GlobalRank produces (Spark UTF8String collation == DuckDB binary
-    * == code-point order; Java compareTo would diverge on supplementary-
-    * plane terms) — and assign dense termIds from `base`. Fails loudly
-    * when the ids would run past the Int termId space instead of wrapping
-    * into negative (or colliding) termIds. */
+  /** The driver placement's ranking of [[fold]]: sort `(term, df, cf)`
+    * tuples by (df desc, term asc) in UTF-8 BINARY order — the exact unique
+    * total order GlobalRank produces (Spark UTF8String collation == DuckDB
+    * binary == code-point order; Java compareTo would diverge on
+    * supplementary-plane terms) — and assign dense termIds from `base`. */
   private[graft] def rankFreshOnDriver(
       entries: Array[(String, Long, Long)], base: Long): Array[TermEntry] = {
-    require(base + entries.length <= Int.MaxValue.toLong + 1,
-      s"termId overflow: ${entries.length} fresh terms from base $base exceed Int.MaxValue")
+    requireIdSpace(base, entries.length)
     entries.sortWith { case ((ta, dfa, _), (tb, dfb, _)) =>
       if (dfa != dfb) dfa > dfb else Overlap.utf8Compare(ta, tb) < 0
     }.zipWithIndex.map { case ((t, df, cf), i) =>
@@ -311,10 +274,13 @@ object IndexBuilder {
     }
   }
 
-  /** The clustered dictionary write shared by every verb that commits a
-    * dictionary version: deterministic contiguous termId groups (known
-    * vocab span — no repartitionByRange sampling pass), sorted within each
-    * group so row-group termId min/max stay tight for scan pruning. */
+  /** The clustered dictionary write of every dictionary version:
+    * deterministic contiguous termId groups (known vocab span — no
+    * repartitionByRange sampling pass), sorted within each group so
+    * row-group termId min/max stay tight for scan pruning. Every version
+    * goes into the manifest's `postingsBuckets` files — a fixed count, so
+    * termId-range clustering survives any number of appends, deletes and
+    * merges. */
   private[index] def writeClusteredDict(
       df: DataFrame, nBuckets: Int, vocabSize: Long, dest: String): Unit = {
     val perFile = math.max(1L, (vocabSize + nBuckets - 1) / nBuckets)
@@ -323,37 +289,83 @@ object IndexBuilder {
       .write.mode("overwrite").parquet(dest)
   }
 
-  /** Dictionary v(N+1) of manifest `old`'s index: v(N) with a
-    * driver-bounded (term, df, cf) `delta` folded in — the one dictionary
-    * update of [[append]] (the batch's term stats) and of [[merge]]'s
-    * small-source branch (the source dictionary's). Existing termIds never
-    * change; the terms v(N) lacks are ranked on the driver
-    * ([[rankFreshOnDriver]], termIds identical to GlobalRank's) and
-    * numbered from `old.vocabSize`. The corpus-vocabulary-sized v(N)
-    * streams once through a broadcast term map — it never shuffles and
-    * never reaches the driver; only its rows for the delta's terms are
-    * collected (a semi-join bounded by the delta).
-    *
-    * Returns the v(N+1) rows, the new vocabulary size and the v(N+1) entry
-    * of every delta term. */
-  private def foldDelta(spark: SparkSession, indexDir: String, old: IndexManifest,
-      delta: Array[(String, Long, Long)]): (DataFrame, Long, Array[TermEntry]) = {
+  /** A folded dictionary v(N+1) before its write: the vocabulary size; the
+    * v(N+1) entry of every delta term, on the driver (`Left`) or as the
+    * delta's rows with their `termId` (`Right` — it reads the fold's
+    * caches, so materialize it before `write`); and the write, which
+    * releases those caches. */
+  private final case class Folded(vocabSize: Long,
+      entries: Either[Array[TermEntry], DataFrame], write: () => Unit)
+
+  /** The one dictionary fold: v(N) plus a (term, df, cf) `delta` gives
+    * v(N+1). [[buildFrom]] folds its corpus stats into an empty base
+    * (`base = None`), [[append]] a batch's stats and [[merge]] the source
+    * dictionary into the live version; nothing else in the package ranks
+    * terms (the reference likewise gives new tokens ids after the existing
+    * ones, midi_tokenizer.py:2043-2063). Existing termIds stay; the terms
+    * v(N) lacks are ranked (df desc, term UTF-8 asc) and numbered from
+    * v(N)'s vocabSize, and v(N+1) goes to the next dictionary version in
+    * `nBuckets` files through [[writeClusteredDict]]. The delta's side
+    * picks the placement (a `Right` delta's further columns ride along
+    * into the fold's entries):
+    *  - driver (`Left`): fresh terms ranked by [[rankFreshOnDriver]]; v(N)
+    *    streams once through a broadcast term map of the delta, destroyed
+    *    when the write ends — it never shuffles, and only its rows of delta
+    *    terms are collected (a semi-join bounded by the delta);
+    *  - distributed (`Right`): v(N) ⋈ delta full outer on term, persisted,
+    *    fresh terms ranked by GlobalRank — nothing vocabulary-sized reaches
+    *    the driver.
+    * Either way a termId overflow fails before anything is written. */
+  private def fold(spark: SparkSession, indexDir: String, base: Option[IndexManifest],
+      delta: Either[Array[(String, Long, Long)], DataFrame], nBuckets: Int): Folded = {
     import spark.implicits._
-    val oldDict = readDict(spark, indexDir, old.dictVersion).as[TermEntry]
-    val byTerm = delta.iterator.map { case (t, df, cf) => t -> ((df, cf)) }.toMap
-    def add(e: TermEntry, d: (Long, Long)) = e.copy(df = e.df + d._1, cf = e.cf + d._2)
-    val matched = oldDict.join(delta.map(_._1).toSeq.toDF("term"), Seq("term"), "left_semi")
-      .as[TermEntry].collect()
-    val known = matched.iterator.map(_.term).toSet
-    val fresh = rankFreshOnDriver(delta.filterNot(d => known.contains(d._1)), base = old.vocabSize)
-    val b = spark.sparkContext.broadcast(byTerm)
-    val updated = oldDict.mapPartitions { it =>
-      val d = b.value
-      it.map(e => d.get(e.term).fold(e)(add(e, _)))
+    val baseSize = base.fold(0L)(_.vocabSize)
+    val baseDict = base.map(m => readDict(spark, indexDir, m.dictVersion))
+    val dest = dictDirFor(indexDir, base.fold(0)(_.dictVersion + 1))
+    delta match {
+      case Left(rows) =>
+        // lazy: a build's empty base matches nothing and never needs it
+        lazy val byTerm = rows.iterator.map { case (t, df, cf) => t -> ((df, cf)) }.toMap
+        def add(e: TermEntry, d: (Long, Long)) = e.copy(df = e.df + d._1, cf = e.cf + d._2)
+        val matched = baseDict.fold(Array.empty[TermEntry])(
+          _.join(rows.map(_._1).toSeq.toDF("term"), Seq("term"), "left_semi").as[TermEntry].collect())
+        val known = matched.iterator.map(_.term).toSet
+        val fresh = rankFreshOnDriver(rows.filterNot(r => known(r._1)), baseSize)
+        val size = baseSize + fresh.length
+        Folded(size, Left(matched.map(e => add(e, byTerm(e.term))) ++ fresh), () => baseDict match {
+          case None => writeClusteredDict(fresh.toSeq.toDF(), nBuckets, size, dest)
+          case Some(d) =>
+            val b = spark.sparkContext.broadcast(byTerm)
+            val updated = d.as[TermEntry].map(e => b.value.get(e.term).fold(e)(add(e, _)))
+            try writeClusteredDict(updated.toDF().unionByName(fresh.toSeq.toDF()), nBuckets, size, dest)
+            finally b.destroy()
+        })
+      case Right(rows) =>
+        val d = rows.withColumnRenamed("df", "d_df").withColumnRenamed("cf", "d_cf")
+        // an empty base folds out of the plan: the build ranks its stats as they are
+        val joined = baseDict.getOrElse(spark.emptyDataset[TermEntry].toDF())
+          .join(d, Seq("term"), "full_outer")
+        if (base.isDefined) joined.persist()
+        val ranked = graft.plans.GlobalRank.withRowNumber(joined.filter(col("termId").isNull),
+          Seq(col("d_df").desc, col("term").asc), "rn", spark.sessionState.conf.numShufflePartitions)
+        val release = () => { ranked.release(); joined.unpersist(); () }
+        try requireIdSpace(baseSize, ranked.total) catch { case e: IllegalArgumentException => release(); throw e }
+        val all = joined.filter(col("termId").isNotNull).unionByName(
+          ranked.df.withColumn("termId", (col("rn") - 1 + baseSize).cast("int")).drop("rn"))
+        val size = baseSize + ranked.total
+        val next = all.select(col("termId"), col("term"),
+          (coalesce(col("df"), lit(0L)) + coalesce(col("d_df"), lit(0L))).as("df"),
+          (coalesce(col("cf"), lit(0L)) + coalesce(col("d_cf"), lit(0L))).as("cf"))
+        Folded(size, Right(all.filter(col("d_df").isNotNull)),
+          () => try writeClusteredDict(next, nBuckets, size, dest) finally release())
     }
-    (updated.toDF().unionByName(fresh.toSeq.toDF()), old.vocabSize + fresh.length,
-      matched.map(e => add(e, byTerm(e.term))) ++ fresh)
   }
+
+  /** The posting build's broadcast map: the fold's driver-side `entries`,
+    * head-filtered under a vocabulary cap (dense df-ordered termIds make
+    * the head exactly termId < cap). */
+  private def headMap(entries: Array[TermEntry], vocabCap: Option[Int]): Map[String, TermEntry] =
+    vocabCap.fold(entries)(cap => entries.filter(_.termId < cap)).iterator.map(e => e.term -> e).toMap
 
   /** Streaming block builder over rows pre-sorted by (termId, bucket, docId).
     * Constant memory: at most `blockSize` postings buffered (the SPIMI
@@ -714,33 +726,22 @@ object IndexBuilder {
     // committed dictionary is never re-read (no headDict collect job)
     var driverEntries: Array[TermEntry] = null
     if (!success(dictDir)) {
-      // vocab-sized stats persisted ONCE, shared by both ranking paths (the
-      // count materializes the cache; everything later reads it — one full
-      // tokenize+aggregate pass total, guide §1.2 step 1)
-      val stats = termDocs(cleaned, tok).groupBy("term")
-        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf")).persist()
+      // vocab-sized stats persisted ONCE (the count materializes the cache;
+      // everything later reads it — one full tokenize+aggregate pass total,
+      // guide §1.2 step 1) and folded into an empty base. Under
+      // broadcastVocabMax the build collects the dictionary to the driver
+      // ANYWAY (the posting-build broadcast map), so the fold runs there;
+      // beyond it the fold's GlobalRank passes read the stats cache, never
+      // re-tokenizing the corpus
+      val stats = termStats(termDocs(cleaned, tok)).persist()
       vocabSize = stats.count()
-      if (vocabSize <= cfg.broadcastVocabMax) {
-        // SMALL-VOCAB FAST PATH: the build collects the dictionary to the
-        // driver ANYWAY under this bound (the posting-build broadcast map),
-        // so rank HERE — identical termIds to GlobalRank's (the shared
-        // [[rankFreshOnDriver]] collation discipline) — and skip the
-        // range-sampling exchange + window + dictionary re-read entirely.
-        val collected = stats.as[(String, Long, Long)].collect()
-        stats.unpersist()
-        driverEntries = rankFreshOnDriver(collected, base = 0L)
-        writeClusteredDict(driverEntries.toSeq.toDF("termId", "term", "df", "cf"),
-          cfg.postingsBuckets, vocabSize, dictDir)
-      } else {
-        // web-scale vocabulary: distributed GlobalRank ranking as before —
-        // the range sampling + counting passes now read the stats CACHE
-        // (vocab-sized), never re-tokenizing the corpus
-        val (entries, _, release) =
-          rankedFromStats(stats, spark.sessionState.conf.numShufflePartitions)
-        entries.write.mode("overwrite").parquet(dictDir)
-        release()
-        stats.unpersist()
-      }
+      val folded = fold(spark, indexDir, None,
+        if (vocabSize > cfg.broadcastVocabMax) Right(stats)
+        else Left(try stats.as[(String, Long, Long)].collect() finally stats.unpersist()),
+        cfg.postingsBuckets)
+      folded.write()
+      stats.unpersist()
+      driverEntries = folded.entries.left.toOption.orNull
       Lineage.append(spark, indexDir, LineageRow(-1, "dictionary", -1L, System.currentTimeMillis(), "committed"))
     }
     if (vocabSize < 0) vocabSize = readDict(spark, indexDir, 0).count()
@@ -748,8 +749,8 @@ object IndexBuilder {
     // dense df-ordered termIds make the head exactly termId < cap, and the
     // predicate is pushed BELOW the collect into the termId-clustered scan
     // (a capped build never materializes the tail on the driver)
-    // lazy: the driver-ranked fast path never touches the committed parquet
-    // again; the web-scale / capped paths evaluate it once (a def would
+    // lazy: a driver-placement fold never touches the committed parquet
+    // again; the distributed / resumed paths evaluate it once (a def would
     // re-list the dictionary dir per chunk on the distributed-join path)
     lazy val headDict: org.apache.spark.sql.DataFrame = {
       val dictSource = readDict(spark, indexDir, 0)
@@ -762,11 +763,9 @@ object IndexBuilder {
     val useBroadcastDict =
       cfg.vocabCap.exists(_ <= cfg.broadcastVocabMax) || vocabSize <= cfg.broadcastVocabMax
     val dict: Map[String, TermEntry] =
-      if (driverEntries != null) {
-        // ranked this build: the head IS driver-resident already
-        val head = cfg.vocabCap.fold(driverEntries)(cap => driverEntries.filter(_.termId < cap))
-        head.iterator.map(e => e.term -> e).toMap
-      } else if (useBroadcastDict) headDict.as[TermEntry].collect().map(e => e.term -> e).toMap
+      // ranked this build: the head IS driver-resident already
+      if (driverEntries != null) headMap(driverEntries, cfg.vocabCap)
+      else if (useBroadcastDict) headDict.as[TermEntry].collect().map(e => e.term -> e).toMap
       else Map.empty
 
     // -- stage: segments (docstats + postings per docId range) -----------
@@ -882,14 +881,14 @@ object IndexBuilder {
     * informational lineage row.
     *
     * Scale discipline: the dictionary is NEVER collected to the driver.
-    * Dictionary v(N+1) is the batch's term stats folded into v(N) by
-    * [[foldDelta]] (shared with [[merge]]), written distributed
-    * (termId-range-clustered); the fold's driver-side entries for the
-    * batch's terms are the posting build's broadcast map — driver memory is
-    * bounded by the batch's vocabulary, not the corpus vocabulary (the
-    * reference's trained vocab likewise streams through the trainer and is
-    * never materialized monolithically mid-train, midi_tokenizer
-    * .py:2924-2934). */
+    * Dictionary v(N+1) is the batch's term stats folded into v(N) by the
+    * [[fold]]'s driver placement (the build and [[merge]] fold through it
+    * too), written distributed (termId-range-clustered); the fold's
+    * driver-side entries for the batch's terms are the posting build's
+    * broadcast map — driver memory is bounded by the batch's vocabulary,
+    * not the corpus vocabulary (the reference's trained vocab likewise
+    * streams through the trainer and is never materialized monolithically
+    * mid-train, midi_tokenizer.py:2924-2934). */
   def append(spark: SparkSession, deltaPages: DataFrame, indexDir: String, cfg: IndexConfig,
       batchId: Option[Long] = None): IndexManifest = {
     import spark.implicits._
@@ -951,24 +950,21 @@ object IndexBuilder {
     val (_, vocabSize) = Overlap.overlap {
       writeDocIdClustered(stats, ecfg.postingsBuckets, ecfg.bucketRange, s"$sdir/docstats")
     } {
-      // dictionary v(N+1) from v(N) through [[foldDelta]]: the delta's
-      // term stats are bounded by the BATCH's vocabulary, so they collect
-      // once and the fold returns, driver-side, the v(N+1) entry of every
-      // batch term — the posting build's broadcast map, head-filtered under
-      // a vocabulary cap exactly like the base build
-      val deltaStats = td.groupBy("term")
-        .agg(count(lit(1)).as("d_df"), sum(col("tf")).as("d_cf"))
-        .as[(String, Long, Long)].collect()
-      val (dictRows, vocabSize0, entries) = foldDelta(spark, indexDir, old, deltaStats)
+      // dictionary v(N+1) from v(N) through the [[fold]]'s driver
+      // placement: the delta's term stats are bounded by the BATCH's
+      // vocabulary, so they collect once and the fold returns, driver-side,
+      // the v(N+1) entry of every batch term — the posting build's broadcast
+      // map, head-filtered under a vocabulary cap exactly like the base build
+      val deltaStats = termStats(td).as[(String, Long, Long)].collect()
+      val folded = fold(spark, indexDir, Some(old), Left(deltaStats), old.postingsBuckets)
+      val Left(entries) = folded.entries
       // the v(N+1) dictionary write and the delta postings write are also
       // independent — the broadcast map is driver-derived, not read back
       // from the written dictionary — overlap them too
-      Overlap.overlap(writeNextDict(dictRows, indexDir, old, vocabSize0)) {
-        val dict = cfg.vocabCap.fold(entries)(cap => entries.filter(_.termId < cap))
-          .iterator.map(e => e.term -> e).toMap
-        writePostings(postingBlocks(td, dict, ecfg), ecfg.postingsBuckets, s"$sdir/postings")
+      Overlap.overlap(folded.write()) {
+        writePostings(postingBlocks(td, headMap(entries, cfg.vocabCap), ecfg), ecfg.postingsBuckets, s"$sdir/postings")
       }
-      vocabSize0
+      folded.vocabSize
     } // end docstats overlap — all three writes complete (or quiesced)
     Lineage.append(spark, indexDir,
       LineageRow(old.nChunks, "append", nNew, System.currentTimeMillis(), "committed"))
@@ -1006,10 +1002,10 @@ object IndexBuilder {
     *    optional tombstone union, and the source's re-keyed segments are
     *    written).
     *
-    * Cost at 100 TB: one dictionary fold — the append verb's
-    * [[foldDelta]] (the destination dictionary streams once through a
-    * broadcast term map) when the source vocabulary fits
-    * `broadcastVocabMax`, a vocab-sized full-outer join beyond it — one
+    * Cost at 100 TB: one dictionary [[fold]] — its driver placement (the
+    * destination dictionary streams once through a broadcast term map) when
+    * the source vocabulary fits `broadcastVocabMax`, its distributed
+    * placement (a vocab-sized full-outer join) beyond it — one
     * remap join + re-cluster exchange over the SOURCE's compressed blocks
     * (broadcast map-side when the source vocabulary fits
     * `broadcastVocabMax` — plan-verified BroadcastHashJoin, blocks never
@@ -1086,61 +1082,33 @@ object IndexBuilder {
     }
 
     // dictionary v(N+1): df/cf summed from the two LIVE dictionaries,
-    // source-only terms appended after vocabSize. Two shapes, split on the
-    // SAME bound that governs the remap broadcast below:
-    //  - source vocabulary ≤ broadcastVocabMax: the source dictionary
-    //    collects ONCE (the bound under which the remap relation ships to
-    //    every executor anyway) and folds into v(N) through [[foldDelta]],
-    //    the append verb's fold; the srcTermId → mergedTermId map comes
-    //    from the fold's driver-side entries.
-    //  - beyond the bound: a distributed full-outer + GlobalRank shape
-    //    (nothing corpus-vocabulary-sized may reach the driver).
-    // v(N+1) is written UNCONDITIONALLY (mode overwrite, like
-    // append/delete): the path is shared across verb types, so a _SUCCESS
-    // left by a DIFFERENT crashed verb (an uncommitted delete) must not be
-    // trusted
+    // source-only terms appended after vocabSize, through the one [[fold]].
+    // Its placement is split on the SAME bound that governs the remap
+    // broadcast below: a source vocabulary ≤ broadcastVocabMax collects
+    // ONCE (the bound under which the remap ships to every executor
+    // anyway) and folds on the driver; beyond it nothing
+    // corpus-vocabulary-sized may reach the driver. v(N+1) is written
+    // UNCONDITIONALLY (mode overwrite, like append/delete): the path is
+    // shared across verb types, so a _SUCCESS left by a DIFFERENT crashed
+    // verb (an uncommitted delete) must not be trusted
     val smallSrc = src.vocabSize <= broadcastVocabMax
-    val (vocabSize, remap) = if (smallSrc) {
-      val srcEntries = readDict(spark, otherDir, src.dictVersion).as[TermEntry].collect()
-      val (dictRows, vocabSize0, entries) =
-        foldDelta(spark, indexDir, old, srcEntries.map(e => (e.term, e.df, e.cf)))
-      writeNextDict(dictRows, indexDir, old, vocabSize0)
-      // srcTermId → merged termId, covering the WHOLE source vocabulary
-      // (df-0 rows included — dead terms still sit in uncompacted blocks);
-      // driver-derived, so the segment-rewrite broadcast costs no scan job
-      val newId = entries.iterator.map(e => e.term -> e.termId).toMap
-      (vocabSize0, srcEntries.map(e => (e.termId, newId(e.term))).toSeq.toDF("srcTermId", "newTermId"))
-    } else {
-      val dictA = readDict(spark, indexDir, old.dictVersion)
-      val dictB = readDict(spark, otherDir, src.dictVersion)
-        .select(col("term"), col("termId").as("srcTermId"),
-          col("df").as("s_df"), col("cf").as("s_cf"))
-      val joined = dictA.join(dictB, Seq("term"), "full_outer").persist()
-      val updated = joined.filter(col("termId").isNotNull)
-        .select(col("termId"), col("term"),
-          (col("df") + coalesce(col("s_df"), lit(0L))).cast("long").as("df"),
-          (col("cf") + coalesce(col("s_cf"), lit(0L))).cast("long").as("cf"))
-      val fresh = joined.filter(col("termId").isNull)
-        .select(col("term"), col("srcTermId"), col("s_df").as("df"), col("s_cf").as("cf"))
-      val freshRanked = graft.plans.GlobalRank.withRowNumber(
-        fresh, Seq(col("df").desc, col("term").asc), "rn",
-        spark.sessionState.conf.numShufflePartitions)
-      val freshDict = freshRanked.df.select(
-        (col("rn") - 1 + old.vocabSize).cast("int").as("termId"),
-        col("term"), col("df").cast("long"), col("cf").cast("long"), col("srcTermId"))
-      val vocabSize0 = old.vocabSize + freshRanked.total
-      writeNextDict(updated.unionByName(freshDict.drop("srcTermId")), indexDir, old, vocabSize0)
-      // srcTermId → merged termId, covering the WHOLE source vocabulary;
-      // materialized once, consumed by every segment rewrite
-      val remap0 = joined
-        .filter(col("termId").isNotNull && col("srcTermId").isNotNull)
-        .select(col("srcTermId"), col("termId").as("newTermId"))
-        .unionByName(freshDict.select(col("srcTermId"), col("termId").as("newTermId")))
-        .localCheckpoint(true)
-      freshRanked.release()
-      joined.unpersist()
-      (vocabSize0, remap0)
+    val srcDict = readDict(spark, otherDir, src.dictVersion)
+    val srcEntries = if (smallSrc) srcDict.as[TermEntry].collect() else Array.empty[TermEntry]
+    val folded = fold(spark, indexDir, Some(old), if (smallSrc) Left(srcEntries.map(e => (e.term, e.df, e.cf)))
+      else Right(srcDict.withColumnRenamed("termId", "srcTermId")), old.postingsBuckets)
+    // srcTermId → merged termId from the fold's entries, covering the WHOLE
+    // source vocabulary (df-0 rows included — dead terms still sit in
+    // uncompacted blocks): driver-derived on the driver placement, so its
+    // broadcast to the segment rewrites costs no scan job; else
+    // materialized once, before the write releases the fold's caches
+    val remap = folded.entries match {
+      case Left(entries) =>
+        val newId = entries.iterator.map(e => e.term -> e.termId).toMap
+        broadcast(srcEntries.map(e => (e.termId, newId(e.term))).toSeq.toDF("srcTermId", "newTermId"))
+      case Right(rows) =>
+        rows.select(col("srcTermId"), col("termId").as("newTermId")).localCheckpoint(true)
     }
+    folded.write()
 
     // source segments, re-keyed into the destination: lo clamped to the
     // destination's span end (truthful — no source doc is below minPhys >
@@ -1152,12 +1120,11 @@ object IndexBuilder {
     val maxVA = old.segments.map(_.v).foldLeft(-1)(math.max)
     val kept = src.segments.filter(_.hi > old.maxDocId + 1)
     val newSegs = kept.map(s => Segment(math.max(s.lo, old.maxDocId + 1), s.hi, s.v + maxVA + 1))
-    val remapRel = if (smallSrc) broadcast(remap) else remap
     kept.zip(newSegs).foreach { case (s, ns) =>
       val srcSeg = segmentDir(otherDir, s)
       val dstSeg = segmentDir(indexDir, ns)
       val blocks = readTable[PostingBlock](spark, Seq(s"$srcSeg/postings"))
-      writePostings(blocks.join(remapRel, blocks("termId") === remapRel("srcTermId"))
+      writePostings(blocks.join(remap, blocks("termId") === remap("srcTermId"))
         .select(col("newTermId").as("termId"), col("blockId"), col("firstDocId"),
           col("nDocs"), col("docIdGaps"), col("tfs"), col("positions"),
           col("maxTf"), col("minDocLen"), col("meta")),
@@ -1181,7 +1148,7 @@ object IndexBuilder {
       LineageRow(old.nChunks, "merge", src.nDocs, System.currentTimeMillis(), "committed"))
     val manifest = old.copy(nDocs = old.nDocs + src.nDocs,
       totalLen = old.totalLen + src.totalLen,
-      vocabSize = vocabSize,
+      vocabSize = folded.vocabSize,
       skippedCorrupt = old.skippedCorrupt + src.skippedCorrupt,
       maxDocId = math.max(old.maxDocId, src.maxDocId),
       maxDocLen = math.max(old.maxDocLen, src.maxDocLen),

@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * The order must be a UNIQUE total order: ids are then deterministic
   * regardless of where the range boundaries land.
   *
-  * Used by the dictionary build (dense df-ordered termIds — a 100M-term
-  * vocabulary ranks in parallel), the append path's fresh-term ranking, and
-  * the ntile binning operator (W8).
+  * Used by the distributed placement of the dictionary fold
+  * (`IndexBuilder.fold`: dense df-ordered termIds for a build or merge
+  * beyond `broadcastVocabMax` — a 100M-term vocabulary ranks in parallel),
+  * the exact percentiles and the ntile binning operator (W8).
   */
 object GlobalRank {
 

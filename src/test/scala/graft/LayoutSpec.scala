@@ -31,21 +31,26 @@ class LayoutSpec extends AnyFunSuite {
 
   test("three deletes keep the build's dictionary file count and termId ranges") {
     import spark.implicits._
-    val dir = s"$root/deletes"
-    IndexCache.deleteRecursively(dir)
-    IndexBuilder.build(spark, sfDir, dir, IndexConfig())
-    val built = dictRanges(dir)
-    assert(built.length > 1, s"the build should cluster the dictionary into several files: $built")
-    val ids = liveIds(dir)
-    // three disjoint id sets, through both delete entry points
-    IndexBuilder.delete(spark, dir, ids.filter(_ % 7 == 0))
-    assert(dictRanges(dir) == built, "after delete 1")
-    IndexBuilder.deleteByIds(spark, dir, ids.filter(_ % 7 == 1).toDF("docId"))
-    assert(dictRanges(dir) == built, "after delete 2")
-    IndexBuilder.delete(spark, dir, ids.filter(_ % 7 == 2))
-    val m = Manifest.read(s"$dir/manifest.json")
-    assert(m.dictVersion == 3 && m.tombVersion == 2, s"three committed deletes: $m")
-    assert(dictRanges(dir) == built, "after delete 3")
+    // a default build (the dictionary fold on the driver) and a forced
+    // distributed one (broadcastVocabMax = 0: the fold's GlobalRank placement)
+    for ((name, buildCfg) <- Seq("deletes" -> IndexConfig(),
+        "deletes_dist" -> IndexConfig(broadcastVocabMax = 0L))) {
+      val dir = s"$root/$name"
+      IndexCache.deleteRecursively(dir)
+      IndexBuilder.build(spark, sfDir, dir, buildCfg)
+      val built = dictRanges(dir)
+      assert(built.length > 1, s"$name: the build should cluster the dictionary into several files: $built")
+      val ids = liveIds(dir)
+      // three disjoint id sets, through both delete entry points
+      IndexBuilder.delete(spark, dir, ids.filter(_ % 7 == 0))
+      assert(dictRanges(dir) == built, s"$name: after delete 1")
+      IndexBuilder.deleteByIds(spark, dir, ids.filter(_ % 7 == 1).toDF("docId"))
+      assert(dictRanges(dir) == built, s"$name: after delete 2")
+      IndexBuilder.delete(spark, dir, ids.filter(_ % 7 == 2))
+      val m = Manifest.read(s"$dir/manifest.json")
+      assert(m.dictVersion == 3 && m.tombVersion == 2, s"$name: three committed deletes: $m")
+      assert(dictRanges(dir) == built, s"$name: after delete 3")
+    }
   }
 
   test("append then delete: the delete keeps the append's dictionary ranges") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.Pages
-import graft.index.{IndexBuilder, IndexConfig, IndexValidator, Manifest}
+import graft.index.{IndexBuilder, IndexConfig, IndexValidator, Manifest, Store}
 import graft.query.{IndexReader, Wand}
 import graft.queries.{IndexCache, QuerySet}
 import org.scalatest.funsuite.AnyFunSuite
@@ -347,5 +347,27 @@ class MergeSpec extends AnyFunSuite {
     def stats(m: graft.index.IndexManifest) = (m.nDocs, m.totalLen, m.vocabSize, m.maxDocId,
       m.maxDocLen, m.skippedCorrupt, m.dictVersion)
     assert(stats(mA) == stats(mM))
+  }
+
+  test("a fold past the Int termId space throws \"termId overflow\" in both placements " +
+    "and leaves the destination untouched") {
+    // the destination claims a vocabulary one short of the Int termId space,
+    // so the source's five novel terms (and its other fresh terms) cannot fit
+    val delta = pages.filter(col("doc_id") >= Split && col("doc_id") < Hi)
+      .withColumn("text", concat(col("text"), lit(" novel"), (col("doc_id") % 5).cast("string")))
+    val (low, _) = buildPair("/tmp/graft_merge_spec/overflow")
+    val src = "/tmp/graft_merge_spec/overflow/delta"
+    IndexBuilder.buildFrom(spark, delta, src, cfg)
+    val full = Manifest.read(s"$low/manifest.json").copy(vocabSize = Int.MaxValue - 1)
+    Manifest.write(s"$low/manifest.json", full)
+    // the default bound folds on the driver, 0 forces the distributed fold
+    for (bound <- Seq(IndexConfig().broadcastVocabMax, 0L)) {
+      val e = intercept[IllegalArgumentException](
+        IndexBuilder.merge(spark, low, src, broadcastVocabMax = bound))
+      assert(e.getMessage.contains("termId overflow"), s"bound $bound: ${e.getMessage}")
+      assert(Manifest.read(s"$low/manifest.json") == full, s"bound $bound: manifest changed")
+      assert(!Store.exists(IndexBuilder.dictDirFor(low, full.dictVersion + 1)),
+        s"bound $bound: dictionary v(N+1) written before the overflow check")
+    }
   }
 }

@@ -73,9 +73,10 @@ class PlanSpec extends AnyFunSuite {
   test("posting-block build plan has exactly one exchange (the salted shuffle)") {
     val cleaned = Pages.cleaned(Pages.withInjections(spark, sfDir))
     val td = IndexBuilder.termDocs(cleaned, Tokenizers.default)
-    val (ranked, _, release) = IndexBuilder.dictionaryRanked(td, 4)
-    val dictRows = try ranked.collect() finally release()
-    val dict = dictRows.map(e => e.term -> e).toMap
+    import spark.implicits._
+    val stats = td.groupBy("term").agg(count(lit(1)), sum(col("tf")))
+      .as[(String, Long, Long)].collect()
+    val dict = IndexBuilder.rankFreshOnDriver(stats, base = 0L).map(e => e.term -> e).toMap
     val blocks = IndexBuilder.postingBlocks(td, dict, graft.index.IndexConfig())
     val plan = planOf(blocks.toDF())
     // one exchange introduced by repartition(termId, bucket); the upstream
