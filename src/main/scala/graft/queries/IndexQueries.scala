@@ -1189,25 +1189,27 @@ object IndexQueries {
         Search.search(IndexCache.handle(spark, sfDir),
           QueryParser.parseAll(QuerySet.dsl, Tokenizers.default), Wand.Ranked(40)), kWand = 40)),
 
-    // WILDCARD retrieval (`pre*`): expansion is ONE dictionary prefix range
-    // scan per batch (StartsWith pushdown — autocomplete's plan), capped
-    // loudly (Lucene's TooManyClauses analog); expansions then ride the
-    // standard WAND driver as ordinary weighted cursors — `+pre*` adds an
-    // at-least-one-of (requiredAny) group to the bucket-local verifier,
-    // `-pre*` folds into the excluded set. The oracle re-derives the
-    // expansion itself (term LIKE) plus every constraint in SQL.
+    // WILDCARD retrieval (`pre*`): expansion is ONE narrow dictionary scan
+    // per batch (a `startsWith` test per term, shared with the batch's
+    // fuzzies), capped loudly (Lucene's TooManyClauses analog); expansions
+    // then ride the standard WAND driver as ordinary weighted cursors —
+    // `+pre*` adds an at-least-one-of (requiredAny) group to the
+    // bucket-local verifier, `-pre*` folds into the excluded set. The
+    // oracle re-derives the expansion itself (term LIKE) plus every
+    // constraint in SQL.
     "q_wildcard" -> ((spark, sfDir) =>
       rankedReport(spark,
         Search.search(IndexCache.handle(spark, sfDir),
           QueryParser.parseAll(QuerySet.wildcard, Tokenizers.default), Wand.Ranked(40)), kWand = 40)),
 
-    // FUZZY retrieval (`term~1`): the batch's needles expand in ONE
-    // SymSpell deletion-key join (both sides explode to {self} ∪ del1
-    // keys — pure codegen, broadcast needle side — then exact levenshtein
-    // verify; the spell-correction plan reused as query-time expansion);
-    // expansions then ride the WAND driver exactly like wildcards (same
-    // weights / requiredAny / excluded roles). Oracle re-derives each
-    // neighborhood with DuckDB's levenshtein.
+    // FUZZY retrieval (`term~1`): the batch's needles and prefixes expand
+    // in ONE narrow dictionary scan — each term's code-point {self} ∪ del1
+    // keys probe the needles' keys (the spell-correction key scheme), and
+    // each hit is verified by an exact code-point edit distance; no
+    // explode, join or exchange. Expansions then ride the WAND driver
+    // exactly like wildcards (same weights / requiredAny / excluded
+    // roles). Oracle re-derives each neighborhood with DuckDB's
+    // levenshtein.
     "q_fuzzy" -> ((spark, sfDir) =>
       rankedReport(spark,
         Search.search(IndexCache.handle(spark, sfDir),

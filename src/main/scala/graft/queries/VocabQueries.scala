@@ -188,10 +188,9 @@ object VocabQueries {
     "q_spell" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
       import s.implicits._
-      def del1(w: String): Seq[String] =
-        (0 until w.length).map(i => w.substring(0, i) + w.substring(i + 1))
+      // the needles' keys by code point, like the Catalyst side below
       val qkeys = SpellQueries
-        .flatMap(q => (q +: del1(q)).distinct.map(k => (q, k)))
+        .flatMap(q => IndexHandle.deletionKeys(q).map(k => (q, k)))
         .toDF("q_term", "key")
       // del1(term) as a pure Catalyst lambda — delete 0-based position i =
       // substr(1..i) || substr(i+2..end); codegen'd, no UDF
@@ -212,9 +211,10 @@ object VocabQueries {
     }),
 
     // Search-box autocomplete: per prefix, the top-k dictionary terms by
-    // document frequency. One dictionary range scan per keystroke — the
-    // StartsWith predicate pushes to the parquet dictionary scan, so a
-    // prefix touches only its term range even at a 100M-term vocabulary.
+    // document frequency. The StartsWith predicate pushes to the parquet
+    // dictionary scan, but the dictionary is clustered by termId (df
+    // order), so a file's term range spans nearly the whole alphabet and
+    // the pushdown skips almost no file.
     "q_autocomplete" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
       val dict = h.dictionary.toDF()

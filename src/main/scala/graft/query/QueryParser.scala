@@ -35,10 +35,10 @@ final case class WildcardClause(prefix: String, weight: Double = 1.0, op: Char =
 
 /** One unexpanded fuzzy clause: `term~1` — every dictionary term within
   * edit distance 1 of `term` (including the term itself when in-vocab).
-  * Expansion is the SymSpell deletion-neighborhood join ([[IndexHandle
-  * .expandFuzzy]], one batched job per query batch), exact-verified by
-  * levenshtein. Only distance 1 is supported — the distance the deletion
-  * -key index scales to; `~2` is a LOUD error, never a silent weakening
+  * Expansion probes SymSpell deletion keys inside the batch's one narrow
+  * dictionary scan ([[IndexHandle.expand]], shared with the batch's
+  * wildcards), exact-verified by code-point edit distance. Only distance
+  * 1 is supported — the distance the deletion-key index scales to; `~2` is a LOUD error, never a silent weakening
   * (Lucene's bare `~` defaults to 2, so bare `~` is an error too, not a
   * quietly different default). `~0` degrades to the plain exact term at
   * parse time. Role semantics (`op`) mirror [[WildcardClause]] exactly. */
@@ -70,7 +70,7 @@ final case class FuzzyClause(term: String, weight: Double = 1.0, op: Char = ' ')
   * term is empty (filters narrow candidates, they never generate them).
   *
   * `wildcards` are UNEXPANDED `pre*` clauses — [[Search.expand]] resolves
-  * them against the index dictionary (prefix range scan, capped) before
+  * them against the index dictionary (one narrow term scan, capped) before
   * the kernel runs: bare/required expansions join `scoring` at the clause
   * weight (explicit and earlier-clause weights win on collision), a
   * required wildcard adds its expansion set to `requiredAny` (the doc must

@@ -48,21 +48,19 @@ object Search {
       maxExpansions: Int = MaxExpansions): ParsedQuery =
     expandAll(index, Seq(q), maxExpansions).head
 
-  /** Resolve a batch's wildcards and fuzzies: ONE batched fuzzy-needle job
-    * ([[IndexHandle.expandFuzzy]], the SymSpell deletion-key join) and ONE
-    * batched wildcard-prefix job ([[IndexHandle.expandPrefixes]], a prefix
-    * RANGE scan pushed to the parquet dictionary), each skipped when the
-    * batch has none, then per-query folding. Expansion semantics (see
-    * [[ParsedQuery]]): bare and `+` expansions score at the clause weight —
-    * explicit terms and earlier clauses win collisions (wildcards before
+  /** Resolve a batch's wildcards and fuzzies: ONE narrow dictionary scan
+    * for all its prefixes and needles ([[IndexHandle.expand]]), skipped
+    * when the batch has none, then per-query folding. Expansion semantics
+    * (see [[ParsedQuery]]): bare and `+` expansions score at the clause
+    * weight — explicit terms and earlier clauses win collisions (wildcards before
     * fuzzies, each in clause order); a `+` clause additionally adds its
     * expansion set as a `requiredAny` group (empty = unsatisfiable → the
     * kernel empties the query); a `-` clause's expansions join `excluded`
     * (empty = no-op). Already-expanded queries pass through untouched. */
   private def expandAll(index: IndexHandle, queries: Seq[ParsedQuery],
       maxExpansions: Int): Seq[ParsedQuery] = {
-    val fm = index.expandFuzzy(queries.flatMap(_.fuzzies.map(_.term)), maxExpansions)
-    val pm = index.expandPrefixes(queries.flatMap(_.wildcards.map(_.prefix)), maxExpansions)
+    val (pm, fm) = index.expand(queries.flatMap(_.wildcards.map(_.prefix)),
+      queries.flatMap(_.fuzzies.map(_.term)), maxExpansions)
     queries.map { q =>
       if (q.wildcards.isEmpty && q.fuzzies.isEmpty) q
       else {

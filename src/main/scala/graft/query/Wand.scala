@@ -199,75 +199,106 @@ final case class IndexHandle(spark: SparkSession, dir: String, manifest: IndexMa
   lazy val dictMap: Map[String, TermEntry] =
     dictionary.collect().map(e => e.term -> e).toMap
 
-  /** Wildcard expansion for a whole BATCH of prefixes in ONE dictionary
-    * scan: prefix → every dictionary term with it, ascending. The
-    * OR-of-StartsWith predicate pushes to the parquet dictionary scan (the
-    * autocomplete plan), so the scan touches only the prefixes' term
-    * ranges even at a 100M-term vocabulary. More than `max` matches under
-    * any prefix is a LOUD error (Lucene's TooManyClauses analog): a
-    * silently-truncated expansion set would make scoring depend on scan
-    * order. The collect is bounded by `|prefixes| · (max+1)` terms, each
-    * under at least one prefix; a collect that hits that bound holds more
-    * than `max` terms under some prefix (pigeonhole), so the cap check
-    * throws for it.
+  /** Wildcard expansion: prefix → every dictionary term with it,
+    * ascending ([[expand]] with no needles). */
+  def expandPrefixes(prefixes: Seq[String], max: Int): Map[String, Seq[String]] =
+    expand(prefixes, Nil, max)._1
+
+  /** Fuzzy expansion: needle → every dictionary term within edit distance
+    * 1, ascending, including the needle itself when in-vocab ([[expand]]
+    * with no prefixes). */
+  def expandFuzzy(needles: Seq[String], maxExp: Int): Map[String, Seq[String]] =
+    expand(Nil, needles, maxExp)._2
+
+  /** Wildcard and fuzzy expansion for a whole BATCH in ONE narrow scan of
+    * the dictionary's `term` column — no key rows, no join, no exchange.
+    * Returns (prefix → every term with it, needle → every term within
+    * edit distance 1), each ascending; every prefix has an entry, a needle
+    * with no neighbour has none.
+    *
+    * Inside each scan task a term is tested against every prefix with
+    * `startsWith`, and its [[IndexHandle.deletionKeys]] probe a
+    * driver-built map from the needles' own keys to the needles (the
+    * SymSpell shape shared with spell correction): a deletion, insertion
+    * or substitution always leaves the two sides a shared key, so the
+    * probe hits are a complete candidate set, each verified exactly by
+    * [[IndexHandle.withinOneEdit]] — the code-point distance Spark's
+    * `levenshtein` computes. The dictionary is clustered by termId (df
+    * order), so a file's term range spans nearly the whole alphabet and a
+    * term predicate would skip almost no file: the scan reads the whole
+    * column whatever it filters on.
+    *
+    * More than `max` terms under any prefix or needle is a LOUD error
+    * (Lucene's TooManyClauses analog): a silently truncated expansion set
+    * would make scoring depend on scan order. A task emits at most
+    * `max + 1` terms per prefix and per needle, so the collect is bounded
+    * by (scan partitions) · (|prefixes| + |needles|) · (max + 1) terms and
+    * a prefix or needle over the cap still collects more than `max` terms:
+    * the error is exact.
     * Deletes never shrink the dictionary (tombstones are doc-level), so
     * expansion over a deleted corpus may include df-stale terms — their
     * cursors simply find no live docs, exactly like any stale df. */
-  def expandPrefixes(prefixes: Seq[String], max: Int): Map[String, Seq[String]] = {
-    import org.apache.spark.sql.functions.col
-    val ps = prefixes.distinct
-    if (ps.isEmpty) return Map.empty
+  private[query] def expand(prefixes: Seq[String], needles: Seq[String], max: Int)
+      : (Map[String, Seq[String]], Map[String, Seq[String]]) = {
+    val ps = prefixes.distinct.toArray
     ps.foreach(p => require(p.nonEmpty, "empty wildcard prefix"))
-    val hits = dictionary.filter(ps.map(p => col("term").startsWith(p)).reduce(_ || _))
-      .select("term").as[String].limit(ps.length * (max + 1)).collect().sorted
-    ps.map { p =>
-      val terms = hits.filter(_.startsWith(p)).toSeq
-      if (terms.length > max)
-        throw new IllegalArgumentException(
-          s"wildcard '$p*' expands to more than $max terms — narrow the prefix or raise maxExpansions")
-      p -> terms
-    }.toMap
+    val ns = needles.distinct.filter(_.nonEmpty).toArray
+    if (ps.isEmpty && ns.isEmpty) return (Map.empty, Map.empty)
+    // key → the needles owning it; needle j is output slot ps.length + j
+    val probe: Map[String, Array[Int]] = ns.indices
+      .flatMap(j => IndexHandle.deletionKeys(ns(j)).map(_ -> (ps.length + j)))
+      .groupMap(_._1)(_._2).map { case (k, slots) => k -> slots.toArray }
+    val needleCps = ns.map(_.codePoints.toArray)
+    // a term within one edit of a needle is at most one code point longer or shorter
+    val lengths = needleCps.flatMap(c => Seq(c.length - 1, c.length, c.length + 1)).toSet
+    val hits = dictionary.select("term").as[String].mapPartitions { terms =>
+      val taken = new Array[Int](ps.length + ns.length)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+      def take(slot: Int, t: String): Unit =
+        if (taken(slot) <= max) { taken(slot) += 1; out += (slot -> t) }
+      terms.foreach { t =>
+        var i = 0
+        while (i < ps.length) { if (t.startsWith(ps(i))) take(i, t); i += 1 }
+        if (t.nonEmpty && lengths(t.codePointCount(0, t.length))) {
+          lazy val cps = t.codePoints.toArray
+          IndexHandle.deletionKeys(t).flatMap(probe.getOrElse(_, Array.empty[Int])).distinct
+            .foreach(slot => if (IndexHandle.withinOneEdit(needleCps(slot - ps.length), cps)) take(slot, t))
+        }
+      }
+      out.iterator
+    }.collect()
+    val bySlot = hits.groupMap(_._1)(_._2).map { case (slot, ts) => slot -> ts.distinct.sorted.toSeq }
+    ns.indices.find(j => bySlot.get(ps.length + j).exists(_.length > max)).foreach { j =>
+      throw new IllegalArgumentException(
+        s"fuzzy '${ns(j)}~1' expands to more than $max terms — raise maxExpansions") }
+    ps.indices.find(i => bySlot.get(i).exists(_.length > max)).foreach { i =>
+      throw new IllegalArgumentException(
+        s"wildcard '${ps(i)}*' expands to more than $max terms — narrow the prefix or raise maxExpansions") }
+    (ps.indices.map(i => ps(i) -> bySlot.getOrElse(i, Seq.empty)).toMap,
+      ns.indices.flatMap(j => bySlot.get(ps.length + j).map(ns(j) -> _)).toMap)
+  }
+}
+
+object IndexHandle {
+  /** A word's `{word} ∪ del1(word)` keys, by code point (the unit of
+    * Catalyst's `length`/`substr` and of `levenshtein`): two words within
+    * edit distance 1 always share one. */
+  private[graft] def deletionKeys(w: String): Seq[String] = {
+    val cps = w.codePoints.toArray
+    (w +: cps.indices.map(i => new String(cps, 0, i) + new String(cps, i + 1, cps.length - i - 1))).distinct
   }
 
-  /** Fuzzy expansion for a whole BATCH of needles in one job: needle →
-    * every dictionary term within edit distance 1 (ascending; includes the
-    * needle itself when in-vocab). The SymSpell shape shared with the
-    * spell-correction query: both sides explode into {self} ∪ del1 keys —
-    * a pure codegen transform/sequence lambda, no UDF — the (broadcast)
-    * key join yields a provably COMPLETE ed≤1 candidate superset
-    * (deletion/insertion/substitution all share a deletion key), verified
-    * exactly by the built-in levenshtein. One vocabulary-linear pass per
-    * BATCH, not per clause — the reason this takes Seq. Any needle
-    * expanding past `max` is a loud error ([[expandPrefixes]]' cap
-    * discipline). */
-  def expandFuzzy(needles: Seq[String], maxExp: Int): Map[String, Seq[String]] = {
-    import org.apache.spark.sql.functions.{array, array_distinct, broadcast,
-      col, concat, explode, length, levenshtein, lit, sequence, transform}
-    val ns = needles.distinct.filter(_.nonEmpty)
-    if (ns.isEmpty) return Map.empty
-    def del1(w: String): Seq[String] =
-      (0 until w.length).map(i => w.substring(0, i) + w.substring(i + 1))
-    val qkeys = ns.flatMap(q => (q +: del1(q)).distinct.map(k => (q, k)))
-      .toDF("q_term", "key")
-    val delKeys = transform(
-      sequence(lit(0), length(col("term")) - lit(1)),
-      i => concat(col("term").substr(lit(1), i),
-        col("term").substr(i + lit(2), length(col("term")))))
-    val hits = dictionary.toDF()
-      .filter(length(col("term")) > 0)
-      .select(col("term"),
-        explode(array_distinct(concat(array(col("term")), delKeys))).as("key"))
-      .join(broadcast(qkeys), "key")
-      .select("q_term", "term").distinct()
-      .filter(levenshtein(col("q_term"), col("term")) <= 1)
-      .as[(String, String)].collect()
-    val out = hits.groupBy(_._1).map { case (q, arr) =>
-      q -> arr.map(_._2).distinct.sorted.toSeq
+  /** Code-point edit distance ≤ 1 (Spark's `levenshtein(a, b) <= 1`). */
+  private[query] def withinOneEdit(a: Array[Int], b: Array[Int]): Boolean = {
+    val (s, l) = if (a.length <= b.length) (a, b) else (b, a)
+    if (l.length - s.length > 1) false
+    else {
+      var i = 0
+      while (i < s.length && s(i) == l(i)) i += 1
+      if (i == s.length) true
+      else if (s.length == l.length) java.util.Arrays.equals(s, i + 1, s.length, l, i + 1, l.length)
+      else java.util.Arrays.equals(s, i, s.length, l, i + 1, l.length)
     }
-    out.find(_._2.length > maxExp).foreach { case (q, _) =>
-      throw new IllegalArgumentException(
-        s"fuzzy '$q~1' expands to more than $maxExp terms — raise maxExpansions") }
-    out
   }
 }
 

@@ -1,13 +1,15 @@
 package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.jdk.CollectionConverters._
 
 /** The Spark jobs a block of code ran on the shared test session, as one
   * listener saw them: each job's start (with its stages' names) and end,
-  * in the order the scheduler posted them. */
-final case class JobLog(events: Seq[JobLog.Event]) {
+  * in the order the scheduler posted them, and the physical plan of each
+  * SQL execution it started. */
+final case class JobLog(events: Seq[JobLog.Event], plans: Seq[String]) {
   /** The number of jobs started. */
   def jobs: Int = events.count(_.isInstanceOf[JobLog.Start])
   /** The stage names of every job, in submission order. */
@@ -37,6 +39,7 @@ object JobLog {
     val spark = SparkTestSession.spark
     val sc = spark.sparkContext
     val events = new ConcurrentLinkedQueue[Event]()
+    val plans = new ConcurrentLinkedQueue[String]()
     // touched only on the listener bus's one thread
     val started = scala.collection.mutable.Set.empty[Int]
     var markerJob = -1
@@ -53,6 +56,11 @@ object JobLog {
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerJob) markerDone.countDown()
         else if (started(e.jobId)) { events.add(End(e.jobId)); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.description != Marker =>
+          plans.add(s.physicalPlanDescription); ()
+        case _ => ()
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -60,7 +68,7 @@ object JobLog {
       sc.setJobDescription(Marker)
       try spark.range(1).count() finally sc.setJobDescription(null)
       assert(markerDone.await(60, TimeUnit.SECONDS), "the listener bus never delivered the marker job")
-      (r, JobLog(events.asScala.toSeq))
+      (r, JobLog(events.asScala.toSeq, plans.asScala.toSeq))
     } finally sc.removeSparkListener(listener)
   }
 

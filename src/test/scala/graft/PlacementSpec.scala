@@ -1,6 +1,6 @@
 package graft
 
-import graft.JobLog.jobs
+import graft.JobLog.{jobs, record}
 import graft.index._
 import graft.query._
 import graft.tokenize.Tokenizers
@@ -186,5 +186,31 @@ class PlacementSpec extends AnyFunSuite {
     assert(wild.hits.nonEmpty && fuzzy.hits.nonEmpty)
     assert(wildJobs <= 3 + expandPrefix, s"wildcard: $wildJobs jobs, its expansion $expandPrefix")
     assert(fuzzyJobs <= 3 + expandFuzzy, s"fuzzy: $fuzzyJobs jobs, its expansion $expandFuzzy")
+  }
+
+  test("a batch's wildcards and fuzzies expand in one narrow job: no exchange, no generate") {
+    val req = Search.SearchRequest("wind* joi~1 stream", k = 5, facetKey = Some(facetKey), facetTopN = 3)
+    val warm = Search.run(plain, req, analyzer)
+    val (r, n) = jobs(Search.run(plain, req, analyzer))
+    assert(r.hits.nonEmpty && r.hits.toSeq == warm.hits.toSeq)
+    assert(n <= 4, s"a wildcard and fuzzy Search.run took $n jobs")
+
+    val (expanded, log) = record(Search.expand(plain, QueryParser.parse(1, "wind* joi~1 stream", analyzer)))
+    val terms = expanded.scoring.map(_._1)
+    assert(expanded.fuzzies.isEmpty && terms.contains("join") && terms.exists(_.startsWith("wind")),
+      s"expanded to $terms")
+    assert(log.jobs == 1 && log.plans.length == 1, s"${log.jobs} jobs, ${log.plans.length} plans")
+    assert(!log.plans.head.contains("Exchange") && !log.plans.head.contains("Generate"),
+      s"the expansion plan:\n${log.plans.head}")
+
+    // a batch holding both prefixes and needles: one job more than the
+    // same batch already expanded
+    val batch = QueryParser.parseAll(Seq(1 -> "wind* batch", 2 -> "joi~1 stream",
+      3 -> "+s* mergee~1", 4 -> "merge join"), analyzer)
+    val (all, withExpansion) = jobs(Search.search(plain, batch, Wand.Ranked(5)))
+    val expandedBatch = batch.map(Search.expand(plain, _))
+    val (pre, without) = jobs(Search.search(plain, expandedBatch, Wand.Ranked(5)))
+    assert(all.map { case (q, h) => q -> h.toSeq } == pre.map { case (q, h) => q -> h.toSeq })
+    assert(withExpansion == without + 1, s"$withExpansion jobs, $without once expanded")
   }
 }

@@ -590,6 +590,36 @@ class SearchSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](handle.expandFuzzy(Seq("sow"), 1))
   }
 
+  test("expandFuzzy counts edits by code point: supplementary-plane letters") {
+    import org.apache.spark.sql.functions.{col, encode, lit, timestamp_seconds}
+    import spark.implicits._
+    // U+20000 is a letter outside the BMP: one code point, two UTF-16 chars
+    val x = new String(Character.toChars(0x20000))
+    val d = "/tmp/graft_test_index/search_supplementary"
+    graft.queries.IndexCache.deleteRecursively(d)
+    val texts = Seq(s"a${x}b a${x}c", "ab axb", s"${x}b a${x}bd", s"$x$x b${x}a")
+    val pages = texts.zipWithIndex.map { case (t, i) => (i.toLong, s"sup://$i", t) }
+      .toDF("doc_id", "url", "text")
+      .select(col("doc_id"), col("url"), timestamp_seconds(lit(Pages.EpochSeconds)).as("warc_ts"),
+        encode(col("text"), "UTF-8").as("html"), col("text"), lit("en").as("lang"))
+    IndexBuilder.buildFrom(spark, pages, d, IndexConfig(blockSize = 16, bucketRange = 64, postingsBuckets = 2))
+    val h = IndexReader.load(spark, d)
+    def lev(a: Array[Int], b: Array[Int]): Int = {
+      val m = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (i == 0) j else if (j == 0) i else 0)
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        m(i)(j) = math.min(math.min(m(i - 1)(j) + 1, m(i)(j - 1) + 1),
+          m(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+      m(a.length)(b.length)
+    }
+    val needles = Seq(s"a${x}b", "ab", x, s"$x$x", s"b${x}")
+    val got = h.expandFuzzy(needles, 64)
+    needles.foreach { n =>
+      val want = h.dictMap.keys.filter(t => lev(n.codePoints.toArray, t.codePoints.toArray) <= 1).toSeq.sorted
+      assert(want.nonEmpty && got.getOrElse(n, Seq.empty) == want, s"needle $n")
+    }
+    assert(got(s"a${x}b").contains("ab") && got(s"a${x}b").contains("axb"))
+  }
+
   test("fuzzy retrieval: rank- and score-identical to the expanded brute force") {
     assertIdentical(Seq(
       1 -> "mergee~1",              // pure fuzzy, OOV needle
