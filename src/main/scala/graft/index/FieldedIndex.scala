@@ -83,26 +83,18 @@ object FieldedIndex {
           "would silently keep the old tokenization — build into a fresh directory")
       return
     }
-    // per-field sub-index builds are independent (separate dirs, each with
-    // its own staged commits) — overlap them (optimization guide §2.6) so
-    // one field's build tail back-fills the other's map tasks
-    locally {
-      // every field's build scans the SAME upstream pages relation (often a
-      // derived tokenize/split map) — persist it once across the field loop
-      // instead of recomputing it per sub-index; Overlap.all waits for
-      // EVERY build before surfacing a failure (no orphaned build racing a
-      // caller's retry)
-      val shared = pages.persist()
-      try {
-        Overlap.all(fields.map { f => () =>
-          val fieldPages = shared.select(
-            col("doc_id"), col("url"), col("warc_ts"),
-            col(f.textCol).as("text"), col("lang"))
-          IndexBuilder.buildFrom(spark, fieldPages, fieldDir(baseDir, f.name), f.cfg)
-        })
-        ()
-      } finally { shared.unpersist(); () }
-    }
+    // per-field sub-index builds run one after another: each build already
+    // uses every core, so starting them together only multiplies the jobs
+    // in flight. Every field's build scans the SAME upstream pages relation
+    // (often a derived tokenize/split map) — persist it once across the
+    // field loop instead of recomputing it per sub-index
+    val shared = pages.persist()
+    try fields.foreach { f =>
+      val fieldPages = shared.select(
+        col("doc_id"), col("url"), col("warc_ts"),
+        col(f.textCol).as("text"), col("lang"))
+      IndexBuilder.buildFrom(spark, fieldPages, fieldDir(baseDir, f.name), f.cfg)
+    } finally { shared.unpersist(); () }
     Store.writeJson(manifestPath(baseDir), spec)
   }
 

@@ -29,15 +29,6 @@ object Overlap {
     (Await.result(f, Duration.Inf), r)
   }
 
-  /** Run every thunk concurrently and wait for ALL of them to finish
-    * before returning results or rethrowing the first failure — the
-    * n-ary sibling of [[overlap]] with the same no-orphans contract. */
-  def all[A](thunks: Seq[() => A]): Seq[A] = {
-    val fs = thunks.map(t => Future(t()))
-    fs.foreach(f => Await.ready(f, Duration.Inf)) // quiesce all first
-    fs.map(f => Await.result(f, Duration.Inf))    // then surface failures
-  }
-
   /** UTF-8 binary (unsigned byte) string comparison — Spark UTF8String /
     * DuckDB binary-collation order, i.e. code-point order. Driver-side
     * sorts that replace a Spark `orderBy` MUST use this, not Java

@@ -15,16 +15,14 @@ final case class Posting(termId: Int, docId: Long, tf: Int, positions: Array[Int
   * query operators and driver rows decode, point-probe and bucket-filter
   * blocks through these three helpers, so a codec change edits this object.
   *
-  * Four readers keep their own decode on purpose:
+  * Three readers keep their own decode on purpose:
   *  - WAND's kernel (`Wand.DecodedBlock` and the lazy phrase-position
   *    decode) decodes per block into primitive arrays on the benchmark's
   *    hot path, where a row per posting would cost allocation and
   *    serialization;
   *  - [[IndexValidator]] decodes under `try` so a corrupt block becomes a
   *    report row, not a failed job;
-  *  - `graft.functions.VByteExpressions` is the codec's SQL surface;
-  *  - `Wand.bucketWalk` concatenates each term's per-bucket docId runs
-  *    into one sorted array for the galloping intersection. */
+  *  - `graft.functions.VByteExpressions` is the codec's SQL surface. */
 object Postings {
 
   /** Every posting of `blocks`, one row each. Positions are decoded only

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.corpus.Pages
 import graft.index.{IndexBuilder, IndexConfig, MergeStep, PhraseVocab}
-import graft.query.{IndexHandle, IndexReader}
+import graft.query.{IndexHandle, IndexReader, QuerySpec, Wand}
 import graft.tokenize.{TokenizerConfig, Tokenizers}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -157,21 +157,26 @@ object VocabQueries {
     }),
 
     // U4-extra: conjunctive (AND) retrieval = posting-list intersection,
-    // answered FROM the compressed index by per-bucket k-way GALLOPING
-    // intersection (Wand.booleanAnd): only intersection hits leave the
-    // cogroup, so the exchange is result-bounded — never a
-    // groupBy(query, doc) over a stopword term's full postings
+    // answered FROM the compressed index by Wand.matching with every term
+    // required: each bucket's match set gallops over the required terms'
+    // decoded lists, rarest first, and only intersection hits leave the
+    // bucket, so the rows are result-bounded — never a groupBy(query, doc)
+    // over a stopword term's full postings
     "q_bool_and" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
-      graft.query.Wand.booleanAnd(h, QuerySet.queries.filter(_.terms.size > 1))
+      val qs = QuerySet.queries.filter(_.terms.size > 1)
+      Wand.matching(h, qs,
+        qs.map(q => q.queryId -> Wand.Constraints(q.terms, Nil, Nil)).toMap)
         .orderBy("query_id", "doc_id")
     }),
 
-    // U3/U4 over the index: AND-NOT (negation) — positives intersected,
-    // negatives excluded, all inside the same bucket cogroup
+    // U3/U4 over the index: AND-NOT (negation) — the positives required,
+    // the negatives excluded, both checked per bucket in the same pass
     "q_bool_andnot" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
-      graft.query.Wand.booleanAndNot(h, AndNotQueries)
+      Wand.matching(h, AndNotQueries.map { case (qid, pos, _) => QuerySpec(qid, pos) },
+        AndNotQueries.map { case (qid, pos, neg) =>
+          qid -> Wand.Constraints(pos, neg, Nil) }.toMap)
         .orderBy("query_id", "doc_id")
     }),
 
@@ -228,12 +233,14 @@ object VocabQueries {
     }),
 
     // Faceted search: per conjunctive query, matching-doc counts by lang —
-    // the SERP facet panel. Hits come from the result-bounded boolean
-    // cogroup; the lang lookup is a pruned (doc_id, lang) scan joined on
-    // the hit set, so facet cost is O(results).
+    // the SERP facet panel. Hits come from the result-bounded AND match
+    // set of q_bool_and; the lang lookup is a pruned (doc_id, lang) scan
+    // joined on the hit set, so facet cost is O(results).
     "q_facet_lang" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
-      val hits = graft.query.Wand.booleanAnd(h, QuerySet.queries.filter(_.terms.size > 1))
+      val qs = QuerySet.queries.filter(_.terms.size > 1)
+      val hits = Wand.matching(h, qs,
+        qs.map(q => q.queryId -> Wand.Constraints(q.terms, Nil, Nil)).toMap)
       val langs = s.read.parquet(s"$d/documents.parquet")
         .select(col("doc_id").cast("long").as("doc_id"), col("lang"))
       hits.join(langs, "doc_id")
@@ -241,12 +248,12 @@ object VocabQueries {
         .orderBy("query_id", "lang")
     }),
 
-    // U1 over the index: OR (disjunctive) retrieval — per-bucket sorted
-    // dedupe-union of the terms' posting lists; OOV terms ignored,
-    // all-OOV queries empty (QuerySet queries 4 and 5 cover both)
+    // U1 over the index: OR (disjunctive) retrieval — the bare query's
+    // match set, each bucket's deduped union of the terms' decoded lists;
+    // OOV terms are ignored (QuerySet query 4) and an all-OOV query is empty
     "q_bool_or" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
-      graft.query.Wand.booleanOr(h, QuerySet.queries.filter(_.terms.size > 1))
+      Wand.matching(h, QuerySet.queries.filter(_.terms.size > 1))
         .orderBy("query_id", "doc_id")
     })
   )

@@ -61,52 +61,6 @@ object Intersect {
     out.result()
   }
 
-  /** k-way union of sorted distinct lists, ascending, deduped — a linear
-    * merge driven by the minimum head (k is query-sized, so the scan is
-    * O(Σ|list| · k) with tiny constants; no hash set materialization). */
-  def unionSorted(lists: Array[Array[Long]]): Array[Long] = {
-    val live = lists.filter(_.nonEmpty)
-    if (live.isEmpty) return Array.empty
-    if (live.length == 1) return live(0)
-    val out = new scala.collection.mutable.ArrayBuilder.ofLong
-    val pos = new Array[Int](live.length)
-    var last = Long.MinValue
-    while ({
-      var min = Long.MaxValue
-      var k = 0
-      while (k < live.length) {
-        if (pos(k) < live(k).length && live(k)(pos(k)) < min) min = live(k)(pos(k))
-        k += 1
-      }
-      if (min == Long.MaxValue) false
-      else {
-        if (min != last) { out += min; last = min }
-        k = 0
-        while (k < live.length) {
-          if (pos(k) < live(k).length && live(k)(pos(k)) == min) pos(k) += 1
-          k += 1
-        }
-        true
-      }
-    }) ()
-    out.result()
-  }
-
-  /** Sorted difference a − b (both ascending): linear two-pointer merge —
-    * allocation-free per element, no boxed hash set. */
-  def diffSorted(a: Array[Long], b: Array[Long]): Array[Long] = {
-    if (a.isEmpty || b.isEmpty) return a
-    val out = new scala.collection.mutable.ArrayBuilder.ofLong
-    var i = 0
-    var j = 0
-    while (i < a.length) {
-      while (j < b.length && b(j) < a(i)) j += 1
-      if (j >= b.length || b(j) != a(i)) out += a(i)
-      i += 1
-    }
-    out.result()
-  }
-
   /** first index >= `from` with a(idx) >= target (galloping + binary).
     * The binary window's lower bound is the PREVIOUS probe index (the last
     * index proven < target) — never re-derived from the step width, which
@@ -181,10 +135,14 @@ final case class IndexHandle(spark: SparkSession, dir: String, manifest: IndexMa
     else df.join(tombstones.toDF("__tomb_doc_id"),
       org.apache.spark.sql.functions.col(docCol) === org.apache.spark.sql.functions.col("__tomb_doc_id"),
       "left_anti")
-  /** Term-pruned dictionary lookup — the query path NEVER collects the
-    * whole dictionary: the `term IN (...)` predicate pushes to the parquet
-    * dictionary scan (asserted in PlanSpec), so a 512-query batch reads a
-    * few thousand dictionary rows even against a 100M-term vocabulary. */
+  /** Dictionary lookup of the given terms — the query path never collects
+    * the whole dictionary, only the matching entries. The `term IN (...)`
+    * predicate is pushed to the parquet dictionary scan (asserted in
+    * PlanSpec), but it prunes little: the dictionary is clustered by termId
+    * (df order), so every file's term range spans nearly the whole alphabet
+    * and the scan reads nearly the whole `term` column (a one-term lookup
+    * read 96,911 to 116,916 of a perfbench serp_read dictionary's 151,771
+    * rows) until the dictionary is clustered by term (ROADMAP direction 1). */
   def lookupTerms(terms: Seq[String]): Map[String, TermEntry] = {
     import org.apache.spark.sql.functions.col
     val ts = terms.distinct
@@ -713,95 +671,6 @@ object Wand {
     index.docstatsRaw.filter(pred)
   }
 
-  /** Conjunctive (AND) retrieval: docIds containing EVERY query term,
-    * answered by per-bucket k-way galloping intersection over the decoded
-    * sorted posting lists — the U4 operator in its scale shape. A doc's
-    * postings all live in the doc's bucket, so buckets intersect
-    * independently and ONLY intersection hits are emitted: the exchange is
-    * bounded by the result size, never by the terms' posting volume
-    * (a groupBy(query, doc) over all postings of a stopword term would
-    * shuffle the corpus). Queries with any OOV term return empty (AND
-    * semantics). Returns (query_id, doc_id) rows. */
-  def booleanAnd(index: IndexHandle, queries: Seq[QuerySpec]): org.apache.spark.sql.DataFrame =
-    booleanAndNot(index, queries.map(q => (q.queryId, q.terms, Nil)))
-
-  /** OR (disjunctive) retrieval: docs containing ANY query term — the U1
-    * analog over the index. Same bucket walk as [[booleanAnd]]; per bucket
-    * each query takes the sorted dedupe-union of its terms' decoded lists,
-    * so the output is exactly result-sized (for OR the result IS the
-    * posting union — there is no tighter bound). OOV terms are ignored; an
-    * all-OOV query is empty. */
-  def booleanOr(index: IndexHandle, queries: Seq[QuerySpec]): org.apache.spark.sql.DataFrame = {
-    val dict = index.lookupTerms(queries.flatMap(_.terms))
-    val qTerms: Map[Int, Array[Int]] = queries.flatMap { q =>
-      val ids = q.terms.distinct.flatMap(dict.get).map(_.termId)
-      if (ids.nonEmpty) Some(q.queryId -> ids.sorted.toArray) else None
-    }.toMap
-    bucketWalk(index, qTerms)(identity) { (termIds, byTerm) =>
-      Intersect.unionSorted(termIds.flatMap(byTerm.get))
-    }
-  }
-
-  /** AND-NOT retrieval: docs containing every positive term and none of
-    * the negative terms — the boolean-algebra complement of [[booleanAnd]]
-    * (which is this with no negatives), same bucket walk (a doc and all its
-    * postings share a bucket, so exclusion is bucket-local too). OOV
-    * positives empty the query; OOV negatives are no-ops. `queries` maps
-    * queryId -> (positives, negatives). */
-  def booleanAndNot(
-      index: IndexHandle,
-      queries: Seq[(Int, Seq[String], Seq[String])]
-  ): org.apache.spark.sql.DataFrame = {
-    val dict = index.lookupTerms(queries.flatMap(q => q._2 ++ q._3))
-    val resolved: Map[Int, (Array[Int], Array[Int])] = queries.flatMap { case (qid, pos, neg) =>
-      val ps = pos.distinct
-      val pIds = ps.flatMap(dict.get).map(_.termId)
-      if (pIds.length < ps.length || pIds.isEmpty) None // OOV positive → empty
-      else Some(qid -> (pIds.sorted.toArray, neg.distinct.flatMap(dict.get).map(_.termId).toArray))
-    }.toMap
-    bucketWalk(index, resolved)(q => q._1 ++ q._2) { case ((pos, neg), byTerm) =>
-      val posLists = pos.flatMap(byTerm.get)
-      if (posLists.length < pos.length) Array.emptyLongArray // a positive absent from this bucket
-      else {
-        val hits = Intersect.gallop(posLists)
-        val excluded = neg.flatMap(byTerm.get)
-        // both sides sorted ascending: linear merge-difference, no boxed
-        // hash set even when a negative term is a stopword
-        if (excluded.isEmpty || hits.isEmpty) hits
-        else Intersect.diffSorted(hits, Intersect.unionSorted(excluded))
-      }
-    }
-  }
-
-  /** The boolean operators' shared skeleton: fetch the postings of every
-    * resolved query's terms (termId predicate pushed to parquet), group the
-    * blocks by docId bucket, decode each term's ascending docId list once
-    * per bucket, let `hitsOf` pick each query's sorted hits, and drop
-    * tombstoned docs. The per-query terms ride the task closure (no
-    * broadcast to release). Returns (query_id, doc_id) rows. */
-  private def bucketWalk[Q](index: IndexHandle, resolved: Map[Int, Q])(termIds: Q => Array[Int])(
-      hitsOf: (Q, Map[Int, Array[Long]]) => Array[Long]): org.apache.spark.sql.DataFrame = {
-    val spark = index.spark
-    import spark.implicits._
-    val allIds = resolved.values.flatMap(q => termIds(q)).toSeq.distinct
-    if (allIds.isEmpty) return Seq.empty[(Int, Long)].toDF("query_id", "doc_id")
-    val blocksPerBucket = index.manifest.blocksPerBucket
-    index.postings
-      .filter(col("termId").isin(allIds: _*))
-      .as[PostingBlock]
-      .groupByKey(b => b.blockId / blocksPerBucket)
-      .flatMapGroups { (_, blocks) =>
-        val byTerm: Map[Int, Array[Long]] = blocks.toArray.groupBy(_.termId).map {
-          case (t, bs) =>
-            // blocks of one term in one bucket are disjoint ascending runs
-            t -> bs.sortBy(_.firstDocId).iterator.flatMap(b => VByte.decodeDocIds(b.docIdGaps)).toArray
-        }
-        resolved.iterator.flatMap { case (qid, q) => hitsOf(q, byTerm).iterator.map(d => (qid, d)) }
-      }
-      .toDF("query_id", "doc_id")
-      .transform(index.excludeDeleted(_, "doc_id"))
-  }
-
   /** Optional pruning instrumentation: `candidates` counts every posting
     * a naive DAAT would touch (Σ cursor lengths per query per bucket);
     * `evals` counts docs that actually reached exact evaluation after the
@@ -816,24 +685,30 @@ object Wand {
       spark.sparkContext.longAccumulator("wandCandidatePostings"))
   }
 
-  /** What one pass of the WAND driver ([[search]]) computes per query. Each
-    * mode fixes its result type, its no-hit result, what a bucket ships per
-    * query and how those rows fold, so a mix without a meaning (a cursor
-    * under collapse, a boost on a count) cannot be written. */
-  sealed abstract class Mode[R: TypeTag] {
+  /** What each bucket of one WAND pass computes per query: the docstats
+    * slots it reads and the rows it ships. A [[Mode]] also folds the rows
+    * into a result per query; [[matching]] keeps them as a relation. */
+  sealed abstract class Pass {
     /** The docstats expressions riding into the cogroup next to each doc's
       * norm (collapse, facet or sort keys, or a boost), read per doc
       * through [[BucketQuery.key]]. */
     private[query] def slots: Seq[Column]
-    /** Whether the mode may run over several fields (BM25F, shards). */
+    /** Whether the pass may run over several fields (BM25F, shards). */
     private[query] def multiField: Boolean = false
     private[query] def boundKey: Option[String] = None
     /** The ranked part, whose threshold the stats-only seed may raise. */
     private[query] def rankedPart: Option[Ranked] = None
-    private[query] def empty: R
     /** A bucket's rows for one query. Built on the driver from plain values
-      * taken from the mode, so no Column reaches an executor. */
+      * taken from the pass, so no Column reaches an executor. */
     private[query] def emitter: BucketQuery => Iterator[ScoredDoc]
+  }
+
+  /** What one pass of the WAND driver ([[search]]) computes per query. Each
+    * mode fixes its result type, its no-hit result, what a bucket ships per
+    * query and how those rows fold, so a mix without a meaning (a cursor
+    * under collapse, a boost on a count) cannot be written. */
+  sealed abstract class Mode[R: TypeTag] extends Pass {
+    private[query] def empty: R
     /** One query's rows from every bucket folded into its result, on an
       * executor or, in [[search]]'s driver placement, the driver; built
       * like [[emitter]]. */
@@ -1052,11 +927,20 @@ object Wand {
     }
   }
 
-  /** One query's view of one bucket, handed to its mode's emitter: cursors
+  /** The match set of a [[search]] pass, one hit row per doc of
+    * [[BucketQuery.matches]], for [[matching]]. */
+  private case object MatchSet extends Pass {
+    private[query] def slots: Seq[Column] = Seq.empty
+    private[query] def emitter: BucketQuery => Iterator[ScoredDoc] =
+      q => q.matches.map(d => ScoredDoc(q.queryId, d, 0.0))
+  }
+
+  /** One query's view of one bucket, handed to its pass's emitter: cursors
     * over its scoring terms' decoded blocks, per-field norms (docLen -1 =
     * tombstoned or filtered out), the slot values per doc (one map per
-    * slot of the mode), the constraint check (null = none) and the seeded
-    * threshold. */
+    * slot of the pass), the constraint check (null = none), the seeded
+    * threshold and the blocks of the required terms that drive
+    * [[matches]] (empty = none). */
   private[query] final class BucketQuery(
       val queryId: Int,
       val cursors: Array[TermCursor],
@@ -1064,24 +948,34 @@ object Wand {
       slots: Array[java.util.HashMap[Long, String]],
       val admit: Long => Boolean,
       val theta0: Double,
-      val metrics: Option[WandMetrics]) {
+      val metrics: Option[WandMetrics],
+      required: Array[Array[DecodedBlock]]) {
     /** A scored or matched doc's value of the first slot. */
     def key(d: Long): String = slots(0).get(d)
     /** This view with its slots starting at `i`: the part of a combined
       * mode whose slots follow another part's. */
     def fromSlot(i: Int): BucketQuery =
-      new BucketQuery(queryId, cursors, docLens, slots.drop(i), admit, theta0, metrics)
+      new BucketQuery(queryId, cursors, docLens, slots.drop(i), admit, theta0, metrics, required)
     /** The bucket's match set (single field): every doc holding ≥ 1
-      * scoring term — the union of the already-decoded blocks — that is
-      * live (no -1 sentinel) and admitted. */
+      * scoring term that is live (no -1 sentinel) and admitted. With
+      * required terms the candidates are their galloping intersection,
+      * rarest list first, so `+stopword +rare` costs O(rare · log skip);
+      * the body passes them only when one of them scores, so every
+      * candidate holds a scoring term. Otherwise the candidates are the
+      * union of the already-decoded blocks. */
     def matches: Iterator[Long] = {
-      val set = new java.util.HashSet[Long]()
-      cursors.foreach(_.blocks.foreach { b =>
-        val ids = b.ids
-        var i = 0
-        while (i < ids.length) { set.add(ids(i)); i += 1 }
-      })
-      set.iterator().asScala.filter { d =>
+      val docs: Iterator[Long] =
+        if (required.nonEmpty) Intersect.gallop(required.map(_.flatMap(_.ids))).iterator
+        else {
+          val set = new java.util.HashSet[Long]()
+          cursors.foreach(_.blocks.foreach { b =>
+            val ids = b.ids
+            var i = 0
+            while (i < ids.length) { set.add(ids(i)); i += 1 }
+          })
+          set.iterator().asScala
+        }
+      docs.filter { d =>
         val len = docLens(0).get(d)
         if (len == null)
           throw new IllegalStateException(
@@ -1257,8 +1151,44 @@ object Wand {
       constraints: Map[Int, Constraints] = Map.empty,
       globalStats: Option[(Long, Double, Map[String, Long])] = None,
       metrics: Option[WandMetrics] = None): Map[Int, R] = {
+    val reduced: Map[Int, R] =
+      passRows(fields, queries, mode, docFilter, constraints, globalStats, metrics) match {
+        case Left(rs)  => rs.groupBy(_.queryId).map { case (qid, qRows) => qid -> mode.fold(qRows.iterator) }
+        case Right(ds) => mode.reduce(ds)
+      }
+    queries.map(q => q.queryId -> reduced.getOrElse(q.queryId, mode.empty)).toMap
+  }
+
+  /** BOOLEAN RETRIEVAL over one index: the (query_id, doc_id) rows of each
+    * query's match set — the docs holding ≥ 1 of the query's terms that
+    * are live and pass its constraints, from [[search]]'s own pass. OR is
+    * the bare query (the U1 union), AND the query's terms all `required`
+    * (U4 intersect), AND-NOT adds the negatives as `excluded` (U3
+    * difference); constraints resolve as in [[search]], so an OOV required
+    * term empties its query and OOV excluded or optional terms are no-ops.
+    * The rows stay a relation (an OR over a stopword can be corpus-sized):
+    * the cogroup placement's rows as they leave the executors, the driver
+    * placement's as a local relation no larger than the postings it
+    * collected. */
+  def matching(index: IndexHandle, queries: Seq[QuerySpec],
+      constraints: Map[Int, Constraints] = Map.empty): DataFrame = {
+    val spark = index.spark
+    import spark.implicits._
+    passRows(Seq(index -> 1.0), queries, MatchSet, None, constraints, None, None) match {
+      case Left(rs)  => rs.map(r => (r.queryId, r.docId)).toDF("query_id", "doc_id")
+      case Right(ds) => ds.select(col("queryId").as("query_id"), col("docId").as("doc_id"))
+    }
+  }
+
+  /** One [[search]] pass's rows before any fold: `Left` the rows the body
+    * emitted on the driver placement, `Right` the cogroup's rows. A pass
+    * that finds nothing to fetch yields no rows and runs no further job. */
+  private def passRows(fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec], pass: Pass,
+      docFilter: Option[Column], constraints: Map[Int, Constraints],
+      globalStats: Option[(Long, Double, Map[String, Long])],
+      metrics: Option[WandMetrics]): Either[Seq[ScoredDoc], Dataset[ScoredDoc]] = {
     require(fields.nonEmpty, "at least one field")
-    require(fields.length == 1 || (constraints.isEmpty && mode.multiField),
+    require(fields.length == 1 || (constraints.isEmpty && pass.multiField),
       "constraints, boosts, counts, facets and sort-by are single-field")
     val spark = fields.head._1.spark
     import spark.implicits._
@@ -1267,7 +1197,7 @@ object Wand {
       h.manifest.bucketRange == m0.bucketRange && h.manifest.blockSize == m0.blockSize },
       "fielded sub-indexes must share block geometry (bucketRange, blockSize)")
     val nF = fields.length
-    def empty = queries.map(q => q.queryId -> mode.empty).toMap
+    val noRows = Left(Seq.empty[ScoredDoc])
     // term-pruned lookups of ONLY the batch's query terms (scale-safe: no
     // full-dictionary collect on the query path). Constraint terms ride in
     // the same lookup: excluded terms never score but their postings must
@@ -1334,14 +1264,14 @@ object Wand {
       } yield (f, e.termId, q.boost(t) * fields(f)._2 * idfOf(f, t, e.df)))
         .sortBy(x => (x._1, x._2)).toArray
     }.toMap
-    if (qSpecs.values.forall(_.isEmpty)) return empty
+    if (qSpecs.values.forall(_.isEmpty)) return noRows
 
     // seeding is UNSOUND under a filter, a collapse key or a boost (their
     // df >= k guaranteed docs may be filtered out, collapse into fewer
     // groups or score lower), for a constrained query (its guaranteed docs
     // may fail the constraints) and for a page cursor (guaranteed docs may
     // rank BEFORE the cursor) — the last two disable per query
-    val thetaSeed: Map[Int, Double] = mode.rankedPart match {
+    val thetaSeed: Map[Int, Double] = pass.rankedPart match {
       case Some(Ranked(k, ByScore(after, None), _)) if docFilter.isEmpty &&
           (nF == 1 || fields.forall(_._1.manifest.tombVersion < 0)) =>
         liveQueries.filterNot(q =>
@@ -1402,10 +1332,10 @@ object Wand {
         .map(b => (f, b))
     }.reduce(_ union _)
 
-    // the mode's slot values (collapse/facet/sort keys or a boost: one
+    // the pass's slot values (collapse/facet/sort keys or a boost: one
     // codegen'd expression each over the docstats row, computed AFTER
     // docFilter reads the raw url) ride next to the norms
-    val slotCols = mode.slots.map(c => coalesce(c.cast("string"), lit("")))
+    val slotCols = pass.slots.map(c => coalesce(c.cast("string"), lit("")))
     val nSlots = slotCols.length
     // the docstats rows of the candidate buckets — `Left` the listed
     // buckets (a docId-range predicate pushed INTO the parquet scan), `Right`
@@ -1447,8 +1377,8 @@ object Wand {
     // THE per-bucket body of both placements: one bucket's field-tagged
     // blocks and docstats rows in, every live query's rows out. Its plain
     // driver-side values (cursor specs, constraints, seeds) ride the closure
-    val boundKey = mode.boundKey
-    val emit = mode.emitter
+    val boundKey = pass.boundKey
+    val emit = pass.emitter
     val phraseTids = (resolvedCons.values.flatMap(_.phrases.iterator.flatMap(_._1)) ++
       resolvedCons.values.flatMap(_.excludedPhrases.iterator.flatMap(_._1))).toSet
     val body: (Array[(Int, PostingBlock)], Iterator[SlotStat]) => Iterator[ScoredDoc] = {
@@ -1565,55 +1495,57 @@ object Wand {
                     c.phrases.forall { case (ph, sl) => phraseAt(ph, sl, doc) } &&
                     !c.excludedPhrases.exists { case (ph, sl) => phraseAt(ph, sl, doc) }
               }
+              // the required terms drive `matches` when one of them scores
+              // (constraints are single-field, so every spec is field 0)
+              val required = rc.filter(_.required.exists(tid => specs.exists(_._2 == tid)))
+                .fold(Array.empty[Array[DecodedBlock]])(_.required.map(tid => byFieldTerm((0, tid))))
               emit(new BucketQuery(qid, cursors, docLens, slots, admit,
-                thetaSeed.getOrElse(qid, Double.NegativeInfinity), metrics))
+                thetaSeed.getOrElse(qid, Double.NegativeInfinity), metrics, required))
             }
           }
         }
     }
 
-    val reduced: Map[Int, R] =
-      if (onDriver) {
-        // driver placement: the blocks in one job; their blockIds give the
-        // exact candidate buckets, so no probe runs; their docstats in one
-        // more job; then the body bucket by bucket and the mode's fold
-        val blocks = fBlocks.collect()
-        val scoring = idsByField.map(_.toSet)
-        val buckets = blocks.collect {
-          case (f, b) if scoring(f)(b.termId) => b.blockId / blocksPerBucket }.distinct.sorted
-        if (buckets.isEmpty) return empty
-        val statsByBucket = fStats(Left(buckets)).collect().groupBy(_.docId / bucketRange)
-        blocks.groupBy(_._2.blockId / blocksPerBucket).iterator.flatMap { case (b, bs) =>
-          body(bs, statsByBucket.getOrElse(b, Array.empty[SlotStat]).iterator)
-        }.toSeq.groupBy(_.queryId).map { case (qid, rows) => qid -> mode.fold(rows.iterator) }
-      } else {
-        // cogroup placement: prune docstats (norms) to buckets that actually
-        // hold candidate blocks — at 10^12 docs most buckets have no
-        // postings for a given query batch, and their norms must never
-        // enter the cogroup exchange. The candidate bucket set is tiny (≤
-        // the query terms' block count), so collect a BOUNDED probe of it
-        // and push an OR-of-docId-ranges predicate INTO the docstats scan
-        // (docstats are range-clustered by docId on write, so parquet
-        // min/max stats skip whole files/row groups); batches touching more
-        // than MaxPredicateBuckets buckets keep the fully-distributed
-        // semi-join — the driver never materializes a web-scale bucket set.
-        val candBuckets = (0 until nF).flatMap { f =>
-          val ids = idsByField(f)
-          if (ids.isEmpty) None
-          else Some(fields(f)._1.postings.toDF()
-            .filter(col("termId").isin(ids.map(Int.box): _*))
-            .select((col("blockId") / lit(blocksPerBucket)).cast("long").as("bucket")))
-        }.reduce(_ unionByName _).distinct()
-        val probe: Array[Long] =
-          candBuckets.limit(MaxPredicateBuckets + 1).as[Long].collect()
-        if (probe.isEmpty) return empty
-        val stats = fStats(if (probe.length <= MaxPredicateBuckets) Left(probe) else Right(candBuckets))
-        mode.reduce(fBlocks.groupByKey(_._2.blockId / blocksPerBucket)
-          .cogroup(stats.groupByKey(_.docId / bucketRange)) { (_, blocks, rows) =>
-            body(blocks.toArray, rows)
-          })
-      }
-    queries.map(q => q.queryId -> reduced.getOrElse(q.queryId, mode.empty)).toMap
+    if (onDriver) {
+      // driver placement: the blocks in one job; their blockIds give the
+      // exact candidate buckets, so no probe runs; their docstats in one
+      // more job; then the body bucket by bucket
+      val blocks = fBlocks.collect()
+      val scoring = idsByField.map(_.toSet)
+      val buckets = blocks.collect {
+        case (f, b) if scoring(f)(b.termId) => b.blockId / blocksPerBucket }.distinct.sorted
+      if (buckets.isEmpty) return noRows
+      val statsByBucket = fStats(Left(buckets)).collect().groupBy(_.docId / bucketRange)
+      Left(blocks.groupBy(_._2.blockId / blocksPerBucket).iterator.flatMap { case (b, bs) =>
+        body(bs, statsByBucket.getOrElse(b, Array.empty[SlotStat]).iterator)
+      }.toSeq)
+    } else {
+      // cogroup placement: prune docstats (norms) to buckets that actually
+      // hold candidate blocks — at 10^12 docs most buckets have no
+      // postings for a given query batch, and their norms must never
+      // enter the cogroup exchange. The candidate bucket set is tiny (≤
+      // the query terms' block count), so collect a BOUNDED probe of it
+      // and push an OR-of-docId-ranges predicate INTO the docstats scan
+      // (docstats are range-clustered by docId on write, so parquet
+      // min/max stats skip whole files/row groups); batches touching more
+      // than MaxPredicateBuckets buckets keep the fully-distributed
+      // semi-join — the driver never materializes a web-scale bucket set.
+      val candBuckets = (0 until nF).flatMap { f =>
+        val ids = idsByField(f)
+        if (ids.isEmpty) None
+        else Some(fields(f)._1.postings.toDF()
+          .filter(col("termId").isin(ids.map(Int.box): _*))
+          .select((col("blockId") / lit(blocksPerBucket)).cast("long").as("bucket")))
+      }.reduce(_ unionByName _).distinct()
+      val probe: Array[Long] =
+        candBuckets.limit(MaxPredicateBuckets + 1).as[Long].collect()
+      if (probe.isEmpty) return noRows
+      val stats = fStats(if (probe.length <= MaxPredicateBuckets) Left(probe) else Right(candBuckets))
+      Right(fBlocks.groupByKey(_._2.blockId / blocksPerBucket)
+        .cogroup(stats.groupByKey(_.docId / bucketRange)) { (_, blocks, rows) =>
+          body(blocks.toArray, rows)
+        })
+    }
   }
 
   /** Bytes per posting block beyond its VByte streams: the fixed-width

@@ -332,6 +332,30 @@ class Bm25fSpec extends AnyFunSuite {
     assert(e.getMessage.contains("identical field spec"), e.getMessage)
   }
 
+  test("fielded build: three fields never have more jobs in flight than a one-field build") {
+    import spark.implicits._
+    import graft.index.{FieldSpec, FieldedIndex}
+    val pages = (0L until 200L).map { id =>
+      (id, s"head$id title words", s"abstract ${id % 7} text",
+        (0 until 30).map(j => s"b${(id + j) % 11}").mkString(" "))
+    }.toDF("doc_id", "title_text", "abstract_text", "body_text")
+      .select(col("doc_id"), concat(lit("jobs://"), col("doc_id")).as("url"),
+        timestamp_seconds(lit(Pages.EpochSeconds)).as("warc_ts"),
+        col("title_text"), col("abstract_text"), col("body_text"), lit("en").as("lang"))
+    val specs = Seq(FieldSpec("title", 3.0, "title_text"),
+      FieldSpec("abstract", 2.0, "abstract_text"), FieldSpec("body", 1.0, "body_text"))
+    def inFlight(dir: String, fs: Seq[FieldSpec]): Int = {
+      graft.index.Store.delete(dir)
+      try JobLog.record(FieldedIndex.build(spark, pages, dir, fs))._2.maxInFlight
+      finally graft.index.Store.delete(dir)
+    }
+    // each field's own build overlaps some of its jobs; the reference is
+    // the most any one field's build ran at once
+    val one = specs.map(f => inFlight(s"/tmp/graft_bm25f_spec_jobs_${f.name}", Seq(f))).max
+    val three = inFlight("/tmp/graft_bm25f_spec_jobs_all", specs)
+    assert(three <= one, s"the 3-field build ran $three jobs at once, a 1-field build at most $one")
+  }
+
   test("fixture shape: both fields populated, per-field vocabularies differ, weights asymmetric") {
     assert(fields(0)._2 > fields(1)._2, "title must outweigh body")
     assert(fields(0)._1.manifest.nDocs > 0 && fields(1)._1.manifest.nDocs > 0,

@@ -3,6 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.index._
+import graft.queries.IndexCache
 import graft.streaming.{DedupIngest, DedupManifest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,36 +33,42 @@ class ControlFileSpec extends AnyFunSuite {
 
   test("index manifest: today's bytes read back and re-write byte-identically") {
     val dir = tmp()
-    Store.writeString(s"$dir/manifest.json", manifestBytes)
-    assert(Manifest.read(s"$dir/manifest.json") == manifest)
-    assert(IndexConfig().analyzerId == analyzer, "analyzerId must keep its value")
-    Manifest.commit(dir, manifest)
-    assert(Store.readString(s"$dir/manifest.json") == manifestBytes)
-    assert(Store.readString(Manifest.snapshotPath(dir, 1)) == manifestBytes)
+    try {
+      Store.writeString(s"$dir/manifest.json", manifestBytes)
+      assert(Manifest.read(s"$dir/manifest.json") == manifest)
+      assert(IndexConfig().analyzerId == analyzer, "analyzerId must keep its value")
+      Manifest.commit(dir, manifest)
+      assert(Store.readString(s"$dir/manifest.json") == manifestBytes)
+      assert(Store.readString(Manifest.snapshotPath(dir, 1)) == manifestBytes)
+    } finally IndexCache.deleteRecursively(dir)
   }
 
   test("a manifest lacking any one field fails with the rebuild message") {
     val dir = tmp()
-    val full = new ObjectMapper().readTree(manifestBytes).asInstanceOf[ObjectNode]
-    val keys = full.fieldNames().asScala.toList
-    assert(keys.length == manifest.productArity)
-    keys.foreach { k =>
-      val lacking = full.deepCopy()
-      lacking.remove(k)
-      Store.writeString(s"$dir/manifest.json", lacking.toString)
-      val e = intercept[RuntimeException](Manifest.read(s"$dir/manifest.json"))
-      assert(e.getMessage.contains(s"'$k'") && e.getMessage.contains("format too old") &&
-        e.getMessage.contains("rebuild the index"), s"without '$k': ${e.getMessage}")
-    }
+    try {
+      val full = new ObjectMapper().readTree(manifestBytes).asInstanceOf[ObjectNode]
+      val keys = full.fieldNames().asScala.toList
+      assert(keys.length == manifest.productArity)
+      keys.foreach { k =>
+        val lacking = full.deepCopy()
+        lacking.remove(k)
+        Store.writeString(s"$dir/manifest.json", lacking.toString)
+        val e = intercept[RuntimeException](Manifest.read(s"$dir/manifest.json"))
+        assert(e.getMessage.contains(s"'$k'") && e.getMessage.contains("format too old") &&
+          e.getMessage.contains("rebuild the index"), s"without '$k': ${e.getMessage}")
+      }
+    } finally IndexCache.deleteRecursively(dir)
   }
 
   test("dedup manifest: today's bytes read back and re-encode byte-identically") {
     val dir = tmp()
-    val bytes = """{"baseVersion":2,"tombVersion":0,"demotedVersion":-1,"buckets":8}"""
-    Store.writeString(s"$dir/manifest.json", bytes)
-    val dm = DedupIngest.readManifest(dir)
-    assert(dm == DedupManifest(baseVersion = 2, tombVersion = 0, demotedVersion = -1, buckets = 8))
-    assert(Store.encode(dm) == bytes)
+    try {
+      val bytes = """{"baseVersion":2,"tombVersion":0,"demotedVersion":-1,"buckets":8}"""
+      Store.writeString(s"$dir/manifest.json", bytes)
+      val dm = DedupIngest.readManifest(dir)
+      assert(dm == DedupManifest(baseVersion = 2, tombVersion = 0, demotedVersion = -1, buckets = 8))
+      assert(Store.encode(dm) == bytes)
+    } finally IndexCache.deleteRecursively(dir)
   }
 
   test("fielded.json: today's 2-field bytes read back and re-encode byte-identically") {
@@ -82,11 +89,13 @@ class ControlFileSpec extends AnyFunSuite {
 
   test("lineage: one appended row is today's line, and loads back") {
     val dir = tmp()
-    val row = LineageRow(2, "postings", -1L, 1760870400123L, "committed")
-    Lineage.append(spark, dir, row)
-    assert(Store.readString(s"$dir/lineage.jsonl") ==
-      """{"partitionId":2,"stage":"postings","rowCount":-1,"snapshotId":1760870400123,""" +
-        """"status":"committed"}""" + "\n")
-    assert(Lineage.load(spark, dir).collect().toSeq == Seq(row))
+    try {
+      val row = LineageRow(2, "postings", -1L, 1760870400123L, "committed")
+      Lineage.append(spark, dir, row)
+      assert(Store.readString(s"$dir/lineage.jsonl") ==
+        """{"partitionId":2,"stage":"postings","rowCount":-1,"snapshotId":1760870400123,""" +
+          """"status":"committed"}""" + "\n")
+      assert(Lineage.load(spark, dir).collect().toSeq == Seq(row))
+    } finally IndexCache.deleteRecursively(dir)
   }
 }

@@ -92,9 +92,9 @@ class DeleteSpec extends AnyFunSuite {
   }
 
   test("boolean and decode paths skip tombstoned docs") {
-    val hits = Wand.booleanOr(delHandle, Seq(QuerySpec(1, Seq("the", "a"))))
+    val hits = Wand.matching(delHandle, Seq(QuerySpec(1, Seq("the", "a"))))
       .collect().map(_.getLong(1)).toSet
-    assert(hits.nonEmpty && !hits.exists(deletedIds.contains), "tombstoned doc in booleanOr")
+    assert(hits.nonEmpty && !hits.exists(deletedIds.contains), "tombstoned doc in an OR match set")
     val decoded = graft.queries.IndexQueries
       .decodeRange(spark, delHandle, 0L, delHandle.manifest.maxDocId + 1)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet

@@ -5,13 +5,32 @@ import graft.queries.IndexCache
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Conjunctive retrieval: the galloping k-way intersection kernel must
-  * equal naive set intersection on randomized sorted lists, and the
-  * bucket-cogrouped booleanAnd must equal a brute-force recomputation over
-  * the corpus for seeded multi-term queries (incl. OOV → empty). */
+/** Boolean retrieval: the galloping k-way intersection kernel must equal
+  * naive set intersection on randomized sorted lists, and the AND, AND-NOT
+  * and OR match sets of [[Wand.matching]] must equal a brute-force
+  * recomputation over the corpus for seeded queries (incl. OOV handling)
+  * in both placements of its pass: the driver (the default
+  * `spark.sql.autoBroadcastJoinThreshold`) and the cogroup (-1). */
 class IntersectSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** `f` at the session's threshold and at -1, each tagged by its value. */
+  private def inBothPlacements[T](f: => T): Seq[(String, T)] = {
+    val default = spark.conf.get(Threshold)
+    Seq(default, "-1").map { v =>
+      spark.conf.set(Threshold, v)
+      try v -> f finally spark.conf.set(Threshold, default)
+    }
+  }
+
+  /** The fixture's most and least frequent terms: a `+head +tail` query
+    * drives the match set's gallop from the rare list into the head's. */
+  private def headTail(h: graft.query.IndexHandle): (String, String) = {
+    val byDf = h.dictMap.values.toSeq.sortBy(_.termId) // termIds rank df desc
+    (byDf.head.term, byDf.last.term)
+  }
 
   test("gallop == naive set intersection on 200 random k-way cases") {
     val rnd = new scala.util.Random(11)
@@ -33,11 +52,10 @@ class IntersectSpec extends AnyFunSuite {
     val h = IndexCache.handle(spark, sfDir)
     val vocab = h.dictMap.keys.toArray.sorted
     val rnd = new scala.util.Random(23)
+    val (head, tail) = headTail(h)
     val queries = (1 to 20).map { i =>
       QuerySpec(i, Seq.fill(2 + rnd.nextInt(3))(vocab(rnd.nextInt(math.min(vocab.length, 50)))))
-    } :+ QuerySpec(99, Seq("the", "zzzoov"))
-    val got = Wand.booleanAnd(h, queries)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+    } ++ Seq(QuerySpec(99, Seq("the", "zzzoov")), QuerySpec(97, Seq(head, tail)))
     // brute force from the raw text
     val tok = graft.tokenize.Tokenizers.default
     val docTerms = graft.corpus.Pages.cleaned(graft.corpus.Pages.withInjections(spark, sfDir))
@@ -48,8 +66,14 @@ class IntersectSpec extends AnyFunSuite {
         case (id, ts) if q.terms.forall(ts.contains) => (q.queryId, id)
       }
     }.toSet
-    assert(got == want, s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    assert(!got.exists(_._1 == 99), "OOV conjunction must be empty")
+    assert(want.exists(_._1 == 97), "the +head +tail fixture query must match a doc")
+    val all = queries.map(q => q.queryId -> Wand.Constraints(q.terms, Nil, Nil)).toMap
+    inBothPlacements(Wand.matching(h, queries, all)
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet).foreach { case (threshold, got) =>
+      assert(got == want,
+        s"threshold $threshold: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+      assert(!got.exists(_._1 == 99), "OOV conjunction must be empty")
+    }
   }
 
   test("booleanAndNot == brute force; OOV negative no-op, OOV positive empties") {
@@ -57,15 +81,19 @@ class IntersectSpec extends AnyFunSuite {
     val h = IndexCache.handle(spark, sfDir)
     val vocab = h.dictMap.keys.toArray.sorted
     val rnd = new scala.util.Random(41)
+    val (head, tail) = headTail(h)
     val queries = (1 to 20).map { i =>
       val pos = Seq.fill(1 + rnd.nextInt(2))(vocab(rnd.nextInt(math.min(vocab.length, 50))))
       val neg = Seq.fill(rnd.nextInt(3))(vocab(rnd.nextInt(math.min(vocab.length, 80))))
       (i, pos, neg)
     } ++ Seq(
       (98, Seq("the"), Seq("zzzoov")),  // OOV negative — must not exclude anything
-      (99, Seq("zzzoov"), Seq("the"))) // OOV positive — empty
-    val got = Wand.booleanAndNot(h, queries)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+      (99, Seq("zzzoov"), Seq("the")), // OOV positive — empty
+      (97, Seq(head, tail), Seq.empty[String]))
+    def andNot(qs: Seq[(Int, Seq[String], Seq[String])]) =
+      Wand.matching(h, qs.map { case (qid, pos, _) => QuerySpec(qid, pos) },
+        qs.map { case (qid, pos, neg) => qid -> Wand.Constraints(pos, neg, Nil) }.toMap)
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
     val tok = graft.tokenize.Tokenizers.default
     val docTerms = graft.corpus.Pages.cleaned(graft.corpus.Pages.withInjections(spark, sfDir))
       .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -75,39 +103,15 @@ class IntersectSpec extends AnyFunSuite {
         case (id, ts) if pos.forall(ts.contains) && !neg.exists(ts.contains) => (qid, id)
       }
     }.toSet
-    assert(got == want, s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    assert(!got.exists(_._1 == 99), "OOV positive must empty the query")
-    val noNeg = Wand.booleanAndNot(h, Seq((98, Seq("the"), Seq.empty[String])))
-      .collect().map(_.getLong(1)).toSet
-    assert(got.collect { case (98, d) => d } == noNeg, "OOV negative must be a no-op")
-  }
-
-  test("unionSorted == naive set union on 200 random k-way cases") {
-    val rnd = new scala.util.Random(17)
-    for (_ <- 1 to 200) {
-      val k = 1 + rnd.nextInt(4)
-      val lists = Array.fill(k) {
-        Array.fill(rnd.nextInt(60))(rnd.nextInt(120).toLong).distinct.sorted
+    assert(want.exists(_._1 == 97), "the +head +tail fixture query must match a doc")
+    inBothPlacements((andNot(queries), andNot(Seq((98, Seq("the"), Seq.empty[String])))))
+      .foreach { case (threshold, (got, noNegHits)) =>
+        assert(got == want,
+          s"threshold $threshold: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+        assert(!got.exists(_._1 == 99), "OOV positive must empty the query")
+        val noNeg = noNegHits.map(_._2)
+        assert(got.collect { case (98, d) => d } == noNeg, "OOV negative must be a no-op")
       }
-      val want = lists.map(_.toSet).reduce(_ union _).toSeq.sorted
-      val got = Intersect.unionSorted(lists).toSeq
-      assert(got == want, s"k=$k lists=${lists.map(_.mkString(",")).mkString(" | ")}")
-    }
-    assert(Intersect.unionSorted(Array.empty).isEmpty)
-    assert(Intersect.unionSorted(Array(Array.empty[Long], Array(3L))).toSeq == Seq(3L))
-  }
-
-  test("diffSorted == naive set difference on 200 random cases") {
-    val rnd = new scala.util.Random(31)
-    for (_ <- 1 to 200) {
-      val a = Array.fill(rnd.nextInt(60))(rnd.nextInt(120).toLong).distinct.sorted
-      val b = Array.fill(rnd.nextInt(60))(rnd.nextInt(120).toLong).distinct.sorted
-      val want = (a.toSet -- b.toSet).toSeq.sorted
-      assert(Intersect.diffSorted(a, b).toSeq == want,
-        s"a=${a.mkString(",")} b=${b.mkString(",")}")
-    }
-    assert(Intersect.diffSorted(Array(1L, 2L), Array.empty[Long]).toSeq == Seq(1L, 2L))
-    assert(Intersect.diffSorted(Array.empty[Long], Array(1L)).isEmpty)
   }
 
   test("booleanOr == brute-force corpus union; OOV terms ignored, all-OOV empty") {
@@ -118,8 +122,6 @@ class IntersectSpec extends AnyFunSuite {
     val queries = (1 to 20).map { i =>
       QuerySpec(i, Seq.fill(1 + rnd.nextInt(3))(vocab(rnd.nextInt(math.min(vocab.length, 50)))))
     } ++ Seq(QuerySpec(98, Seq("the", "zzzoov")), QuerySpec(99, Seq("zzzoov")))
-    val got = Wand.booleanOr(h, queries)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
     val tok = graft.tokenize.Tokenizers.default
     val docTerms = graft.corpus.Pages.cleaned(graft.corpus.Pages.withInjections(spark, sfDir))
       .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -129,8 +131,12 @@ class IntersectSpec extends AnyFunSuite {
         case (id, ts) if q.terms.exists(ts.contains) => (q.queryId, id)
       }
     }.toSet
-    assert(got == want, s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
-    assert(!got.exists(_._1 == 99), "all-OOV disjunction must be empty")
-    assert(got.exists(_._1 == 98), "OOV term in a disjunction must be ignored, not empty the query")
+    inBothPlacements(Wand.matching(h, queries)
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet).foreach { case (threshold, got) =>
+      assert(got == want,
+        s"threshold $threshold: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+      assert(!got.exists(_._1 == 99), "all-OOV disjunction must be empty")
+      assert(got.exists(_._1 == 98), "OOV term in a disjunction must be ignored, not empty the query")
+    }
   }
 }

@@ -6,11 +6,10 @@ import java.util.concurrent.atomic.AtomicBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The [[Overlap]] no-orphans contract that overlapped lifecycle writes rely
-  * on: no result and no error leaves `overlap` / `all` while a sibling is
-  * still running. Each
-  * case holds the background inside its body until the foreground has
-  * started failing, so the background is provably still running when the
-  * failure happens. */
+  * on: no result and no error leaves `overlap` while the background is
+  * still running. Each case holds the background inside its body until
+  * the foreground has started failing, so the background is provably still
+  * running when the failure happens. */
 class OverlapSpec extends AnyFunSuite {
 
   /** A background body that waits for `started`, then keeps running for a
@@ -60,18 +59,5 @@ class OverlapSpec extends AnyFunSuite {
     }
     assert(e.getMessage == "background failed" && fgDone.get)
     assert(Overlap.overlap(1)(2) == ((1, 2)))
-  }
-
-  test("all: a failing thunk rethrows only after every sibling finished") {
-    val started = new CountDownLatch(1)
-    val finished = new AtomicBoolean(false)
-    val e = intercept[IllegalStateException] {
-      Overlap.all(Seq(
-        () => { started.countDown(); throw new IllegalStateException("first failed") },
-        () => slowBackground(started, finished)))
-    }
-    assert(e.getMessage == "first failed")
-    assert(finished.get, "all rethrew while a sibling was still running")
-    assert(Overlap.all(Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
   }
 }
