@@ -236,6 +236,11 @@ final case class IndexConfig(
       * is bounded by construction). */
     broadcastVocabMax: Long = 4000000L
 ) {
+  require(blockSize >= 1, s"blockSize must be >= 1, got $blockSize")
+  require(bucketRange >= 1, s"bucketRange must be >= 1, got $bucketRange")
+  require(postingsBuckets >= 1, s"postingsBuckets must be >= 1, got $postingsBuckets")
+  require(targetTokensPerChunk >= 1, s"targetTokensPerChunk must be >= 1, got $targetTokensPerChunk")
+  require(nChunks >= 0, s"nChunks must be >= 0 (0 = AUTO), got $nChunks")
   require(bucketRange % blockSize == 0, "bucketRange must be a multiple of blockSize")
   def blocksPerBucket: Long = bucketRange / blockSize
 

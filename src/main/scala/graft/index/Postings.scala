@@ -16,10 +16,10 @@ final case class Posting(termId: Int, docId: Long, tf: Int, positions: Array[Int
   * blocks through these three helpers, so a codec change edits this object.
   *
   * Three readers keep their own decode on purpose:
-  *  - WAND's kernel (`Wand.DecodedBlock` and the lazy phrase-position
-  *    decode) decodes per block into primitive arrays on the benchmark's
-  *    hot path, where a row per posting would cost allocation and
-  *    serialization;
+  *  - WAND's kernel (`Wand.DecodedBlock`, whose positions decode on the
+  *    first phrase check) decodes per block into primitive arrays on the
+  *    benchmark's hot path, where a row per posting would cost allocation
+  *    and serialization;
   *  - [[IndexValidator]] decodes under `try` so a corrupt block becomes a
   *    report row, not a failed job;
   *  - `graft.functions.VByteExpressions` is the codec's SQL surface. */
@@ -45,18 +45,22 @@ object Postings {
     if (ix < 0) None else Some(VByte.decodeInts(b.tfs)(ix))
   }
 
-  /** The blocks of the given docId buckets, as an OR of `blockId` ranges —
-    * one per run of consecutive buckets. Blocks never span buckets, so the
-    * ranges are exact, and a range predicate on a plain column pushes to
-    * the parquet scan. No buckets selects no block. */
-  def inBuckets(m: IndexManifest, buckets: Seq[Long]): Column = {
-    val bpb = m.blocksPerBucket
+  /** The blocks of the given docId buckets, as an OR of `blockId` ranges
+    * ([[inRuns]]). Blocks never span buckets, so the ranges are exact. */
+  def inBuckets(m: IndexManifest, buckets: Seq[Long]): Column =
+    inRuns(col("blockId"), m.blocksPerBucket, buckets)
+
+  /** `c` inside the given buckets of `width` consecutive values each, as
+    * an OR of ranges — one per run of consecutive buckets. A range
+    * predicate on a plain column pushes to the parquet scan. No buckets
+    * selects nothing. */
+  def inRuns(c: Column, width: Long, buckets: Seq[Long]): Column = {
     val runs = buckets.distinct.sorted.foldLeft(List.empty[(Long, Long)]) {
       case ((lo, hi) :: rest, b) if b == hi + 1 => (lo, b) :: rest
       case (acc, b) => (b, b) :: acc
     }
     runs.reverse
-      .map { case (lo, hi) => col("blockId") >= lo * bpb && col("blockId") < (hi + 1) * bpb }
+      .map { case (lo, hi) => c >= lo * width && c < (hi + 1) * width }
       .reduceOption(_ || _).getOrElse(lit(false))
   }
 }

@@ -165,8 +165,7 @@ object VocabQueries {
     "q_bool_and" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
       val qs = QuerySet.queries.filter(_.terms.size > 1)
-      Wand.matching(h, qs,
-        qs.map(q => q.queryId -> Wand.Constraints(q.terms, Nil, Nil)).toMap)
+      Wand.matching(h, qs.map(q => q.copy(constraints = Wand.Constraints(q.terms))))
         .orderBy("query_id", "doc_id")
     }),
 
@@ -174,9 +173,8 @@ object VocabQueries {
     // the negatives excluded, both checked per bucket in the same pass
     "q_bool_andnot" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
-      Wand.matching(h, AndNotQueries.map { case (qid, pos, _) => QuerySpec(qid, pos) },
-        AndNotQueries.map { case (qid, pos, neg) =>
-          qid -> Wand.Constraints(pos, neg, Nil) }.toMap)
+      Wand.matching(h, AndNotQueries.map { case (qid, pos, neg) =>
+        QuerySpec(qid, pos, constraints = Wand.Constraints(pos, neg)) })
         .orderBy("query_id", "doc_id")
     }),
 
@@ -239,8 +237,7 @@ object VocabQueries {
     "q_facet_lang" -> ((s, d) => {
       val h = IndexCache.handle(s, d)
       val qs = QuerySet.queries.filter(_.terms.size > 1)
-      val hits = Wand.matching(h, qs,
-        qs.map(q => q.queryId -> Wand.Constraints(q.terms, Nil, Nil)).toMap)
+      val hits = Wand.matching(h, qs.map(q => q.copy(constraints = Wand.Constraints(q.terms))))
       val langs = s.read.parquet(s"$d/documents.parquet")
         .select(col("doc_id").cast("long").as("doc_id"), col("lang"))
       hits.join(langs, "doc_id")

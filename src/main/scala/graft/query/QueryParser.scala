@@ -100,9 +100,12 @@ final case class ParsedQuery(
   require(scoring.forall(_._2 > 0.0), s"non-positive weight in $scoring")
   require(minShouldMatch >= 0, s"negative minShouldMatch: $minShouldMatch")
 
+  /** The query as the WAND driver reads it: the scoring terms, their
+    * boosts and every term constraint; `filters` compile separately
+    * ([[Search.search]] groups queries by them). */
   def toQuerySpec: QuerySpec =
-    QuerySpec(queryId, scoring.map(_._1),
-      scoring.filter(_._2 != 1.0).toMap)
+    QuerySpec(queryId, scoring.map(_._1), scoring.filter(_._2 != 1.0).toMap,
+      Wand.Constraints(required, excluded, phrases, excludedPhrases, requiredAny, minShouldMatch))
 }
 
 /** Search-box query-string parser — the user-facing query language over the

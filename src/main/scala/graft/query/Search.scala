@@ -98,29 +98,20 @@ object Search {
       synonyms: Option[Synonyms] = None): Map[Int, R] = {
     val compiled = expandAll(index, synonyms.fold(queries)(s => queries.map(s.rewrite)),
       MaxExpansions)
-    grouped(compiled).flatMap { case (docFilter, group, cons) =>
-      Wand.search(Seq(index -> 1.0), group.map(_.toQuerySpec), mode, docFilter, cons)
+    grouped(compiled).flatMap { case (docFilter, group) =>
+      Wand.search(Seq(index -> 1.0), group.map(_.toQuerySpec), mode, docFilter)
     }.toMap
   }
 
   /** Batch compile: group by canonical filter signature (so `url:a -url:b`
     * == `-url:b url:a` share a WAND pass), each group carrying its compiled
-    * docFilter Column and per-query constraint set. */
-  private def grouped(queries: Seq[ParsedQuery])
-      : Iterator[(Option[Column], Seq[ParsedQuery], Map[Int, Wand.Constraints])] = {
+    * docFilter Column; each query's constraints ride in its own
+    * [[QuerySpec]]. */
+  private def grouped(queries: Seq[ParsedQuery]): Iterator[(Option[Column], Seq[ParsedQuery])] = {
     def signature(q: ParsedQuery): Seq[FieldFilter] =
       q.filters.distinct.sortBy(f => (f.field, f.value, f.negated))
     queries.groupBy(signature).iterator.map { case (sig, group) =>
-      val cons = group.flatMap { q =>
-        val c = Wand.Constraints(q.required, q.excluded, q.phrases,
-          q.excludedPhrases, q.requiredAny, minMatch = q.minShouldMatch,
-          scoringTerms =
-            if (q.minShouldMatch > 0) q.scoring.map(_._1) else Seq.empty)
-        if (c.nonEmpty) Some(q.queryId -> c) else None
-      }.toMap
-      val docFilter: Option[Column] =
-        if (sig.isEmpty) None else Some(sig.map(filterColumn).reduce(_ && _))
-      (docFilter, group, cons)
+      (if (sig.isEmpty) None else Some(sig.map(filterColumn).reduce(_ && _)), group)
     }
   }
 

@@ -7,15 +7,22 @@ import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
-/** One retrieval query. `boosts` are optional query-time per-term weights
-  * (the `term^2.0` syntax of a search box): BM25 impact is linear in idf, so
-  * a boost folds into the cursor's effective idf at query-plan time — upper
-  * bounds, block-max refinement and threshold seeding all scale with it and
-  * the WAND kernel is untouched. Absent terms default to weight 1.0;
-  * non-positive boosts are rejected (a zero-weight term is term removal —
-  * do that in the query, not the scorer). */
+/** One retrieval query: its scoring `terms`, their boosts and the
+  * constraints its hits must pass — the one value every pass of
+  * [[Wand.search]] and [[Wand.matching]] reads. `boosts` are optional
+  * query-time per-term weights (the `term^2.0` syntax of a search box):
+  * BM25 impact is linear in idf, so a boost folds into the cursor's
+  * effective idf at query-plan time — upper bounds, block-max refinement
+  * and threshold seeding all scale with it and the WAND kernel is
+  * untouched. Absent terms default to weight 1.0; non-positive boosts are
+  * rejected (a zero-weight term is term removal — do that in the query,
+  * not the scorer). `constraints` (none by default) are the parsed
+  * query's required, excluded, phrase and minimum-match rules
+  * ([[ParsedQuery.toQuerySpec]] fills them); their `minMatch` counts this
+  * spec's own in-vocabulary `terms`. */
 final case class QuerySpec(queryId: Int, terms: Seq[String],
-    boosts: Map[String, Double] = Map.empty) {
+    boosts: Map[String, Double] = Map.empty,
+    constraints: Wand.Constraints = Wand.Constraints()) {
   require(boosts.values.forall(_ > 0.0), s"non-positive boost in $boosts")
   def boost(term: String): Double = boosts.getOrElse(term, 1.0)
 }
@@ -293,23 +300,28 @@ object IndexReader {
   */
 object Wand {
 
-  /** Per-query match constraints of the parsed-query (search-box) surface —
-    * raw analyzer terms, resolved against the dictionary inside the one
-    * ranked driver. A result doc must contain every `required` term and
-    * every `phrases` sequence at consecutive positions, and none of the
-    * `excluded` terms. Constraint verification is bucket-local (a doc and
-    * all its postings share a bucket) and runs only on docs that survive
-    * the WAND pivot + block-max gates. */
-  final case class Constraints(required: Seq[String], excluded: Seq[String],
-      phrases: Seq[Phrase], excludedPhrases: Seq[Phrase] = Seq.empty,
-      requiredAny: Seq[Seq[String]] = Seq.empty,
-      minMatch: Int = 0, scoringTerms: Seq[String] = Seq.empty) {
-    require(minMatch == 0 || scoringTerms.nonEmpty,
-      "minMatch needs the query's scoring terms to count against")
+  /** The match constraints of one [[QuerySpec]] — raw analyzer terms,
+    * resolved against the dictionary inside the one WAND driver. A result
+    * doc must contain every `required` term, at least one member of every
+    * `requiredAny` group, every `phrases` sequence within its slop, at
+    * least `minMatch` distinct terms of its spec's own `terms`, none of the
+    * `excluded` terms and none of the `excludedPhrases`. An OOV required or
+    * phrase term, an all-OOV `requiredAny` group or a `minMatch` above the
+    * spec's in-vocabulary terms empties the query; OOV excluded terms and
+    * excluded phrases holding one are no-ops. Verification is bucket-local
+    * (a doc and all its postings share a bucket) and runs only on docs
+    * that survive the WAND pivot + block-max gates. */
+  final case class Constraints(required: Seq[String] = Seq.empty,
+      excluded: Seq[String] = Seq.empty, phrases: Seq[Phrase] = Seq.empty,
+      excludedPhrases: Seq[Phrase] = Seq.empty,
+      requiredAny: Seq[Seq[String]] = Seq.empty, minMatch: Int = 0) {
     def isEmpty: Boolean =
       required.isEmpty && excluded.isEmpty && phrases.isEmpty &&
         excludedPhrases.isEmpty && requiredAny.isEmpty && minMatch == 0
-    def nonEmpty: Boolean = !isEmpty
+    /** Every term the constraints name, for the pass's one lookup. */
+    private[query] def terms: Seq[String] =
+      required ++ excluded ++ phrases.flatMap(_.terms) ++
+        excludedPhrases.flatMap(_.terms) ++ requiredAny.flatten
   }
 
   /** Dictionary-resolved constraints (termIds, field 0); each phrase
@@ -320,13 +332,31 @@ object Wand {
       required: Array[Int], excluded: Array[Int],
       phrases: Array[(Array[Int], Int)],
       excludedPhrases: Array[(Array[Int], Int)],
-      requiredAny: Array[Array[Int]] = Array.empty,
-      minMatch: Int = 0, scoringIds: Array[Int] = Array.empty)
+      requiredAny: Array[Array[Int]], minMatch: Int) {
+    def isEmpty: Boolean =
+      required.isEmpty && excluded.isEmpty && phrases.isEmpty &&
+        excludedPhrases.isEmpty && requiredAny.isEmpty && minMatch == 0
+  }
 
-  /** docId membership across one term's bucket-local decoded blocks
-    * (ascending disjoint runs): binary search for the covering block, then
-    * binary search its ids. */
-  private[query] def containsDoc(blocks: Array[DecodedBlock], doc: Long): Boolean = {
+  /** `c` against field 0's lookup, for a spec whose in-vocabulary scoring
+    * terms number `inVocab`: `None` when no doc can satisfy it (see
+    * [[Constraints]]), else its termIds with the no-op OOV terms dropped. */
+  private def resolve(c: Constraints, inVocab: Int,
+      dict: Map[String, TermEntry]): Option[ResolvedConstraints] = {
+    def ids(ts: Seq[String]): Array[Int] = ts.distinct.flatMap(dict.get).map(_.termId).toArray
+    def phrase(p: Phrase): (Array[Int], Int) = (p.terms.map(t => dict(t).termId).toArray, p.slop)
+    if (c.required.exists(t => !dict.contains(t)) ||
+        c.phrases.exists(_.terms.exists(t => !dict.contains(t))) ||
+        c.requiredAny.exists(g => !g.exists(dict.contains)) || inVocab < c.minMatch) None
+    else Some(ResolvedConstraints(ids(c.required), ids(c.excluded), c.phrases.map(phrase).toArray,
+      c.excludedPhrases.filter(_.terms.forall(dict.contains)).map(phrase).toArray,
+      c.requiredAny.map(ids).toArray, c.minMatch))
+  }
+
+  /** The index of the block among one term's bucket-local decoded blocks
+    * (ascending disjoint runs) that may hold `doc`, or -1: a binary search
+    * for the last block starting at or before it. */
+  private def blockOf(blocks: Array[DecodedBlock], doc: Long): Int = {
     var lo = 0
     var hi = blocks.length - 1
     var bi = -1
@@ -334,7 +364,21 @@ object Wand {
       val mid = (lo + hi) >>> 1
       if (blocks(mid).firstDocId <= doc) { bi = mid; lo = mid + 1 } else hi = mid - 1
     }
+    bi
+  }
+
+  /** docId membership across one term's bucket-local decoded blocks. */
+  private[query] def containsDoc(blocks: Array[DecodedBlock], doc: Long): Boolean = {
+    val bi = blockOf(blocks, doc)
     bi >= 0 && java.util.Arrays.binarySearch(blocks(bi).ids, doc) >= 0
+  }
+
+  /** `doc`'s positions of one term from the same decoded blocks, or null
+    * when the term is absent from it. */
+  private def positionsOf(blocks: Array[DecodedBlock], doc: Long): Array[Int] = {
+    val bi = blockOf(blocks, doc)
+    val ix = if (bi < 0) -1 else java.util.Arrays.binarySearch(blocks(bi).ids, doc)
+    if (ix < 0) null else blocks(bi).positions(ix)
   }
 
   /** {q ∈ b : ∃p ∈ a, p + lo ≤ q ≤ p + hi} — both ascending; linear
@@ -357,9 +401,11 @@ object Wand {
   }
 
   /** One block decoded once per bucket and shared by every query in the
-    * batch (decode amortization: a 512-query batch touches each block's
-    * bytes once, not 512 times). The positional payload is NOT decoded on
-    * the WAND path — phrase queries decode it separately. */
+    * batch and every check of it (decode amortization: a 512-query batch
+    * touches each block's bytes once, not 512 times). Cursors, membership
+    * probes and the match walk read its docIds and tfs; it keeps the
+    * positional bytes and decodes them on the first phrase check that
+    * reaches the block, so the scoring path never touches them. */
   private[query] final class DecodedBlock(
       val firstDocId: Long,
       val ids: Array[Long],
@@ -369,13 +415,17 @@ object Wand {
         * tighter-but-unsafe bound trades bounded recall for fewer exact
         * evaluations (the score-at-a-time pruning experiment). */
       val boundTf: Int,
-      val minDocLen: Int)
+      val minDocLen: Int,
+      positionBytes: Array[Byte]) {
+    /** Each posting's positions, in `ids` order. */
+    lazy val positions: Array[Array[Int]] = VByte.decodePositions(positionBytes, tfs)
+  }
 
   private[query] object DecodedBlock {
     def apply(b: PostingBlock, boundKey: Option[String]): DecodedBlock =
       new DecodedBlock(b.firstDocId, VByte.decodeDocIds(b.docIdGaps),
         VByte.decodeInts(b.tfs),
-        boundKey.flatMap(b.meta.get).getOrElse(b.maxTf), b.minDocLen)
+        boundKey.flatMap(b.meta.get).getOrElse(b.maxTf), b.minDocLen, b.positions)
   }
 
   /** Cursor over one term's decoded blocks within one bucket. Block upper
@@ -647,29 +697,29 @@ object Wand {
     if (heap != null) heap.ranked else cheap.ranked
   }
 
-  /** Bucket-count cap for one docId range per bucket in the docstats
-    * predicate, and for the cogroup placement's bucket probe; beyond it
-    * the probe keeps the distributed semi-join. */
+  /** Bucket-count cap for the docId-range bucket predicate
+    * ([[inDocBuckets]]), and for the cogroup placement's bucket probe;
+    * beyond it the probe keeps the distributed semi-join. */
   final val MaxPredicateBuckets = 256
 
-
-  /** docstats restricted to the given docId buckets as an
-    * OR-of-docId-ranges predicate pushed INTO the parquet scan — docstats
-    * are clustered by docId bucket on write, so min/max footer stats skip
-    * whole files/row groups, not just rows. Beyond [[MaxPredicateBuckets]]
-    * buckets the pushed predicate is the one range spanning them all,
-    * narrowed to the listed buckets after the scan. */
-  def docstatsForBuckets(index: IndexHandle, buckets: Array[Long]): Dataset[DocStat] = {
+  /** The rows of a docId-keyed table (docstats, tombstones) in the given
+    * buckets of `bucketRange` docIds: one docId range per run of
+    * consecutive buckets ([[graft.index.Postings.inRuns]]), pushed INTO the
+    * parquet scan, so min/max footer stats skip whole files/row groups.
+    * Beyond [[MaxPredicateBuckets]] buckets the pushed predicate is the one
+    * range spanning them all, narrowed to the listed buckets after the
+    * scan. */
+  private def inDocBuckets(bucketRange: Long, buckets: Array[Long]): Column = {
     require(buckets.nonEmpty, "at least one bucket")
-    val bucketRange = index.manifest.bucketRange
-    def range(lo: Long, hi: Long): Column =
-      col("docId") >= lo * bucketRange && col("docId") < (hi + 1) * bucketRange
-    val pred =
-      if (buckets.length <= MaxPredicateBuckets) buckets.map(b => range(b, b)).reduce(_ || _)
-      else range(buckets.min, buckets.max) &&
-        (col("docId") / lit(bucketRange)).cast("long").isin(buckets.toIndexedSeq.map(Long.box): _*)
-    index.docstatsRaw.filter(pred)
+    if (buckets.length <= MaxPredicateBuckets) Postings.inRuns(col("docId"), bucketRange, buckets)
+    else col("docId") >= buckets.min * bucketRange && col("docId") < (buckets.max + 1) * bucketRange &&
+      (col("docId") / lit(bucketRange)).cast("long").isin(buckets.toIndexedSeq.map(Long.box): _*)
   }
+
+  /** docstats restricted to the given docId buckets ([[inDocBuckets]]);
+    * docstats are clustered by docId bucket on write. */
+  def docstatsForBuckets(index: IndexHandle, buckets: Array[Long]): Dataset[DocStat] =
+    index.docstatsRaw.filter(inDocBuckets(index.manifest.bucketRange, buckets))
 
   /** Optional pruning instrumentation: `candidates` counts every posting
     * a naive DAAT would touch (Σ cursor lengths per query per bucket);
@@ -1104,7 +1154,10 @@ object Wand {
     *
     * Every mode shares term lookup, constraint resolution, bucket pruning
     * and the one per-bucket body; the mode decides what each bucket emits
-    * and how the rows reduce.
+    * and how the rows reduce. Each query's [[QuerySpec.constraints]]
+    * resolve once per pass against the same lookup as its terms; they are
+    * single-field, and phrase checks read the positions of the blocks its
+    * cursors already decoded ([[DecodedBlock]]).
     *
     * `docFilter` restricts the pass to the documents satisfying a metadata
     * predicate (a Column over the docstats row: docId, url, docLen) — the
@@ -1148,11 +1201,10 @@ object Wand {
     * scores exact); the kernel skips them before scoring. */
   def search[R](fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec], mode: Mode[R],
       docFilter: Option[Column] = None,
-      constraints: Map[Int, Constraints] = Map.empty,
       globalStats: Option[(Long, Double, Map[String, Long])] = None,
       metrics: Option[WandMetrics] = None): Map[Int, R] = {
     val reduced: Map[Int, R] =
-      passRows(fields, queries, mode, docFilter, constraints, globalStats, metrics) match {
+      passRows(fields, queries, mode, docFilter, globalStats, metrics) match {
         case Left(rs)  => rs.groupBy(_.queryId).map { case (qid, qRows) => qid -> mode.fold(qRows.iterator) }
         case Right(ds) => mode.reduce(ds)
       }
@@ -1161,20 +1213,20 @@ object Wand {
 
   /** BOOLEAN RETRIEVAL over one index: the (query_id, doc_id) rows of each
     * query's match set — the docs holding ≥ 1 of the query's terms that
-    * are live and pass its constraints, from [[search]]'s own pass. OR is
-    * the bare query (the U1 union), AND the query's terms all `required`
-    * (U4 intersect), AND-NOT adds the negatives as `excluded` (U3
-    * difference); constraints resolve as in [[search]], so an OOV required
-    * term empties its query and OOV excluded or optional terms are no-ops.
+    * are live and pass its [[QuerySpec.constraints]], from [[search]]'s
+    * own pass. OR is the bare query (the U1 union), AND the query's terms
+    * all `required` (U4 intersect), AND-NOT adds the negatives as
+    * `excluded` (U3 difference); constraints resolve as in [[search]], so
+    * an OOV required term empties its query and OOV excluded or optional
+    * terms are no-ops.
     * The rows stay a relation (an OR over a stopword can be corpus-sized):
     * the cogroup placement's rows as they leave the executors, the driver
     * placement's as a local relation no larger than the postings it
     * collected. */
-  def matching(index: IndexHandle, queries: Seq[QuerySpec],
-      constraints: Map[Int, Constraints] = Map.empty): DataFrame = {
+  def matching(index: IndexHandle, queries: Seq[QuerySpec]): DataFrame = {
     val spark = index.spark
     import spark.implicits._
-    passRows(Seq(index -> 1.0), queries, MatchSet, None, constraints, None, None) match {
+    passRows(Seq(index -> 1.0), queries, MatchSet, None, None, None) match {
       case Left(rs)  => rs.map(r => (r.queryId, r.docId)).toDF("query_id", "doc_id")
       case Right(ds) => ds.select(col("queryId").as("query_id"), col("docId").as("doc_id"))
     }
@@ -1184,11 +1236,11 @@ object Wand {
     * emitted on the driver placement, `Right` the cogroup's rows. A pass
     * that finds nothing to fetch yields no rows and runs no further job. */
   private def passRows(fields: Seq[(IndexHandle, Double)], queries: Seq[QuerySpec], pass: Pass,
-      docFilter: Option[Column], constraints: Map[Int, Constraints],
+      docFilter: Option[Column],
       globalStats: Option[(Long, Double, Map[String, Long])],
       metrics: Option[WandMetrics]): Either[Seq[ScoredDoc], Dataset[ScoredDoc]] = {
     require(fields.nonEmpty, "at least one field")
-    require(fields.length == 1 || (constraints.isEmpty && pass.multiField),
+    require(fields.length == 1 || (queries.forall(_.constraints.isEmpty) && pass.multiField),
       "constraints, boosts, counts, facets and sort-by are single-field")
     val spark = fields.head._1.spark
     import spark.implicits._
@@ -1202,47 +1254,17 @@ object Wand {
     // full-dictionary collect on the query path). Constraint terms ride in
     // the same lookup: excluded terms never score but their postings must
     // be probeable, and required/phrase terms decide OOV emptiness.
-    val allTerms = queries.flatMap(_.terms) ++
-      constraints.values.flatMap(c =>
-        c.required ++ c.excluded ++ c.phrases.flatMap(_.terms) ++
-          c.excludedPhrases.flatMap(_.terms) ++ c.requiredAny.flatten ++
-          c.scoringTerms)
-    val dicts = fields.map { case (h, _) => h.lookupTerms(allTerms) }
-    // OOV discipline of the constraint surface: an unsatisfiable constraint
-    // (OOV required or phrase term) empties the query; OOV excluded terms —
-    // and excluded phrases containing one (the pattern cannot occur) — are
-    // no-ops and drop out of the resolved ids.
-    val dict0 = dicts.head
-    // ... and a requiredAny group with NO in-vocabulary member (e.g. a
-    // zero-expansion `+pre*` — the group is empty by construction) is
-    // unsatisfiable, so it also empties the query
-    val forcedEmpty: Set[Int] = constraints.collect { case (qid, c)
-      if c.required.distinct.exists(t => !dict0.contains(t)) ||
-        c.phrases.exists(_.terms.exists(t => !dict0.contains(t))) ||
-        c.requiredAny.exists(g => !g.exists(dict0.contains)) ||
-        // fewer in-vocabulary scoring terms than msm demands → no doc can
-        // ever reach the count (OOV terms match nothing)
-        (c.minMatch > 0 &&
-          c.scoringTerms.distinct.count(dict0.contains) < c.minMatch) => qid }.toSet
-    val resolvedCons: Map[Int, ResolvedConstraints] = constraints.collect {
-      case (qid, c) if !forcedEmpty(qid) && c.nonEmpty =>
-        qid -> ResolvedConstraints(
-          c.required.distinct.map(t => dict0(t).termId).toArray,
-          c.excluded.distinct.flatMap(dict0.get).map(_.termId).toArray,
-          c.phrases.map(p => (p.terms.map(t => dict0(t).termId).toArray, p.slop)).toArray,
-          c.excludedPhrases.filter(_.terms.forall(dict0.contains))
-            .map(p => (p.terms.map(t => dict0(t).termId).toArray, p.slop)).toArray,
-          // OOV group members drop (they can match no doc; the group's
-          // satisfiability survives — forcedEmpty already caught all-OOV)
-          c.requiredAny.map(_.distinct.flatMap(dict0.get).map(_.termId).toArray).toArray,
-          c.minMatch,
-          if (c.minMatch == 0) Array.empty
-          else c.scoringTerms.distinct.flatMap(dict0.get).map(_.termId).toArray)
-    }.filter { case (_, rc) => // fully-OOV no-op constraints dissolve entirely
-      rc.required.nonEmpty || rc.excluded.nonEmpty || rc.phrases.nonEmpty ||
-        rc.excludedPhrases.nonEmpty || rc.requiredAny.nonEmpty || rc.minMatch > 0
+    val dicts = fields.map { case (h, _) =>
+      h.lookupTerms(queries.flatMap(q => q.terms ++ q.constraints.terms)) }
+    // each query's constraints resolved once against field 0 (constraints
+    // are single-field): an unsatisfiable one drops its query, and one
+    // left with nothing to check (only OOV exclusions) dissolves
+    val (liveQueries, cons) = {
+      val resolved = queries.map(q =>
+        q -> resolve(q.constraints, q.terms.distinct.count(dicts.head.contains), dicts.head))
+      (resolved.collect { case (q, Some(_)) => q },
+        resolved.collect { case (q, Some(rc)) if !rc.isEmpty => q.queryId -> rc }.toMap)
     }
-    val liveQueries = queries.filterNot(q => forcedEmpty(q.queryId))
     // a federated (sharded) run overrides the per-field stats with the
     // summed corpus-global ones; fielded/plain runs keep per-field stats
     val avgdls = globalStats match {
@@ -1275,7 +1297,7 @@ object Wand {
       case Some(Ranked(k, ByScore(after, None), _)) if docFilter.isEmpty &&
           (nF == 1 || fields.forall(_._1.manifest.tombVersion < 0)) =>
         liveQueries.filterNot(q =>
-          resolvedCons.contains(q.queryId) || after.contains(q.queryId)).flatMap { q =>
+          cons.contains(q.queryId) || after.contains(q.queryId)).flatMap { q =>
           val bounds = for {
             f <- 0 until nF
             if fields(f)._1.manifest.maxDocLen > 0 // pre-upgrade manifest: no bound
@@ -1302,14 +1324,11 @@ object Wand {
       qSpecs.valuesIterator.flatten.collect { case (`f`, tid, _) => tid }.toSeq.distinct
     }
     val exIds: Seq[Int] =
-      (resolvedCons.values.flatMap(_.excluded) ++
-        resolvedCons.values.flatMap(_.excludedPhrases.iterator.flatMap(_._1)) ++
+      (cons.values.flatMap(_.excluded) ++
+        cons.values.flatMap(_.excludedPhrases.iterator.flatMap(_._1)) ++
         // requiredAny members usually score (wildcard expansions do) and
         // then dedupe away here; fetched defensively for constraint-only use
-        resolvedCons.values.flatMap(_.requiredAny.iterator.flatten) ++
-        // msm counts over scoring terms — always cursor terms, so this
-        // dedupes away; defensive for the same reason as requiredAny
-        resolvedCons.values.flatMap(_.scoringIds)).toSeq.distinct
+        cons.values.flatMap(_.requiredAny.iterator.flatten)).toSeq.distinct
         .filterNot(idsByField.head.toSet)
     def fetchIds(f: Int): Seq[Int] =
       if (f == 0) idsByField(0) ++ exIds else idsByField(f)
@@ -1340,28 +1359,24 @@ object Wand {
     // the docstats rows of the candidate buckets — `Left` the listed
     // buckets (a docId-range predicate pushed INTO the parquet scan), `Right`
     // a semi-join against a bucket relation — plus the tombstone union
-    // across fields as docLen = -1 sentinels for EVERY field's map
+    // across fields, selected the same way, as docLen = -1 sentinels for
+    // EVERY field's map
     def fStats(buckets: Either[Array[Long], DataFrame]): Dataset[SlotStat] = {
       def keep(df: DataFrame): DataFrame = buckets match {
-        case Left(bs)  => df.filter(col("bucket").isin(bs.toIndexedSeq.map(Long.box): _*))
-        case Right(cb) => df.join(cb, Seq("bucket"), "left_semi")
+        case Left(bs)  => df.filter(inDocBuckets(bucketRange, bs))
+        case Right(cb) => df.withColumn("bucket", (col("docId") / lit(bucketRange)).cast("long"))
+          .join(cb, Seq("bucket"), "left_semi")
       }
       val tombed = fields.map(_._1).filter(_.manifest.tombVersion >= 0)
       val tombSentinels =
         if (tombed.isEmpty) spark.emptyDataset[SlotStat]
         // a doc tombstoned in several fields repeats its sentinel, which
         // sets the same -1 again
-        else keep(tombed.map(_.tombstones.toDF("docId")).reduce(_ unionByName _)
-          .withColumn("bucket", (col("docId") / lit(bucketRange)).cast("long")))
+        else keep(tombed.map(_.tombstones.toDF("docId")).reduce(_ unionByName _))
           .select("docId").as[Long]
           .flatMap(d => (0 until nF).iterator.map(f => SlotStat(f, d, -1, Seq.empty)))
       (0 until nF).map { f =>
-        val h = fields(f)._1
-        val pruned = buckets match {
-          case Left(bs) => docstatsForBuckets(h, bs).toDF()
-          case Right(_) => keep(h.docstatsRaw.toDF()
-            .withColumn("bucket", (col("docId") / lit(bucketRange)).cast("long")))
-        }
+        val pruned = keep(fields(f)._1.docstatsRaw.toDF())
         // a metadata filter marks non-matching docs with the same -1 skip
         // sentinel as tombstones — one codegen'd when() on the pruned scan
         val dlCol = docFilter match {
@@ -1379,8 +1394,6 @@ object Wand {
     // driver-side values (cursor specs, constraints, seeds) ride the closure
     val boundKey = pass.boundKey
     val emit = pass.emitter
-    val phraseTids = (resolvedCons.values.flatMap(_.phrases.iterator.flatMap(_._1)) ++
-      resolvedCons.values.flatMap(_.excludedPhrases.iterator.flatMap(_._1))).toSet
     val body: (Array[(Int, PostingBlock)], Iterator[SlotStat]) => Iterator[ScoredDoc] = {
       (blockArr, stats) =>
         if (blockArr.isEmpty) Iterator.empty
@@ -1404,46 +1417,18 @@ object Wand {
             blockArr.groupBy(p => (p._1, p._2.termId)).map { case (key, ps) =>
               key -> ps.map(_._2).sortBy(_.firstDocId).map(DecodedBlock(_, boundKey))
             }
-          // positional payloads for phrase verification: raw blocks kept per
-          // phrase termId, positions decoded lazily per block (one decode no
-          // matter how many queries/docs probe it) — the WAND scoring path
-          // still never touches positions
-          val rawPos: Map[Int, Array[PostingBlock]] =
-            if (phraseTids.isEmpty) Map.empty
-            else blockArr.iterator
-              .filter { case (f, b) => f == 0 && phraseTids(b.termId) }.toArray
-              .groupBy(_._2.termId)
-              .map { case (t, ps) => t -> ps.map(_._2).sortBy(_.firstDocId) }
-          val posCache = new java.util.HashMap[Long, (Array[Long], Array[Array[Int]])]()
-          def positionsOf(tid: Int, doc: Long): Array[Int] = {
-            val bs = rawPos.getOrElse(tid, null)
-            if (bs == null) return null
-            var lo = 0; var hi = bs.length - 1; var bi = -1
-            while (lo <= hi) {
-              val mid = (lo + hi) >>> 1
-              if (bs(mid).firstDocId <= doc) { bi = mid; lo = mid + 1 } else hi = mid - 1
-            }
-            if (bi < 0) return null
-            val key = tid.toLong << 32 | bi.toLong
-            var dec = posCache.get(key)
-            if (dec == null) {
-              val b = bs(bi)
-              val tfs = VByte.decodeInts(b.tfs)
-              dec = (VByte.decodeDocIds(b.docIdGaps), VByte.decodePositions(b.positions, tfs))
-              posCache.put(key, dec)
-            }
-            val ix = java.util.Arrays.binarySearch(dec._1, doc)
-            if (ix < 0) null else dec._2(ix)
-          }
           // ordered-window chain: cand holds END positions of valid
           // prefixes; each step admits positions of the next term within
           // (prev, prev + 1 + slop]. slop 0 = exact adjacency.
+          // Positions come from the same decoded blocks as the cursors'.
+          def positions(tid: Int, doc: Long): Array[Int] =
+            byFieldTerm.get((0, tid)).map(positionsOf(_, doc)).orNull
           def phraseAt(ph: Array[Int], slop: Int, doc: Long): Boolean = {
-            var cand = positionsOf(ph(0), doc)
+            var cand = positions(ph(0), doc)
             if (cand == null) return false
             var i = 1
             while (i < ph.length) {
-              val pi = positionsOf(ph(i), doc)
+              val pi = positions(ph(i), doc)
               if (pi == null) return false
               cand = windowIntersect(cand, pi, 1, 1 + slop)
               if (cand.isEmpty) return false
@@ -1452,18 +1437,15 @@ object Wand {
             true
           }
           qSpecs.iterator.flatMap { case (qid, specs) =>
-            val rc = resolvedCons.get(qid)
-            // a required term with no postings in this bucket → no doc here
-            // can satisfy the conjunction; same for a phrase term
+            val rc = cons.get(qid)
+            def here(tid: Int): Boolean = byFieldTerm.contains((0, tid))
+            // a required or phrase term with no postings in this bucket, a
+            // requiredAny group with no member here, or fewer scoring terms
+            // here than msm demands → no doc in this bucket can qualify
             val hopeless = rc.exists(c =>
-              c.required.exists(tid => !byFieldTerm.contains((0, tid))) ||
-                c.phrases.exists(_._1.exists(tid => !rawPos.contains(tid))) ||
-                // no member of a requiredAny group has postings here → no
-                // doc in this bucket can satisfy the disjunction
-                c.requiredAny.exists(g => !g.exists(tid => byFieldTerm.contains((0, tid)))) ||
-                // fewer scoring terms with postings here than msm demands
-                (c.minMatch > 0 &&
-                  c.scoringIds.count(tid => byFieldTerm.contains((0, tid))) < c.minMatch))
+              c.required.exists(!here(_)) || c.phrases.exists(_._1.exists(!here(_))) ||
+                c.requiredAny.exists(!_.exists(here)) ||
+                (c.minMatch > 0 && specs.count(s => here(s._2)) < c.minMatch))
             val cursors =
               if (hopeless) Array.empty[TermCursor]
               else specs.flatMap { case (f, tid, effIdf) =>
@@ -1481,10 +1463,10 @@ object Wand {
                     c.requiredAny.forall(g => g.exists(tid =>
                       byFieldTerm.get((0, tid)).exists(containsDoc(_, doc)))) &&
                     (c.minMatch == 0 || {
-                      // early-exit count of distinct scoring terms present
+                      // early-exit count of the spec's distinct terms present
                       var n = 0; var i = 0
-                      while (n < c.minMatch && i < c.scoringIds.length) {
-                        if (byFieldTerm.get((0, c.scoringIds(i)))
+                      while (n < c.minMatch && i < specs.length) {
+                        if (byFieldTerm.get((0, specs(i)._2))
                           .exists(containsDoc(_, doc))) n += 1
                         i += 1
                       }

@@ -67,8 +67,8 @@ class IntersectSpec extends AnyFunSuite {
       }
     }.toSet
     assert(want.exists(_._1 == 97), "the +head +tail fixture query must match a doc")
-    val all = queries.map(q => q.queryId -> Wand.Constraints(q.terms, Nil, Nil)).toMap
-    inBothPlacements(Wand.matching(h, queries, all)
+    val all = queries.map(q => q.copy(constraints = Wand.Constraints(q.terms)))
+    inBothPlacements(Wand.matching(h, all)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSet).foreach { case (threshold, got) =>
       assert(got == want,
         s"threshold $threshold: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
@@ -91,8 +91,8 @@ class IntersectSpec extends AnyFunSuite {
       (99, Seq("zzzoov"), Seq("the")), // OOV positive — empty
       (97, Seq(head, tail), Seq.empty[String]))
     def andNot(qs: Seq[(Int, Seq[String], Seq[String])]) =
-      Wand.matching(h, qs.map { case (qid, pos, _) => QuerySpec(qid, pos) },
-        qs.map { case (qid, pos, neg) => qid -> Wand.Constraints(pos, neg, Nil) }.toMap)
+      Wand.matching(h, qs.map { case (qid, pos, neg) =>
+        QuerySpec(qid, pos, constraints = Wand.Constraints(pos, neg)) })
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
     val tok = graft.tokenize.Tokenizers.default
     val docTerms = graft.corpus.Pages.cleaned(graft.corpus.Pages.withInjections(spark, sfDir))

@@ -20,14 +20,17 @@ class JsonIoSpec extends AnyFunSuite {
   test("dictionary → JSON sink → JSON source round-trip") {
     import spark.implicits._
     val h = graft.query.IndexReader.load(spark, indexDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString + "/dict"
-    h.dictionary.toDF().coalesce(1).write.mode("overwrite").json(dir)
-    val back = spark.read.json(dir)
-      .select(col("termId").cast("int"), col("term"), col("df").cast("long"), col("cf").cast("long"))
-      .as[graft.index.TermEntry]
-      .collect().sortBy(_.termId)
-    val orig = h.dictionary.collect().sortBy(_.termId)
-    assert(back.toSeq == orig.toSeq)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+    try {
+      val dir = tmp + "/dict"
+      h.dictionary.toDF().coalesce(1).write.mode("overwrite").json(dir)
+      val back = spark.read.json(dir)
+        .select(col("termId").cast("int"), col("term"), col("df").cast("long"), col("cf").cast("long"))
+        .as[graft.index.TermEntry]
+        .collect().sortBy(_.termId)
+      val orig = h.dictionary.collect().sortBy(_.termId)
+      assert(back.toSeq == orig.toSeq)
+    } finally graft.queries.IndexCache.deleteRecursively(tmp)
   }
 
   test("posting ids as JSON arrays (ids + ids_encoded flag, like save_tokens)") {
@@ -36,12 +39,15 @@ class JsonIoSpec extends AnyFunSuite {
     val dumped = h.postings.map { b =>
       (b.termId, b.blockId, graft.codec.VByte.decodeDocIds(b.docIdGaps).toSeq, false)
     }.toDF("termId", "blockId", "ids", "ids_encoded")
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString + "/tokens"
-    dumped.coalesce(1).write.mode("overwrite").json(dir)
-    val back = spark.read.json(dir)
-    assert(back.count() == h.postings.count())
-    val checkA = dumped.agg(sum(size(col("ids")))).head().getLong(0)
-    val checkB = back.agg(sum(size(col("ids")))).head().getLong(0)
-    assert(checkA == checkB)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+    try {
+      val dir = tmp + "/tokens"
+      dumped.coalesce(1).write.mode("overwrite").json(dir)
+      val back = spark.read.json(dir)
+      assert(back.count() == h.postings.count())
+      val checkA = dumped.agg(sum(size(col("ids")))).head().getLong(0)
+      val checkB = back.agg(sum(size(col("ids")))).head().getLong(0)
+      assert(checkA == checkB)
+    } finally graft.queries.IndexCache.deleteRecursively(tmp)
   }
 }

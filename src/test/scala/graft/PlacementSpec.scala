@@ -37,17 +37,11 @@ class PlacementSpec extends AnyFunSuite {
   }
 
   // plain (seeded), required, excluded, msm, phrase and excluded-phrase shapes
-  private val (queries, constraints) = {
-    val ps = Seq("merge join", "+key merge slow", "merge join -batch", "merge join fast msm:2",
-      "\"merge join\" vector", "batch -\"batch stale\"")
-      .zipWithIndex.map { case (s, i) => QueryParser.parse(i + 1, s, analyzer) }
-    (ps.map(_.toQuerySpec), ps.flatMap { q =>
-      val c = Wand.Constraints(q.required, q.excluded, q.phrases, q.excludedPhrases,
-        q.requiredAny, minMatch = q.minShouldMatch,
-        scoringTerms = if (q.minShouldMatch > 0) q.scoring.map(_._1) else Seq.empty)
-      if (c.nonEmpty) Some(q.queryId -> c) else None
-    }.toMap)
-  }
+  private val queries = Seq("merge join", "+key merge slow", "merge join -batch",
+    "merge join fast msm:2", "\"merge join\" vector", "batch -\"batch stale\"")
+    .zipWithIndex.map { case (s, i) => QueryParser.parse(i + 1, s, analyzer).toQuerySpec }
+  /** The same queries without their constraints. */
+  private val bare = queries.map(_.copy(constraints = Wand.Constraints()))
   private val urlFilter = col("url").contains("/42/1")
   private val facetKey = (col("docId") % 10).cast("string")
   private val collapseKey = (col("docId") % 13).cast("string")
@@ -63,9 +57,9 @@ class PlacementSpec extends AnyFunSuite {
   /** One pass's answers (arrays as Seqs, so they compare by value), its
     * (evals, candidates) and its job count. */
   private def pass[R](fields: Seq[(IndexHandle, Double)], mode: Wand.Mode[R],
-      docFilter: Option[Column], cons: Map[Int, Wand.Constraints]): (Map[Int, Any], (Long, Long), Int) = {
+      docFilter: Option[Column], qs: Seq[QuerySpec]): (Map[Int, Any], (Long, Long), Int) = {
     val m = Wand.WandMetrics(spark)
-    val (r, n) = jobs(Wand.search(fields, queries, mode, docFilter, cons, metrics = Some(m)))
+    val (r, n) = jobs(Wand.search(fields, qs, mode, docFilter, metrics = Some(m)))
     def plainValue(v: Any): Any = v match {
       case a: Array[_]  => a.toSeq
       case p: Product if p.productArity == 3 => p.productIterator.map(plainValue).toSeq
@@ -79,10 +73,10 @@ class PlacementSpec extends AnyFunSuite {
     * driver placement takes fewer jobs. */
   private def assertPlacementsAgree[R](what: String, fields: Seq[(IndexHandle, Double)],
       mode: Wand.Mode[R], docFilter: Option[Column] = None,
-      cons: Map[Int, Wand.Constraints] = constraints): Map[Int, Any] = {
-    val (onDriver, driverMetrics, driverJobs) = pass(fields, mode, docFilter, cons)
+      qs: Seq[QuerySpec] = queries): Map[Int, Any] = {
+    val (onDriver, driverMetrics, driverJobs) = pass(fields, mode, docFilter, qs)
     val (cogroup, cogroupMetrics, cogroupJobs) =
-      withThreshold("-1")(pass(fields, mode, docFilter, cons))
+      withThreshold("-1")(pass(fields, mode, docFilter, qs))
     assert(onDriver == cogroup, s"[$what] answers differ")
     assert(driverMetrics == cogroupMetrics, s"[$what] (evals, candidates) differ")
     assert(driverJobs < cogroupJobs,
@@ -103,7 +97,7 @@ class PlacementSpec extends AnyFunSuite {
 
   /** Query 1's second hit: a cursor inside its ranking. */
   private def cursorOf(h: IndexHandle, docFilter: Option[Column]): (Double, Long) =
-    Wand.search(Seq(h -> 1.0), queries, Wand.Ranked(5), docFilter, constraints)(1)(1)
+    Wand.search(Seq(h -> 1.0), queries, Wand.Ranked(5), docFilter)(1)(1)
 
   Seq("a never-deleted" -> (() => plain), "a tombstoned" -> (() => tombed)).foreach {
     case (which, index) =>
@@ -123,31 +117,32 @@ class PlacementSpec extends AnyFunSuite {
   }
 
   test("filters, tombstones and constraints change the answers the placements agree on") {
-    val plainCount = Wand.search(Seq(plain -> 1.0), queries, Wand.Count, None, constraints)
-    val unconstrained = Wand.search(Seq(plain -> 1.0), queries, Wand.Count)
-    assert(Wand.search(Seq(plain -> 1.0), queries, Wand.Count, Some(urlFilter), constraints) != plainCount)
-    assert(Wand.search(Seq(tombed -> 1.0), queries, Wand.Count, None, constraints) != plainCount)
-    assert(constraints.keys.forall(q => plainCount(q) <= unconstrained(q)) &&
-      constraints.keys.count(q => plainCount(q) < unconstrained(q)) >= 4,
+    val plainCount = Wand.search(Seq(plain -> 1.0), queries, Wand.Count)
+    val unconstrained = Wand.search(Seq(plain -> 1.0), bare, Wand.Count)
+    assert(Wand.search(Seq(plain -> 1.0), queries, Wand.Count, Some(urlFilter)) != plainCount)
+    assert(Wand.search(Seq(tombed -> 1.0), queries, Wand.Count) != plainCount)
+    val constrained = queries.filterNot(_.constraints.isEmpty).map(_.queryId)
+    assert(constrained.forall(q => plainCount(q) <= unconstrained(q)) &&
+      constrained.count(q => plainCount(q) < unconstrained(q)) >= 4,
       s"constrained counts $plainCount, unconstrained $unconstrained")
   }
 
   test("a 2-field BM25F pass agrees across placements in every multi-field mode") {
     val fields = graft.queries.FieldedIndexCache.get(spark, sfDir)
-    val cursor = Wand.search(fields, queries, Wand.Ranked(5))(1)(1)
+    val cursor = Wand.search(fields, bare, Wand.Ranked(5))(1)(1)
     Seq("ranked" -> Wand.Ranked(5),
       "ranked after a cursor" -> Wand.Ranked(5, Wand.ByScore(after = Map(1 -> cursor))),
       "ranked collapsed" -> Wand.Ranked(5, Wand.Collapse(collapseKey))).foreach { case (what, mode) =>
-      val r = assertPlacementsAgree(s"bm25f/$what", fields, mode, cons = Map.empty)
+      val r = assertPlacementsAgree(s"bm25f/$what", fields, mode, qs = bare)
       assert(r.values.exists(_.asInstanceOf[Seq[_]].nonEmpty), s"[bm25f/$what] no hits")
     }
   }
 
   test("a 1-byte threshold also takes the cogroup") {
     val mode = Wand.Serp(Wand.Ranked(5), Some((facetKey, 3)))
-    val (_, _, cogroupJobs) = withThreshold("-1")(pass(Seq(plain -> 1.0), mode, None, constraints))
-    val (answer, metrics, oneByteJobs) = withThreshold("1")(pass(Seq(plain -> 1.0), mode, None, constraints))
-    val (onDriver, driverMetrics, driverJobs) = pass(Seq(plain -> 1.0), mode, None, constraints)
+    val (_, _, cogroupJobs) = withThreshold("-1")(pass(Seq(plain -> 1.0), mode, None, queries))
+    val (answer, metrics, oneByteJobs) = withThreshold("1")(pass(Seq(plain -> 1.0), mode, None, queries))
+    val (onDriver, driverMetrics, driverJobs) = pass(Seq(plain -> 1.0), mode, None, queries)
     assert(oneByteJobs == cogroupJobs && driverJobs < oneByteJobs,
       s"jobs: 1 byte $oneByteJobs, -1 $cogroupJobs, default $driverJobs")
     assert(answer == onDriver && metrics == driverMetrics)
@@ -212,5 +207,81 @@ class PlacementSpec extends AnyFunSuite {
     val (pre, without) = jobs(Search.search(plain, expandedBatch, Wand.Ranked(5)))
     assert(all.map { case (q, h) => q -> h.toSeq } == pre.map { case (q, h) => q -> h.toSeq })
     assert(withExpansion == without + 1, s"$withExpansion jobs, $without once expanded")
+  }
+
+  /** Each of `terms`' decoded postings on `h`, with positions:
+    * (term, docId) → positions. */
+  private def decodedPositions(h: IndexHandle, terms: Seq[String]): Map[(String, Long), Array[Int]] = {
+    val byId = h.lookupTerms(terms).values.map(e => e.termId -> e.term).toMap
+    Postings.decode(h.postings.filter(col("termId").isin(byId.keys.toSeq: _*)), positions = true)
+      .collect().map(p => (byId(p.termId), p.docId) -> p.positions).toMap
+  }
+
+  /** The match sets of `qs` at the default threshold and at -1. */
+  private def matchSets(h: IndexHandle, qs: Seq[QuerySpec]): Seq[Map[Int, Set[Long]]] =
+    Seq(spark.conf.get(Threshold), "-1").map(v => withThreshold(v)(
+      Wand.matching(h, qs).collect().map(r => (r.getInt(0), r.getLong(1)))
+        .groupMap(_._1)(_._2).map { case (q, ds) => q -> ds.toSet }))
+
+  test("minMatch counts a spec's in-vocabulary terms; one it cannot reach empties the query") {
+    val terms = Seq("merge", "join", "zzzoov")
+    val qs = Seq(
+      QuerySpec(1, terms, constraints = Wand.Constraints(minMatch = 2)),
+      QuerySpec(2, terms, constraints = Wand.Constraints(minMatch = 3)),
+      QuerySpec(3, Seq("merge", "zzzoov"), constraints = Wand.Constraints(minMatch = 2)),
+      QuerySpec(4, terms))
+    val post = decodedPositions(plain, terms)
+    val docs = post.keys.map(_._2).toSet
+    def holding(n: Int): Set[Long] = docs.filter(d => terms.count(t => post.contains((t, d))) >= n)
+    val want = Map(1 -> holding(2), 4 -> holding(1))
+    assert(want(1).nonEmpty && want(1).size < want(4).size, s"weak fixture: $want")
+    matchSets(plain, qs).foreach(got => assert(got == want))
+    Seq(spark.conf.get(Threshold), "-1").foreach { v =>
+      val counts = withThreshold(v)(Wand.search(Seq(plain -> 1.0), qs, Wand.Count))
+      assert(counts == Map(1 -> want(1).size.toLong, 2 -> 0L, 3 -> 0L, 4 -> want(4).size.toLong),
+        s"threshold $v: $counts")
+    }
+  }
+
+  test("phrases and excluded phrases over several blocks of a bucket == brute force on decoded positions") {
+    val (merge, join) = (Seq("merge", "join"), Seq("join", "order"))
+    val terms = (merge ++ join).distinct
+    // the fixture: every phrase term holds at least 3 blocks of one bucket
+    val ids = plain.lookupTerms(terms).values.map(_.termId).toSeq
+    plain.postings.filter(col("termId").isin(ids: _*)).collect()
+      .groupBy(_.termId).foreach { case (tid, bs) =>
+        val most = bs.groupBy(_.blockId / plain.manifest.blocksPerBucket).values.map(_.length).max
+        assert(most >= 3, s"termId $tid holds at most $most blocks of a bucket")
+      }
+    val qs = Seq(
+      QuerySpec(1, merge, constraints = Wand.Constraints(phrases = Seq(Phrase(merge)))),
+      QuerySpec(2, merge, constraints = Wand.Constraints(phrases = Seq(Phrase(merge, slop = 2)),
+        excludedPhrases = Seq(Phrase(join)))),
+      QuerySpec(3, merge, constraints = Wand.Constraints(excludedPhrases = Seq(Phrase(join)))))
+    val post = decodedPositions(plain, terms)
+    // the ordered window of `windowIntersect`: each next term within
+    // (prev, prev + 1 + slop]
+    def has(p: Phrase, d: Long): Boolean = p.terms.tail.foldLeft(post.getOrElse((p.terms.head, d), Array.empty[Int])) {
+      (ends, t) => post.getOrElse((t, d), Array.empty[Int]).filter(q => ends.exists(e => q > e && q <= e + 1 + p.slop))
+    }.nonEmpty
+    val docs = post.keys.collect { case (t, d) if merge.contains(t) => d }.toSet
+    val want = Map(
+      1 -> docs.filter(has(Phrase(merge), _)),
+      2 -> docs.filter(d => has(Phrase(merge, 2), d) && !has(Phrase(join), d)),
+      3 -> docs.filterNot(has(Phrase(join), _)))
+    assert(want(1).nonEmpty && want(2).size < docs.count(has(Phrase(merge, 2), _)) &&
+      want(3).size < docs.size, s"weak fixture: ${want.map { case (q, ds) => q -> ds.size }}")
+    matchSets(plain, qs).foreach(got => assert(got == want))
+  }
+
+  test("the tombstone sentinels' scan takes the docId-range predicate in both placements") {
+    val q = Seq(QuerySpec(1, Seq("merge")))
+    Seq(spark.conf.get(Threshold), "-1").foreach { v =>
+      val (_, log) = withThreshold(v)(record(Wand.search(Seq(tombed -> 1.0), q, Wand.Count)))
+      val scans = log.plans.flatMap(_.split("\n\n")).filter(_.contains("tombstones/v"))
+      assert(scans.nonEmpty && scans.forall(s =>
+        "PushedFilters: \\[.*GreaterThanOrEqual\\(docId".r.findFirstIn(s).isDefined),
+        s"threshold $v:\n${scans.mkString("\n---\n")}")
+    }
   }
 }

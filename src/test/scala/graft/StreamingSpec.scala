@@ -13,15 +13,17 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming tumbling-window agg equals the batch plan") {
     // stage the events parquet into a dir the file stream can watch
     val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val src = java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet")
-    java.nio.file.Files.copy(src, java.nio.file.Paths.get(s"$dir/events.parquet"))
+    try {
+      val src = java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet")
+      java.nio.file.Files.copy(src, java.nio.file.Paths.get(s"$dir/events.parquet"))
 
-    val batch = EventStreams.hourlyAggBatch(spark.read.parquet(dir))
-      .orderBy("window_start", "event_type").collect().toSeq
-    val streamed = EventStreams.hourlyAggStreaming(spark, dir, "stream_test_1")
-      .orderBy("window_start", "event_type").collect().toSeq
-    assert(streamed == batch)
-    assert(batch.nonEmpty)
+      val batch = EventStreams.hourlyAggBatch(spark.read.parquet(dir))
+        .orderBy("window_start", "event_type").collect().toSeq
+      val streamed = EventStreams.hourlyAggStreaming(spark, dir, "stream_test_1")
+        .orderBy("window_start", "event_type").collect().toSeq
+      assert(streamed == batch)
+      assert(batch.nonEmpty)
+    } finally graft.queries.IndexCache.deleteRecursively(dir)
   }
 
   test("sessionization: session ids are dense per user and gap-consistent") {
