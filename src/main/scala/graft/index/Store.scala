@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.reflect.{ClassTag, classTag}
@@ -21,7 +21,9 @@ import scala.reflect.{ClassTag, classTag}
   * here too, through ONE codec: a Jackson mapper with the Scala module
   * (the one Spark itself ships and builds), which writes a flat case class
   * as one line of JSON in field-declaration order and refuses to read a
-  * file that lacks any constructor field.
+  * file that lacks any constructor field. Every committed parquet table
+  * (the index's postings, docstats, dictionary and tombstones, and the
+  * dedup index's tables) is written by one writer, [[writeTable]].
   *
   * Resolution uses the active Spark session's Hadoop configuration when one
   * exists (picking up any object-store credentials/committer settings) and
@@ -132,6 +134,17 @@ object Store {
     garbage.foreach(rel => delete(s"$root/$rel"))
     garbage
   }
+
+  // ----------------------------------------------------------- table writer
+
+  /** The one parquet table write: `rows` replace `dest` as parquet with
+    * zstd page compression. Everything else is Spark's default (v1 data
+    * pages, dictionary encoding on), so the `termId` dictionary pages the
+    * point fetch filters files by stay. Each footer records its own codec:
+    * tables written with another codec (snappy, before this writer) read
+    * back next to zstd ones with no migration. */
+  def writeTable(rows: Dataset[_], dest: String): Unit =
+    rows.write.mode("overwrite").option("compression", "zstd").parquet(dest)
 
   // ----------------------------------------------------- control-file codec
 

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.functions.RollingHash
+import graft.index.Store
 import graft.tokenize.Tokenizers
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -182,10 +183,9 @@ object Dedup {
     * corpus is never re-signed: each new crawl slice pays one map pass
     * over ITSELF plus a join bounded by colliding buckets. */
   def writeLshIndex(sigs: Dataset[DocSignature], dir: String, buckets: Int = 8): Unit =
-    bandRelation(sigs)
+    Store.writeTable(bandRelation(sigs)
       .repartition(buckets, col("band"), col("key"))
-      .sortWithinPartitions(col("band"), col("key"))
-      .write.mode("overwrite").parquet(dir)
+      .sortWithinPartitions(col("band"), col("key")), dir)
 
   /** Probe a NEW batch against the persisted index: (batch_doc, corpus_doc)
     * LSH candidates. The corpus side is READ (pruned, clustered), never

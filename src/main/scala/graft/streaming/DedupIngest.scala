@@ -154,8 +154,8 @@ object DedupIngest {
       dir: Int => String, v: Int): Unit = {
     val fresh = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
     val merged = if (v < 0) fresh else spark.read.parquet(dir(v)).unionByName(fresh).distinct()
-    merged.repartition(buckets, col("doc_id")).sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(dir(v + 1))
+    Store.writeTable(merged.repartition(buckets, col("doc_id")).sortWithinPartitions(col("doc_id")),
+      dir(v + 1))
   }
 
   /** One streaming lineage per index: the checkpointed batchId sequence is
@@ -180,16 +180,14 @@ object DedupIngest {
       dedupDir: String, dm: DedupManifest, part: String): Unit = {
     import spark.implicits._
     Dedup.writeLshIndex(sigs, s"${bandsDir(dedupDir, dm.baseVersion)}/part=$part", dm.buckets)
-    sigs.filter(_.nShingles > 0).map(s => (s.docId, s.sig)).toDF("doc_id", "sig")
-      .repartition(dm.buckets, col("doc_id"))
-      .write.mode("overwrite").parquet(s"${sigsDir(dedupDir, dm.baseVersion)}/part=$part")
+    Store.writeTable(sigs.filter(_.nShingles > 0).map(s => (s.docId, s.sig)).toDF("doc_id", "sig")
+      .repartition(dm.buckets, col("doc_id")), s"${sigsDir(dedupDir, dm.baseVersion)}/part=$part")
   }
 
   private def writePairsPart(spark: SparkSession, pairs: DataFrame,
       dedupDir: String, dm: DedupManifest, part: String): Unit =
-    pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .repartition(dm.buckets, col("doc_a"))
-      .write.mode("overwrite").parquet(s"${pairsDir(dedupDir, dm.baseVersion)}/part=$part")
+    Store.writeTable(pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .repartition(dm.buckets, col("doc_a")), s"${pairsDir(dedupDir, dm.baseVersion)}/part=$part")
 
   /** Bootstrap the dedup index for an existing corpus — `cfg` is REQUIRED
     * and must be the index build's config (incl. the language allowlist),
@@ -482,25 +480,25 @@ object DedupIngest {
           else base.join(dem, Seq("doc_id"), "left_anti")
         }
       }
-      dropTombed(side(spark.read.parquet(bandsDir(dedupDir, dm.baseVersion))
+      Store.writeTable(dropTombed(side(spark.read.parquet(bandsDir(dedupDir, dm.baseVersion))
           .filter(committedPart)
           .select("doc_id", "band", "key", "part")), Seq("doc_id"))
         .select("doc_id", "band", "key")
         .repartition(dm.buckets, col("band"), col("key"))
-        .sortWithinPartitions(col("band"), col("key"))
-        .write.mode("overwrite").parquet(s"${bandsDir(dedupDir, next.baseVersion)}/part=$part")
-      dropTombed(side(spark.read.parquet(sigsDir(dedupDir, dm.baseVersion))
+        .sortWithinPartitions(col("band"), col("key")),
+        s"${bandsDir(dedupDir, next.baseVersion)}/part=$part")
+      Store.writeTable(dropTombed(side(spark.read.parquet(sigsDir(dedupDir, dm.baseVersion))
           .filter(committedPart)
           .select("doc_id", "sig", "part")), Seq("doc_id"))
         .select("doc_id", "sig")
-        .repartition(dm.buckets, col("doc_id"))
-        .write.mode("overwrite").parquet(s"${sigsDir(dedupDir, next.baseVersion)}/part=$part")
+        .repartition(dm.buckets, col("doc_id")),
+        s"${sigsDir(dedupDir, next.baseVersion)}/part=$part")
     }
-    dropTombed(spark.read.parquet(pairsDir(dedupDir, dm.baseVersion))
+    Store.writeTable(dropTombed(spark.read.parquet(pairsDir(dedupDir, dm.baseVersion))
         .filter(committedPart), Seq("doc_a", "doc_b"))
       .select("doc_a", "doc_b")
-      .repartition(dm.buckets, col("doc_a"))
-      .write.mode("overwrite").parquet(s"${pairsDir(dedupDir, next.baseVersion)}/part=base")
+      .repartition(dm.buckets, col("doc_a")),
+      s"${pairsDir(dedupDir, next.baseVersion)}/part=base")
     carryInFlight(bandsDir(dedupDir, _))
     carryInFlight(sigsDir(dedupDir, _))
     carryInFlight(pairsDir(dedupDir, _))

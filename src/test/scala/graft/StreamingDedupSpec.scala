@@ -184,6 +184,10 @@ class StreamingDedupSpec extends AnyFunSuite {
     copyDir(root, clone)
     val dmC = DedupIngest.compactIndex(spark, dedupDir, indexDir)
     assert(dmC.baseVersion == 1 && dmC.tombVersion == -1)
+    // bootstrap, batch, pair-log, purge and compaction writes all went
+    // through the one table writer
+    val codecs = IndexTestUtil.parquetChunks(dedupDir).map(_.codec).toSet
+    assert(codecs == Set("ZSTD"), s"dedup tables written with $codecs")
     val removed = DedupIngest.vacuum(spark, dedupDir)
     assert(removed.nonEmpty, "expected replaced dedup generations to vacuum")
     // bounded file count: buckets files per (base|shadow) part per table
