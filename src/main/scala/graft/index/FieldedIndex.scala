@@ -20,12 +20,12 @@ final case class FieldSpec(
 }
 
 /** One field's committed spec in `fielded.json`: name, weight, source
-  * column, and the build-relevant cfg fingerprint (analyzer + cap +
-  * geometry; vocabCap -1 = uncapped) — so the committed-destination checks
-  * catch EVERY spec change that would silently no-op against
+  * column, and the build-relevant cfg fingerprint (the analyzer, which
+  * carries the vocabulary cap, + geometry) — so the committed-destination
+  * checks catch EVERY spec change that would silently no-op against
   * already-built sub-indexes. */
 final case class FieldRecord(name: String, weight: Double, textCol: String, analyzer: String,
-    vocabCap: Int, blockSize: Int, bucketRange: Long)
+    blockSize: Int, bucketRange: Long)
 
 /** `fielded.json`: the committed fields, in build order. */
 final case class FieldedManifest(fields: Seq[FieldRecord])
@@ -47,7 +47,7 @@ object FieldedIndex {
   /** The `fielded.json` record of `fields`. */
   private[graft] def manifestOf(fields: Seq[FieldSpec]): FieldedManifest =
     FieldedManifest(fields.map(f => FieldRecord(f.name, f.weight, f.textCol, f.cfg.analyzerId,
-      f.cfg.vocabCap.getOrElse(-1), f.cfg.blockSize, f.cfg.bucketRange)))
+      f.cfg.blockSize, f.cfg.bucketRange)))
 
   /** The committed spec — the one reader of `fielded.json`. */
   private def committed(baseDir: String): FieldedManifest =
@@ -142,13 +142,19 @@ object FieldedIndex {
     * Each sub-merge is its own crash-safe commit; a replay after a partial
     * crash no-ops the already-merged fields (containment detection) and
     * completes the rest, and `fielded.json` itself never changes — the
-    * spec is merge-invariant. */
+    * spec is merge-invariant. Every field's manifests meet the plain
+    * verb's contract before the first sub-merge runs (a capped field
+    * refuses the whole merge, not its own sub-merge only). */
   def merge(spark: SparkSession, baseDir: String, otherDir: String): Unit = {
     val dst = committed(baseDir)
     val src = committed(otherDir)
     require(dst == src,
       s"fielded merge requires identical field specs; destination $dst != source $src " +
         "(no side effects were taken)")
+    dst.fields.foreach { f =>
+      def manifestIn(dir: String) = Manifest.read(s"${fieldDir(dir, f.name)}/manifest.json")
+      IndexBuilder.requireMergeable(manifestIn(otherDir), manifestIn(baseDir))
+    }
     dst.fields.foreach(f =>
       IndexBuilder.merge(spark, fieldDir(baseDir, f.name), fieldDir(otherDir, f.name)))
   }

@@ -367,12 +367,13 @@ object IndexBuilder {
   /** Streaming block builder over rows pre-sorted by (termId, bucket, docId).
     * Constant memory: at most `blockSize` postings buffered (the SPIMI
     * "flush at block boundary" discipline — reference analog: per-file
-    * chunking keeps per-worker memory flat, utils/split.py:40-171). */
+    * chunking keeps per-worker memory flat, utils/split.py:40-171). Every
+    * block's metadata (the [[PostingBlock]] companion's keys) is computed
+    * here, in the same pass. */
   private final class BlockIterator(
       rows: Iterator[BucketedPosting],
       blockSize: Int,
-      blocksPerBucket: Long,
-      computers: Seq[BlockMetaComputer]
+      blocksPerBucket: Long
   ) extends Iterator[PostingBlock] {
     private val buf = rows.buffered
     private var curTerm = -1
@@ -394,8 +395,8 @@ object IndexBuilder {
       var n = 0
       var maxTf = 0
       var minDocLen = Int.MaxValue
-      // E6 registry: fresh accumulators per block, one observe per posting
-      val states = computers.map(_.start()).toArray
+      var minPos = Int.MaxValue
+      var maxPos = 0
       while (n < blockSize && buf.hasNext &&
         buf.head.termId == curTerm && buf.head.bucket == curBucket) {
         val r = buf.next()
@@ -404,12 +405,23 @@ object IndexBuilder {
         VByte.putPositions(posOut, r.positions)
         if (r.tf > maxTf) maxTf = r.tf
         if (r.docLen < minDocLen) minDocLen = r.docLen
-        var ci = 0
-        while (ci < states.length) { states(ci).observe(r.tf, r.docLen, r.positions); ci += 1 }
+        val ps = r.positions
+        if (ps.nonEmpty) {
+          if (ps(0) < minPos) minPos = ps(0)
+          if (ps(ps.length - 1) > maxPos) maxPos = ps(ps.length - 1)
+        }
         n += 1
       }
       val ids = java.util.Arrays.copyOf(docIds, n)
       val fs = java.util.Arrays.copyOf(tfs, n)
+      // nearest-rank p90, ceil(0.9 * n) in integer arithmetic, over a
+      // sorted copy (the encoded tfs keep posting order)
+      val sorted = fs.clone()
+      java.util.Arrays.sort(sorted)
+      val tfP90 = PostingBlock.TfP90Key -> sorted((9 * n + 9) / 10 - 1)
+      val meta =
+        if (maxPos == 0) Map(tfP90)
+        else Map(PostingBlock.MinPosKey -> minPos, PostingBlock.MaxPosKey -> maxPos, tfP90)
       val blockId = curBucket * blocksPerBucket + localIdx
       localIdx += 1
       // (maxTf, minDocLen) is a stats-free block-max: the query computes
@@ -425,7 +437,7 @@ object IndexBuilder {
         posOut.toByteArray,
         maxTf,
         minDocLen,
-        states.iterator.flatMap(_.emit()).toMap
+        meta
       )
     }
   }
@@ -484,14 +496,13 @@ object IndexBuilder {
     import spark.implicits._
     val blockSize = cfg.blockSize
     val blocksPerBucket = cfg.blocksPerBucket
-    val computers = cfg.metaComputers
     val shufflePartitions = spark.sessionState.conf.numShufflePartitions
     bucketed
       .repartition(shufflePartitions, col("termId"), col("bucket"))
       .sortWithinPartitions(col("termId"), col("bucket"), col("docId"))
       .as[BucketedPosting]
       .mapPartitions { it =>
-        new BlockIterator(it, blockSize, blocksPerBucket, computers)
+        new BlockIterator(it, blockSize, blocksPerBucket)
       }
   }
 
@@ -518,8 +529,8 @@ object IndexBuilder {
     * physically untouched (CompactSpec asserts byte-identical paths+sizes).
     * Tombstones outside the compacted span stay live in tombstones v(N+1),
     * so the remaining segments compact later. All layout parameters come
-    * from the MANIFEST (postingsBuckets + metaComputers persisted at
-    * build), so an index built with a non-default layout keeps it. */
+    * from the MANIFEST (postingsBuckets persisted at build), so an index
+    * built with a non-default layout keeps it. */
   def compactRange(spark: SparkSession, indexDir: String,
       bucketRange0: Option[(Long, Long)]): IndexManifest = {
     val old = Manifest.read(s"$indexDir/manifest.json")
@@ -543,8 +554,7 @@ object IndexBuilder {
       old: IndexManifest, touched: Seq[Segment],
       untouched: Seq[Segment]): IndexManifest = {
     import spark.implicits._
-    val cfg = IndexConfig(blockSize = old.blockSize, bucketRange = old.bucketRange,
-      postingsBuckets = old.postingsBuckets, metaComputers = old.metaComputers)
+    val geometry = IndexConfig(blockSize = old.blockSize, bucketRange = old.bucketRange)
     if (touched.isEmpty) return old
     // with no tombstones a single-segment slice has nothing to drop and
     // nothing to merge — a pure rewrite, skipped; MULTIPLE touched segments
@@ -588,9 +598,9 @@ object IndexBuilder {
     // segment — overlap them (optimization guide §2.6; Overlap quiesces
     // the background write if the foreground fails)
     Overlap.overlap {
-      writeDocIdClustered(statsIn, cfg.postingsBuckets, old.bucketRange, s"$mergedDir/docstats")
+      writeDocIdClustered(statsIn, old.postingsBuckets, old.bucketRange, s"$mergedDir/docstats")
     } {
-      writePostings(assembleBlocks(surviving, cfg), cfg.postingsBuckets, s"$mergedDir/postings")
+      writePostings(assembleBlocks(surviving, geometry), old.postingsBuckets, s"$mergedDir/postings")
     }
 
     // tombstones that survive outside the span (none on a full compaction)
@@ -847,7 +857,6 @@ object IndexBuilder {
       vocabSize = vocabSize, skippedCorrupt = skippedCorrupt,
       blockSize = cfg.blockSize, bucketRange = cfg.bucketRange, maxDocId = maxDocId,
       maxDocLen = agg.getInt(2), postingsBuckets = cfg.postingsBuckets,
-      metaComputerNames = BlockMetaComputers.names(cfg.metaComputers),
       segments = segments, analyzer = cfg.analyzerId)
     Manifest.commit(indexDir, manifest)
     cleaned.unpersist()
@@ -868,8 +877,9 @@ object IndexBuilder {
     * safe because block bounds are (maxTf, minDocLen), derived under the
     * CURRENT stats at query time, so committed blocks stay exact.
     *
-    * `cfg` must carry the same tokenizer/blockSize/bucketRange as the
-    * original build (block geometry is checked against the manifest).
+    * `cfg` must carry the same tokenizer, language allowlist, vocabulary
+    * cap and block geometry as the original build (all checked against
+    * the manifest before any side effect).
     *
     * Crash/replay safety (exactly-once with [[graft.streaming
     * .StreamingIngest]]): every write of one append is an OVERWRITE of a
@@ -899,14 +909,10 @@ object IndexBuilder {
       s"append config (${cfg.blockSize},${cfg.bucketRange}) != index geometry (${old.blockSize},${old.bucketRange})")
     require(cfg.analyzerId == old.analyzer,
       s"append analyzer '${cfg.analyzerId}' != index analyzer '${old.analyzer}' — " +
-        "appends must tokenize and clean exactly like the build (pass the build's " +
-        "tokenizer config and language allowlist); mixing token streams would corrupt " +
-        "the shared dictionary (no side effects were taken)")
+        "appends must tokenize, clean and cap exactly like the build (pass the build's " +
+        "tokenizer config, language allowlist and vocabCap); mixing token streams would " +
+        "corrupt the shared dictionary (no side effects were taken)")
     val tok = Tokenizers(cfg.tokenizer)
-    // layout authority is the MANIFEST: bucket count and block-metadata
-    // computers were persisted at build time, so appends keep them even if
-    // the caller's cfg carries different defaults
-    val ecfg = cfg.copy(postingsBuckets = old.postingsBuckets, metaComputers = old.metaComputers)
     val cleaned = Pages.cleaned(deltaPages, cfg.langs)
       .select(col("doc_id"), col("url"), col("text")).persist()
 
@@ -949,7 +955,9 @@ object IndexBuilder {
     // dictionary/postings chain — overlap it (§2.6; quiesced on failure
     // by Overlap so a retry never races an orphaned write)
     val (_, vocabSize) = Overlap.overlap {
-      writeDocIdClustered(stats, ecfg.postingsBuckets, ecfg.bucketRange, s"$sdir/docstats")
+      // layout authority is the MANIFEST: the bucket count persisted at
+      // build time, whatever the caller's cfg carries
+      writeDocIdClustered(stats, old.postingsBuckets, old.bucketRange, s"$sdir/docstats")
     } {
       // dictionary v(N+1) from v(N) through the [[fold]]'s driver
       // placement: the delta's term stats are bounded by the BATCH's
@@ -963,7 +971,7 @@ object IndexBuilder {
       // independent — the broadcast map is driver-derived, not read back
       // from the written dictionary — overlap them too
       Overlap.overlap(folded.write()) {
-        writePostings(postingBlocks(td, headMap(entries, cfg.vocabCap), ecfg), ecfg.postingsBuckets, s"$sdir/postings")
+        writePostings(postingBlocks(td, headMap(entries, cfg.vocabCap), cfg), old.postingsBuckets, s"$sdir/postings")
       }
       folded.vocabSize
     } // end docstats overlap — all three writes complete (or quiesced)
@@ -985,6 +993,27 @@ object IndexBuilder {
   }
 
   // ---------------------------------------------------------------- merge
+
+  /** [[merge]]'s contract on the two manifests, checked before any side
+    * effect: equal block geometry, an equal analyzer, and no vocabulary
+    * cap. A capped index's head is its OWN top-`cap` terms by df, so a
+    * source head term can sit in the destination's tail (its postings
+    * would land under a tail termId) and a destination head term would
+    * lack the source's postings. */
+  private[index] def requireMergeable(src: IndexManifest, old: IndexManifest): Unit = {
+    require(src.blockSize == old.blockSize && src.bucketRange == old.bucketRange,
+      s"merge source geometry (${src.blockSize},${src.bucketRange}) != destination " +
+        s"(${old.blockSize},${old.bucketRange}) — blocks are immutable I/O units and " +
+        "cannot be re-split without a rebuild")
+    require(src.analyzer == old.analyzer,
+      s"merge source analyzer '${src.analyzer}' != destination '${old.analyzer}' — " +
+        "both indexes must tokenize, clean and cap identically to share one dictionary")
+    require(!old.vocabCapped,
+      s"merge refuses vocabulary-capped indexes (analyzer '${old.analyzer}'): each index's " +
+        "head is its own most-document-frequent terms, so a source head term can be a " +
+        "destination tail term and its postings would be indexed under it — rebuild the " +
+        "combined corpus under the cap instead (no side effects were taken)")
+  }
 
   /** Merge an independently BUILT index into this one — the distributed
     * form of Lucene's `addIndexes` and the engine analog of combining two
@@ -1022,10 +1051,10 @@ object IndexBuilder {
     * blocks until compaction and an interleaved bucket would corrupt the
     * query path's firstDocId-ordered in-bucket block concatenation.
     * Sharded crawls that partition the docId space merge in id order.
-    * Geometry (blockSize, bucketRange), the block-metadata computer set
-    * and the ANALYZER fingerprint must match exactly; `postingsBuckets`
-    * may differ (the source's blocks are re-clustered into the
-    * destination's layout).
+    * Geometry (blockSize, bucketRange) and the ANALYZER fingerprint must
+    * match exactly, and neither index may carry a vocabulary cap
+    * ([[requireMergeable]]); `postingsBuckets` may differ (the source's
+    * blocks are re-clustered into the destination's layout).
     *
     * Id stability mirrors [[append]]: destination termIds never change;
     * source-only terms get ids after the destination's vocabSize, ordered
@@ -1049,16 +1078,7 @@ object IndexBuilder {
     import spark.implicits._
     val old = Manifest.read(s"$indexDir/manifest.json")
     val src = Manifest.read(s"$otherDir/manifest.json")
-    require(src.blockSize == old.blockSize && src.bucketRange == old.bucketRange,
-      s"merge source geometry (${src.blockSize},${src.bucketRange}) != destination " +
-        s"(${old.blockSize},${old.bucketRange}) — blocks are immutable I/O units and " +
-        "cannot be re-split without a rebuild")
-    require(src.metaComputerNames == old.metaComputerNames,
-      s"merge source block-metadata computers '${src.metaComputerNames}' != destination " +
-        s"'${old.metaComputerNames}' — pruning bounds would be missing from merged blocks")
-    require(src.analyzer == old.analyzer,
-      s"merge source analyzer '${src.analyzer}' != destination '${old.analyzer}' — " +
-        "both indexes must tokenize and clean identically to share one dictionary")
+    requireMergeable(src, old)
 
     // physical span check (tombstoned rows included — they stay in blocks
     // until compaction, so they too must sit beyond the destination's span)

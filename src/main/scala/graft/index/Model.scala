@@ -56,98 +56,31 @@ final case class PostingBlock(
     positions: Array[Byte],
     maxTf: Int,
     minDocLen: Int,
-    /** extension metadata from the configured [[BlockMetaComputer]]s (E6);
-      * the hot WAND fields (maxTf, minDocLen) stay typed columns. */
+    /** the fixed block metadata beside the hot WAND fields, keyed by the
+      * companion's names; posSpan is absent when no posting carries
+      * positions. */
     meta: Map[String, Int] = Map.empty
 )
 
-/** Pluggable per-block metadata computer (E6) — the engine analog of the
-  * reference's attribute-control registry (pluggable computers registered
-  * per tokenizer, attribute_controls/classes.py:22-59 + registry
-  * midi_tokenizer.py:334-346). The block builder instantiates fresh state
-  * per block, feeds it every posting, and stores the emitted named integers
-  * in [[PostingBlock.meta]]; queries consult them as pruning bounds. The
-  * core (maxTf, minDocLen) bound is computer #0 — wired to the typed block
-  * fields WAND's hot path reads — and extension computers add map entries. */
-trait BlockMetaComputer extends Serializable {
-  /** fresh accumulator for one block */
-  def start(): BlockMetaState
-}
-
-trait BlockMetaState {
-  def observe(tf: Int, docLen: Int, positions: Array[Int]): Unit
-  /** named integer metadata for the finished block */
-  def emit(): Seq[(String, Int)]
-}
-
-/** Position-span bounds: `minPos` = smallest first-position, `maxPos` =
-  * largest last-position over the block's postings. A proximity query
-  * `t1 .. t2 within w` needs a t2 occurrence in [posA+1, posA+w], so
-  * a t2 block with `maxPos < minPosA + 1` or `minPos > maxPosA + w`
-  * (bucket-wise) can be skipped WITHOUT decoding its payload — the
-  * proximity analog of the block-max bound. */
-object PosSpanComputer extends BlockMetaComputer {
+/** The fixed block metadata every block carries (the engine form of the
+  * reference's attribute controls, attribute_controls/classes.py:22-59,
+  * computed inline by the one block encoder):
+  *
+  *  - `minPos`/`maxPos`: a proximity query `t1 .. t2 within w` needs a t2
+  *    occurrence in [posA+1, posA+w], so a t2 block with
+  *    `maxPos < minPosA + 1` or `minPos > maxPosA + w` (bucket-wise) can be
+  *    skipped WITHOUT decoding its payload — the proximity analog of the
+  *    block-max bound (`q_near`'s block pruning).
+  *  - `tfP90`: the exact 90th-percentile tf of the block's postings
+  *    (nearest rank over the ≤ blockSize members). `impact(tfP90,
+  *    minDocLen)` covers ≥ 90% of the block's postings, so TIERED
+  *    (approximate) WAND skips a block whose tfP90-bound is below the heap
+  *    threshold at a bounded, measured recall cost (PruneSpec); the exact
+  *    path keeps using (maxTf, minDocLen). */
+object PostingBlock {
   final val MinPosKey = "minPos"
   final val MaxPosKey = "maxPos"
-  def start(): BlockMetaState = new BlockMetaState {
-    private var minPos = Int.MaxValue
-    private var maxPos = 0
-    def observe(tf: Int, docLen: Int, positions: Array[Int]): Unit =
-      if (positions.nonEmpty) {
-        if (positions(0) < minPos) minPos = positions(0)
-        if (positions(positions.length - 1) > maxPos) maxPos = positions(positions.length - 1)
-      }
-    def emit(): Seq[(String, Int)] =
-      if (maxPos == 0) Seq.empty
-      else Seq(MinPosKey -> minPos, MaxPosKey -> maxPos)
-  }
-}
-
-/** Tf-quantile block metadata — the second real E6 computer (the analog of
-  * the reference's bar-level attribute computer family,
-  * attribute_controls/bar_attribute_controls.py:12-159): the exact 90th-
-  * percentile tf of the block's postings (nearest-rank over the ≤ blockSize
-  * members — tiny exact sort, no sketch needed at that size).
-  *
-  * Consumer: TIERED (approximate) WAND — `impact(tfP90, minDocLen)` is a
-  * bound that covers ≥ 90% of the block's postings, so a block whose
-  * tfP90-bound is below the heap threshold can be skipped at a bounded,
-  * measured recall cost (PruneSpec measures evals saved vs recall). The
-  * exact path keeps using (maxTf, minDocLen); this is strictly additive. */
-object TfQuantileComputer extends BlockMetaComputer {
   final val TfP90Key = "tfP90"
-  def start(): BlockMetaState = new BlockMetaState {
-    private val tfs = new scala.collection.mutable.ArrayBuilder.ofInt
-    def observe(tf: Int, docLen: Int, positions: Array[Int]): Unit = tfs += tf
-    def emit(): Seq[(String, Int)] = {
-      val a = tfs.result()
-      if (a.isEmpty) Seq.empty
-      else {
-        java.util.Arrays.sort(a)
-        // nearest-rank p90: ceil(0.9 * n) in integer arithmetic
-        Seq(TfP90Key -> a((9 * a.length + 9) / 10 - 1))
-      }
-    }
-  }
-}
-
-/** Name ↔ instance registry for [[BlockMetaComputer]]s — lets the manifest
-  * PERSIST the computer set an index was built with, so delete/compact/
-  * append rehydrate the exact same registry instead of assuming the default
-  * (an index built with extra computers keeps them across generations). */
-object BlockMetaComputers {
-  val registry: Map[String, BlockMetaComputer] = Map(
-    "posSpan" -> PosSpanComputer,
-    "tfQuantile" -> TfQuantileComputer
-  )
-  private val nameOf: Map[BlockMetaComputer, String] = registry.map(_.swap)
-  def names(cs: Seq[BlockMetaComputer]): String =
-    cs.map(c => nameOf.getOrElse(c,
-      sys.error(s"unregistered BlockMetaComputer $c — add it to BlockMetaComputers.registry"))).mkString(",")
-  def fromNames(s: String): Seq[BlockMetaComputer] =
-    if (s.isEmpty) Seq.empty
-    else s.split(',').toSeq.map(n => registry.getOrElse(n,
-      sys.error(s"unknown BlockMetaComputer name '$n' in manifest")))
 }
 
 /** One immutable index segment — the LSM-style unit of postings +
@@ -223,10 +156,6 @@ final case class IndexConfig(
       * vocabulary. At a 100M-term web vocabulary this bounds the broadcast
       * dictionary; the FULL dictionary table is still persisted on disk. */
     vocabCap: Option[Int] = None,
-    /** the E6 block-metadata registry run by the block builder; outputs
-      * land in [[PostingBlock.meta]]. The core (maxTf, minDocLen) bound is
-      * always computed (typed fields); these add to it. */
-    metaComputers: Seq[BlockMetaComputer] = Seq(PosSpanComputer, TfQuantileComputer),
     /** vocabulary-size ceiling for the build's broadcast-map dictionary
       * lookup (J3's map-side flavor). An UNCAPPED vocabulary beyond this is
       * never collected to the driver: the build switches to J3's
@@ -245,17 +174,21 @@ final case class IndexConfig(
   def blocksPerBucket: Long = bucketRange / blockSize
 
   /** Canonical manifest encoding of everything that determines the token
-    * stream and document set an append must reproduce: the full tokenizer
-    * config plus the cleaning language allowlist. Persisted at build time
-    * and REQUIRED to match on append — two batches tokenized differently
-    * (or cleaned under different allowlists) silently corrupt one shared
-    * dictionary otherwise (the reference likewise persists its tokenizer
-    * config JSON and validates on load, midi_tokenizer.py:3510-3540). */
+    * stream, document set and indexed vocabulary an append must reproduce:
+    * the full tokenizer config, the cleaning language allowlist and, when
+    * one is set, the vocabulary cap (`.cap<n>`; an uncapped index's id has
+    * no such suffix). Persisted at build time and REQUIRED to match on
+    * append and merge — two batches tokenized differently (or cleaned under
+    * different allowlists) silently corrupt one shared dictionary, and a
+    * batch indexed under another cap gives tail terms postings for its own
+    * docs only (the reference likewise persists its tokenizer config JSON
+    * and validates on load, midi_tokenizer.py:3510-3540). */
   def analyzerId: String = {
     val t = tokenizer
     def b(x: Boolean) = if (x) "1" else "0"
     s"${t.strategy}.${b(t.lowercase)}.${t.minTermLen}.${b(t.stripPunct)}." +
-      s"${t.ngram}.${t.langs.toSeq.sorted.mkString("|")}.${langs.toSeq.sorted.mkString("|")}"
+      s"${t.ngram}.${t.langs.toSeq.sorted.mkString("|")}.${langs.toSeq.sorted.mkString("|")}" +
+      vocabCap.fold("")(c => s".cap$c")
   }
 }
 
@@ -298,7 +231,8 @@ final case class IndexManifest(
       * (build computes it exactly; append takes the max; delete/compact
       * keep it, which stays a valid bound). Powers the zero-cost WAND
       * threshold seed: impact(tf=1, maxDocLen) lower-bounds every
-      * posting's impact. 0 = unknown (older manifests) → seeding off. */
+      * posting's impact. 0 only when every doc is empty (or there are
+      * none) → seeding off. */
     maxDocLen: Int = 0,
     /** postings/docstats clustering bucket count the index was BUILT with —
       * persisted so compaction (and any other rewriting verb) preserves the
@@ -319,10 +253,6 @@ final case class IndexManifest(
       * bit-identical to uninterrupted ones; wall-clock commit times live in
       * the lineage log, not here. */
     operation: String = "build",
-    /** comma-joined [[BlockMetaComputers]] registry names the index was
-      * built with — rewriting verbs rehydrate the SAME computer set, so
-      * block meta never silently changes across generations. */
-    metaComputerNames: String = "posSpan,tfQuantile",
     /** the live [[Segment]] list, ascending by `lo` — THE read truth for
       * postings and docstats (manifest-driven multi-path scans; nothing
       * reads by directory discovery). Builds commit one segment per chunk,
@@ -345,7 +275,6 @@ final case class IndexManifest(
   /** blocks per docId bucket: bucket `b` owns blockIds
     * `[b * blocksPerBucket, (b + 1) * blocksPerBucket)`. */
   def blocksPerBucket: Long = bucketRange / blockSize
-
-  def metaComputers: Seq[BlockMetaComputer] =
-    BlockMetaComputers.fromNames(metaComputerNames)
+  /** Built under a vocabulary cap: [[IndexConfig.analyzerId]]'s `.cap<n>`. */
+  def vocabCapped: Boolean = analyzer.matches(""".*\.cap\d+""")
 }

@@ -104,9 +104,9 @@ object IndexValidator {
       }
       tfs.foreach { tf => if (tf < 1) err(s"tf=$tf < 1") }
       if (tfs.nonEmpty && tfs.max != b.maxTf) err(s"maxTf=${b.maxTf} != max(tfs)=${tfs.max}")
-      // E6 tfQuantile metadata must equal the exact nearest-rank p90 of the
+      // the tfP90 metadata must equal the exact nearest-rank p90 of the
       // decoded tfs (and can never exceed the exact maxTf bound)
-      b.meta.get(TfQuantileComputer.TfP90Key).foreach { q =>
+      b.meta.get(PostingBlock.TfP90Key).foreach { q =>
         if (tfs.isEmpty) err("tfP90 meta present but no postings")
         else {
           val sorted = tfs.sorted
@@ -121,8 +121,8 @@ object IndexValidator {
         try VByte.decodePositions(b.positions, tfs)
         catch { case e: Exception => err(s"positions decode failed: ${e.getMessage}"); Array.empty[Array[Int]] }
       if (poss.nonEmpty) {
-        // E6 posSpan metadata must bound the decoded positions exactly
-        (b.meta.get(PosSpanComputer.MinPosKey), b.meta.get(PosSpanComputer.MaxPosKey)) match {
+        // the posSpan metadata must bound the decoded positions exactly
+        (b.meta.get(PostingBlock.MinPosKey), b.meta.get(PostingBlock.MaxPosKey)) match {
           case (Some(mp), Some(xp)) =>
             val nonEmpty = poss.filter(_.nonEmpty)
             if (nonEmpty.isEmpty) err("posSpan meta present but no positions")
@@ -132,7 +132,7 @@ object IndexValidator {
               if (mp != fMin) err(s"meta minPos=$mp != min first-position $fMin")
               if (xp != lMax) err(s"meta maxPos=$xp != max last-position $lMax")
             }
-          case _ => // computer not configured for this index — nothing to check
+          case _ => // no posSpan entry (no posting carries positions) — nothing to check
         }
         var j = 0
         while (j < poss.length) {

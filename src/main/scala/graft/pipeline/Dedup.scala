@@ -195,18 +195,16 @@ object Dedup {
     * candidate corpus docs. */
   def probeLshIndex(spark: SparkSession, dir: String, batchSigs: Dataset[DocSignature],
       indexFilter: DataFrame => DataFrame = identity): DataFrame =
-    probeLshIndexBands(spark, dir, bandRelation(batchSigs), indexFilter)
+    probeLshIndexBands(indexFilter(spark.read.parquet(dir)), bandRelation(batchSigs))
 
-  /** Same, over a prebuilt (possibly already-materialized) band relation. */
-  def probeLshIndexBands(spark: SparkSession, dir: String, batchBands: DataFrame,
-      indexFilter: DataFrame => DataFrame = identity): DataFrame = {
-    val idx = indexFilter(spark.read.parquet(dir))
+  /** Same, over the (read, narrowed) index relation and a prebuilt
+    * (possibly already-materialized) band relation. */
+  def probeLshIndexBands(idx: DataFrame, batchBands: DataFrame): DataFrame =
     batchBands.as("b")
       .join(idx.as("c"),
         col("b.band") === col("c.band") && col("b.key") === col("c.key"))
       .select(col("b.doc_id").as("batch_doc"), col("c.doc_id").as("corpus_doc"))
       .distinct()
-  }
 
   /** (doc_id, shingle) relation — one row per DISTINCT shingle per doc. */
   def shingles(spark: SparkSession, sfDir: String, n: Int = 3): DataFrame =

@@ -1507,7 +1507,7 @@ object IndexQueries {
         kWand = 40)),
 
     // TIERED retrieval (the approximate fast path): same WAND kernel, but
-    // block pruning bounds derive from the E6 tfP90 quantile metadata
+    // block pruning bounds derive from the tfP90 quantile block metadata
     // instead of maxTf — an unsafe-by-design bound that may lose tf-outlier
     // docs at a measured recall cost (PruneSpec gates recall >= 0.9 against
     // exact topK on this exact configuration; evals-saved measured there
@@ -1516,7 +1516,7 @@ object IndexQueries {
     "q_bm25_tiered" -> ((spark, sfDir) =>
       rankedReport(spark,
         Wand.search(Seq(IndexCache.handle(spark, sfDir) -> 1.0), QuerySet.queries,
-          Wand.Ranked(40, boundKey = Some(graft.index.TfQuantileComputer.TfP90Key))),
+          Wand.Ranked(40, boundKey = Some(graft.index.PostingBlock.TfP90Key))),
         kWand = 40)),
 
     // TIME TRAVEL (Iceberg-snapshot-shaped): the tombstone delete committed
@@ -1683,17 +1683,17 @@ object IndexQueries {
   }
 
   /** Per-block posSpan metadata of one term — block rows only, NO payload
-    * decode. Indexes built without the computer degrade to the un-prunable
-    * span [1, ∞). Positions fit in int; spans are widened to long so the
+    * decode. A block without the entry (no posting carries positions)
+    * degrades to the un-prunable span [1, ∞). Positions fit in int; spans are widened to long so the
     * `max_pos + window` comparison cannot overflow under ANSI. */
   private def blockSpans(h: graft.query.IndexHandle, termIds: Seq[Int]): DataFrame =
     h.postings.toDF()
       .filter(col("termId").isin(termIds.map(Int.box): _*))
       .select(col("termId"), col("blockId"),
         (col("blockId") / lit(h.manifest.blocksPerBucket)).cast("long").as("bucket"),
-        coalesce(element_at(col("meta"), lit(graft.index.PosSpanComputer.MinPosKey)), lit(1))
+        coalesce(element_at(col("meta"), lit(graft.index.PostingBlock.MinPosKey)), lit(1))
           .cast("long").as("min_pos"),
-        coalesce(element_at(col("meta"), lit(graft.index.PosSpanComputer.MaxPosKey)), lit(Int.MaxValue))
+        coalesce(element_at(col("meta"), lit(graft.index.PostingBlock.MaxPosKey)), lit(Int.MaxValue))
           .cast("long").as("max_pos"))
 
   /** The (t1-block, t2-block) pairs of `spans` ([[blockSpans]] rows) in one
@@ -1705,7 +1705,7 @@ object IndexQueries {
       .filter(col("max_b") >= col("min_a") + 1 && col("min_b") <= col("max_a") + window)
   }
 
-  /** E6 metadata as a pruning bound: the (t1-block, t2-block) pairs that
+  /** Block metadata as a pruning bound: the (t1-block, t2-block) pairs that
     * can possibly produce a `t1 .. t2 within window` match — same bucket
     * (positions only compare within a doc, docs live in one bucket) AND
     * pos-span overlap: some t2 position in [minPosA+1, maxPosA+window].
@@ -1722,7 +1722,7 @@ object IndexQueries {
   }
 
   /** Per (pair, doc): how many proximity matches — positions from the
-    * index; blocks are pruned by the E6 posSpan bound BEFORE any payload
+    * index; blocks are pruned by the posSpan block metadata BEFORE any payload
     * decode (pruning is a conservative necessary condition, so a block
     * surviving for ANY pair of a term may be decoded for all of them —
     * extra occurrences never create false matches, the window filter is

@@ -411,7 +411,7 @@ object Wand {
       val ids: Array[Long],
       val tfs: Array[Int],
       /** tf used for the block's pruning bound: maxTf on the exact path; a
-        * quantile (e.g. E6 tfP90) on the TIERED approximate path, where a
+        * quantile (e.g. the tfP90 block metadata) on the TIERED approximate path, where a
         * tighter-but-unsafe bound trades bounded recall for fewer exact
         * evaluations (the score-at-a-time pruning experiment). */
       val boundTf: Int,
@@ -814,13 +814,13 @@ object Wand {
     * or collapsed.
     *
     * `boundKey` makes the pass a TIERED approximate one: block pruning
-    * bounds derive from the named E6 metadata entry (e.g.
-    * [[graft.index.TfQuantileComputer.TfP90Key]]) instead of maxTf — an
+    * bounds derive from the named block metadata entry (e.g.
+    * [[graft.index.PostingBlock.TfP90Key]]) instead of maxTf — an
     * UNSAFE (quantile) bound, so high-tf postings in blocks whose quantile
     * bound sits under the threshold can be missed. The trade is deliberate
     * and measured (PruneSpec: evals saved vs recall); blocks without the
-    * key fall back to the exact maxTf bound, so an index built without the
-    * computer degrades to exact, never to wrong-er. */
+    * key fall back to the exact maxTf bound, so an unknown key degrades to
+    * exact, never to wrong-er. */
   final case class Ranked(k: Int, order: Order = ByScore(),
       override val boundKey: Option[String] = None) extends Mode[Array[(Double, Long)]] {
     require(k > 0, s"Ranked requires k > 0, got $k")
@@ -1300,7 +1300,7 @@ object Wand {
           cons.contains(q.queryId) || after.contains(q.queryId)).flatMap { q =>
           val bounds = for {
             f <- 0 until nF
-            if fields(f)._1.manifest.maxDocLen > 0 // pre-upgrade manifest: no bound
+            if fields(f)._1.manifest.maxDocLen > 0 // every doc empty: no bound
             t <- q.terms.distinct
             e <- dicts(f).get(t)
             if e.df >= k

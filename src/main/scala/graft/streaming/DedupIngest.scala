@@ -115,13 +115,22 @@ object DedupIngest {
     m
   }
 
-  /** The live bands/sigs/pairs tables (spec + ad-hoc accessors). */
+  // one typed reader per table: a read with its schema lists the files but
+  // runs no footer job to infer one. Bands, sigs and pairs carry the
+  // `part` partition column (base, shadow, b<batchId>, s<batchId>)
+  private def readBands(spark: SparkSession, dedupDir: String, v: Int): DataFrame =
+    spark.read.schema("doc_id LONG, band INT, key LONG, part STRING").parquet(bandsDir(dedupDir, v))
+  private def readSigs(spark: SparkSession, dedupDir: String, v: Int): DataFrame =
+    spark.read.schema("doc_id LONG, sig ARRAY<LONG>, part STRING").parquet(sigsDir(dedupDir, v))
+  private def readPairs(spark: SparkSession, dedupDir: String, v: Int): DataFrame =
+    spark.read.schema("doc_a LONG, doc_b LONG, part STRING").parquet(pairsDir(dedupDir, v))
+  /** A doc-id table: tombstones or demoted. */
+  private def readIds(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema("doc_id LONG").parquet(dir)
+
+  /** The live bands table (spec + ad-hoc accessor). */
   def liveBands(spark: SparkSession, dedupDir: String): DataFrame =
-    spark.read.parquet(bandsDir(dedupDir, readManifest(dedupDir).baseVersion))
-  def liveSigs(spark: SparkSession, dedupDir: String): DataFrame =
-    spark.read.parquet(sigsDir(dedupDir, readManifest(dedupDir).baseVersion))
-  def livePairs(spark: SparkSession, dedupDir: String): DataFrame =
-    spark.read.parquet(pairsDir(dedupDir, readManifest(dedupDir).baseVersion))
+    readBands(spark, dedupDir, readManifest(dedupDir).baseVersion)
 
   /** Remove docs from the dedup index's PROBE surface (their bands/sigs
     * rows stay physical until [[compactIndex]], like index tombstones
@@ -153,7 +162,7 @@ object DedupIngest {
   private def writeNextIds(spark: SparkSession, ids: DataFrame, buckets: Int,
       dir: Int => String, v: Int): Unit = {
     val fresh = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-    val merged = if (v < 0) fresh else spark.read.parquet(dir(v)).unionByName(fresh).distinct()
+    val merged = if (v < 0) fresh else readIds(spark, dir(v)).unionByName(fresh).distinct()
     Store.writeTable(merged.repartition(buckets, col("doc_id")).sortWithinPartitions(col("doc_id")),
       dir(v + 1))
   }
@@ -256,7 +265,7 @@ object DedupIngest {
     // docId-order precondition below
     require(cfg.analyzerId == old.analyzer,
       s"dedup-ingest analyzer '${cfg.analyzerId}' != index analyzer '${old.analyzer}' — " +
-        "batches must tokenize and clean exactly like the build (no side effects were taken)")
+        "batches must tokenize, clean and cap exactly like the build (no side effects were taken)")
     val dm = ensureInit(spark, dedupDir, buckets)
 
     val cleaned = Pages.cleaned(batch, cfg.langs).persist()
@@ -287,12 +296,12 @@ object DedupIngest {
       // pair LOG but can never veto admission.
       val tombTables: Seq[DataFrame] =
         IndexBuilder.readTombstones(spark, indexDir, old).toDF("doc_id") +:
-          (if (dm.tombVersion < 0) Nil else Seq(spark.read.parquet(tombDir(dedupDir, dm.tombVersion))))
+          (if (dm.tombVersion < 0) Nil else Seq(readIds(spark, tombDir(dedupDir, dm.tombVersion))))
       def committed(df: DataFrame): DataFrame = {
         val own = df.filter(col("part") =!= s"b$batchId" && col("part") =!= s"s$batchId")
         tombTables.foldLeft(own)((d, t) => d.join(t, Seq("doc_id"), "left_anti"))
       }
-      val corpusSigs = committed(spark.read.parquet(sigsDir(dedupDir, dm.baseVersion)))
+      val corpusSigs = committed(readSigs(spark, dedupDir, dm.baseVersion))
         .select(col("doc_id").as("corpus_doc"), col("sig").as("c_sig"),
           col("part").startsWith("s").as("shadow"))
         .localCheckpoint(true) // estimator join + live projection
@@ -301,7 +310,7 @@ object DedupIngest {
       // non-demoted subset (a reconcile victim's content is represented by
       // its component keeper, so the victim itself must not veto)
       val crossPairs = Dedup
-        .probeLshIndexBands(spark, bandsDir(dedupDir, dm.baseVersion), bands, committed)
+        .probeLshIndexBands(committed(readBands(spark, dedupDir, dm.baseVersion)), bands)
         .join(bSigs, "batch_doc")
         .join(corpusSigs, "corpus_doc")
         .filter(estCol(col("b_sig"), col("c_sig")) >= threshold)
@@ -311,7 +320,7 @@ object DedupIngest {
         val live = corpusSigs.filter(!col("shadow")).select("corpus_doc")
         if (dm.demotedVersion < 0) live
         else live.join(
-          spark.read.parquet(demotedDir(dedupDir, dm.demotedVersion))
+          readIds(spark, demotedDir(dedupDir, dm.demotedVersion))
             .select(col("doc_id").as("corpus_doc")),
           Seq("corpus_doc"), "left_anti")
       }
@@ -394,11 +403,11 @@ object DedupIngest {
     * victims. Returns the number of docs tombstoned. */
   def reconcile(spark: SparkSession, indexDir: String, dedupDir: String): Long = {
     val dm = readManifest(dedupDir)
-    val pairs0 = spark.read.parquet(pairsDir(dedupDir, dm.baseVersion))
+    val pairs0 = readPairs(spark, dedupDir, dm.baseVersion)
     val pairs =
       if (dm.tombVersion < 0) pairs0
       else {
-        val t = spark.read.parquet(tombDir(dedupDir, dm.tombVersion))
+        val t = readIds(spark, tombDir(dedupDir, dm.tombVersion))
         Seq("doc_a", "doc_b").foldLeft(pairs0)((d, c) =>
           d.join(t.select(col("doc_id").as(c)), Seq(c), "left_anti"))
       }
@@ -458,12 +467,12 @@ object DedupIngest {
     def dropTombed(df: DataFrame, cols: Seq[String]): DataFrame =
       if (dm.tombVersion < 0) df
       else {
-        val t = spark.read.parquet(tombDir(dedupDir, dm.tombVersion))
+        val t = readIds(spark, tombDir(dedupDir, dm.tombVersion))
         cols.foldLeft(df)((d, c) => d.join(t.select(col("doc_id").as(c)), Seq(c), "left_anti"))
       }
     val demoted =
       if (dm.demotedVersion < 0) None
-      else Some(spark.read.parquet(demotedDir(dedupDir, dm.demotedVersion)))
+      else Some(readIds(spark, demotedDir(dedupDir, dm.demotedVersion)))
     // shadowness survives compaction (part=shadow vs part=base): dropped
     // docs' rows keep feeding the edge log, never the admission probe —
     // and DEMOTED docs are folded into the shadow side here, clearing the
@@ -480,21 +489,21 @@ object DedupIngest {
           else base.join(dem, Seq("doc_id"), "left_anti")
         }
       }
-      Store.writeTable(dropTombed(side(spark.read.parquet(bandsDir(dedupDir, dm.baseVersion))
+      Store.writeTable(dropTombed(side(readBands(spark, dedupDir, dm.baseVersion)
           .filter(committedPart)
           .select("doc_id", "band", "key", "part")), Seq("doc_id"))
         .select("doc_id", "band", "key")
         .repartition(dm.buckets, col("band"), col("key"))
         .sortWithinPartitions(col("band"), col("key")),
         s"${bandsDir(dedupDir, next.baseVersion)}/part=$part")
-      Store.writeTable(dropTombed(side(spark.read.parquet(sigsDir(dedupDir, dm.baseVersion))
+      Store.writeTable(dropTombed(side(readSigs(spark, dedupDir, dm.baseVersion)
           .filter(committedPart)
           .select("doc_id", "sig", "part")), Seq("doc_id"))
         .select("doc_id", "sig")
         .repartition(dm.buckets, col("doc_id")),
         s"${sigsDir(dedupDir, next.baseVersion)}/part=$part")
     }
-    Store.writeTable(dropTombed(spark.read.parquet(pairsDir(dedupDir, dm.baseVersion))
+    Store.writeTable(dropTombed(readPairs(spark, dedupDir, dm.baseVersion)
         .filter(committedPart), Seq("doc_a", "doc_b"))
       .select("doc_a", "doc_b")
       .repartition(dm.buckets, col("doc_a")),

@@ -7,7 +7,7 @@ import graft.queries.{IndexCache, IndexQueries}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** E6 pluggable block-metadata computers: the posSpan computer's bounds are
+/** Fixed block metadata (E6): the posSpan bounds are
   * stored per block, validated by E7, and actually PRUNE proximity-query
   * block decodes — on a planted corpus where the two terms' position spans
   * cannot overlap within the window, every block is skipped before decode,
@@ -39,7 +39,7 @@ class BlockMetaSpec extends AnyFunSuite {
     assert(IndexValidator.validate(h).collect().isEmpty)
     import spark.implicits._
     val spans = h.postings.map { b =>
-      (b.meta.get(PosSpanComputer.MinPosKey), b.meta.get(PosSpanComputer.MaxPosKey))
+      (b.meta.get(PostingBlock.MinPosKey), b.meta.get(PostingBlock.MaxPosKey))
     }.collect()
     assert(spans.nonEmpty && spans.forall(s => s._1.isDefined && s._2.isDefined))
   }

@@ -266,6 +266,19 @@ class Bm25fSpec extends AnyFunSuite {
         FieldSpec("body", 1.0, "body_text", IndexConfig(vocabCap = Some(7)))))
     }
     assert(eCfg.getMessage.contains("different field spec"), eCfg.getMessage)
+
+    // a merge of two pairs with the capped field is refused before any
+    // field merges: the uncapped title field comes first and stays as it was
+    val later = s"${base}_later"
+    graft.index.Store.delete(later)
+    FieldedIndex.build(spark, pages.withColumn("doc_id", col("doc_id") + 20L), later, Seq(
+      FieldSpec("title", 3.0, "title_text"),
+      FieldSpec("body", 1.0, "body_text", IndexConfig(vocabCap = Some(4)))))
+    val titleBefore = graft.index.Store.readString(s"${FieldedIndex.fieldDir(base, "title")}/manifest.json")
+    val eCap = intercept[IllegalArgumentException](FieldedIndex.merge(spark, base, later))
+    assert(eCap.getMessage.contains("vocabulary-capped"), eCap.getMessage)
+    assert(graft.index.Store.readString(s"${FieldedIndex.fieldDir(base, "title")}/manifest.json") ==
+      titleBefore, "a refused fielded merge must leave every field untouched")
   }
 
   test("fielded APPEND: incremental ingest through the public verb == pair over the " +

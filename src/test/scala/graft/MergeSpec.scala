@@ -306,6 +306,23 @@ class MergeSpec extends AnyFunSuite {
     assert(Manifest.read(s"$low/manifest.json") == before)
   }
 
+  test("a merge of two vocabulary-capped builds is refused and leaves the destination " +
+    "untouched") {
+    val root = "/tmp/graft_merge_spec/capped"
+    IndexCache.deleteRecursively(root)
+    val (low, high) = (s"$root/low", s"$root/high")
+    val capped = cfg.copy(vocabCap = Some(5))
+    IndexBuilder.buildFrom(spark, pages.filter(col("doc_id") < Split), low, capped)
+    IndexBuilder.buildFrom(spark,
+      pages.filter(col("doc_id") >= Split && col("doc_id") < Hi), high, capped)
+    val before = fileSizes(low)
+    val manifestBefore = Store.readString(s"$low/manifest.json")
+    val e = intercept[IllegalArgumentException](IndexBuilder.merge(spark, low, high))
+    assert(e.getMessage.contains("vocabulary-capped"), e.getMessage)
+    assert(Store.readString(s"$low/manifest.json") == manifestBefore)
+    assert(fileSizes(low) == before, "a refused merge must leave the destination untouched")
+  }
+
   test("driver-ranked dictionary path (source vocab ≤ broadcastVocabMax) is " +
     "bit-identical to the distributed full-outer + GlobalRank path") {
     // two deterministic, content-identical pairs; one merged per path

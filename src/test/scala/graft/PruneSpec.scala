@@ -118,7 +118,7 @@ class PruneSpec extends AnyFunSuite {
     val exact = Wand.topK(handle, queries, 10, Some(mExact))
     val mApprox = Wand.WandMetrics(spark)
     val approx = Wand.search(Seq(handle -> 1.0), queries,
-      Wand.Ranked(10, boundKey = Some(graft.index.TfQuantileComputer.TfP90Key)), metrics = Some(mApprox))
+      Wand.Ranked(10, boundKey = Some(graft.index.PostingBlock.TfP90Key)), metrics = Some(mApprox))
     info(s"exact evals=${mExact.evals.value} tiered evals=${mApprox.evals.value}")
     // quantile bounds are tighter than maxTf bounds → never more block-max
     // survivals in aggregate on this fixture
@@ -140,7 +140,7 @@ class PruneSpec extends AnyFunSuite {
     val h = graft.queries.IndexCache.handle(spark, "/root/testdata/sf0.001")
     val exact = Wand.topK(h, graft.queries.QuerySet.queries, 40)
     val approx = Wand.search(Seq(h -> 1.0), graft.queries.QuerySet.queries,
-      Wand.Ranked(40, boundKey = Some(graft.index.TfQuantileComputer.TfP90Key)))
+      Wand.Ranked(40, boundKey = Some(graft.index.PostingBlock.TfP90Key)))
     val recalls = graft.queries.QuerySet.queries
       .filter(q => exact(q.queryId).nonEmpty)
       .map { q =>

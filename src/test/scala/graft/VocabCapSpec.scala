@@ -45,6 +45,20 @@ class VocabCapSpec extends AnyFunSuite {
     }
   }
 
+  test("an append without the cap is refused before any side effect") {
+    import org.apache.spark.sql.functions._
+    val m = handle.manifest
+    val manifestBefore = Store.readString(s"$dir/manifest.json")
+    val filesBefore = IndexTestUtil.fileSizes(dir)
+    val delta = Pages.withInjections(spark, sfDir).filter(col("doc_id") < 20)
+      .withColumn("doc_id", col("doc_id") + lit(m.maxDocId + 1))
+    val e = intercept[IllegalArgumentException](IndexBuilder.append(spark, delta, dir,
+      IndexConfig(blockSize = 16, bucketRange = 64)))
+    assert(e.getMessage.contains("analyzer"), e.getMessage)
+    assert(Store.readString(s"$dir/manifest.json") == manifestBefore)
+    assert(IndexTestUtil.fileSizes(dir) == filesBefore, "a refused append must leave the index untouched")
+  }
+
   test("tail-term queries return empty (OOV semantics)") {
     val tail = handle.dictionary.collect().filter(_.termId >= Cap).map(_.term).head
     val got = Wand.topK(handle, Seq(QuerySpec(1, Seq(tail))), 10)
